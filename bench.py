@@ -254,8 +254,8 @@ def main() -> None:
     for name in names:
         try:
             QUERIES[name](spark, warm_dir).collect()
-        except Exception:
-            pass
+        except Exception as exc:
+            raise RuntimeError(f"warm-up query {name!r} failed on {warm_dir}") from exc
     from pyspark.sql.functions import pandas_udf
 
     @pandas_udf("long")
@@ -284,16 +284,16 @@ def main() -> None:
         try:
             t = spark.read.parquet(os.path.join(sf_dir, fname))
             t.select([F.count(c) for c in t.columns]).collect()
-        except Exception:
-            pass
+        except Exception as exc:
+            raise RuntimeError(f"priming table {fname!r} failed in {sf_dir}") from exc
     # ...and still prime the first queries in run order at scale: the
     # input touch covers page cache, but the first timed query would
     # otherwise also pay its own scale-specific AQE re-plan cold.
     for name in names[:4]:
         try:
             QUERIES[name](spark, sf_dir).collect()
-        except Exception:
-            pass
+        except Exception as exc:
+            raise RuntimeError(f"priming query {name!r} failed on {sf_dir}") from exc
 
     # Box-calibration probe (see shuffle_probe): recorded beside the
     # medians so the guard scales with the box instead of tripping on

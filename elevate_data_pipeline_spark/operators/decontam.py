@@ -77,7 +77,7 @@ def ngram_contamination(
 # dedup._SPANS_LOCAL_MAX_ROWS): gram extraction, polyhash, bloom bit
 # math and the exact-set compare are all integer replays over Python
 # sets/dicts. The gate sits AT the measured crossover because the tie
-# there is proven noise in BOTH directions (docs/PERF_NOTES_r8.md):
+# there is proven noise in BOTH directions:
 # on the synthetic crossover corpus distributed edges local by 4% at
 # 5k docs (4.21 vs 4.40 s, docs/TIER_CROSSOVER.md), on the REAL
 # testdata at the same 5k local edges distributed by 5% (2.96 vs

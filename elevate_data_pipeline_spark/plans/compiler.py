@@ -270,100 +270,10 @@ def _compile_nested(
     return rolled, None
 
 
-# CMS join advisor: frame sides at or below this row count get a
-# broadcast() hint when the advisor is enabled (Spark's own
-# autoBroadcastJoinThreshold is 10 MB ~ a few hundred-k small rows).
-CMS_ADVISOR_MAX_BROADCAST_ROWS = 100_000
-
-# Skew warning: estimated max-key share at or above this fraction of a
-# side's rows flags the fold join as skew-prone (a shuffle join funnels
-# that key's rows through ONE task at 100 TB); tiny sides are exempt
-# (skew on a broadcastable side is harmless).
-CMS_ADVISOR_SKEW_SHARE = 0.2
-CMS_ADVISOR_SKEW_MIN_ROWS = 100
-
-
-def _cms_broadcast_hint(acc: DataFrame, frame: DataFrame, keys: list[str]):
-    """Sketch-driven broadcast advisor (opt-in): build a count-min
-    sketch on each side's leading join key (operators/sketch.cms_build —
-    two narrow column scans, 4 KB of state each), read the frame side's
-    EXACT row count from one sketch row's counter sum, and log the
-    CMS join-cardinality estimate (cms_inner_product, Cormode &
-    Muthukrishnan §4.2) as the optimizer statistic. Returns the frame
-    wrapped in ``broadcast()`` when its row count is at or below
-    ``CMS_ADVISOR_MAX_BROADCAST_ROWS``; Catalyst/AQE stay authoritative
-    for everything the hint does not pin. Skips non-integral keys (the
-    sketch hashes the key as int64)."""
-    import logging
-
-    from ..operators import sketch
-
-    log = logging.getLogger(__name__)
-    key = keys[0]
-    integral = ("tinyint", "smallint", "int", "bigint", "long")
-    if (
-        dict(acc.dtypes).get(key) not in integral
-        or dict(frame.dtypes).get(key) not in integral
-    ):
-        log.info("cms-advisor: skip (non-integral join key %r)", key)
-        return frame
-    try:
-        sk_a = sketch.cms_build(acc.select(key), key)
-        sk_f = sketch.cms_build(frame.select(key), key)
-        n_frame = (
-            sk_f.filter(F.col("_r") == 0).agg(F.sum("_n").alias("_t")).first()["_t"]
-            or 0
-        )
-        est = sketch.cms_inner_product(sk_a, sk_f).first()["est_join_rows"]
-
-        # Skew detection from the SAME sketches (no extra scan): each
-        # CMS row's max counter overestimates the heaviest key's count
-        # (collisions only add), so min-over-rows of max(_n) is the
-        # standard never-undercount bound on the max key frequency.
-        # A side whose heaviest key holds >= CMS_ADVISOR_SKEW_SHARE of
-        # its rows makes the shuffled fold join skew-prone: that key's
-        # rows all land in ONE task. Advisory only — the warning points
-        # at operators/skew (skew_salted_agg / salted join).
-        n_acc = (
-            sk_a.filter(F.col("_r") == 0).agg(F.sum("_n").alias("_t"))
-            .first()["_t"] or 0
-        )
-        for side, sk, n in (("fetch", sk_a, n_acc), ("frame", sk_f, n_frame)):
-            if n < CMS_ADVISOR_SKEW_MIN_ROWS:
-                continue
-            mx = (
-                sk.groupBy("_r").agg(F.max("_n").alias("_m"))
-                .agg(F.min("_m").alias("_mm")).first()["_mm"] or 0
-            )
-            if mx / n >= CMS_ADVISOR_SKEW_SHARE:
-                log.warning(
-                    "cms-advisor: skewed join key %r on the %s side - "
-                    "est max-key share %.0f%% of %d rows; a shuffle join "
-                    "funnels that key through one task: consider "
-                    "operators/skew.skew_salted_agg or salting the key",
-                    key, side, 100.0 * mx / n, n,
-                )
-    except Exception as exc:  # advisory only — never fail the compile
-        log.warning("cms-advisor: estimate failed (%s); no hint", exc)
-        return frame
-    if n_frame <= CMS_ADVISOR_MAX_BROADCAST_ROWS:
-        log.info(
-            "cms-advisor: key=%r frame_rows=%d est_join_rows<=%d -> broadcast hint",
-            key, n_frame, est,
-        )
-        return F.broadcast(frame)
-    log.info(
-        "cms-advisor: key=%r frame_rows=%d est_join_rows<=%d -> shuffle join",
-        key, n_frame, est,
-    )
-    return frame
-
-
 def compile_script(
     catalog: Catalog,
     script: Script,
     legacy_join_order: bool = False,
-    cms_join_advisor: bool | None = None,
 ) -> DataFrame:
     """Compile one script's task DAG into a single DataFrame plan.
 
@@ -372,18 +282,7 @@ def compile_script(
     mentoringFunction0.scala:126, generic_script.scala:176) instead of
     the F2 default (accumulator left, mentoringFunction2.scala:130) —
     the SURVEY.md §2.8.2 divergence, observable through outer-join
-    direction and column order.
-
-    ``cms_join_advisor=True`` (or env ``SPARK_GRAFT_CMS_ADVISOR=1``)
-    runs the sketch-driven broadcast advisor on every real fold join —
-    for JDBC-shaped sources Spark has no statistics for. Costs two
-    narrow column scans per advised join at compile time; emits a
-    broadcast() hint plus a log line, leaving Catalyst/AQE authoritative
-    otherwise. Default off: compiled plans are unchanged unless asked."""
-    import os as _os
-
-    if cms_join_advisor is None:
-        cms_join_advisor = _os.environ.get("SPARK_GRAFT_CMS_ADVISOR", "") == "1"
+    direction and column order."""
     fetch = script.fetch_id
     acc: DataFrame | None = None
     ids_distinct: DataFrame | None = None
@@ -435,8 +334,6 @@ def compile_script(
         else:
             if pending is not None:
                 frame = _default0(ids_distinct.join(frame, fetch.id, "left"), pending)
-            if cms_join_advisor:
-                frame = _cms_broadcast_hint(acc, frame, keys)
             if legacy_join_order:
                 acc = frame.join(acc, keys, how)
             else:
@@ -452,15 +349,11 @@ def compile_pipeline(
     spec: PipelineSpec,
     strict: bool = True,
     legacy_join_order: bool = False,
-    cms_join_advisor: bool | None = None,
 ) -> list[DataFrame]:
     """Compile every script: task DAG -> data_mapping -> output mapping."""
     out = []
     for script in spec.scripts:
-        df = compile_script(
-            catalog, script, legacy_join_order=legacy_join_order,
-            cms_join_advisor=cms_join_advisor,
-        )
+        df = compile_script(catalog, script, legacy_join_order=legacy_join_order)
         df = apply_data_mapping(df, spec.data_mapping)
         df = apply_output_mapping(df, spec.output_schema, strict=strict)
         out.append(df)

@@ -72,23 +72,6 @@ def _arrow_schema(path: str):
         return None
 
 
-# Opt-in shared-scan cache (SPARK_GRAFT_SHARED_SCANS=1): one persisted
-# DataFrame per (session, data_dir, table), shared across every Catalog
-# instance in the process. A registry sweep runs ~170 queries that each
-# construct their own Catalog; without this each query re-scans the same
-# parquet from disk. With it, the first touch materializes the table
-# into Spark's columnar block cache (MEMORY_AND_DISK — spills, never
-# OOMs) and every later query reads InMemoryTableScan. Engine-level
-# optimization, not per-plan: column pruning/filtering still apply on
-# the cached relation. Off by default — single-query workloads should
-# keep plain scans with parquet pushdown.
-_SHARED_CACHE: dict = {}
-
-
-def shared_scans_enabled() -> bool:
-    return os.environ.get("SPARK_GRAFT_SHARED_SCANS") == "1"
-
-
 def load_table(spark: SparkSession, data_dir: str, name: str) -> DataFrame:
     """Load one table from ``<data_dir>/<name>.parquet``.
 
@@ -106,9 +89,6 @@ def load_table(spark: SparkSession, data_dir: str, name: str) -> DataFrame:
     # oracle timestamps are TZ-naive; pin the session to UTC so date_trunc
     # and friends agree with DuckDB regardless of host timezone
     spark.conf.set("spark.sql.session.timeZone", "UTC")
-    shared_key = (id(spark), data_dir, name)
-    if shared_scans_enabled() and shared_key in _SHARED_CACHE:
-        return _SHARED_CACHE[shared_key]
     path = os.path.join(data_dir, f"{name}.parquet")
     schema = _arrow_schema(path)
     reader = spark.read.schema(schema) if schema is not None else spark.read
@@ -125,11 +105,6 @@ def load_table(spark: SparkSession, data_dir: str, name: str) -> DataFrame:
         # Any transformation produces a new DataFrame object without the
         # tag, so the tag can never leak onto a derived frame.
         df._edp_parquet_path = path
-    if shared_scans_enabled():
-        df = df.persist()
-        if name != "events":
-            df._edp_parquet_path = path
-        _SHARED_CACHE[shared_key] = df
     return df
 
 

@@ -376,8 +376,8 @@ def render() -> None:
         "at 10k, loses from 20k); bloom KEEPS 5k — the tie at its",
         "gate is proven noise both directions (synthetic corpus",
         "distributed +4%, REAL testdata local +5% in 5-run solo",
-        "medians; full-sweep context local clearly cheaper — see",
-        "docs/PERF_NOTES_r8.md).",
+        "medians; full-sweep context local clearly cheaper, 3.3 vs",
+        "4.7-5.3 s).",
         "",
         "| family | gate | n | local s | distributed s | winner |",
         "|---|---|---|---|---|---|",

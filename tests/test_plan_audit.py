@@ -136,6 +136,24 @@ def test_tier_gates_off_covers_every_gate():
     )
 
 
+def test_package_env_knobs_allowlist():
+    """The package reads exactly three SPARK_GRAFT_* environment knobs.
+    A new one is a second code path behind a switch; it has to be added
+    here on purpose, with the measurement that justifies it."""
+    import re
+
+    import elevate_data_pipeline_spark as pkg
+
+    rx = re.compile(r"SPARK_GRAFT_([A-Z0-9_]+)")
+    found = set()
+    for root, _dirs, files in os.walk(pkg.__path__[0]):
+        for name in files:
+            if name.endswith(".py"):
+                with open(os.path.join(root, name), encoding="utf-8") as f:
+                    found.update(rx.findall(f.read()))
+    assert found == {"CPUS", "DRIVER_MEM", "VP8_FOREIGN"}, sorted(found)
+
+
 def test_pid_feed_regex_accepts_sort_aggregate():
     """SortAggregate prints key= (singular); Spark picks it for
     struct-typed min/max — the suffix._dense_rank stats feeder."""

@@ -40,33 +40,6 @@ def test_quarantine_preserves_relative_paths(spark, tmp_path):
     assert (q / "p=1" / "part-corrupt.parquet").read_bytes() == b"PAR1 garbage BB"
 
 
-def test_shared_scan_cache_reuses_persisted_table(spark, monkeypatch):
-    """SPARK_GRAFT_SHARED_SCANS=1: two Catalog instances share ONE
-    persisted DataFrame per table; off (default) they build fresh
-    scans."""
-    from conftest import SF_DIR
-
-    from elevate_data_pipeline_spark.sources import catalog as cat
-    from elevate_data_pipeline_spark.sources.catalog import Catalog
-
-    a = Catalog(spark, SF_DIR).table("region")
-    b = Catalog(spark, SF_DIR).table("region")
-    assert a is not b  # plain mode: independent frames
-
-    monkeypatch.setenv("SPARK_GRAFT_SHARED_SCANS", "1")
-    cat._SHARED_CACHE.clear()
-    try:
-        c = Catalog(spark, SF_DIR).table("region")
-        d = Catalog(spark, SF_DIR).table("region")
-        assert c is d  # one shared persisted frame
-        assert c.storageLevel.useMemory
-        assert c.count() == a.count()
-    finally:
-        for df in set(cat._SHARED_CACHE.values()):
-            df.unpersist()
-        cat._SHARED_CACHE.clear()
-
-
 def test_warc_roundtrip_and_reader(spark, tmp_path):
     """encode_warc -> decode_warc is exact for both the per-member-gzip
     (.warc.gz) and uncompressed layouts, and the distributed binaryFile

@@ -3,7 +3,9 @@
 
 from __future__ import annotations
 
+import glob
 import json
+import os
 
 import pytest
 from pyspark.sql import functions as F
@@ -878,98 +880,31 @@ def test_join_type_passthrough_inner_and_semi(catalog, spark):
     assert semi.columns == ["c_custkey"]
 
 
-def test_cms_join_advisor_hints_broadcast(catalog, caplog):
-    """Opt-in sketch advisor (round-6 VERDICT task #7): a fold join whose
-    frame side the CMS row-count shows is small gets a broadcast() hint
-    plus a log line; the default compile is untouched and results are
-    identical either way. legacy_join_order forces the real-join branch
-    (the lazy S4 path never joins)."""
-    import contextlib
-    import io
-    import logging
-
-    spec = mentor_style_spec()
-
-    def plan_text(df):
-        buf = io.StringIO()
-        with contextlib.redirect_stdout(buf):
-            df.explain(extended=True)
-        return buf.getvalue()
-
-    with caplog.at_level(logging.INFO,
-                         logger="elevate_data_pipeline_spark.plans.compiler"):
-        (hinted,) = compile_pipeline(
-            catalog, spec, legacy_join_order=True, cms_join_advisor=True
-        )
-    assert "ResolvedHint" in plan_text(hinted)
-    assert any("cms-advisor" in r.message and "broadcast hint" in r.message
-               for r in caplog.records)
-    # the estimate the advisor logged is a never-undercount bound
-    assert any("est_join_rows" in r.message for r in caplog.records)
-
-    (plain,) = compile_pipeline(catalog, spec, legacy_join_order=True)
-    assert "ResolvedHint" not in plan_text(plain)
-    # advisory only: identical results
-    key = lambda r: tuple(str(v) for v in r)
-    assert sorted(map(key, hinted.collect())) == sorted(map(key, plain.collect()))
+EXAMPLES = sorted(
+    glob.glob(os.path.join(os.path.dirname(os.path.dirname(
+        os.path.abspath(__file__))), "examples", "*.json"))
+)
 
 
-def test_cms_join_advisor_warns_on_skewed_key(catalog, caplog):
-    """Skew extension of the CMS advisor (round-7 VERDICT task #8): a
-    fold join whose fetch side piles >= 20% of its rows onto one key id
-    gets a heavy-hitter warning pointing at operators/skew — from the
-    SAME sketches the broadcast hint already builds, advisory-only
-    (identical results with the advisor off)."""
-    import json
-    import logging
-
-    # half of all orders collapse onto key 1 -> est max-key share ~50%
-    skewed = [
-        {
-            "name": "skew_report",
-            "fetchId": {
-                "query": "SELECT CAST(CASE WHEN o_orderkey % 2 = 0 THEN 1 "
-                         "ELSE o_orderkey END AS BIGINT) AS c_custkey FROM orders",
-                "id": "c_custkey",
-            },
-            "tasks": [
-                {
-                    "single_process": {
-                        "input": "order_value",
-                        "query": "SELECT o_custkey, o_totalprice FROM orders",
-                        "correlate_on": "o_custkey",
-                        "agg": "sum",
-                        "agg_on": "o_totalprice",
-                        "join_on": "c_custkey",
-                        "join_type": "left",
-                        "rename": "total_value",
-                    }
-                },
-            ],
-        }
-    ]
-    spec = parse_spec(json.dumps(skewed), None, None)
-    with caplog.at_level(logging.INFO,
-                         logger="elevate_data_pipeline_spark.plans.compiler"):
-        (hinted,) = compile_pipeline(
-            catalog, spec, legacy_join_order=True, cms_join_advisor=True
-        )
-    warns = [r for r in caplog.records
-             if "skewed join key" in r.message and r.levelname == "WARNING"]
-    assert warns, "skew warning did not fire on a 50%-one-key fetch side"
-    assert any("skew_salted_agg" in r.message for r in warns)
-
-    # advisory only: identical results with the advisor off
-    (plain,) = compile_pipeline(catalog, spec, legacy_join_order=True)
-    key = lambda r: tuple(str(v) for v in r)
-    assert sorted(map(key, hinted.collect())) == sorted(map(key, plain.collect()))
-
-    # the un-skewed mentor spec must NOT warn (no false positives)
-    caplog.clear()
-    with caplog.at_level(logging.INFO,
-                         logger="elevate_data_pipeline_spark.plans.compiler"):
-        compile_pipeline(
-            catalog, mentor_style_spec(), legacy_join_order=True,
-            cms_join_advisor=True,
-        )
-    assert not any("skewed join key" in r.message for r in caplog.records)
+@pytest.mark.parametrize("legacy", [False, True], ids=["f2_order", "legacy_order"])
+@pytest.mark.parametrize("path", EXAMPLES, ids=os.path.basename)
+def test_compile_launches_no_spark_jobs(spark, catalog, path, legacy):
+    """Compiling only builds a plan: no Spark job may run until the
+    caller acts on the returned frames. Both fold orders are covered;
+    the legacy order is the one that runs real fold joins."""
+    with open(path) as f:
+        doc = json.load(f)
+    spec = parse_spec(
+        doc.get("input_data_schema", []),
+        doc.get("data_mapping"),
+        doc.get("output_data_schema"),
+    )
+    sc = spark.sparkContext
+    group = f"compile-{os.path.basename(path)}-{legacy}"
+    sc.setJobGroup(group, group)
+    try:
+        frames = compile_pipeline(catalog, spec, legacy_join_order=legacy)
+    finally:
+        sc.setLocalProperty("spark.jobGroup.id", None)
+    assert frames
+    assert list(sc.statusTracker().getJobIdsForGroup(group)) == []
