@@ -29,6 +29,8 @@ from __future__ import annotations
 from pyspark.sql import DataFrame, Window
 from pyspark.sql import functions as F
 
+from ..sources.local import local_frame
+
 
 def _large_star(e: DataFrame) -> DataFrame:
     # symmetrize: row (u, v) = "v is a neighbor of u"
@@ -88,7 +90,7 @@ def _local_components(e: DataFrame) -> DataFrame:
     schema = StructType(
         [StructField("id", utype, False), StructField("component", utype, False)]
     )
-    return e.sparkSession.createDataFrame(out, schema)
+    return local_frame(e.sparkSession, out, schema)
 
 
 def connected_components(
@@ -345,8 +347,8 @@ def _lloyd(
     local = collect_small_corpus(df, vec_col, id_col, _LLOYD_LOCAL_MAX_ROWS)
     if local is not None:
         cent_rows = lloyd_local(local, k, n_iter)
-        cents = df.sparkSession.createDataFrame(
-            cent_rows, "_cl int, _c array<double>"
+        cents = local_frame(
+            df.sparkSession, cent_rows, "_cl int, _c array<double>"
         )
         return cents, assign
 

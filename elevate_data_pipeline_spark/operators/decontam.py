@@ -20,6 +20,8 @@ from __future__ import annotations
 from pyspark.sql import DataFrame
 from pyspark.sql import functions as F
 
+from ..sources.local import local_frame
+
 
 def _distinct_word_ngrams(
     df: DataFrame, n: int, id_cols: list[str], text_col: str
@@ -181,7 +183,8 @@ def bloom_decontaminate(
             n_bloom = sum(1 for g in gs if all(b in bits for b in positions(g)))
             n_exact = sum(1 for g in gs if g in bench_grams)
             rows.append((did, len(gs), n_bloom, n_exact, n_bloom - n_exact))
-        return docs.sparkSession.createDataFrame(
+        return local_frame(
+            docs.sparkSession,
             rows,
             "doc_id long, n_grams bigint, n_bloom bigint, n_exact bigint,"
             " bloom_fp bigint",

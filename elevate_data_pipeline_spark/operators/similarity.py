@@ -19,6 +19,7 @@ import os
 from pyspark.sql import DataFrame, Window
 from pyspark.sql import functions as F
 
+from ..sources.local import local_frame
 from .util import spread
 
 from .dedup import cosine
@@ -407,11 +408,9 @@ def _pq_index_local(
         else:  # pragma: no cover - numpy is baked into the env
             code_rows.extend((i, s, argmin(v, cents[s])) for i, v in slices[s])
     sess = df.sparkSession
-    cents_df = sess.createDataFrame(cent_rows, "_s int, _cl int, _c array<double>")
+    cents_df = local_frame(sess, cent_rows, "_s int, _cl int, _c array<double>")
     id_type = dict(df.dtypes)[id_col]
-    codes_df = sess.createDataFrame(
-        code_rows, f"_id {id_type}, _s int, _code int"
-    )
+    codes_df = local_frame(sess, code_rows, f"_id {id_type}, _s int, _code int")
     # Stash the Python-side index next to the frames so ADC search can
     # build its per-query distance-lookup table on the driver (the table
     # is n_queries*m*k rows — computed on the query host in any real ADC
@@ -504,7 +503,7 @@ def pq_index(
     # two-shuffle plan (broadcast literal centroids -> argmin -> means)
     # instead of one deep nested plan whose codegen compile dominated
     # cold-start (~5 s -> ~2 s on a fresh JVM). IEEE doubles round-trip
-    # exactly through collect/createDataFrame, and every distance/mean is
+    # exactly through collect/local_frame, and every distance/mean is
     # still computed by the SAME Spark expressions (left-to-right
     # squared-L2 fold, min(struct(dist, cl)) ties-to-smaller-cluster,
     # DECIMAL(28,12) component sums), so the DuckDB oracle replay of the
@@ -512,7 +511,7 @@ def pq_index(
     cent_schema = "_s int, _cl int, _c array<double>"
 
     def lit_cents(rows) -> DataFrame:
-        return sess.createDataFrame(rows, cent_schema)
+        return local_frame(sess, rows, cent_schema)
 
     # init: the k smallest ids' vectors, sliced per subspace on the
     # driver — k rows of dim doubles, identical to cluster._lloyd's
@@ -647,7 +646,8 @@ def _adc_dtab(
             for s in range(m)
             for cl, c in py["cents"][s]
         ]
-        return df.sparkSession.createDataFrame(
+        return local_frame(
+            df.sparkSession,
             dtab_rows,
             f"query_id {py['id_type']}, _s int, _code int, _d double",
         )

@@ -32,6 +32,7 @@ from __future__ import annotations
 from pyspark.sql import DataFrame
 from pyspark.sql import functions as F
 
+from ..sources.local import local_frame
 from .rank import global_row_number
 
 
@@ -148,17 +149,14 @@ def _suffix_array_local(spark, local, depth: int, id_col: str) -> DataFrame:
     final = np.lexsort((O, D, r))
     rank = np.empty(n, dtype=np.int64)
     rank[final] = np.arange(1, n + 1)
-    import pandas as pd
-
-    pdf = pd.DataFrame(
+    return local_frame(
+        spark,
         {
             "rank": rank,
             id_col: np.asarray(ids, dtype=np.int64)[D] if n else [],
             "off": O.astype(np.int32),
-        }
-    )
-    return spark.createDataFrame(
-        pdf, f"rank long, {id_col} long, off int"
+        },
+        f"rank long, {id_col} long, off int",
     )
 
 

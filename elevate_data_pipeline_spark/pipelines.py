@@ -21,6 +21,7 @@ from pyspark.sql import functions as F
 
 from .functions.text import STOPWORDS, token_count_ws
 from .operators import cluster, curation, dedup
+from .sources.local import local_frame
 
 # Test hook, same contract as operators.rank.PIN_PARTITIONS: plan-shape
 # tests flip this off to inspect the pre-checkpoint plan (localCheckpoint
@@ -37,12 +38,13 @@ def _pin_stage(df: DataFrame) -> DataFrame:
 # dedup._MINHASH_LOCAL_MAX_ROWS): a tagged Catalog scan at or under this
 # many rows replays the ENTIRE multi-stage pipeline on the driver in
 # plain Python — zero shuffles, zero eager checkpoints, zero Python
-# workers, which turns a ~12 s cold multi-job build into one
-# createDataFrame. Every stage is an exact bit-for-bit replay of the
-# distributed operator (integer hashing; fixed-order IEEE-double quality
-# arithmetic), pinned by forced-off equality tests in
-# tests/test_local_vs_distributed.py. Larger or transformed inputs take
-# the distributed chain unchanged — that is the 100 TB path.
+# workers, which turns a ~12 s cold multi-job build into one Arrow local
+# relation (sources.local.local_frame). Every stage is an exact
+# bit-for-bit replay of the distributed operator (integer hashing;
+# fixed-order IEEE-double quality arithmetic), pinned by forced-off
+# equality tests in tests/test_local_vs_distributed.py. Larger or
+# transformed inputs take the distributed chain unchanged — that is the
+# 100 TB path.
 _PIPELINE_LOCAL_MAX_ROWS = 100_000
 
 
@@ -170,8 +172,10 @@ def curate_corpus(
             for did, lg, q, t in gated
             if comp[did] == did
         ]
-        return docs.sparkSession.createDataFrame(
-            rows, "doc_id long, lang string, quality double, n_tokens long"
+        return local_frame(
+            docs.sparkSession,
+            rows,
+            "doc_id long, lang string, quality double, n_tokens long",
         )
     f = docs.filter(F.col("lang").isin(*langs))
     f = curation.quality_filter(f, min_quality=min_quality)
@@ -255,7 +259,8 @@ def pretraining_corpus(
             (did, lg, q, nt, pos + 1, pos // docs_per_shard)
             for pos, (did, lg, q, nt) in enumerate(surv)
         ]
-        return docs.sparkSession.createDataFrame(
+        return local_frame(
+            docs.sparkSession,
             rows,
             "doc_id long, lang string, quality double, n_tokens long,"
             " pos long, shard long",

@@ -22,6 +22,7 @@ from pyspark.sql import functions as F
 from pyspark.sql import types as T
 
 from ..sources.catalog import Catalog
+from ..sources.local import local_frame
 from ..functions.mapping import apply_data_mapping, apply_output_mapping
 from ..plans.compiler import _agg_column, _agg_columns, _is_replace, _join_keys
 from ..spec.model import NestedFetch, PipelineSpec, Script, SingleProcess, SpecError
@@ -110,7 +111,7 @@ def _nested_frame_for_id(
                 T.StructField(value_name, T.LongType(), True),
             ]
         )
-        return catalog.spark.createDataFrame([(value, 0)], schema)
+        return local_frame(catalog.spark, [(value, 0)], schema)
     # U1 union fold — by name here (the reference's positional unionAll is
     # the §2.8 hazard we do not replicate)
     unioned = functools.reduce(

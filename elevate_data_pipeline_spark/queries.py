@@ -36,6 +36,7 @@ from pyspark.sql import functions as F
 
 from .operators.util import epoch_us
 from .sources.catalog import Catalog
+from .sources.local import local_frame
 from .spec import parse_spec
 from .plans import compile_pipeline, run_per_id
 
@@ -377,7 +378,8 @@ def spec_config_table_run(spark, sf_dir):
             }
         ]
     }])
-    config = spark.createDataFrame(
+    config = local_frame(
+        spark,
         [
             ("decoy", "[]", None, None),
             ("mentoring", spec_json, None, None),

@@ -17,6 +17,8 @@ import os
 
 from pyspark.sql import DataFrame, SparkSession
 
+from .local import local_frame
+
 TABLES = (
     "region",
     "nation",
@@ -115,11 +117,14 @@ def _warm_session(spark: SparkSession, data_dir: str) -> None:
     spin-up, Janino compiler class-loading, shuffle/broadcast/window
     machinery, Hadoop FileSystem init) before any data is touched, and
     each exec-feature class adds ~1 s more the first time it appears in a
-    plan. Running one tiny job that touches parquet + broadcast join +
-    higher-order function + window + shuffle in a daemon thread overlaps
-    that warmup with driver-side plan construction, so a cold session's
-    first real query sees mostly-warm machinery. On a long-lived cluster
-    session this is one sub-second job over <=5 rows — noise."""
+    plan. Running one tiny job that touches parquet + an Arrow local
+    relation (the ``local_frame`` path the driver-local tiers build) +
+    broadcast join + higher-order function + window + shuffle in a daemon
+    thread (named ``edp-warmup``) overlaps that warmup with driver-side
+    plan construction, so a cold session's first real query sees
+    mostly-warm machinery. The job runs entirely in the JVM and starts no
+    Python worker. On a long-lived cluster session this is one sub-second
+    job over <=5 rows — noise."""
     if getattr(spark, "_edp_warmed", False):
         return
     spark._edp_warmed = True
@@ -136,8 +141,8 @@ def _warm_session(spark: SparkSession, data_dir: str) -> None:
             else:  # no parquet nearby: still warm the exec machinery
                 d = spark.range(3).withColumnRenamed("id", "k")
                 key = "k"
-            # createDataFrame warms the local-relation conversion path
-            lit = spark.createDataFrame([(1,), (2,)], "_w int")
+            # warms the Arrow local-relation path the local tiers use
+            lit = local_frame(spark, [(1,), (2,)], "_w int")
             w = Window.partitionBy(key).orderBy(key)
             (
                 d.crossJoin(F.broadcast(lit))
@@ -155,7 +160,7 @@ def _warm_session(spark: SparkSession, data_dir: str) -> None:
 
     import threading
 
-    threading.Thread(target=_run, daemon=True).start()
+    threading.Thread(target=_run, name="edp-warmup", daemon=True).start()
 
 
 class Catalog:

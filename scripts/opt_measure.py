@@ -77,8 +77,8 @@ def main() -> None:
     for name in names:
         try:
             QUERIES[name](spark, WARM_DIR).collect()
-        except Exception:
-            pass
+        except Exception as exc:
+            raise RuntimeError(f"warm-up query {name!r} failed on {WARM_DIR}") from exc
     from pyspark.sql import functions as F
 
     for fname in sorted(os.listdir(SF_DIR)):

@@ -120,7 +120,7 @@ WAIVERS: dict[str, str] = {
 
 # The 9 driver-local fast tiers (docs/LOCAL_TIERS.md). At audit scale
 # their gates make the tiered queries compile to a trivial
-# createDataFrame, so the gates-ON sweep never sees their distributed
+# local relation, so the gates-ON sweep never sees their distributed
 # chains — the 100 TB path. The gates-OFF sweep forces every gate to -1
 # so those chains are planned and scanned too (round-6 VERDICT task #1).
 _TIER_GATES: list[tuple[str, str]] = [
@@ -220,7 +220,7 @@ def run_audit(spark, sf_dir: str, gates_off: bool = False):
 
     With ``gates_off`` every driver-local tier gate is forced to -1 so
     the tiered operators plan their DISTRIBUTED chains (the 100 TB
-    path) instead of the trivial createDataFrame the gate yields at
+    path) instead of the trivial local relation the gate yields at
     audit scale.
     """
     from elevate_data_pipeline_spark.queries import QUERIES
@@ -244,7 +244,7 @@ def run_audit(spark, sf_dir: str, gates_off: bool = False):
             "Same scan, with every driver-local tier gate forced to -1",
             f"({len(_TIER_GATES)} gates, docs/LOCAL_TIERS.md). At audit scale the",
             "tiers would otherwise compile the tiered queries to a trivial",
-            "`createDataFrame`, leaving their distributed chains — the 100 TB",
+            "local relation, leaving their distributed chains — the 100 TB",
             "path — invisible to the anti-pattern scan.",
             "",
             "| Query | Result |",

@@ -154,6 +154,29 @@ def test_package_env_knobs_allowlist():
     assert found == {"CPUS", "DRIVER_MEM", "VP8_FOREIGN"}, sorted(found)
 
 
+def test_package_builds_driver_frames_only_through_local_frame():
+    """``createDataFrame`` appears in the package only inside
+    ``sources.local.local_frame``. A list of tuples handed straight to
+    ``createDataFrame`` becomes a pickled Python RDD whose every scan
+    starts a Python worker; ``local_frame`` gives Spark an Arrow local
+    relation the JVM reads itself."""
+    import re
+
+    import elevate_data_pipeline_spark as pkg
+
+    rx = re.compile(r"\.createDataFrame\(")
+    calls = {}
+    for root, _dirs, files in os.walk(pkg.__path__[0]):
+        for name in files:
+            if name.endswith(".py"):
+                path = os.path.join(root, name)
+                with open(path, encoding="utf-8") as f:
+                    n = len(rx.findall(f.read()))
+                if n:
+                    calls[os.path.relpath(path, pkg.__path__[0])] = n
+    assert calls == {os.path.join("sources", "local.py"): 1}, calls
+
+
 def test_pid_feed_regex_accepts_sort_aggregate():
     """SortAggregate prints key= (singular); Spark picks it for
     struct-typed min/max — the suffix._dense_rank stats feeder."""

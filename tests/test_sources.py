@@ -1,3 +1,7 @@
+import pytest
+from pyspark.sql import types as T
+
+
 
 
 def test_read_parquet_resilient_skips_and_quarantines(spark, tmp_path):
@@ -599,3 +603,114 @@ def test_warc_fields_reject_bare_lf():
         parse_warc_fields(b"software: x\noutlink: http://a/\n")
     with pytest.raises(ValueError, match="CRLF"):
         parse_warc_fields(b"software: x\r\noutlink: a\nhostname: h\r\n")
+
+
+# Every schema an engine call site hands to local_frame, with rows that
+# exercise its edge values.
+_INF = float("inf")
+_LOCAL_FRAME_CASES = [
+    ("_w int", [(1,), (2,)]),
+    (
+        T.StructType([
+            T.StructField("id", T.LongType(), False),
+            T.StructField("value", T.LongType(), True),
+        ]),
+        [(7, 0)],
+    ),
+    (
+        "doc_id long, lang string, quality double, n_tokens long",
+        [(1, "en", 0.5, 3), (2, None, float("nan"), 0), (2**62, "de", -0.0, -1)],
+    ),
+    (
+        "doc_id long, lang string, quality double, n_tokens long,"
+        " pos long, shard long",
+        [(5, "en", _INF, 4, 1, 0), (6, "fr", -_INF, 2, 2, 0)],
+    ),
+    (
+        "script_type string, input_data_schema string,"
+        " data_mapping string, output_data_schema string",
+        [("decoy", "[]", None, None), ("mentoring", '[{"a": 1}]', None, None)],
+    ),
+    ("rank long, doc_id long, off int", [(1, 10, 0), (2, 10, 2**31 - 1)]),
+    (
+        T.StructType([
+            T.StructField("id", T.LongType(), False),
+            T.StructField("component", T.LongType(), False),
+        ]),
+        [(3, 1), (4, 1)],
+    ),
+    ("_cl int, _c array<double>", [(0, [0.1, -0.0, float("nan")]), (1, [])]),
+    ("id_a long, id_b long, jaccard double", [(1, 2, 1.0), (1, 3, 1 / 3)]),
+    (
+        T.StructType([
+            T.StructField("_id", T.LongType()),
+            T.StructField("_sig", T.ArrayType(T.LongType())),
+        ]),
+        [(1, [2**63 - 1, -(2**63), 0]), (2, [])],
+    ),
+    (
+        "doc_id long, n_chars int, n_dup_spans long, dup_chars long,"
+        " dup_frac double",
+        [(1, 0, 0, 0, float("nan")), (2, 10, 1, 5, 0.5)],
+    ),
+    (
+        "doc_id long, n_grams bigint, n_bloom bigint, n_exact bigint,"
+        " bloom_fp bigint",
+        [(1, 4, 3, 2, 1)],
+    ),
+    ("node bigint, rank_scaled bigint", [(1, 10**15), (2, 0)]),
+    ("_s int, _cl int, _c array<double>", [(0, 0, [_INF, -_INF, 5e-324])]),
+    ("_id bigint, _s int, _code int", [(9, 0, 3)]),
+    ("query_id bigint, _s int, _code int, _d double", [(0, 1, 2, 1e308)]),
+    ("_cl int, _c array<double>", []),
+]
+
+
+def _bits(v):
+    """Values compared bit for bit: NaN == NaN, -0.0 != 0.0."""
+    import struct
+
+    if isinstance(v, float):
+        return ("f", struct.pack("<d", v))
+    if isinstance(v, (list, tuple)):
+        return tuple(_bits(x) for x in v)
+    return v
+
+
+@pytest.mark.parametrize("schema,rows", _LOCAL_FRAME_CASES)
+def test_local_frame_round_trip(spark, schema, rows):
+    from elevate_data_pipeline_spark.sources.local import local_frame
+
+    df = local_frame(spark, rows, schema)
+    want = T.DataType.fromDDL(schema) if isinstance(schema, str) else schema
+    assert df.schema == want
+    got = [_bits(tuple(r)) for r in df.collect()]
+    assert got == [_bits(r) for r in rows]
+
+
+def test_local_frame_columns_mapping(spark):
+    import numpy as np
+
+    from elevate_data_pipeline_spark.sources.local import local_frame
+
+    df = local_frame(
+        spark,
+        {"rank": np.array([2, 1], dtype=np.int64), "off": np.array([0, 7], dtype=np.int32)},
+        "rank long, off int",
+    )
+    assert [tuple(r) for r in df.collect()] == [(2, 0), (1, 7)]
+
+
+def test_local_frame_is_a_local_table_scan(spark):
+    import io
+    from contextlib import redirect_stdout
+
+    from elevate_data_pipeline_spark.sources.local import local_frame
+
+    df = local_frame(spark, [(i, float(i)) for i in range(500)], "k long, v double")
+    buf = io.StringIO()
+    with redirect_stdout(buf):
+        df.explain("formatted")
+    plan = buf.getvalue()
+    assert "LocalTableScan" in plan
+    assert "ExistingRDD" not in plan
