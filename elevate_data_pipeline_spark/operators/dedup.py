@@ -336,8 +336,8 @@ def containment_pairs(
 
 # Gate for the driver-local SNM tier: the O(n*w) window verify does
 # Python set intersections (~50us each at ~1-2k grams/doc), so the
-# crossover sits near 10k docs — well under the generic 100k (same
-# work-shaped-gate reasoning as _MINHASH_LOCAL_MAX_ROWS).
+# crossover sits near 10k docs — well under the generic 100k, because
+# the work grows with the corpus text rather than a fixed codebook.
 _SNM_LOCAL_MAX_ROWS = 10_000
 
 
@@ -485,8 +485,8 @@ def minhash_signature(col: str) -> Column:
 def _minhash_kernel(texts) -> np.ndarray:
     """Vectorized minhash signatures for a batch of texts — the shared
     numpy kernel behind both :func:`minhash_signature_arrow` (executor
-    side, per Arrow batch) and the driver-local tier in
-    :func:`_signature_frame`. Bit-identical to
+    side, per Arrow batch) and the driver-local replay in
+    ``pipelines.py``. Bit-identical to
     :func:`minhash_signature`: same constants, same integer arithmetic —
     all intermediates < 2^63 so numpy int64 never wraps. Returns an
     ``(len(texts), N_HASHES)`` int64 array.
@@ -558,54 +558,12 @@ def minhash_signature_arrow(text_col: str = "text") -> Column:
     return _mh(text_col)
 
 
-# Gate for the driver-local signature tier (same pattern as
-# cluster._LLOYD_LOCAL_MAX_ROWS / similarity._PQ_LOCAL_MAX_ROWS):
-# an untransformed Catalog scan at or under this many rows computes
-# signatures on the driver via the shared numpy kernel — zero Python
-# workers, zero UDF codegen, which cuts seconds off a COLD process.
-# Unlike the PQ/Lloyd training gates the work here scales with corpus
-# TEXT, not a fixed codebook: measured crossover is ~2k docs (at 5k
-# docs the single-threaded kernel costs ~0.6 s/run while the 32-way
-# Arrow path amortizes to ~0.3 s warm), so the gate stays at the
-# cold-start scale instead of the generic 100k. Larger or transformed
-# inputs take the distributed Arrow path; the two tiers are
-# bit-identical (pinned by test_local_vs_distributed).
-_MINHASH_LOCAL_MAX_ROWS = 2_000
-
-
-def _signature_frame(
-    df: DataFrame, text_col: str, id_col: str, impl: str
-) -> DataFrame:
+def _signature_frame(df: DataFrame, text_col: str, id_col: str) -> DataFrame:
     """(_id, _sig) minhash signatures, checkpointed so downstream
     self-joins compute them once."""
-    if impl == "arrow":
-        from .util import collect_small_columns
-
-        local = collect_small_columns(
-            df, [id_col, text_col], _MINHASH_LOCAL_MAX_ROWS
-        )
-        if local is not None:
-            from pyspark.sql.types import ArrayType, LongType, StructField, StructType
-
-            ids, texts = local
-            sigs = _minhash_kernel(texts)
-            schema = StructType(
-                [
-                    StructField("_id", df.schema[id_col].dataType),
-                    StructField("_sig", ArrayType(LongType())),
-                ]
-            )
-            return local_frame(
-                df.sparkSession,
-                [(i, [int(x) for x in row]) for i, row in zip(ids, sigs)],
-                schema,
-            )
     df = spread(df)  # parallelize the signature UDF when the scan gave one split
-    sig_col = (
-        minhash_signature_arrow(text_col) if impl == "arrow" else minhash_signature(text_col)
-    )
     return df.select(
-        F.col(id_col).alias("_id"), sig_col.alias("_sig")
+        F.col(id_col).alias("_id"), minhash_signature_arrow(text_col).alias("_sig")
     ).localCheckpoint(eager=False)
 
 
@@ -647,18 +605,15 @@ def minhash_lsh_pairs(
     text_col: str = "text",
     id_col: str = "doc_id",
     est_threshold: float = 0.5,
-    impl: str = "arrow",
 ) -> DataFrame:
     """MinHash/LSH candidate pairs with estimated Jaccard.
 
     signatures -> band keys -> shuffle on band key -> same-bucket pairs
     -> estimate = fraction of agreeing signature components. Returns
     (id_a, id_b, est_jaccard). The band shuffle is the only wide
-    exchange; pair generation is local per bucket. ``impl`` picks the
-    signature path: "arrow" (vectorized Pandas UDF, default) or "expr"
-    (pure JVM higher-order functions) — identical outputs.
+    exchange; pair generation is local per bucket.
     """
-    bands = _band_frame(_signature_frame(df, text_col, id_col, impl))
+    bands = _band_frame(_signature_frame(df, text_col, id_col))
     a, b = bands.alias("a"), bands.alias("b")
     pairs = (
         a.join(
@@ -693,7 +648,6 @@ def minhash_lsh_match(
     text_col: str = "text",
     id_col: str = "doc_id",
     est_threshold: float = 0.5,
-    impl: str = "arrow",
 ) -> DataFrame:
     """Incremental dedup: match ``probe`` docs against a ``base`` corpus.
 
@@ -709,8 +663,8 @@ def minhash_lsh_match(
     reused across ingest batches (store it bucketed by band key to make
     the per-batch join shuffle-free on the base side).
     """
-    base_bands = _band_frame(_signature_frame(base, text_col, id_col, impl))
-    probe_bands = _band_frame(_signature_frame(probe, text_col, id_col, impl))
+    base_bands = _band_frame(_signature_frame(base, text_col, id_col))
+    probe_bands = _band_frame(_signature_frame(probe, text_col, id_col))
     pairs = (
         probe_bands.alias("a")
         .join(
@@ -1015,7 +969,7 @@ def _gram_kernel(t: str, k: int, pows: list) -> np.ndarray:
     return np.array([acc], dtype=np.int64)
 
 
-# Gate for the driver-local span tier (pattern of _MINHASH_LOCAL_MAX_ROWS):
+# Gate for the driver-local span tier (pattern of _SNM_LOCAL_MAX_ROWS):
 # the whole-corpus gram sweep is numpy-vectorized end to end. Set BELOW
 # the measured crossover with margin (docs/TIER_CROSSOVER.md, 3-run
 # medians: local WINS at 10k docs — 2.14 s vs 2.30 s — and loses from

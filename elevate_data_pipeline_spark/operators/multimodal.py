@@ -42,25 +42,6 @@ from pyspark.sql import types as T
 N_BYTE_FEATURES = 8
 
 
-def cpu_parallelize(df: DataFrame) -> DataFrame:
-    """Give a CPU-bound per-row stage (codec decode, feature extraction)
-    at least the cluster's core count of input partitions.
-
-    Decode parallelism comes entirely from input splits — there is no
-    shuffle key to spread work on. A small benchmark table is one tiny
-    parquet file, so the scan yields ONE split and a single core decodes
-    the whole corpus while 31 idle. When the scan's split count is below
-    ``defaultParallelism``, round-robin repartition up to it: the
-    exchange moves each payload exactly once, negligible next to per-row
-    decode cost. At production scale (100 TB => thousands of splits) the
-    branch is a no-op and payloads stay split-local — this never adds a
-    full-data shuffle to a well-partitioned input.
-    """
-    target = df.sparkSession.sparkContext.defaultParallelism
-    if df.rdd.getNumPartitions() < target:
-        return df.repartition(target)
-    return df
-
 FEATURE_SCHEMA = T.StructType(
     [
         T.StructField("doc_id", T.LongType()),

@@ -97,7 +97,7 @@ def _dense_rank(df: DataFrame, key_cols: list, out: str) -> DataFrame:
     return ranked.drop("_new", "_run", "_cont", "_goff", "_pid")
 
 
-# Gate for the driver-local tier (pattern of dedup._MINHASH_LOCAL_MAX_ROWS):
+# Gate for the driver-local tier (pattern of dedup._SNM_LOCAL_MAX_ROWS):
 # the replay is numpy lexsort-based doubling, linear passes over flat
 # arrays, so even the gate maximum (~100k docs * ~100 tokens) stays
 # in-core; the distributed chain is the same math at any scale.

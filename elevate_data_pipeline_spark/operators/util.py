@@ -4,6 +4,7 @@ from __future__ import annotations
 
 from pyspark.sql import Column, DataFrame
 from pyspark.sql import functions as F
+from pyspark.sql import types as T
 
 
 def epoch_us(col) -> Column:
@@ -36,6 +37,29 @@ def spread(df: DataFrame, min_partitions: int | None = None) -> DataFrame:
     if df.rdd.getNumPartitions() < target:
         return df.repartition(target)
     return df
+
+
+def map_rows(df: DataFrame, fn, schema: str) -> DataFrame:
+    """A per-row Python stage: ``spread(df)``, then one ``mapInPandas``.
+
+    ``fn`` is called once per input row with that row's values, in
+    ``df``'s column order, as plain Python objects (``tolist``: ints,
+    floats, str, bytes, None) and yields 0..n output tuples in the
+    column order of the DDL ``schema``. Each Arrow batch comes back as
+    one pandas frame whose column names are read from ``schema`` — the
+    query names its output columns once."""
+    names = T.StructType.fromDDL(schema).names
+
+    def rows(batches):
+        import pandas as pd
+
+        for pdf in batches:
+            out = []
+            for values in zip(*(pdf[c].tolist() for c in pdf.columns)):
+                out.extend(fn(*values))
+            yield pd.DataFrame(out, columns=names)
+
+    return spread(df).mapInPandas(rows, schema)
 
 
 def collect_small_corpus(

@@ -35,7 +35,7 @@ def _pin_stage(df: DataFrame) -> DataFrame:
 
 
 # Gate for the driver-local pipeline tier (same pattern as
-# dedup._MINHASH_LOCAL_MAX_ROWS): a tagged Catalog scan at or under this
+# dedup._SNM_LOCAL_MAX_ROWS): a tagged Catalog scan at or under this
 # many rows replays the ENTIRE multi-stage pipeline on the driver in
 # plain Python — zero shuffles, zero eager checkpoints, zero Python
 # workers, which turns a ~12 s cold multi-job build into one Arrow local

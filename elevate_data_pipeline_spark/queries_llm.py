@@ -38,6 +38,7 @@ from .functions.text import (
 )
 from .operators import asof, cluster, curation, decontam, dedup, multimodal, profile, similarity, sketch, skew, suffix
 from .operators.dedup import MERSENNE61, MINHASH_COEFFS, N_BANDS, N_HASHES, ROWS_PER_BAND
+from .operators.util import map_rows, spread
 from .queries import query
 from .sources.catalog import Catalog
 
@@ -275,7 +276,6 @@ def text_repetition(spark, sf_dir):
     explode -> groupBy x2 -> join formulation is pinned equal in
     tests/test_operators.py and costs two shuffles.)"""
     from .functions.text import repetition_stats_arrow
-    from .operators.util import spread
 
     docs = spread(Catalog(spark, sf_dir).table("documents"))
     return docs.select(
@@ -319,8 +319,6 @@ def text_rarity(spark, sf_dir):
     (log/exp) cross-engine drift. The vocab is corpus-derived and
     broadcasts; the (doc, word) stream aggregates with map-side
     partials."""
-    from .operators.util import spread
-
     docs = spread(Catalog(spark, sf_dir).table("documents"))
     words = docs.select(
         "doc_id", F.explode(F.split(F.col("text"), " ")).alias("w")
@@ -372,8 +370,6 @@ def text_tfidf_topterms(spark, sf_dir):
     join-sized, NOT broadcast-sized — only the 1-row corpus count is
     broadcast). The rank window partitions by doc_id, so no global sort."""
     from pyspark.sql.window import Window
-
-    from .operators.util import spread
 
     docs = spread(Catalog(spark, sf_dir).table("documents"))
     words = docs.select("doc_id", F.explode(F.split(F.col("text"), " ")).alias("w"))
@@ -431,8 +427,6 @@ def corpus_vocab(spark, sf_dir):
     as a broadcast scalar. Ties break on the token string for a total
     deterministic order."""
     from pyspark.sql.window import Window
-
-    from .operators.util import spread
 
     docs = spread(Catalog(spark, sf_dir).table("documents"))
     toks = docs.select(
@@ -496,8 +490,6 @@ def text_dsir_score(spark, sf_dir):
     independent). Scale shape: bucket counts reduce with map-side
     partials to exactly B rows, the B-row weight table broadcasts, and
     the doc-side join is map-only — no all-pairs, no skew-prone key."""
-    from .operators.util import spread
-
     B = _DSIR_BUCKETS
     docs = spread(Catalog(spark, sf_dir).table("documents"))
     bg = (
@@ -612,7 +604,6 @@ def text_pii_scrub(spark, sf_dir):
     of the masked text, proving byte-identical scrubbing. Pure per-row
     projection — no shuffle, cost ∝ bytes scanned."""
     from .functions.text import polyhash
-    from .operators.util import spread
 
     docs = spread(Catalog(spark, sf_dir).table("documents"))
     aug = docs.select(
@@ -652,8 +643,6 @@ def corpus_decontaminate(spark, sf_dir):
     'src0' as the held-out benchmark and score every other document by
     the fraction of its distinct word 5-grams that appear in it. The
     benchmark gram set broadcasts (benchmarks are MBs; corpora TBs)."""
-    from .operators.util import spread
-
     docs = spread(Catalog(spark, sf_dir).table("documents"))
     bench = docs.filter(F.col("source") == "src0")
     eval_docs = docs.filter(F.col("source") != "src0")
@@ -750,8 +739,6 @@ def text_chunking(spark, sf_dir):
     with 8-token overlap (stride 24), last partial chunk kept. The
     context-window prep step every trainer needs; pure projection +
     explode — no shuffle, output rows ∝ tokens/stride."""
-    from .operators.util import spread
-
     C, S = 32, 24
     docs = spread(Catalog(spark, sf_dir).table("documents"))
     ws = "split(text, ' ')"
@@ -1089,8 +1076,6 @@ def text_winnowing(spark, sf_dir):
     """Winnowing fingerprint sets (k-gram rolling hash, window minima),
     exploded to (doc_id, fp) pairs. Arrow-vectorized path (identical to
     the expr version — see test_winnow_arrow_equals_expr)."""
-    from .operators.util import spread
-
     docs = spread(Catalog(spark, sf_dir).table("documents"))
     return docs.select(
         "doc_id", F.explode(text_winnow("text")).alias("fp")
@@ -1793,26 +1778,14 @@ def multimodal_decode(spark, sf_dir):
     from the text (ASCII => byte == codepoint; encode_ppm zero-pads, so
     padding contributes 0). One narrow scan, no shuffle — decode is
     embarrassingly parallel, the 100 TB shape."""
-    from collections.abc import Iterator
 
-    def run(batches: "Iterator[pd.DataFrame]") -> "Iterator[pd.DataFrame]":
-        for pdf in batches:
-            rows = []
-            for doc_id, text in zip(pdf["doc_id"], pdf["text"]):
-                img = multimodal.decode_image(_doc_ppm(text))
-                rows.append(
-                    (doc_id, img.width, img.height, img.channels, img.maxval,
-                     sum(img.pixels))
-                )
-            yield pd.DataFrame(
-                rows,
-                columns=["doc_id", "width", "height", "channels", "maxval", "checksum"],
-            )
+    def row(doc_id, text):
+        img = multimodal.decode_image(_doc_ppm(text))
+        yield (doc_id, img.width, img.height, img.channels, img.maxval,
+               sum(img.pixels))
 
-    docs = multimodal.cpu_parallelize(
-        Catalog(spark, sf_dir).table("documents").select("doc_id", "text")
-    )
-    out = docs.mapInPandas(run, _DECODE_SCHEMA)
+    docs = Catalog(spark, sf_dir).table("documents").select("doc_id", "text")
+    out = map_rows(docs, row, _DECODE_SCHEMA)
     return out.select(
         "doc_id", "width", "height", "channels", "maxval", "checksum"
     )
@@ -1844,28 +1817,16 @@ def multimodal_png_decode(spark, sf_dir):
     the oracle is the same pixel-sum replay as multimodal_decode (ASCII
     => byte == codepoint; padding contributes 0). One narrow scan, no
     shuffle — decode is embarrassingly parallel, the 100 TB shape."""
-    from collections.abc import Iterator
 
-    def run(batches: "Iterator[pd.DataFrame]") -> "Iterator[pd.DataFrame]":
-        for pdf in batches:
-            rows = []
-            for doc_id, text in zip(pdf["doc_id"], pdf["text"]):
-                data = text.encode("utf-8")
-                w = max(1, min(32, len(data) // 6))
-                img = multimodal.decode_image(multimodal.encode_png(w, 2, data))
-                rows.append(
-                    (doc_id, img.width, img.height, img.channels, img.maxval,
-                     sum(img.pixels))
-                )
-            yield pd.DataFrame(
-                rows,
-                columns=["doc_id", "width", "height", "channels", "maxval", "checksum"],
-            )
+    def row(doc_id, text):
+        data = text.encode("utf-8")
+        w = max(1, min(32, len(data) // 6))
+        img = multimodal.decode_image(multimodal.encode_png(w, 2, data))
+        yield (doc_id, img.width, img.height, img.channels, img.maxval,
+               sum(img.pixels))
 
-    docs = multimodal.cpu_parallelize(
-        Catalog(spark, sf_dir).table("documents").select("doc_id", "text")
-    )
-    return docs.mapInPandas(run, _DECODE_SCHEMA)
+    docs = Catalog(spark, sf_dir).table("documents").select("doc_id", "text")
+    return map_rows(docs, row, _DECODE_SCHEMA)
 
 
 @query(
@@ -1895,31 +1856,19 @@ def multimodal_jpeg_decode(spark, sf_dir):
     64 x sum(bytes) and the oracle replays it — a full correctness gate
     on a JPEG decode, not a rows-only check. One narrow scan, no
     shuffle: decode is embarrassingly parallel, the 100 TB shape."""
-    from collections.abc import Iterator
 
-    def run(batches: "Iterator[pd.DataFrame]") -> "Iterator[pd.DataFrame]":
-        for pdf in batches:
-            rows = []
-            for doc_id, text in zip(pdf["doc_id"], pdf["text"]):
-                data = text.encode("utf-8")
-                n = max(1, min(24, len(data) // 8))
-                vals = list(data[:n]) or [0]
-                img = multimodal.decode_image(
-                    multimodal.encode_jpeg_gray_dc(vals, blocks_per_row=n)
-                )
-                rows.append(
-                    (doc_id, img.width, img.height, img.channels, img.maxval,
-                     sum(img.pixels))
-                )
-            yield pd.DataFrame(
-                rows,
-                columns=["doc_id", "width", "height", "channels", "maxval", "checksum"],
-            )
+    def row(doc_id, text):
+        data = text.encode("utf-8")
+        n = max(1, min(24, len(data) // 8))
+        vals = list(data[:n]) or [0]
+        img = multimodal.decode_image(
+            multimodal.encode_jpeg_gray_dc(vals, blocks_per_row=n)
+        )
+        yield (doc_id, img.width, img.height, img.channels, img.maxval,
+               sum(img.pixels))
 
-    docs = multimodal.cpu_parallelize(
-        Catalog(spark, sf_dir).table("documents").select("doc_id", "text")
-    )
-    return docs.mapInPandas(run, _DECODE_SCHEMA)
+    docs = Catalog(spark, sf_dir).table("documents").select("doc_id", "text")
+    return map_rows(docs, row, _DECODE_SCHEMA)
 
 
 @query(
@@ -1966,49 +1915,36 @@ def multimodal_png_variants(spark, sf_dir):
     the closed form 255*npix + 7*sum(index) the oracle replays. Exact
     sample-sum gate on all four variants. One narrow scan, no shuffle —
     embarrassingly parallel, the 100 TB shape."""
-    from collections.abc import Iterator
-
     pal16 = [(17 * i, 255 - 17 * i, 7 * i) for i in range(16)]
 
-    def run(batches: "Iterator[pd.DataFrame]") -> "Iterator[pd.DataFrame]":
-        for pdf in batches:
-            rows = []
-            for doc_id, text in zip(pdf["doc_id"], pdf["text"]):
-                data = text.encode("utf-8")
-                w = max(1, min(16, len(data) // 8))
-                v = int(doc_id) % 4
-                if v == 0:
-                    payload = multimodal.encode_png_ext(
-                        w, 4, [b % 16 for b in data[: w * 4]],
-                        color_type=3, depth=4, palette=pal16,
-                    )
-                elif v == 1:
-                    payload = multimodal.encode_png_ext(
-                        w, 4, list(data[: w * 16]), color_type=6, interlace=1
-                    )
-                elif v == 2:
-                    payload = multimodal.encode_png_ext(
-                        w, 4, [b * 257 for b in data[: w * 4]],
-                        color_type=0, depth=16,
-                    )
-                else:
-                    payload = multimodal.encode_png_ext(
-                        w, 4, list(data[: w * 8]), color_type=4, interlace=1
-                    )
-                img = multimodal.decode_image(payload)
-                rows.append(
-                    (doc_id, img.width, img.height, img.channels, img.maxval,
-                     multimodal.sample_sum(img))
-                )
-            yield pd.DataFrame(
-                rows,
-                columns=["doc_id", "width", "height", "channels", "maxval", "checksum"],
+    def row(doc_id, text):
+        data = text.encode("utf-8")
+        w = max(1, min(16, len(data) // 8))
+        v = doc_id % 4
+        if v == 0:
+            payload = multimodal.encode_png_ext(
+                w, 4, [b % 16 for b in data[: w * 4]],
+                color_type=3, depth=4, palette=pal16,
             )
+        elif v == 1:
+            payload = multimodal.encode_png_ext(
+                w, 4, list(data[: w * 16]), color_type=6, interlace=1
+            )
+        elif v == 2:
+            payload = multimodal.encode_png_ext(
+                w, 4, [b * 257 for b in data[: w * 4]],
+                color_type=0, depth=16,
+            )
+        else:
+            payload = multimodal.encode_png_ext(
+                w, 4, list(data[: w * 8]), color_type=4, interlace=1
+            )
+        img = multimodal.decode_image(payload)
+        yield (doc_id, img.width, img.height, img.channels, img.maxval,
+               multimodal.sample_sum(img))
 
-    docs = multimodal.cpu_parallelize(
-        Catalog(spark, sf_dir).table("documents").select("doc_id", "text")
-    )
-    return docs.mapInPandas(run, _DECODE_SCHEMA)
+    docs = Catalog(spark, sf_dir).table("documents").select("doc_id", "text")
+    return map_rows(docs, row, _DECODE_SCHEMA)
 
 
 @query(
@@ -2040,33 +1976,21 @@ def multimodal_jpeg_progressive(spark, sf_dir):
     closed form as the baseline query — a full correctness gate on the
     progressive path. One narrow scan, no shuffle: embarrassingly
     parallel, the 100 TB shape."""
-    from collections.abc import Iterator
 
-    def run(batches: "Iterator[pd.DataFrame]") -> "Iterator[pd.DataFrame]":
-        for pdf in batches:
-            rows = []
-            for doc_id, text in zip(pdf["doc_id"], pdf["text"]):
-                data = text.encode("utf-8")
-                n = max(1, min(24, len(data) // 8))
-                vals = list(data[:n]) or [0]
-                img = multimodal.decode_image(
-                    multimodal.encode_jpeg_gray_dc_progressive(
-                        vals, blocks_per_row=n
-                    )
-                )
-                rows.append(
-                    (doc_id, img.width, img.height, img.channels, img.maxval,
-                     sum(img.pixels))
-                )
-            yield pd.DataFrame(
-                rows,
-                columns=["doc_id", "width", "height", "channels", "maxval", "checksum"],
+    def row(doc_id, text):
+        data = text.encode("utf-8")
+        n = max(1, min(24, len(data) // 8))
+        vals = list(data[:n]) or [0]
+        img = multimodal.decode_image(
+            multimodal.encode_jpeg_gray_dc_progressive(
+                vals, blocks_per_row=n
             )
+        )
+        yield (doc_id, img.width, img.height, img.channels, img.maxval,
+               sum(img.pixels))
 
-    docs = multimodal.cpu_parallelize(
-        Catalog(spark, sf_dir).table("documents").select("doc_id", "text")
-    )
-    return docs.mapInPandas(run, _DECODE_SCHEMA)
+    docs = Catalog(spark, sf_dir).table("documents").select("doc_id", "text")
+    return map_rows(docs, row, _DECODE_SCHEMA)
 
 
 @query(
@@ -2093,32 +2017,19 @@ def multimodal_gif_decode(spark, sf_dir):
     clear-code resets) inside mapInPandas. LZW is lossless, so the RGB
     checksum is exactly 3 x sum(bytes) (second row zero-padded) and the
     oracle replays it. One narrow scan, no shuffle."""
-    from collections.abc import Iterator
-
     _pal = [(i, i, i) for i in range(256)]
 
-    def run(batches: "Iterator[pd.DataFrame]") -> "Iterator[pd.DataFrame]":
-        for pdf in batches:
-            rows = []
-            for doc_id, text in zip(pdf["doc_id"], pdf["text"]):
-                data = text.encode("utf-8")
-                w = max(1, min(48, len(data)))
-                img = multimodal.decode_image(
-                    multimodal.encode_gif(w, 2, data[:w], _pal)
-                )
-                rows.append(
-                    (doc_id, img.width, img.height, img.channels, img.maxval,
-                     sum(img.pixels))
-                )
-            yield pd.DataFrame(
-                rows,
-                columns=["doc_id", "width", "height", "channels", "maxval", "checksum"],
-            )
+    def row(doc_id, text):
+        data = text.encode("utf-8")
+        w = max(1, min(48, len(data)))
+        img = multimodal.decode_image(
+            multimodal.encode_gif(w, 2, data[:w], _pal)
+        )
+        yield (doc_id, img.width, img.height, img.channels, img.maxval,
+               sum(img.pixels))
 
-    docs = multimodal.cpu_parallelize(
-        Catalog(spark, sf_dir).table("documents").select("doc_id", "text")
-    )
-    return docs.mapInPandas(run, _DECODE_SCHEMA)
+    docs = Catalog(spark, sf_dir).table("documents").select("doc_id", "text")
+    return map_rows(docs, row, _DECODE_SCHEMA)
 
 
 @query(
@@ -2147,32 +2058,20 @@ def multimodal_webp_decode(spark, sf_dir):
     (zero-padded past the text) and the oracle replays it in closed
     form. One narrow scan, no shuffle: embarrassingly parallel, the
     100 TB shape."""
-    from collections.abc import Iterator
 
-    def run(batches: "Iterator[pd.DataFrame]") -> "Iterator[pd.DataFrame]":
-        for pdf in batches:
-            rows = []
-            for doc_id, text in zip(pdf["doc_id"], pdf["text"]):
-                data = text.encode("utf-8")
-                w = max(1, min(16, len(data) // 6))
-                img = multimodal.decode_image(
-                    multimodal.encode_webp_lossless(
-                        w, 2, data[: w * 6], 3, cache_bits=6
-                    )
-                )
-                rows.append(
-                    (doc_id, img.width, img.height, img.channels, img.maxval,
-                     sum(img.pixels))
-                )
-            yield pd.DataFrame(
-                rows,
-                columns=["doc_id", "width", "height", "channels", "maxval", "checksum"],
+    def row(doc_id, text):
+        data = text.encode("utf-8")
+        w = max(1, min(16, len(data) // 6))
+        img = multimodal.decode_image(
+            multimodal.encode_webp_lossless(
+                w, 2, data[: w * 6], 3, cache_bits=6
             )
+        )
+        yield (doc_id, img.width, img.height, img.channels, img.maxval,
+               sum(img.pixels))
 
-    docs = multimodal.cpu_parallelize(
-        Catalog(spark, sf_dir).table("documents").select("doc_id", "text")
-    )
-    return docs.mapInPandas(run, _DECODE_SCHEMA)
+    docs = Catalog(spark, sf_dir).table("documents").select("doc_id", "text")
+    return map_rows(docs, row, _DECODE_SCHEMA)
 
 
 @query(
@@ -2207,39 +2106,26 @@ def multimodal_flac_decode(spark, sf_dir):
     peak/energy equal the closed-form input signal — a bit-exact gate on
     the decompressor. One narrow scan, no shuffle: embarrassingly
     parallel, the 100 TB shape."""
-    from collections.abc import Iterator
 
-    def run(batches: "Iterator[pd.DataFrame]") -> "Iterator[pd.DataFrame]":
-        for pdf in batches:
-            rows = []
-            for doc_id in pdf["doc_id"]:
-                did = int(doc_id)
-                n = 64 + did % 192
-                if did % 10 == 0:
-                    sig = [did % 100] * n
-                else:
-                    sig = [(did * 31 + i * i * 7) % 4001 - 2000 for i in range(n)]
-                force = {3: "lpc", 5: "verbatim"}.get(did % 7)
-                audio = multimodal.decode_flac(
-                    multimodal.encode_flac(
-                        sig, sample_rate=8000, block_size=128, force=force
-                    )
-                )
-                rows.append(
-                    (did, len(audio.samples), audio.sample_rate,
-                     max(abs(s) for s in audio.samples),
-                     sum(s * s for s in audio.samples))
-                )
-            yield pd.DataFrame(
-                rows,
-                columns=["doc_id", "n_samples", "sample_rate", "peak", "energy"],
+    def row(did):
+        n = 64 + did % 192
+        if did % 10 == 0:
+            sig = [did % 100] * n
+        else:
+            sig = [(did * 31 + i * i * 7) % 4001 - 2000 for i in range(n)]
+        force = {3: "lpc", 5: "verbatim"}.get(did % 7)
+        audio = multimodal.decode_flac(
+            multimodal.encode_flac(
+                sig, sample_rate=8000, block_size=128, force=force
             )
+        )
+        yield (did, len(audio.samples), audio.sample_rate,
+               max(abs(s) for s in audio.samples),
+               sum(s * s for s in audio.samples))
 
-    docs = multimodal.cpu_parallelize(
-        Catalog(spark, sf_dir).table("documents").select("doc_id")
-    )
-    return docs.mapInPandas(
-        run, "doc_id long, n_samples long, sample_rate int, peak long, energy long"
+    docs = Catalog(spark, sf_dir).table("documents").select("doc_id")
+    return map_rows(
+        docs, row, "doc_id long, n_samples long, sample_rate int, peak long, energy long"
     )
 
 
@@ -2275,42 +2161,27 @@ def multimodal_flac_stereo_decorr(spark, sf_dir):
     spec's own end-to-end proof that the decorrelation is exact.
     Lossless, so peak/energy equal the closed-form input. One narrow
     scan, no shuffle: the 100 TB shape."""
-    from collections.abc import Iterator
-
     _MODES = ("independent", "left_side", "right_side", "mid_side")
 
-    def run(batches: "Iterator[pd.DataFrame]") -> "Iterator[pd.DataFrame]":
-        for pdf in batches:
-            rows = []
-            for doc_id in pdf["doc_id"]:
-                did = int(doc_id)
-                n = 64 + did % 128
-                inter = []
-                for i in range(n):
-                    inter.append((did * 31 + i * i * 7) % 4001 - 2000)
-                    inter.append((did * 13 + i * 3) % 3001 - 1500)
-                au = multimodal.decode_flac(
-                    multimodal.encode_flac(
-                        inter, sample_rate=8000, block_size=96,
-                        channels=2, stereo_mode=_MODES[did % 4],
-                    )
-                )
-                rows.append(
-                    (did, len(au.samples), au.channels,
-                     max(abs(s) for s in au.samples),
-                     sum(s * s for s in au.samples))
-                )
-            yield pd.DataFrame(
-                rows,
-                columns=["doc_id", "n_samples", "channels", "peak",
-                         "energy"],
+    def row(did):
+        n = 64 + did % 128
+        inter = []
+        for i in range(n):
+            inter.append((did * 31 + i * i * 7) % 4001 - 2000)
+            inter.append((did * 13 + i * 3) % 3001 - 1500)
+        au = multimodal.decode_flac(
+            multimodal.encode_flac(
+                inter, sample_rate=8000, block_size=96,
+                channels=2, stereo_mode=_MODES[did % 4],
             )
+        )
+        yield (did, len(au.samples), au.channels,
+               max(abs(s) for s in au.samples),
+               sum(s * s for s in au.samples))
 
-    docs = multimodal.cpu_parallelize(
-        Catalog(spark, sf_dir).table("documents").select("doc_id")
-    )
-    return docs.mapInPandas(
-        run,
+    docs = Catalog(spark, sf_dir).table("documents").select("doc_id")
+    return map_rows(
+        docs, row,
         "doc_id long, n_samples long, channels int, peak long,"
         " energy long",
     )
@@ -2357,57 +2228,43 @@ def multimodal_ogg_flac_decode(spark, sf_dir):
     against STREAMINFO inside the decoder). Foreign payloads
     (Vorbis/Opus) still gate loudly. One narrow scan, no shuffle: the
     100 TB shape."""
-    from collections.abc import Iterator
 
-    def run(batches: "Iterator[pd.DataFrame]") -> "Iterator[pd.DataFrame]":
-        for pdf in batches:
-            rows = []
-            for doc_id in pdf["doc_id"]:
-                did = int(doc_id)
-                n = 64 + did % 192
-                if did % 10 == 0:
-                    sig = [did % 100] * n
-                else:
-                    sig = [
-                        (did * 31 + i * i * 7) % 4001 - 2000
-                        for i in range(n)
-                    ]
-                force = {3: "lpc", 5: "verbatim"}.get(did % 7)
-                ogg = multimodal.encode_ogg_flac(
-                    sig, sample_rate=8000, block_size=128, force=force,
-                    serial=1 + did % 1000,
-                )
-                walk = multimodal.decode_ogg(ogg)
-                fetched = ogg
-                if did % 4 == 1:
-                    # every fourth doc arrives MULTIPLEXED with a
-                    # foreign codec track (grouped per RFC 3533 §2):
-                    # the demux must pick the FLAC-mapped stream, so
-                    # the decoded samples — and the oracle — are
-                    # framing-invariant
-                    foreign = multimodal.encode_ogg(
-                        [b"\x01vorbis" + bytes(8), "v-\u9801-data".encode()],
-                        serial=2000 + did % 1000,
-                    )
-                    fetched = multimodal.mux_ogg([foreign, ogg])
-                audio = multimodal.decode_audio(fetched)
-                rows.append(
-                    (did, len(audio.samples), audio.sample_rate,
-                     max(abs(s) for s in audio.samples),
-                     sum(s * s for s in audio.samples),
-                     walk["n_pages"], walk["granules"][-1])
-                )
-            yield pd.DataFrame(
-                rows,
-                columns=["doc_id", "n_samples", "sample_rate", "peak",
-                         "energy", "n_pages", "last_granule"],
+    def row(did):
+        n = 64 + did % 192
+        if did % 10 == 0:
+            sig = [did % 100] * n
+        else:
+            sig = [
+                (did * 31 + i * i * 7) % 4001 - 2000
+                for i in range(n)
+            ]
+        force = {3: "lpc", 5: "verbatim"}.get(did % 7)
+        ogg = multimodal.encode_ogg_flac(
+            sig, sample_rate=8000, block_size=128, force=force,
+            serial=1 + did % 1000,
+        )
+        walk = multimodal.decode_ogg(ogg)
+        fetched = ogg
+        if did % 4 == 1:
+            # every fourth doc arrives MULTIPLEXED with a
+            # foreign codec track (grouped per RFC 3533 §2):
+            # the demux must pick the FLAC-mapped stream, so
+            # the decoded samples — and the oracle — are
+            # framing-invariant
+            foreign = multimodal.encode_ogg(
+                [b"\x01vorbis" + bytes(8), "v-\u9801-data".encode()],
+                serial=2000 + did % 1000,
             )
+            fetched = multimodal.mux_ogg([foreign, ogg])
+        audio = multimodal.decode_audio(fetched)
+        yield (did, len(audio.samples), audio.sample_rate,
+               max(abs(s) for s in audio.samples),
+               sum(s * s for s in audio.samples),
+               walk["n_pages"], walk["granules"][-1])
 
-    docs = multimodal.cpu_parallelize(
-        Catalog(spark, sf_dir).table("documents").select("doc_id")
-    )
-    return docs.mapInPandas(
-        run,
+    docs = Catalog(spark, sf_dir).table("documents").select("doc_id")
+    return map_rows(
+        docs, row,
         "doc_id long, n_samples long, sample_rate int, peak long,"
         " energy long, n_pages int, last_granule long",
     )
@@ -2436,36 +2293,19 @@ def multimodal_resize(spark, sf_dir):
     nearest-neighbor index arithmetic (sy = y, sx = x*w div 8) against
     the text bytes, with zero-padding beyond the text (source rows are
     zero-padded by encode_ppm)."""
-    from collections.abc import Iterator
 
-    schema = "doc_id long, y int, x int, channel int, v int"
+    def row(doc_id, text):
+        resized = multimodal.decode_image(
+            multimodal.resize_image(_doc_ppm(text), 8, 2)
+        )
+        for y in range(2):
+            for x in range(8):
+                for c in range(3):
+                    yield (doc_id, y, x, c,
+                           resized.pixels[(y * 8 + x) * 3 + c])
 
-    def run(batches: "Iterator[pd.DataFrame]") -> "Iterator[pd.DataFrame]":
-        for pdf in batches:
-            ids, ys, xs, cs, vs = [], [], [], [], []
-            for doc_id, text in zip(pdf["doc_id"], pdf["text"]):
-                resized = multimodal.decode_image(
-                    multimodal.resize_image(_doc_ppm(text), 8, 2)
-                )
-                for y in range(2):
-                    for x in range(8):
-                        for c in range(3):
-                            ids.append(doc_id)
-                            ys.append(y)
-                            xs.append(x)
-                            cs.append(c)
-                            vs.append(resized.pixels[(y * 8 + x) * 3 + c])
-            yield pd.DataFrame(
-                {"doc_id": ids, "y": pd.array(ys, dtype="int32"),
-                 "x": pd.array(xs, dtype="int32"),
-                 "channel": pd.array(cs, dtype="int32"),
-                 "v": pd.array(vs, dtype="int32")}
-            )
-
-    docs = multimodal.cpu_parallelize(
-        Catalog(spark, sf_dir).table("documents").select("doc_id", "text")
-    )
-    return docs.mapInPandas(run, schema)
+    docs = Catalog(spark, sf_dir).table("documents").select("doc_id", "text")
+    return map_rows(docs, row, "doc_id long, y int, x int, channel int, v int")
 
 
 @query(
@@ -3705,8 +3545,6 @@ def text_bigram_lm(spark, sf_dir):
     broadcast; only per-doc partials move in the final aggregate."""
     from pyspark.sql.window import Window
 
-    from .operators.util import spread
-
     docs = spread(Catalog(spark, sf_dir).table("documents"))
     words = docs.select("doc_id", F.posexplode(F.split("text", " ")).alias("pos", "w"))
     nxt = F.lead("w").over(Window.partitionBy("doc_id").orderBy("pos"))
@@ -4371,8 +4209,6 @@ def text_bm25_topk(spark, sf_dir):
     doc_id; the 1-row (N, total_dl) frame broadcasts; the global top-20
     is orderBy+limit = TakeOrderedAndProject (per-partition heaps, never
     a full sort)."""
-    from .operators.util import spread
-
     docs = spread(Catalog(spark, sf_dir).table("documents"))
     d = docs.select(
         "doc_id",
@@ -4432,7 +4268,6 @@ def text_inverted_postings(spark, sf_dir):
     offsets) and df from a broadcast per-term count, never a per-term
     window over full posting lists."""
     from .operators.rank import grouped_row_number
-    from .operators.util import spread
 
     docs = spread(Catalog(spark, sf_dir).table("documents"))
     w = docs.select(
@@ -4491,7 +4326,6 @@ def decontam_semantic(spark, sf_dir):
     one tiny shuffle on vec_id for the final max. No corpus self-join,
     no corpus shuffle of embedding payloads."""
     from .operators.dedup import cosine
-    from .operators.util import spread
 
     emb = Catalog(spark, sf_dir).table("embeddings")
     bench = emb.filter(F.col("label") == 0).select(
@@ -4609,8 +4443,6 @@ def corpus_diversity(spark, sf_dir):
     aggregate shuffles once with map-side partials absorbing within-doc
     repeats, and the per-source rollup reuses that key prefix; gram
     strings never leave the first aggregate."""
-    from .operators.util import spread
-
     docs = spread(Catalog(spark, sf_dir).table("documents"))
     grams = docs.select(
         "source",
@@ -4774,34 +4606,20 @@ def multimodal_audio_features(spark, sf_dir):
     -byte — same pattern as multimodal_decode's pixel checksum. One
     narrow scan, no shuffle: decode is embarrassingly parallel, the
     100 TB shape."""
-    from collections.abc import Iterator
 
-    def run(batches: "Iterator[pd.DataFrame]") -> "Iterator[pd.DataFrame]":
-        for pdf in batches:
-            rows = []
-            for doc_id in pdf["doc_id"]:
-                did = int(doc_id)
-                n = 64 + did % 64
-                smp = [((did * 31 + i * 2053) % 65536) - 32768 for i in range(n)]
-                audio = multimodal.decode_wav(
-                    multimodal.encode_wav(smp, sample_rate=16000)
-                )
-                f = multimodal.audio_features(audio.samples)
-                rows.append(
-                    (did, f["n_samples"], audio.sample_rate, f["peak"],
-                     f["energy"], f["zero_crossings"])
-                )
-            yield pd.DataFrame(
-                rows,
-                columns=["doc_id", "n_samples", "sample_rate", "peak",
-                         "energy", "zero_crossings"],
-            )
+    def row(did):
+        n = 64 + did % 64
+        smp = [((did * 31 + i * 2053) % 65536) - 32768 for i in range(n)]
+        audio = multimodal.decode_wav(
+            multimodal.encode_wav(smp, sample_rate=16000)
+        )
+        f = multimodal.audio_features(audio.samples)
+        yield (did, f["n_samples"], audio.sample_rate, f["peak"],
+               f["energy"], f["zero_crossings"])
 
-    docs = multimodal.cpu_parallelize(
-        Catalog(spark, sf_dir).table("documents").select("doc_id")
-    )
-    return docs.mapInPandas(
-        run,
+    docs = Catalog(spark, sf_dir).table("documents").select("doc_id")
+    return map_rows(
+        docs, row,
         "doc_id long, n_samples long, sample_rate int, peak long, "
         "energy long, zero_crossings long",
     )
@@ -4830,37 +4648,23 @@ def multimodal_video_decode(spark, sf_dir):
     encode->decode round trip byte-for-byte — completing the modality
     triple with multimodal_decode (images) and multimodal_audio_features
     (audio). One narrow scan, fan-out rows, no shuffle."""
-    from collections.abc import Iterator
 
-    def run(batches: "Iterator[pd.DataFrame]") -> "Iterator[pd.DataFrame]":
-        for pdf in batches:
-            rows = []
-            for doc_id in pdf["doc_id"]:
-                did = int(doc_id)
-                nf = 1 + did % 5
-                frames = [
-                    bytes((did + f * 7 + p) % 251 for p in range(4 * 2 * 3))
-                    for f in range(nf)
-                ]
-                vid = multimodal.decode_avi(
-                    multimodal.encode_avi(frames, width=4, height=2)
-                )
-                for f in range(0, vid.n_frames, 2):
-                    rows.append(
-                        (did, f, vid.width, vid.height, vid.n_frames,
-                         sum(vid.frames[f]))
-                    )
-            yield pd.DataFrame(
-                rows,
-                columns=["doc_id", "frame_idx", "width", "height", "n_frames",
-                         "frame_sum"],
-            )
+    def row(did):
+        nf = 1 + did % 5
+        frames = [
+            bytes((did + f * 7 + p) % 251 for p in range(4 * 2 * 3))
+            for f in range(nf)
+        ]
+        vid = multimodal.decode_avi(
+            multimodal.encode_avi(frames, width=4, height=2)
+        )
+        for f in range(0, vid.n_frames, 2):
+            yield (did, f, vid.width, vid.height, vid.n_frames,
+                   sum(vid.frames[f]))
 
-    docs = multimodal.cpu_parallelize(
-        Catalog(spark, sf_dir).table("documents").select("doc_id")
-    )
-    return docs.mapInPandas(
-        run,
+    docs = Catalog(spark, sf_dir).table("documents").select("doc_id")
+    return map_rows(
+        docs, row,
         "doc_id long, frame_idx int, width int, height int, n_frames int, "
         "frame_sum long",
     )
@@ -4917,35 +4721,22 @@ def multimodal_adpcm_decode(spark, sf_dir):
     decompressor — closing the 'compressed audio' codec gap named in
     VERDICT r4. One narrow scan, no shuffle: decode is embarrassingly
     parallel, the 100 TB shape."""
-    from collections.abc import Iterator
 
-    def run(batches: "Iterator[pd.DataFrame]") -> "Iterator[pd.DataFrame]":
-        for pdf in batches:
-            rows = []
-            for doc_id in pdf["doc_id"]:
-                did = int(doc_id)
-                n = 32 + did % 32
-                nibs = [(did * 7 + i * 13) % 16 for i in range(n)]
-                audio = multimodal.decode_wav(
-                    multimodal.encode_wav_ima_adpcm(
-                        nibs, (did * 97) % 500 - 250, did % 89, sample_rate=8000
-                    )
-                )
-                rows.append(
-                    (did, len(audio.samples), audio.sample_rate,
-                     max(abs(s) for s in audio.samples),
-                     sum(s * s for s in audio.samples))
-                )
-            yield pd.DataFrame(
-                rows,
-                columns=["doc_id", "n_samples", "sample_rate", "peak", "energy"],
+    def row(did):
+        n = 32 + did % 32
+        nibs = [(did * 7 + i * 13) % 16 for i in range(n)]
+        audio = multimodal.decode_wav(
+            multimodal.encode_wav_ima_adpcm(
+                nibs, (did * 97) % 500 - 250, did % 89, sample_rate=8000
             )
+        )
+        yield (did, len(audio.samples), audio.sample_rate,
+               max(abs(s) for s in audio.samples),
+               sum(s * s for s in audio.samples))
 
-    docs = multimodal.cpu_parallelize(
-        Catalog(spark, sf_dir).table("documents").select("doc_id")
-    )
-    return docs.mapInPandas(
-        run, "doc_id long, n_samples long, sample_rate int, peak long, energy long"
+    docs = Catalog(spark, sf_dir).table("documents").select("doc_id")
+    return map_rows(
+        docs, row, "doc_id long, n_samples long, sample_rate int, peak long, energy long"
     )
 
 
@@ -5007,35 +4798,21 @@ def multimodal_g711_decode(spark, sf_dir):
     are bit-exact gates on both expanders — closing the A-law/µ-law
     boundary named in VERDICT r6 task #8. One narrow scan, no shuffle:
     decode is embarrassingly parallel, the 100 TB shape."""
-    from collections.abc import Iterator
 
-    def run(batches: "Iterator[pd.DataFrame]") -> "Iterator[pd.DataFrame]":
-        for pdf in batches:
-            rows = []
-            for doc_id in pdf["doc_id"]:
-                did = int(doc_id)
-                n = 40 + did % 24
-                sig = [((did * 31 + i * i * 7) % 65536) - 32768 for i in range(n)]
-                au = multimodal.decode_wav(multimodal.encode_wav_g711(sig, "ulaw"))
-                aa = multimodal.decode_wav(multimodal.encode_wav_g711(sig, "alaw"))
-                rows.append(
-                    (did, len(au.samples),
-                     max(abs(s) for s in au.samples),
-                     sum(s * s for s in au.samples),
-                     max(abs(s) for s in aa.samples),
-                     sum(s * s for s in aa.samples))
-                )
-            yield pd.DataFrame(
-                rows,
-                columns=["doc_id", "n_samples", "peak_ulaw", "energy_ulaw",
-                         "peak_alaw", "energy_alaw"],
-            )
+    def row(did):
+        n = 40 + did % 24
+        sig = [((did * 31 + i * i * 7) % 65536) - 32768 for i in range(n)]
+        au = multimodal.decode_wav(multimodal.encode_wav_g711(sig, "ulaw"))
+        aa = multimodal.decode_wav(multimodal.encode_wav_g711(sig, "alaw"))
+        yield (did, len(au.samples),
+               max(abs(s) for s in au.samples),
+               sum(s * s for s in au.samples),
+               max(abs(s) for s in aa.samples),
+               sum(s * s for s in aa.samples))
 
-    docs = multimodal.cpu_parallelize(
-        Catalog(spark, sf_dir).table("documents").select("doc_id")
-    )
-    return docs.mapInPandas(
-        run,
+    docs = Catalog(spark, sf_dir).table("documents").select("doc_id")
+    return map_rows(
+        docs, row,
         "doc_id long, n_samples long, peak_ulaw long, energy_ulaw long,"
         " peak_alaw long, energy_alaw long",
     )
@@ -5140,60 +4917,47 @@ def multimodal_mp3_decode(spark, sf_dir):
     the oracle replays the decode as the pinned linear superposition
     over the tap tables, a bit-exact gate on the whole encoder+decoder
     pair. One narrow scan, no shuffle: the 100 TB shape."""
-    from collections.abc import Iterator
+    sf1 = [0, 1] + [0] * 19  # band 1 (lines 16..31) shifted by 1
 
-    def run(batches: "Iterator[pd.DataFrame]") -> "Iterator[pd.DataFrame]":
-        for pdf in batches:
-            rows = []
-            sf1 = [0, 1] + [0] * 19  # band 1 (lines 16..31) shifted by 1
-            for doc_id in pdf["doc_id"]:
-                did = int(doc_id)
-                big0 = [0] * 20
-                big0[0] = (1 if did % 2 == 0 else -1) * (1 + did % 14)
-                big0[1] = (-1 if did % 3 == 0 else 1) * (1 + (did * 7) % 15)
-                big0[18] = (-1 if did % 4 == 0 else 1) * (1 + (did * 11) % 15)
-                big0[19] = (-1 if did % 5 == 0 else 1) * (1 + (did * 13) % 15)
-                g0 = {
-                    "big": big0, "gain_e": 1 + did % 7,
-                    "count1": [(did % 3 - 1, 0, 0, (did * 7) % 3 - 1)],
-                    "scalefac": sf1, "scalefac_scale": 1,
-                    "scalefac_compress": 5,
-                }
-                big1 = [0] * 20
-                big1[0] = (-1 if did % 5 == 0 else 1) * ((did * 3) % 16)
-                big1[1] = (-1 if did % 7 == 0 else 1) * (1 + (did * 5) % 13)
-                big1[18] = (-1 if did % 6 == 0 else 1) * (1 + (did * 17) % 15)
-                big1[19] = (-1 if did % 8 == 0 else 1) * (1 + (did * 19) % 15)
-                g1 = {
-                    "big": big1, "gain_e": 1 + (did * 3) % 7,
-                    "count1": [((did * 5) % 3 - 1, 0, 0, (did * 11) % 3 - 1)],
-                    "scalefac": sf1, "scalefac_scale": 1,
-                    "scalefac_compress": 5,
-                }
-                au = multimodal.decode_audio(
-                    # odd docs frame with protection_bit=0: the real
-                    # CRC-16 (poly 0x8005 over header bytes 2-3 + side
-                    # info) is written and VERIFIED on decode; samples
-                    # are framing-invariant, so the oracle is untouched
-                    multimodal.encode_mp3(
-                        [g0, g1], bitrate=64, protect=did % 2 == 1
-                    )
-                )
-                rows.append(
-                    (did, len(au.samples), au.sample_rate,
-                     max(abs(s) for s in au.samples),
-                     sum(s * s for s in au.samples))
-                )
-            yield pd.DataFrame(
-                rows,
-                columns=["doc_id", "n_samples", "sample_rate", "peak", "energy"],
+    def row(did):
+        big0 = [0] * 20
+        big0[0] = (1 if did % 2 == 0 else -1) * (1 + did % 14)
+        big0[1] = (-1 if did % 3 == 0 else 1) * (1 + (did * 7) % 15)
+        big0[18] = (-1 if did % 4 == 0 else 1) * (1 + (did * 11) % 15)
+        big0[19] = (-1 if did % 5 == 0 else 1) * (1 + (did * 13) % 15)
+        g0 = {
+            "big": big0, "gain_e": 1 + did % 7,
+            "count1": [(did % 3 - 1, 0, 0, (did * 7) % 3 - 1)],
+            "scalefac": sf1, "scalefac_scale": 1,
+            "scalefac_compress": 5,
+        }
+        big1 = [0] * 20
+        big1[0] = (-1 if did % 5 == 0 else 1) * ((did * 3) % 16)
+        big1[1] = (-1 if did % 7 == 0 else 1) * (1 + (did * 5) % 13)
+        big1[18] = (-1 if did % 6 == 0 else 1) * (1 + (did * 17) % 15)
+        big1[19] = (-1 if did % 8 == 0 else 1) * (1 + (did * 19) % 15)
+        g1 = {
+            "big": big1, "gain_e": 1 + (did * 3) % 7,
+            "count1": [((did * 5) % 3 - 1, 0, 0, (did * 11) % 3 - 1)],
+            "scalefac": sf1, "scalefac_scale": 1,
+            "scalefac_compress": 5,
+        }
+        au = multimodal.decode_audio(
+            # odd docs frame with protection_bit=0: the real
+            # CRC-16 (poly 0x8005 over header bytes 2-3 + side
+            # info) is written and VERIFIED on decode; samples
+            # are framing-invariant, so the oracle is untouched
+            multimodal.encode_mp3(
+                [g0, g1], bitrate=64, protect=did % 2 == 1
             )
+        )
+        yield (did, len(au.samples), au.sample_rate,
+               max(abs(s) for s in au.samples),
+               sum(s * s for s in au.samples))
 
-    docs = multimodal.cpu_parallelize(
-        Catalog(spark, sf_dir).table("documents").select("doc_id")
-    )
-    return docs.mapInPandas(
-        run,
+    docs = Catalog(spark, sf_dir).table("documents").select("doc_id")
+    return map_rows(
+        docs, row,
         "doc_id long, n_samples long, sample_rate int, peak long, energy long",
     )
 
@@ -5288,51 +5052,37 @@ def multimodal_aac_decode(spark, sf_dir):
     oracle replays the decode as the pinned linear superposition over
     the tap tables — a bit-exact gate on the encoder+decoder pair.
     One narrow scan, no shuffle: the 100 TB shape."""
-    from collections.abc import Iterator
 
-    def run(batches: "Iterator[pd.DataFrame]") -> "Iterator[pd.DataFrame]":
-        for pdf in batches:
-            rows = []
-            for doc_id in pdf["doc_id"]:
-                did = int(doc_id)
-                e0, e1 = 1 + did % 7, 1 + (did * 3) % 7
-                f0 = {"spec": [0] * 1024, "gain_e": e0,
-                      "sf_down": [0, 1] + [0] * 14}
-                f0["spec"][0] = (1 if did % 2 == 0 else -1) * (1 + did % 15)
-                f0["spec"][100] = (
-                    (-1 if did % 3 == 0 else 1) * (1 + (did * 7) % 15)
-                )
-                f0["spec"][500] = (
-                    (-1 if did % 5 == 0 else 1) * (1 + (did * 3) % 15)
-                )
-                f1 = {"spec": [0] * 1024, "gain_e": e1,
-                      "sf_down": [0, 1] + [0] * 14}
-                f1["spec"][0] = (
-                    (-1 if did % 7 == 0 else 1) * ((did * 11) % 16)
-                )
-                f1["spec"][100] = (
-                    (-1 if did % 4 == 0 else 1) * (1 + (did * 5) % 15)
-                )
-                f1["spec"][999] = (
-                    (-1 if did % 6 == 0 else 1) * (1 + (did * 13) % 15)
-                )
-                au = multimodal.decode_audio(multimodal.encode_aac([f0, f1]))
-                rows.append(
-                    (did, len(au.samples), au.sample_rate,
-                     max(abs(s) for s in au.samples),
-                     sum(s * s for s in au.samples))
-                )
-            yield pd.DataFrame(
-                rows,
-                columns=["doc_id", "n_samples", "sample_rate", "peak",
-                         "energy"],
-            )
+    def row(did):
+        e0, e1 = 1 + did % 7, 1 + (did * 3) % 7
+        f0 = {"spec": [0] * 1024, "gain_e": e0,
+              "sf_down": [0, 1] + [0] * 14}
+        f0["spec"][0] = (1 if did % 2 == 0 else -1) * (1 + did % 15)
+        f0["spec"][100] = (
+            (-1 if did % 3 == 0 else 1) * (1 + (did * 7) % 15)
+        )
+        f0["spec"][500] = (
+            (-1 if did % 5 == 0 else 1) * (1 + (did * 3) % 15)
+        )
+        f1 = {"spec": [0] * 1024, "gain_e": e1,
+              "sf_down": [0, 1] + [0] * 14}
+        f1["spec"][0] = (
+            (-1 if did % 7 == 0 else 1) * ((did * 11) % 16)
+        )
+        f1["spec"][100] = (
+            (-1 if did % 4 == 0 else 1) * (1 + (did * 5) % 15)
+        )
+        f1["spec"][999] = (
+            (-1 if did % 6 == 0 else 1) * (1 + (did * 13) % 15)
+        )
+        au = multimodal.decode_audio(multimodal.encode_aac([f0, f1]))
+        yield (did, len(au.samples), au.sample_rate,
+               max(abs(s) for s in au.samples),
+               sum(s * s for s in au.samples))
 
-    docs = multimodal.cpu_parallelize(
-        Catalog(spark, sf_dir).table("documents").select("doc_id")
-    )
-    return docs.mapInPandas(
-        run,
+    docs = Catalog(spark, sf_dir).table("documents").select("doc_id")
+    return map_rows(
+        docs, row,
         "doc_id long, n_samples long, sample_rate int, peak long,"
         " energy long",
     )
@@ -5435,50 +5185,36 @@ def multimodal_aac_tns(spark, sf_dir):
     taps computed THROUGH the filter — a bit-exact gate on syntax,
     lattice conversion, region arithmetic, and direction handling at
     once. One narrow scan, no shuffle: the 100 TB shape."""
-    from collections.abc import Iterator
 
-    def run(batches: "Iterator[pd.DataFrame]") -> "Iterator[pd.DataFrame]":
-        for pdf in batches:
-            rows = []
-            for doc_id in pdf["doc_id"]:
-                did = int(doc_id)
-                f0 = {"spec": [0] * 1024, "gain_e": 1 + did % 7,
-                      "tns": list(_AAC_TNS_F0)}
-                f0["spec"][100] = (1 if did % 2 == 0 else -1) * (1 + did % 15)
-                f0["spec"][840] = (
-                    (-1 if did % 3 == 0 else 1) * (1 + (did * 7) % 15)
-                )
-                f0["spec"][900] = (
-                    (-1 if did % 5 == 0 else 1) * (1 + (did * 3) % 15)
-                )
-                f0["spec"][1000] = (
-                    (-1 if did % 7 == 0 else 1) * (1 + (did * 11) % 15)
-                )
-                f1 = {"spec": [0] * 1024, "gain_e": 1 + (did * 3) % 7,
-                      "tns": list(_AAC_TNS_F1)}
-                f1["spec"][100] = (
-                    (-1 if did % 4 == 0 else 1) * (1 + (did * 5) % 15)
-                )
-                f1["spec"][1000] = (
-                    (-1 if did % 6 == 0 else 1) * (1 + (did * 13) % 15)
-                )
-                au = multimodal.decode_audio(multimodal.encode_aac([f0, f1]))
-                rows.append(
-                    (did, len(au.samples), au.sample_rate,
-                     max(abs(s) for s in au.samples),
-                     sum(s * s for s in au.samples))
-                )
-            yield pd.DataFrame(
-                rows,
-                columns=["doc_id", "n_samples", "sample_rate", "peak",
-                         "energy"],
-            )
+    def row(did):
+        f0 = {"spec": [0] * 1024, "gain_e": 1 + did % 7,
+              "tns": list(_AAC_TNS_F0)}
+        f0["spec"][100] = (1 if did % 2 == 0 else -1) * (1 + did % 15)
+        f0["spec"][840] = (
+            (-1 if did % 3 == 0 else 1) * (1 + (did * 7) % 15)
+        )
+        f0["spec"][900] = (
+            (-1 if did % 5 == 0 else 1) * (1 + (did * 3) % 15)
+        )
+        f0["spec"][1000] = (
+            (-1 if did % 7 == 0 else 1) * (1 + (did * 11) % 15)
+        )
+        f1 = {"spec": [0] * 1024, "gain_e": 1 + (did * 3) % 7,
+              "tns": list(_AAC_TNS_F1)}
+        f1["spec"][100] = (
+            (-1 if did % 4 == 0 else 1) * (1 + (did * 5) % 15)
+        )
+        f1["spec"][1000] = (
+            (-1 if did % 6 == 0 else 1) * (1 + (did * 13) % 15)
+        )
+        au = multimodal.decode_audio(multimodal.encode_aac([f0, f1]))
+        yield (did, len(au.samples), au.sample_rate,
+               max(abs(s) for s in au.samples),
+               sum(s * s for s in au.samples))
 
-    docs = multimodal.cpu_parallelize(
-        Catalog(spark, sf_dir).table("documents").select("doc_id")
-    )
-    return docs.mapInPandas(
-        run,
+    docs = Catalog(spark, sf_dir).table("documents").select("doc_id")
+    return map_rows(
+        docs, row,
         "doc_id long, n_samples long, sample_rate int, peak long,"
         " energy long",
     )
@@ -5555,38 +5291,24 @@ def multimodal_aac_pns(spark, sf_dir):
     overlap-add. The oracle replays noise bands as pinned band taps
     scaled by 2^k plus the usual line superposition. One narrow scan,
     no shuffle: the 100 TB shape."""
-    from collections.abc import Iterator
 
-    def run(batches: "Iterator[pd.DataFrame]") -> "Iterator[pd.DataFrame]":
-        for pdf in batches:
-            rows = []
-            for doc_id in pdf["doc_id"]:
-                did = int(doc_id)
-                f0 = {"spec": [0] * 1024, "gain_e": 1 + did % 7,
-                      "pns": {3: did % 8, 15: (did * 3) % 8}}
-                f0["spec"][100] = (1 if did % 2 == 0 else -1) * (1 + did % 15)
-                f1 = {"spec": [0] * 1024, "gain_e": 1 + (did * 3) % 7,
-                      "pns": {5: (did * 5) % 8}}
-                f1["spec"][500] = (
-                    (-1 if did % 3 == 0 else 1) * (1 + (did * 7) % 15)
-                )
-                au = multimodal.decode_audio(multimodal.encode_aac([f0, f1]))
-                rows.append(
-                    (did, len(au.samples), au.sample_rate,
-                     max(abs(s) for s in au.samples),
-                     sum(s * s for s in au.samples))
-                )
-            yield pd.DataFrame(
-                rows,
-                columns=["doc_id", "n_samples", "sample_rate", "peak",
-                         "energy"],
-            )
+    def row(did):
+        f0 = {"spec": [0] * 1024, "gain_e": 1 + did % 7,
+              "pns": {3: did % 8, 15: (did * 3) % 8}}
+        f0["spec"][100] = (1 if did % 2 == 0 else -1) * (1 + did % 15)
+        f1 = {"spec": [0] * 1024, "gain_e": 1 + (did * 3) % 7,
+              "pns": {5: (did * 5) % 8}}
+        f1["spec"][500] = (
+            (-1 if did % 3 == 0 else 1) * (1 + (did * 7) % 15)
+        )
+        au = multimodal.decode_audio(multimodal.encode_aac([f0, f1]))
+        yield (did, len(au.samples), au.sample_rate,
+               max(abs(s) for s in au.samples),
+               sum(s * s for s in au.samples))
 
-    docs = multimodal.cpu_parallelize(
-        Catalog(spark, sf_dir).table("documents").select("doc_id")
-    )
-    return docs.mapInPandas(
-        run,
+    docs = Catalog(spark, sf_dir).table("documents").select("doc_id")
+    return map_rows(
+        docs, row,
         "doc_id long, n_samples long, sample_rate int, peak long,"
         " energy long",
     )
@@ -5663,58 +5385,44 @@ def multimodal_aac_pulse(spark, sf_dir):
     raw data blocks (number_of_raw_data_blocks_in_frame=1). The
     oracle (which knows nothing of framing) gates all three paths.
     One narrow scan, no shuffle: the 100 TB shape."""
-    from collections.abc import Iterator
 
-    def run(batches: "Iterator[pd.DataFrame]") -> "Iterator[pd.DataFrame]":
-        for pdf in batches:
-            rows = []
-            for doc_id in pdf["doc_id"]:
-                did = int(doc_id)
-                f0 = {"spec": [0] * 1024, "gain_e": 1 + did % 7,
-                      "pulse": {"start_sfb": 1,
-                                "pulses": [(26, did % 16),
-                                           (20, (did * 3) % 16)]}}
-                f0["spec"][90] = (1 if did % 2 == 0 else -1) * (1 + did % 15)
-                f0["spec"][110] = (
-                    (-1 if did % 3 == 0 else 1) * (1 + (did * 7) % 15)
-                )
-                f1 = {"spec": [0] * 1024, "gain_e": 1 + (did * 3) % 7}
-                f1["spec"][1000] = (
-                    (-1 if did % 5 == 0 else 1) * (1 + (did * 11) % 15)
-                )
-                payload = multimodal.encode_aac([f0, f1])
-                if did % 2:  # MPEG-2 framing path
-                    w = multimodal.decode_adts(payload)
-                    payload = multimodal.encode_adts(
-                        w["frames"], w["freq_index"], w["channels"], 1,
-                        mpeg2=True,
-                    )
-                elif did % 4 == 2:
-                    # multi-RDB framing path: ONE ADTS frame carrying
-                    # both raw data blocks (nblocks=1) — also
-                    # sample-invariant, so the oracle gates it too
-                    w = multimodal.decode_adts(payload)
-                    payload = multimodal.encode_adts(
-                        [list(w["frames"])], w["freq_index"],
-                        w["channels"], 1,
-                    )
-                au = multimodal.decode_audio(payload)
-                rows.append(
-                    (did, len(au.samples), au.sample_rate,
-                     max(abs(s) for s in au.samples),
-                     sum(s * s for s in au.samples))
-                )
-            yield pd.DataFrame(
-                rows,
-                columns=["doc_id", "n_samples", "sample_rate", "peak",
-                         "energy"],
+    def row(did):
+        f0 = {"spec": [0] * 1024, "gain_e": 1 + did % 7,
+              "pulse": {"start_sfb": 1,
+                        "pulses": [(26, did % 16),
+                                   (20, (did * 3) % 16)]}}
+        f0["spec"][90] = (1 if did % 2 == 0 else -1) * (1 + did % 15)
+        f0["spec"][110] = (
+            (-1 if did % 3 == 0 else 1) * (1 + (did * 7) % 15)
+        )
+        f1 = {"spec": [0] * 1024, "gain_e": 1 + (did * 3) % 7}
+        f1["spec"][1000] = (
+            (-1 if did % 5 == 0 else 1) * (1 + (did * 11) % 15)
+        )
+        payload = multimodal.encode_aac([f0, f1])
+        if did % 2:  # MPEG-2 framing path
+            w = multimodal.decode_adts(payload)
+            payload = multimodal.encode_adts(
+                w["frames"], w["freq_index"], w["channels"], 1,
+                mpeg2=True,
             )
+        elif did % 4 == 2:
+            # multi-RDB framing path: ONE ADTS frame carrying
+            # both raw data blocks (nblocks=1) — also
+            # sample-invariant, so the oracle gates it too
+            w = multimodal.decode_adts(payload)
+            payload = multimodal.encode_adts(
+                [list(w["frames"])], w["freq_index"],
+                w["channels"], 1,
+            )
+        au = multimodal.decode_audio(payload)
+        yield (did, len(au.samples), au.sample_rate,
+               max(abs(s) for s in au.samples),
+               sum(s * s for s in au.samples))
 
-    docs = multimodal.cpu_parallelize(
-        Catalog(spark, sf_dir).table("documents").select("doc_id")
-    )
-    return docs.mapInPandas(
-        run,
+    docs = Catalog(spark, sf_dir).table("documents").select("doc_id")
+    return map_rows(
+        docs, row,
         "doc_id long, n_samples long, sample_rate int, peak long,"
         " energy long",
     )
@@ -5814,49 +5522,35 @@ def multimodal_aac_tns_short(spark, sf_dir):
     syntax; decoder parses it back, and the oracle replays everything
     through taps computed THROUGH the short filters. One narrow scan,
     no shuffle: the 100 TB shape."""
-    from collections.abc import Iterator
 
-    def run(batches: "Iterator[pd.DataFrame]") -> "Iterator[pd.DataFrame]":
-        for pdf in batches:
-            rows = []
-            for doc_id in pdf["doc_id"]:
-                did = int(doc_id)
-                f0 = {"spec": [0] * 1024, "gain_e": 1 + did % 7,
-                      "window": 2, "tns": list(_AAC_TNSS_F0)}
-                f0["spec"][276] = (1 if did % 2 == 0 else -1) * (1 + did % 15)
-                f0["spec"][370] = (
-                    (-1 if did % 3 == 0 else 1) * (1 + (did * 7) % 15)
-                )
-                f0["spec"][868] = (
-                    (-1 if did % 5 == 0 else 1) * (1 + (did * 3) % 15)
-                )
-                f0["spec"][562] = (
-                    (-1 if did % 7 == 0 else 1) * (1 + (did * 11) % 15)
-                )
-                f1 = {"spec": [0] * 1024, "gain_e": 1 + (did * 3) % 7}
-                f1["spec"][0] = (
-                    (-1 if did % 4 == 0 else 1) * (1 + (did * 5) % 15)
-                )
-                f1["spec"][999] = (
-                    (-1 if did % 6 == 0 else 1) * (1 + (did * 13) % 15)
-                )
-                au = multimodal.decode_audio(multimodal.encode_aac([f0, f1]))
-                rows.append(
-                    (did, len(au.samples), au.sample_rate,
-                     max(abs(s) for s in au.samples),
-                     sum(s * s for s in au.samples))
-                )
-            yield pd.DataFrame(
-                rows,
-                columns=["doc_id", "n_samples", "sample_rate", "peak",
-                         "energy"],
-            )
+    def row(did):
+        f0 = {"spec": [0] * 1024, "gain_e": 1 + did % 7,
+              "window": 2, "tns": list(_AAC_TNSS_F0)}
+        f0["spec"][276] = (1 if did % 2 == 0 else -1) * (1 + did % 15)
+        f0["spec"][370] = (
+            (-1 if did % 3 == 0 else 1) * (1 + (did * 7) % 15)
+        )
+        f0["spec"][868] = (
+            (-1 if did % 5 == 0 else 1) * (1 + (did * 3) % 15)
+        )
+        f0["spec"][562] = (
+            (-1 if did % 7 == 0 else 1) * (1 + (did * 11) % 15)
+        )
+        f1 = {"spec": [0] * 1024, "gain_e": 1 + (did * 3) % 7}
+        f1["spec"][0] = (
+            (-1 if did % 4 == 0 else 1) * (1 + (did * 5) % 15)
+        )
+        f1["spec"][999] = (
+            (-1 if did % 6 == 0 else 1) * (1 + (did * 13) % 15)
+        )
+        au = multimodal.decode_audio(multimodal.encode_aac([f0, f1]))
+        yield (did, len(au.samples), au.sample_rate,
+               max(abs(s) for s in au.samples),
+               sum(s * s for s in au.samples))
 
-    docs = multimodal.cpu_parallelize(
-        Catalog(spark, sf_dir).table("documents").select("doc_id")
-    )
-    return docs.mapInPandas(
-        run,
+    docs = Catalog(spark, sf_dir).table("documents").select("doc_id")
+    return map_rows(
+        docs, row,
         "doc_id long, n_samples long, sample_rate int, peak long,"
         " energy long",
     )
@@ -5950,52 +5644,38 @@ def multimodal_aac_short(spark, sf_dir):
     replays the decode as the pinned tap superposition over the
     window-switching tap tables. One narrow scan, no shuffle: the
     100 TB shape."""
-    from collections.abc import Iterator
 
-    def run(batches: "Iterator[pd.DataFrame]") -> "Iterator[pd.DataFrame]":
-        for pdf in batches:
-            rows = []
-            for doc_id in pdf["doc_id"]:
-                did = int(doc_id)
-                e0, e1 = 1 + did % 7, 1 + (did * 3) % 7
-                f0 = {"spec": [0] * 1024, "gain_e": e0, "window": 1,
-                      "sf_down": [0, 1] + [0] * 14}
-                f0["spec"][0] = (1 if did % 2 == 0 else -1) * (1 + did % 15)
-                f0["spec"][100] = (
-                    (-1 if did % 3 == 0 else 1) * (1 + (did * 7) % 15)
-                )
-                spec = [0] * 1024
-                spec[0] = (-1 if did % 5 == 0 else 1) * (1 + (did * 3) % 15)
-                spec[400] = (
-                    (-1 if did % 7 == 0 else 1) * (1 + (did * 5) % 15)
-                )
-                spec[640] = (
-                    (-1 if did % 4 == 0 else 1) * (1 + (did * 11) % 15)
-                )
-                spec[931] = (
-                    (-1 if did % 6 == 0 else 1) * (1 + (did * 13) % 15)
-                )
-                sfds = [[0] * 8 for _ in range(4)]
-                sfds[1][1] = 1
-                f1 = {"spec": spec, "gain_e": e1, "window": 2,
-                      "groups": [2, 3, 1, 2], "sf_down_short": sfds}
-                au = multimodal.decode_audio(multimodal.encode_aac([f0, f1]))
-                rows.append(
-                    (did, len(au.samples), au.sample_rate,
-                     max(abs(s) for s in au.samples),
-                     sum(s * s for s in au.samples))
-                )
-            yield pd.DataFrame(
-                rows,
-                columns=["doc_id", "n_samples", "sample_rate", "peak",
-                         "energy"],
-            )
+    def row(did):
+        e0, e1 = 1 + did % 7, 1 + (did * 3) % 7
+        f0 = {"spec": [0] * 1024, "gain_e": e0, "window": 1,
+              "sf_down": [0, 1] + [0] * 14}
+        f0["spec"][0] = (1 if did % 2 == 0 else -1) * (1 + did % 15)
+        f0["spec"][100] = (
+            (-1 if did % 3 == 0 else 1) * (1 + (did * 7) % 15)
+        )
+        spec = [0] * 1024
+        spec[0] = (-1 if did % 5 == 0 else 1) * (1 + (did * 3) % 15)
+        spec[400] = (
+            (-1 if did % 7 == 0 else 1) * (1 + (did * 5) % 15)
+        )
+        spec[640] = (
+            (-1 if did % 4 == 0 else 1) * (1 + (did * 11) % 15)
+        )
+        spec[931] = (
+            (-1 if did % 6 == 0 else 1) * (1 + (did * 13) % 15)
+        )
+        sfds = [[0] * 8 for _ in range(4)]
+        sfds[1][1] = 1
+        f1 = {"spec": spec, "gain_e": e1, "window": 2,
+              "groups": [2, 3, 1, 2], "sf_down_short": sfds}
+        au = multimodal.decode_audio(multimodal.encode_aac([f0, f1]))
+        yield (did, len(au.samples), au.sample_rate,
+               max(abs(s) for s in au.samples),
+               sum(s * s for s in au.samples))
 
-    docs = multimodal.cpu_parallelize(
-        Catalog(spark, sf_dir).table("documents").select("doc_id")
-    )
-    return docs.mapInPandas(
-        run,
+    docs = Catalog(spark, sf_dir).table("documents").select("doc_id")
+    return map_rows(
+        docs, row,
         "doc_id long, n_samples long, sample_rate int, peak long,"
         " energy long",
     )
@@ -6070,48 +5750,34 @@ def multimodal_aac_stereo(spark, sf_dir):
     the whole CPE layout (shared ics_info, mask shapes, two
     individual_channel_streams). One narrow scan, no shuffle: the
     100 TB shape."""
-    from collections.abc import Iterator
 
-    def run(batches: "Iterator[pd.DataFrame]") -> "Iterator[pd.DataFrame]":
-        for pdf in batches:
-            rows = []
-            for doc_id in pdf["doc_id"]:
-                did = int(doc_id)
-                em, es = 1 + did % 7, 1 + (did * 3) % 7
-                gm = {"spec": [0] * 1024, "gain_e": em,
-                      "sf_down": [0, 1] + [0] * 14}
-                gm["spec"][0] = (1 if did % 2 == 0 else -1) * (1 + did % 15)
-                gm["spec"][100] = (
-                    (-1 if did % 3 == 0 else 1) * (1 + (did * 7) % 15)
-                )
-                gs_ = {"spec": [0] * 1024, "gain_e": es,
-                       "sf_down": [0, 1] + [0] * 14}
-                gs_["spec"][0] = (
-                    (-1 if did % 5 == 0 else 1) * ((did * 11) % 16)
-                )
-                gs_["spec"][100] = (
-                    (-1 if did % 4 == 0 else 1) * (1 + (did * 5) % 15)
-                )
-                zero = (([], 0), ([], 0))
-                au = multimodal.decode_audio(
-                    multimodal.encode_aac([(gm, gs_), zero], mode="ms")
-                )
-                rows.append(
-                    (did, len(au.samples), au.channels,
-                     max(abs(s) for s in au.samples),
-                     sum(s * s for s in au.samples))
-                )
-            yield pd.DataFrame(
-                rows,
-                columns=["doc_id", "n_samples", "channels", "peak",
-                         "energy"],
-            )
+    def row(did):
+        em, es = 1 + did % 7, 1 + (did * 3) % 7
+        gm = {"spec": [0] * 1024, "gain_e": em,
+              "sf_down": [0, 1] + [0] * 14}
+        gm["spec"][0] = (1 if did % 2 == 0 else -1) * (1 + did % 15)
+        gm["spec"][100] = (
+            (-1 if did % 3 == 0 else 1) * (1 + (did * 7) % 15)
+        )
+        gs_ = {"spec": [0] * 1024, "gain_e": es,
+               "sf_down": [0, 1] + [0] * 14}
+        gs_["spec"][0] = (
+            (-1 if did % 5 == 0 else 1) * ((did * 11) % 16)
+        )
+        gs_["spec"][100] = (
+            (-1 if did % 4 == 0 else 1) * (1 + (did * 5) % 15)
+        )
+        zero = (([], 0), ([], 0))
+        au = multimodal.decode_audio(
+            multimodal.encode_aac([(gm, gs_), zero], mode="ms")
+        )
+        yield (did, len(au.samples), au.channels,
+               max(abs(s) for s in au.samples),
+               sum(s * s for s in au.samples))
 
-    docs = multimodal.cpu_parallelize(
-        Catalog(spark, sf_dir).table("documents").select("doc_id")
-    )
-    return docs.mapInPandas(
-        run,
+    docs = Catalog(spark, sf_dir).table("documents").select("doc_id")
+    return map_rows(
+        docs, row,
         "doc_id long, n_samples long, channels int, peak long,"
         " energy long",
     )
@@ -6186,43 +5852,29 @@ def multimodal_aac_intensity(spark, sf_dir):
     scale restricted to the integer-shift 4k grid (the MP3 intensity
     swap-in contract). The oracle replays both channels closed-form.
     One narrow scan, no shuffle: the 100 TB shape."""
-    from collections.abc import Iterator
 
-    def run(batches: "Iterator[pd.DataFrame]") -> "Iterator[pd.DataFrame]":
-        for pdf in batches:
-            rows = []
-            for doc_id in pdf["doc_id"]:
-                did = int(doc_id)
-                gl = {"spec": [0] * 1024, "gain_e": 1 + did % 7,
-                      "sf_down": [0, 1] + [0] * 14}
-                gl["spec"][0] = (1 if did % 2 == 0 else -1) * (1 + did % 15)
-                gl["spec"][100] = (
-                    (-1 if did % 3 == 0 else 1) * (1 + (did * 7) % 15)
-                )
-                ris = {
-                    "is_pos": [4 * (did % 8), 4 * ((did * 3) % 8)],
-                    "phase": [1, 1 if did % 2 == 0 else -1],
-                }
-                zero = (([], 0), {})
-                au = multimodal.decode_audio(
-                    multimodal.encode_aac([(gl, ris), zero], mode="is")
-                )
-                rows.append(
-                    (did, len(au.samples), au.channels,
-                     max(abs(s) for s in au.samples),
-                     sum(s * s for s in au.samples))
-                )
-            yield pd.DataFrame(
-                rows,
-                columns=["doc_id", "n_samples", "channels", "peak",
-                         "energy"],
-            )
+    def row(did):
+        gl = {"spec": [0] * 1024, "gain_e": 1 + did % 7,
+              "sf_down": [0, 1] + [0] * 14}
+        gl["spec"][0] = (1 if did % 2 == 0 else -1) * (1 + did % 15)
+        gl["spec"][100] = (
+            (-1 if did % 3 == 0 else 1) * (1 + (did * 7) % 15)
+        )
+        ris = {
+            "is_pos": [4 * (did % 8), 4 * ((did * 3) % 8)],
+            "phase": [1, 1 if did % 2 == 0 else -1],
+        }
+        zero = (([], 0), {})
+        au = multimodal.decode_audio(
+            multimodal.encode_aac([(gl, ris), zero], mode="is")
+        )
+        yield (did, len(au.samples), au.channels,
+               max(abs(s) for s in au.samples),
+               sum(s * s for s in au.samples))
 
-    docs = multimodal.cpu_parallelize(
-        Catalog(spark, sf_dir).table("documents").select("doc_id")
-    )
-    return docs.mapInPandas(
-        run,
+    docs = Catalog(spark, sf_dir).table("documents").select("doc_id")
+    return map_rows(
+        docs, row,
         "doc_id long, n_samples long, channels int, peak long,"
         " energy long",
     )
@@ -6251,40 +5903,28 @@ def multimodal_id3_meta(spark, sf_dir):
     walk and the tag-skip dispatch path. Every output field is parsed
     from the tag bytes — never recomputed. One narrow scan, no shuffle:
     the 100 TB shape."""
-    from collections.abc import Iterator
 
-    def run(batches: "Iterator[pd.DataFrame]") -> "Iterator[pd.DataFrame]":
-        for pdf in batches:
-            rows = []
-            for doc_id in pdf["doc_id"]:
-                did = int(doc_id)
-                mp3 = multimodal.encode_mp3([([1 + did % 5, 0], did % 8)] * 2)
-                payload = multimodal.encode_id3v2(
-                    [
-                        ("TIT2", f"Track {did % 19}"),
-                        ("TPE1", f"Artist {did % 11}"),
-                        ("TALB", f"Album {did % 5}"),
-                        ("TRCK", str(1 + did % 12)),
-                    ],
-                    mp3,
-                )
-                tags = dict(multimodal.decode_id3v2(payload))
-                au = multimodal.decode_audio(payload)
-                rows.append((
-                    did, tags["TIT2"], tags["TPE1"], tags["TALB"],
-                    int(tags["TRCK"]), len(tags), len(au.samples),
-                ))
-            yield pd.DataFrame(
-                rows,
-                columns=["doc_id", "title", "artist", "album", "track",
-                         "n_frames", "n_samples"],
-            )
+    def row(did):
+        mp3 = multimodal.encode_mp3([([1 + did % 5, 0], did % 8)] * 2)
+        payload = multimodal.encode_id3v2(
+            [
+                ("TIT2", f"Track {did % 19}"),
+                ("TPE1", f"Artist {did % 11}"),
+                ("TALB", f"Album {did % 5}"),
+                ("TRCK", str(1 + did % 12)),
+            ],
+            mp3,
+        )
+        tags = dict(multimodal.decode_id3v2(payload))
+        au = multimodal.decode_audio(payload)
+        yield (
+            did, tags["TIT2"], tags["TPE1"], tags["TALB"],
+            int(tags["TRCK"]), len(tags), len(au.samples),
+        )
 
-    docs = multimodal.cpu_parallelize(
-        Catalog(spark, sf_dir).table("documents").select("doc_id")
-    )
-    return docs.mapInPandas(
-        run,
+    docs = Catalog(spark, sf_dir).table("documents").select("doc_id")
+    return map_rows(
+        docs, row,
         "doc_id long, title string, artist string, album string,"
         " track int, n_frames int, n_samples long",
     )
@@ -6318,54 +5958,41 @@ def multimodal_exif_meta(spark, sf_dir):
     recomputed — so the arithmetic oracle is a bit-exact gate on the
     writer+parser pair. One narrow scan, no shuffle: metadata
     extraction is embarrassingly parallel, the 100 TB shape."""
-    from collections.abc import Iterator
 
-    def run(batches: "Iterator[pd.DataFrame]") -> "Iterator[pd.DataFrame]":
-        for pdf in batches:
-            rows = []
-            for doc_id in pdf["doc_id"]:
-                did = int(doc_id)
-                bo = "II" if did % 2 == 0 else "MM"
-                payload = multimodal.encode_exif_jpeg(
-                    [
-                        (0x010F, 2, [f"CAM{did % 7}"]),
-                        (0x0110, 2, [f"MX{did % 13}"]),
-                        (0x0112, 3, [1 + did % 8]),
-                        (0x011A, 5, [(72 + did % 4, 1)]),
-                    ],
-                    [
-                        (0x829A, 5, [(1, 30 + did % 100)]),
-                        (0x8827, 3, [100 + (did % 32) * 25]),
-                        (0xA002, 4, [16 * (1 + did % 50)]),
-                    ],
-                    byte_order=bo,
-                )
-                walked = multimodal.decode_exif_jpeg(payload)
-                by = {(ifd, tag): v for ifd, tag, _t, _c, v in walked}
-                rows.append((
-                    did,
-                    payload[payload.index(b"Exif\x00\x00") + 6:][:2].decode(),
-                    by[("IFD0", 0x010F)],
-                    by[("IFD0", 0x0110)],
-                    int(by[("IFD0", 0x0112)]),
-                    by[("IFD0", 0x011A)],
-                    by[("EXIF", 0x829A)],
-                    int(by[("EXIF", 0x8827)]),
-                    int(by[("EXIF", 0xA002)]),
-                    len(walked),
-                ))
-            yield pd.DataFrame(
-                rows,
-                columns=["doc_id", "byte_order", "make", "model",
-                         "orientation", "xres", "exposure", "iso",
-                         "pixel_x", "n_tags"],
-            )
+    def row(did):
+        bo = "II" if did % 2 == 0 else "MM"
+        payload = multimodal.encode_exif_jpeg(
+            [
+                (0x010F, 2, [f"CAM{did % 7}"]),
+                (0x0110, 2, [f"MX{did % 13}"]),
+                (0x0112, 3, [1 + did % 8]),
+                (0x011A, 5, [(72 + did % 4, 1)]),
+            ],
+            [
+                (0x829A, 5, [(1, 30 + did % 100)]),
+                (0x8827, 3, [100 + (did % 32) * 25]),
+                (0xA002, 4, [16 * (1 + did % 50)]),
+            ],
+            byte_order=bo,
+        )
+        walked = multimodal.decode_exif_jpeg(payload)
+        by = {(ifd, tag): v for ifd, tag, _t, _c, v in walked}
+        yield (
+            did,
+            payload[payload.index(b"Exif\x00\x00") + 6:][:2].decode(),
+            by[("IFD0", 0x010F)],
+            by[("IFD0", 0x0110)],
+            int(by[("IFD0", 0x0112)]),
+            by[("IFD0", 0x011A)],
+            by[("EXIF", 0x829A)],
+            int(by[("EXIF", 0x8827)]),
+            int(by[("EXIF", 0xA002)]),
+            len(walked),
+        )
 
-    docs = multimodal.cpu_parallelize(
-        Catalog(spark, sf_dir).table("documents").select("doc_id")
-    )
-    return docs.mapInPandas(
-        run,
+    docs = Catalog(spark, sf_dir).table("documents").select("doc_id")
+    return map_rows(
+        docs, row,
         "doc_id long, byte_order string, make string, model string,"
         " orientation int, xres string, exposure string, iso int,"
         " pixel_x long, n_tags int",
@@ -6442,35 +6069,25 @@ def multimodal_webp_lossy_decode(spark, sf_dir):
     a recursive CTE (the DC_PRED chain is sequential across MBs), so
     the pixel sum is a bit-exact gate on the whole lossy pipeline —
     the VERDICT r6 task #3 boundary. One narrow scan, no shuffle."""
-    from collections.abc import Iterator
 
-    def run(batches: "Iterator[pd.DataFrame]") -> "Iterator[pd.DataFrame]":
-        for pdf in batches:
-            rows = []
-            for doc_id in pdf["doc_id"]:
-                did = int(doc_id)
-                mbw = 1 + did % 3
-                qi = did % 128
-                w, h = mbw * 16, 16
-                gray = bytearray(w * h)
-                for mb in range(mbw):
-                    val = (did * 37 + mb * 83) % 256
-                    for r in range(16):
-                        for c in range(16):
-                            gray[r * w + mb * 16 + c] = val
-                img = multimodal.decode_image(
-                    multimodal.encode_vp8(w, h, bytes(gray), qi=qi)
-                )
-                rows.append((did, img.width, img.height, sum(img.pixels)))
-            yield pd.DataFrame(
-                rows, columns=["doc_id", "width", "height", "pix_sum"]
-            )
+    def row(did):
+        mbw = 1 + did % 3
+        qi = did % 128
+        w, h = mbw * 16, 16
+        gray = bytearray(w * h)
+        for mb in range(mbw):
+            val = (did * 37 + mb * 83) % 256
+            for r in range(16):
+                for c in range(16):
+                    gray[r * w + mb * 16 + c] = val
+        img = multimodal.decode_image(
+            multimodal.encode_vp8(w, h, bytes(gray), qi=qi)
+        )
+        yield (did, img.width, img.height, sum(img.pixels))
 
-    docs = multimodal.cpu_parallelize(
-        Catalog(spark, sf_dir).table("documents").select("doc_id")
-    )
-    return docs.mapInPandas(
-        run, "doc_id long, width int, height int, pix_sum long"
+    docs = Catalog(spark, sf_dir).table("documents").select("doc_id")
+    return map_rows(
+        docs, row, "doc_id long, width int, height int, pix_sum long"
     )
 
 
@@ -6498,40 +6115,26 @@ def multimodal_mjpeg_decode(spark, sf_dir):
     it in closed form — a full correctness gate on compressed-video
     decompression, closing the 'compressed video' codec gap named in
     VERDICT r4. One narrow scan, fan-out rows, no shuffle."""
-    from collections.abc import Iterator
 
-    def run(batches: "Iterator[pd.DataFrame]") -> "Iterator[pd.DataFrame]":
-        for pdf in batches:
-            rows = []
-            for doc_id in pdf["doc_id"]:
-                did = int(doc_id)
-                nf = 1 + did % 3
-                jf = [
-                    multimodal.encode_jpeg_gray_dc(
-                        [(did + f * 11) % 256, (did * 3 + f * 5) % 256],
-                        blocks_per_row=2,
-                    )
-                    for f in range(nf)
-                ]
-                vid = multimodal.decode_avi(
-                    multimodal.encode_avi_mjpeg(jf, width=16, height=8)
-                )
-                for f in range(vid.n_frames):
-                    rows.append(
-                        (did, f, vid.width, vid.height, vid.n_frames,
-                         sum(vid.frames[f]))
-                    )
-            yield pd.DataFrame(
-                rows,
-                columns=["doc_id", "frame_idx", "width", "height", "n_frames",
-                         "frame_sum"],
+    def row(did):
+        nf = 1 + did % 3
+        jf = [
+            multimodal.encode_jpeg_gray_dc(
+                [(did + f * 11) % 256, (did * 3 + f * 5) % 256],
+                blocks_per_row=2,
             )
+            for f in range(nf)
+        ]
+        vid = multimodal.decode_avi(
+            multimodal.encode_avi_mjpeg(jf, width=16, height=8)
+        )
+        for f in range(vid.n_frames):
+            yield (did, f, vid.width, vid.height, vid.n_frames,
+                   sum(vid.frames[f]))
 
-    docs = multimodal.cpu_parallelize(
-        Catalog(spark, sf_dir).table("documents").select("doc_id")
-    )
-    return docs.mapInPandas(
-        run,
+    docs = Catalog(spark, sf_dir).table("documents").select("doc_id")
+    return map_rows(
+        docs, row,
         "doc_id long, frame_idx int, width int, height int, n_frames int, "
         "frame_sum long",
     )
@@ -6599,45 +6202,37 @@ def multimodal_ahash_neardup(spark, sf_dir):
     join O(group^2) — 434k pairs at 5k docs; now groups are distinct,
     band groups bounded, and rows_out ~linear: 6 502 at 5k docs,
     68 278 at 50k)."""
-    from collections.abc import Iterator
 
-    def run(batches: "Iterator[pd.DataFrame]") -> "Iterator[pd.DataFrame]":
-        for pdf in batches:
-            rows = []
-            for doc_id in pdf["doc_id"]:
-                did = int(doc_id)
-                base, r = did // 4, did % 4
-                # Multiply-shift mixed per-group pattern (Knuth/Fibonacci
-                # hashing): the r12 fixture's linear `base*37 % 256` had
-                # period 256 in `base`, so every 1024th doc carried an
-                # IDENTICAL hash and the 16-bit band equi-join exploded
-                # O(group^2) on the collided band values (434k pairs out
-                # of 5k docs — guide §2.5 skew / §3 exploding join). The
-                # mixed (a, b, c) give each base group a distinct quadratic
-                # pixel pattern (~23 bits of pattern entropy), so candidate
-                # groups stay the structural 4 near-dup docs and rows_out
-                # is ~linear in the doc count.
-                m1 = (base * 2654435761) % 4294967296
-                m2 = (base * 2246822519) % 4294967296
-                a = m1 // 65536 % 256
-                b = (m2 // 65536 % 128) * 2 + 1
-                c = m2 % 256
-                px = bytes(
-                    (255 - (a + i * b + i * i * c) % 256)
-                    if i < r else (a + i * b + i * i * c) % 256
-                    for i in range(64)
-                )
-                img = multimodal.decode_image(
-                    multimodal.encode_ppm(8, 8, px, channels=1)
-                )
-                lo, hi = multimodal.ahash64(img)
-                rows.append((did, lo, hi))
-            yield pd.DataFrame(rows, columns=["doc_id", "lo", "hi"])
+    def row(did):
+        base, r = did // 4, did % 4
+        # Multiply-shift mixed per-group pattern (Knuth/Fibonacci
+        # hashing): the r12 fixture's linear `base*37 % 256` had
+        # period 256 in `base`, so every 1024th doc carried an
+        # IDENTICAL hash and the 16-bit band equi-join exploded
+        # O(group^2) on the collided band values (434k pairs out
+        # of 5k docs — guide §2.5 skew / §3 exploding join). The
+        # mixed (a, b, c) give each base group a distinct quadratic
+        # pixel pattern (~23 bits of pattern entropy), so candidate
+        # groups stay the structural 4 near-dup docs and rows_out
+        # is ~linear in the doc count.
+        m1 = (base * 2654435761) % 4294967296
+        m2 = (base * 2246822519) % 4294967296
+        a = m1 // 65536 % 256
+        b = (m2 // 65536 % 128) * 2 + 1
+        c = m2 % 256
+        px = bytes(
+            (255 - (a + i * b + i * i * c) % 256)
+            if i < r else (a + i * b + i * i * c) % 256
+            for i in range(64)
+        )
+        img = multimodal.decode_image(
+            multimodal.encode_ppm(8, 8, px, channels=1)
+        )
+        lo, hi = multimodal.ahash64(img)
+        yield (did, lo, hi)
 
-    docs = multimodal.cpu_parallelize(
-        Catalog(spark, sf_dir).table("documents").select("doc_id")
-    )
-    hashes = docs.mapInPandas(run, "doc_id long, lo long, hi long")
+    docs = Catalog(spark, sf_dir).table("documents").select("doc_id")
+    hashes = map_rows(docs, row, "doc_id long, lo long, hi long")
     bands = hashes.select(
         "doc_id", "lo", "hi",
         F.posexplode(
@@ -6759,8 +6354,6 @@ def embedding_random_projection(spark, sf_dir):
     dedup.cosine — bitwise equal across engines. Scale shape: pure
     row-local JVM expression work fanned out 16 rows per vector; no
     shuffle, no Python."""
-    from .operators.util import spread
-
     emb = spread(Catalog(spark, sf_dir).table("embeddings"))
     j = F.explode(F.expr(f"sequence(0, {_RP_OUT_DIM - 1})")).alias("dim")
     fold = (
@@ -6816,62 +6409,47 @@ def warc_records(spark, sf_dir):
     shape (per-file parallelism; WARC members are not splittable
     without a CDX index)."""
     import hashlib
-    from collections.abc import Iterator
-
     from .sources.warc import decode_warc, encode_warc
 
-    def run(batches: "Iterator[pd.DataFrame]") -> "Iterator[pd.DataFrame]":
-        for pdf in batches:
-            rows = []
-            for doc_id, text in zip(pdf["doc_id"], pdf["text"]):
-                did = int(doc_id)
-                uri = f"http://crawl.test/doc/{did}"
-                gz = encode_warc(
-                    [
-                        {
-                            "rec_type": "warcinfo",
-                            "record_id": f"<urn:uuid:{did:032x}>",
-                            "date": "2026-01-01T00:00:00Z",
-                            "payload": b"software: elevate-data-pipeline-spark\r\n",
-                        },
-                        {
-                            "rec_type": "request",
-                            "record_id": f"<urn:uuid:{did + 1:032x}>",
-                            "date": "2026-01-01T00:00:00Z",
-                            "uri": uri,
-                            "payload": (
-                                f"GET /doc/{did} HTTP/1.1\r\n"
-                                "Host: crawl.test\r\n\r\n"
-                            ).encode(),
-                        },
-                        {
-                            "rec_type": "response",
-                            "record_id": f"<urn:uuid:{did + 2:032x}>",
-                            "date": "2026-01-01T00:00:00Z",
-                            "uri": uri,
-                            "payload": str(text).encode("utf-8"),
-                        },
-                    ]
-                )
-                for i, rec in enumerate(decode_warc(gz)):
-                    rows.append(
-                        (
-                            did, i, rec["rec_type"], rec["uri"],
-                            len(rec["payload"]),
-                            hashlib.md5(rec["payload"]).hexdigest(),
-                        )
-                    )
-            yield pd.DataFrame(
-                rows,
-                columns=["doc_id", "rec_idx", "rec_type", "target_uri",
-                         "content_length", "payload_md5"],
-            )
+    def row(did, text):
+        uri = f"http://crawl.test/doc/{did}"
+        gz = encode_warc(
+            [
+                {
+                    "rec_type": "warcinfo",
+                    "record_id": f"<urn:uuid:{did:032x}>",
+                    "date": "2026-01-01T00:00:00Z",
+                    "payload": b"software: elevate-data-pipeline-spark\r\n",
+                },
+                {
+                    "rec_type": "request",
+                    "record_id": f"<urn:uuid:{did + 1:032x}>",
+                    "date": "2026-01-01T00:00:00Z",
+                    "uri": uri,
+                    "payload": (
+                        f"GET /doc/{did} HTTP/1.1\r\n"
+                        "Host: crawl.test\r\n\r\n"
+                    ).encode(),
+                },
+                {
+                    "rec_type": "response",
+                    "record_id": f"<urn:uuid:{did + 2:032x}>",
+                    "date": "2026-01-01T00:00:00Z",
+                    "uri": uri,
+                    "payload": str(text).encode("utf-8"),
+                },
+            ]
+        )
+        for i, rec in enumerate(decode_warc(gz)):
+            yield (
+                      did, i, rec["rec_type"], rec["uri"],
+                      len(rec["payload"]),
+                      hashlib.md5(rec["payload"]).hexdigest(),
+                  )
 
-    docs = multimodal.cpu_parallelize(
-        Catalog(spark, sf_dir).table("documents").select("doc_id", "text")
-    )
-    return docs.mapInPandas(
-        run,
+    docs = Catalog(spark, sf_dir).table("documents").select("doc_id", "text")
+    return map_rows(
+        docs, row,
         "doc_id long, rec_idx int, rec_type string, target_uri string,"
         " content_length long, payload_md5 string",
     )
@@ -6906,41 +6484,28 @@ def multimodal_id3_variants(spark, sf_dir):
     "Ä"+em-dash, UTF-16BE "ü"+em-dash) so each charset branch is
     value-gated, not just length-gated. One narrow scan, no shuffle —
     the 100 TB shape."""
-    from collections.abc import Iterator
 
-    def run(batches: "Iterator[pd.DataFrame]") -> "Iterator[pd.DataFrame]":
-        for pdf in batches:
-            rows = []
-            for doc_id in pdf["doc_id"]:
-                did = int(doc_id)
-                title = f"Trâck {did % 19}"
-                artist = f"Ärtist — {did % 11}"
-                album = f"Albüm — {did % 5}"
-                for version, frames, tkey, extra in (
-                    (2, [("TT2", title, 0), ("TP1", artist, 1)], "TT2", "TP1"),
-                    (3, [("TIT2", title, 0), ("TPE1", artist, 1)], "TIT2",
-                     "TPE1"),
-                    (4, [("TIT2", title, 3), ("TALB", album, 2)], "TIT2",
-                     "TALB"),
-                ):
-                    tags = dict(
-                        multimodal.decode_id3v2(
-                            multimodal.encode_id3v2(frames, version=version)
-                        )
-                    )
-                    rows.append(
-                        (did, version, tags[tkey], tags[extra], len(tags))
-                    )
-            yield pd.DataFrame(
-                rows,
-                columns=["doc_id", "version", "title", "extra", "n_frames"],
+    def row(did):
+        title = f"Trâck {did % 19}"
+        artist = f"Ärtist — {did % 11}"
+        album = f"Albüm — {did % 5}"
+        for version, frames, tkey, extra in (
+            (2, [("TT2", title, 0), ("TP1", artist, 1)], "TT2", "TP1"),
+            (3, [("TIT2", title, 0), ("TPE1", artist, 1)], "TIT2",
+             "TPE1"),
+            (4, [("TIT2", title, 3), ("TALB", album, 2)], "TIT2",
+             "TALB"),
+        ):
+            tags = dict(
+                multimodal.decode_id3v2(
+                    multimodal.encode_id3v2(frames, version=version)
+                )
             )
+            yield (did, version, tags[tkey], tags[extra], len(tags))
 
-    docs = multimodal.cpu_parallelize(
-        Catalog(spark, sf_dir).table("documents").select("doc_id")
-    )
-    return docs.mapInPandas(
-        run,
+    docs = Catalog(spark, sf_dir).table("documents").select("doc_id")
+    return map_rows(
+        docs, row,
         "doc_id long, version int, title string, extra string, n_frames int",
     )
 
@@ -7001,60 +6566,45 @@ def warc_cdx(spark, sf_dir):
     uncompressed layout on both sides; for .warc.gz the helper reports
     compressed member spans (pytest-verified, zlib output not
     SQL-replayable). One narrow scan, no corpus shuffle."""
-    from collections.abc import Iterator
-
     from .sources.warc import cdx_records, encode_warc
 
-    def run(batches: "Iterator[pd.DataFrame]") -> "Iterator[pd.DataFrame]":
-        for pdf in batches:
-            rows = []
-            for doc_id, text in zip(pdf["doc_id"], pdf["text"]):
-                did = int(doc_id)
-                uri = f"http://crawl.test/doc/{did}"
-                plain = encode_warc(
-                    [
-                        {
-                            "rec_type": "warcinfo",
-                            "record_id": f"<urn:uuid:{did:032x}>",
-                            "date": "2026-01-01T00:00:00Z",
-                            "payload": b"software: elevate-data-pipeline-spark\r\n",
-                        },
-                        {
-                            "rec_type": "request",
-                            "record_id": f"<urn:uuid:{did + 1:032x}>",
-                            "date": "2026-01-01T00:00:00Z",
-                            "uri": uri,
-                            "payload": (
-                                f"GET /doc/{did} HTTP/1.1\r\n"
-                                "Host: crawl.test\r\n\r\n"
-                            ).encode(),
-                        },
-                        {
-                            "rec_type": "response",
-                            "record_id": f"<urn:uuid:{did + 2:032x}>",
-                            "date": "2026-01-01T00:00:00Z",
-                            "uri": uri,
-                            "payload": str(text).encode("utf-8"),
-                        },
-                    ],
-                    gzip_members=False,
-                )
-                for c in cdx_records(plain):
-                    rows.append(
-                        (did, c["rec_idx"], c["rec_type"], c["uri"],
-                         c["offset"], c["length"])
-                    )
-            yield pd.DataFrame(
-                rows,
-                columns=["doc_id", "rec_idx", "rec_type", "target_uri",
-                         "offset", "length"],
-            )
+    def row(did, text):
+        uri = f"http://crawl.test/doc/{did}"
+        plain = encode_warc(
+            [
+                {
+                    "rec_type": "warcinfo",
+                    "record_id": f"<urn:uuid:{did:032x}>",
+                    "date": "2026-01-01T00:00:00Z",
+                    "payload": b"software: elevate-data-pipeline-spark\r\n",
+                },
+                {
+                    "rec_type": "request",
+                    "record_id": f"<urn:uuid:{did + 1:032x}>",
+                    "date": "2026-01-01T00:00:00Z",
+                    "uri": uri,
+                    "payload": (
+                        f"GET /doc/{did} HTTP/1.1\r\n"
+                        "Host: crawl.test\r\n\r\n"
+                    ).encode(),
+                },
+                {
+                    "rec_type": "response",
+                    "record_id": f"<urn:uuid:{did + 2:032x}>",
+                    "date": "2026-01-01T00:00:00Z",
+                    "uri": uri,
+                    "payload": str(text).encode("utf-8"),
+                },
+            ],
+            gzip_members=False,
+        )
+        for c in cdx_records(plain):
+            yield (did, c["rec_idx"], c["rec_type"], c["uri"],
+                   c["offset"], c["length"])
 
-    docs = multimodal.cpu_parallelize(
-        Catalog(spark, sf_dir).table("documents").select("doc_id", "text")
-    )
-    return docs.mapInPandas(
-        run,
+    docs = Catalog(spark, sf_dir).table("documents").select("doc_id", "text")
+    return map_rows(
+        docs, row,
         "doc_id long, rec_idx int, rec_type string, target_uri string,"
         " offset long, length long",
     )
@@ -7091,56 +6641,41 @@ def warc_http_response(spark, sf_dir):
     branches are value-gated. One narrow scan, no shuffle: the 100 TB
     crawl-ingest shape."""
     import hashlib
-    from collections.abc import Iterator
-
     from .sources.warc import decode_warc, encode_warc, parse_http_response
 
-    def run(batches: "Iterator[pd.DataFrame]") -> "Iterator[pd.DataFrame]":
-        for pdf in batches:
-            rows = []
-            for doc_id, text in zip(pdf["doc_id"], pdf["text"]):
-                did = int(doc_id)
-                if did % 10 == 0:
-                    status, reason, body = 404, "Not Found", b"missing"
-                else:
-                    status, reason, body = 200, "OK", str(text).encode()
-                ctype = (
-                    "text/html; charset=utf-8" if did % 2 == 0
-                    else "text/plain; charset=utf-8"
-                )
-                http = (
-                    f"HTTP/1.1 {status} {reason}\r\n"
-                    f"Content-Type: {ctype}\r\n"
-                    f"Content-Length: {len(body)}\r\n\r\n"
-                ).encode() + body
-                gz = encode_warc([
-                    {
-                        "rec_type": "response",
-                        "record_id": f"<urn:uuid:{did:032x}>",
-                        "date": "2026-01-01T00:00:00Z",
-                        "uri": f"http://crawl.test/doc/{did}",
-                        "headers": {"Content-Type": "application/http"},
-                        "payload": http,
-                    }
-                ])
-                rec = decode_warc(gz)[0]
-                resp = parse_http_response(rec["payload"])
-                rows.append(
-                    (did, resp["status"], resp["reason"],
-                     resp["headers"]["content-type"], len(resp["body"]),
-                     hashlib.md5(resp["body"]).hexdigest())
-                )
-            yield pd.DataFrame(
-                rows,
-                columns=["doc_id", "status", "reason", "content_type",
-                         "body_len", "body_md5"],
-            )
+    def row(did, text):
+        if did % 10 == 0:
+            status, reason, body = 404, "Not Found", b"missing"
+        else:
+            status, reason, body = 200, "OK", str(text).encode()
+        ctype = (
+            "text/html; charset=utf-8" if did % 2 == 0
+            else "text/plain; charset=utf-8"
+        )
+        http = (
+            f"HTTP/1.1 {status} {reason}\r\n"
+            f"Content-Type: {ctype}\r\n"
+            f"Content-Length: {len(body)}\r\n\r\n"
+        ).encode() + body
+        gz = encode_warc([
+            {
+                "rec_type": "response",
+                "record_id": f"<urn:uuid:{did:032x}>",
+                "date": "2026-01-01T00:00:00Z",
+                "uri": f"http://crawl.test/doc/{did}",
+                "headers": {"Content-Type": "application/http"},
+                "payload": http,
+            }
+        ])
+        rec = decode_warc(gz)[0]
+        resp = parse_http_response(rec["payload"])
+        yield (did, resp["status"], resp["reason"],
+               resp["headers"]["content-type"], len(resp["body"]),
+               hashlib.md5(resp["body"]).hexdigest())
 
-    docs = multimodal.cpu_parallelize(
-        Catalog(spark, sf_dir).table("documents").select("doc_id", "text")
-    )
-    return docs.mapInPandas(
-        run,
+    docs = Catalog(spark, sf_dir).table("documents").select("doc_id", "text")
+    return map_rows(
+        docs, row,
         "doc_id long, status int, reason string, content_type string,"
         " body_len long, body_md5 string",
     )
@@ -7184,45 +6719,32 @@ def robots_decisions(spark, sf_dir):
     fixture-constant). The oracle replays the decisions in closed form.
     At 100 TB this is a broadcast-policy map-side gate in front of the
     fetch — one narrow scan, no shuffle."""
-    from collections.abc import Iterator
-
     from .functions.crawl import robots_allowed
 
-    def run(batches: "Iterator[pd.DataFrame]") -> "Iterator[pd.DataFrame]":
-        for pdf in batches:
-            rows = []
-            for doc_id in pdf["doc_id"]:
-                did = int(doc_id)
-                robots = (
-                    f"# crawl policy {did}\n"
-                    "User-agent: *\n"
-                    "Disallow: /private/\n"
-                    "Allow: /private/ok/\n"
-                    f"Disallow: /doc/{did % 10}\n"
-                    f"Crawl-delay: {did % 5}\n"
-                    "\n"
-                    "User-agent: badbot\n"
-                    "Disallow: /\n"
-                )
-                for agent, path in (
-                    ("spark-graft", f"/doc/{did % 100}"),
-                    ("spark-graft", "/private/ok/x"),
-                    ("spark-graft", "/private/x"),
-                    ("badbot", "/doc/1"),
-                ):
-                    ok, rtype, rpath = robots_allowed(robots, agent, path)
-                    rows.append((did, agent, path, ok, rtype, rpath))
-            yield pd.DataFrame(
-                rows,
-                columns=["doc_id", "agent", "path", "allowed",
-                         "rule_type", "rule_path"],
-            )
+    def row(did):
+        robots = (
+            f"# crawl policy {did}\n"
+            "User-agent: *\n"
+            "Disallow: /private/\n"
+            "Allow: /private/ok/\n"
+            f"Disallow: /doc/{did % 10}\n"
+            f"Crawl-delay: {did % 5}\n"
+            "\n"
+            "User-agent: badbot\n"
+            "Disallow: /\n"
+        )
+        for agent, path in (
+            ("spark-graft", f"/doc/{did % 100}"),
+            ("spark-graft", "/private/ok/x"),
+            ("spark-graft", "/private/x"),
+            ("badbot", "/doc/1"),
+        ):
+            ok, rtype, rpath = robots_allowed(robots, agent, path)
+            yield (did, agent, path, ok, rtype, rpath)
 
-    docs = multimodal.cpu_parallelize(
-        Catalog(spark, sf_dir).table("documents").select("doc_id")
-    )
-    return docs.mapInPandas(
-        run,
+    docs = Catalog(spark, sf_dir).table("documents").select("doc_id")
+    return map_rows(
+        docs, row,
         "doc_id long, agent string, path string, allowed boolean,"
         " rule_type string, rule_path string",
     )
@@ -7268,36 +6790,21 @@ def text_charset_fix(spark, sf_dir):
     each round maps every byte to one char). Row-local, no shuffle:
     the 100 TB text-cleanup shape."""
     import hashlib
-    from collections.abc import Iterator
-
     from .functions.crawl import fix_mojibake
 
-    def run(batches: "Iterator[pd.DataFrame]") -> "Iterator[pd.DataFrame]":
-        for pdf in batches:
-            rows = []
-            for doc_id, text in zip(pdf["doc_id"], pdf["text"]):
-                did = int(doc_id)
-                orig = str(text) if did % 3 == 0 else "café — " + str(text)
-                depth = did % 3
-                garbled = orig
-                for _ in range(depth):
-                    garbled = garbled.encode("utf-8").decode("latin-1")
-                repaired, rounds = fix_mojibake(garbled)
-                rows.append(
-                    (did, rounds, rounds > 0, len(garbled), len(repaired),
-                     hashlib.md5(repaired.encode("utf-8")).hexdigest())
-                )
-            yield pd.DataFrame(
-                rows,
-                columns=["doc_id", "n_rounds", "was_mojibake",
-                         "n_chars_before", "n_chars_after", "repaired_md5"],
-            )
+    def row(did, text):
+        orig = str(text) if did % 3 == 0 else "café — " + str(text)
+        depth = did % 3
+        garbled = orig
+        for _ in range(depth):
+            garbled = garbled.encode("utf-8").decode("latin-1")
+        repaired, rounds = fix_mojibake(garbled)
+        yield (did, rounds, rounds > 0, len(garbled), len(repaired),
+               hashlib.md5(repaired.encode("utf-8")).hexdigest())
 
-    docs = multimodal.cpu_parallelize(
-        Catalog(spark, sf_dir).table("documents").select("doc_id", "text")
-    )
-    return docs.mapInPandas(
-        run,
+    docs = Catalog(spark, sf_dir).table("documents").select("doc_id", "text")
+    return map_rows(
+        docs, row,
         "doc_id long, n_rounds int, was_mojibake boolean,"
         " n_chars_before long, n_chars_after long, repaired_md5 string",
     )
@@ -7351,55 +6858,40 @@ def url_canonicalize(spark, sf_dir):
     whole Arrow batch (the frontier-scale blast-radius contract).
     Row-local string work, no shuffle: the 100 TB crawl-frontier
     shape."""
-    from collections.abc import Iterator
-
     from .functions.crawl import try_canonical_url
 
-    def run(batches: "Iterator[pd.DataFrame]") -> "Iterator[pd.DataFrame]":
-        for pdf in batches:
-            rows = []
-            for doc_id in pdf["doc_id"]:
-                did = int(doc_id)
-                scheme = "HTTP" if did % 2 == 0 else "HTTPS"
-                default = "80" if did % 2 == 0 else "443"
-                portseg = {0: "", 1: ":" + default, 2: ":8080"}[did % 3]
-                # 1-4 carry dot segments and percent-encoded
-                # unreserved octets that resolve back to the oracle's
-                # closed-form /Dir{k}/page (RFC 3986 §5.2.4 +
-                # §6.2.2.2; %31 = '1', %44 = 'D')
-                path = {
-                    0: "",
-                    1: "/Dir%31/page",
-                    2: "/Dir2/./page",
-                    3: "/Dir3/x/../page",
-                    4: "/./%44ir4/sub/../page",
-                }[did % 5]
-                # hostile hrefs a real frontier sees: must reject the
-                # RECORD, never the batch
-                if did % 13 == 6:
-                    path = "/Dir%zG/page"       # malformed pct triplet
-                elif did % 13 == 7:
-                    path = "/a/../../etc/pwd"   # escapes the path root
-                messy = (
-                    f"{scheme}://WWW.Site{did % 7}.COM{portseg}{path}"
-                    f"?b={did % 4}&a={did % 11}&a=%30#sec1"
-                )
-                c = try_canonical_url(messy)
-                rows.append(
-                    (did, c["url"], c["host"], c["path"], c["port"],
-                     c["n_params"], c["error"] is not None)
-                )
-            yield pd.DataFrame(
-                rows,
-                columns=["doc_id", "url", "host", "path", "port",
-                         "n_params", "rejected"],
-            )
+    def row(did):
+        scheme = "HTTP" if did % 2 == 0 else "HTTPS"
+        default = "80" if did % 2 == 0 else "443"
+        portseg = {0: "", 1: ":" + default, 2: ":8080"}[did % 3]
+        # 1-4 carry dot segments and percent-encoded
+        # unreserved octets that resolve back to the oracle's
+        # closed-form /Dir{k}/page (RFC 3986 §5.2.4 +
+        # §6.2.2.2; %31 = '1', %44 = 'D')
+        path = {
+            0: "",
+            1: "/Dir%31/page",
+            2: "/Dir2/./page",
+            3: "/Dir3/x/../page",
+            4: "/./%44ir4/sub/../page",
+        }[did % 5]
+        # hostile hrefs a real frontier sees: must reject the
+        # RECORD, never the batch
+        if did % 13 == 6:
+            path = "/Dir%zG/page"       # malformed pct triplet
+        elif did % 13 == 7:
+            path = "/a/../../etc/pwd"   # escapes the path root
+        messy = (
+            f"{scheme}://WWW.Site{did % 7}.COM{portseg}{path}"
+            f"?b={did % 4}&a={did % 11}&a=%30#sec1"
+        )
+        c = try_canonical_url(messy)
+        yield (did, c["url"], c["host"], c["path"], c["port"],
+               c["n_params"], c["error"] is not None)
 
-    docs = multimodal.cpu_parallelize(
-        Catalog(spark, sf_dir).table("documents").select("doc_id")
-    )
-    return docs.mapInPandas(
-        run,
+    docs = Catalog(spark, sf_dir).table("documents").select("doc_id")
+    return map_rows(
+        docs, row,
         "doc_id long, url string, host string, path string, port int,"
         " n_params int, rejected boolean",
     )
@@ -7453,61 +6945,46 @@ def warc_http_bodies(spark, sf_dir):
     shuffle: the 100 TB crawl-ingest shape."""
     import hashlib
     import zlib
-    from collections.abc import Iterator
-
     from .sources.warc import decode_warc, encode_warc, parse_http_response
 
-    def run(batches: "Iterator[pd.DataFrame]") -> "Iterator[pd.DataFrame]":
-        for pdf in batches:
-            rows = []
-            for doc_id, text in zip(pdf["doc_id"], pdf["text"]):
-                did = int(doc_id)
-                content = str(text).encode("utf-8")
-                variant = did % 4
-                hdrs, body = [], content
-                if variant in (2, 3):
-                    co = zlib.compressobj(9, zlib.DEFLATED, 16 + zlib.MAX_WBITS)
-                    body = co.compress(content) + co.flush()
-                    hdrs.append("Content-Encoding: gzip")
-                if variant in (1, 3):
-                    body = _chunk_frame(body, did)
-                    hdrs.append("Transfer-Encoding: chunked")
-                else:
-                    hdrs.append(f"Content-Length: {len(body)}")
-                http = (
-                    "HTTP/1.1 200 OK\r\nContent-Type: text/html\r\n"
-                    + "".join(h + "\r\n" for h in hdrs) + "\r\n"
-                ).encode() + body
-                rec = decode_warc(
-                    encode_warc([
-                        {
-                            "rec_type": "response",
-                            "record_id": f"<urn:uuid:{did:032x}>",
-                            "date": "2026-01-01T00:00:00Z",
-                            "uri": f"http://crawl.test/doc/{did}",
-                            "payload": http,
-                        }
-                    ])
-                )[0]
-                resp = parse_http_response(rec["payload"])
-                framing = ["content-length", "chunked", "gzip",
-                           "chunked+gzip"][variant]
-                rows.append(
-                    (did, framing, resp["chunked"], resp["content_encoding"],
-                     len(resp["body"]),
-                     hashlib.md5(resp["body"]).hexdigest())
-                )
-            yield pd.DataFrame(
-                rows,
-                columns=["doc_id", "framing", "chunked", "content_encoding",
-                         "body_len", "body_md5"],
-            )
+    def row(did, text):
+        content = str(text).encode("utf-8")
+        variant = did % 4
+        hdrs, body = [], content
+        if variant in (2, 3):
+            co = zlib.compressobj(9, zlib.DEFLATED, 16 + zlib.MAX_WBITS)
+            body = co.compress(content) + co.flush()
+            hdrs.append("Content-Encoding: gzip")
+        if variant in (1, 3):
+            body = _chunk_frame(body, did)
+            hdrs.append("Transfer-Encoding: chunked")
+        else:
+            hdrs.append(f"Content-Length: {len(body)}")
+        http = (
+            "HTTP/1.1 200 OK\r\nContent-Type: text/html\r\n"
+            + "".join(h + "\r\n" for h in hdrs) + "\r\n"
+        ).encode() + body
+        rec = decode_warc(
+            encode_warc([
+                {
+                    "rec_type": "response",
+                    "record_id": f"<urn:uuid:{did:032x}>",
+                    "date": "2026-01-01T00:00:00Z",
+                    "uri": f"http://crawl.test/doc/{did}",
+                    "payload": http,
+                }
+            ])
+        )[0]
+        resp = parse_http_response(rec["payload"])
+        framing = ["content-length", "chunked", "gzip",
+                   "chunked+gzip"][variant]
+        yield (did, framing, resp["chunked"], resp["content_encoding"],
+               len(resp["body"]),
+               hashlib.md5(resp["body"]).hexdigest())
 
-    docs = multimodal.cpu_parallelize(
-        Catalog(spark, sf_dir).table("documents").select("doc_id", "text")
-    )
-    return docs.mapInPandas(
-        run,
+    docs = Catalog(spark, sf_dir).table("documents").select("doc_id", "text")
+    return map_rows(
+        docs, row,
         "doc_id long, framing string, chunked boolean,"
         " content_encoding string, body_len long, body_md5 string",
     )
@@ -7554,40 +7031,28 @@ def robots_wildcard_decisions(spark, sf_dir):
     matching AND wildcard-aware precedence are value-gated, not
     fixture-constant. At 100 TB this is the broadcast-policy map-side
     gate in front of the fetch — one narrow scan, no shuffle."""
-    from collections.abc import Iterator
-
     from .functions.crawl import robots_allowed
 
-    def run(batches: "Iterator[pd.DataFrame]") -> "Iterator[pd.DataFrame]":
-        for pdf in batches:
-            rows = []
-            for doc_id in pdf["doc_id"]:
-                did = int(doc_id)
-                robots = (
-                    "User-agent: *\n"
-                    "Disallow: /*?\n"
-                    "Disallow: /*.pdf$\n"
-                    "Allow: /shop/*?page=\n"
-                    f"Allow: /doc/{did % 7}?*\n"
-                )
-                for path in (
-                    f"/doc/{did % 100}?s=1",
-                    f"/files/r{did % 5}.pdf",
-                    f"/files/r{did % 5}.pdfx",
-                    f"/shop/item{did % 20}?page={did % 3}",
-                ):
-                    ok, rtype, rpath = robots_allowed(robots, "spark-graft", path)
-                    rows.append((did, path, ok, rtype, rpath))
-            yield pd.DataFrame(
-                rows,
-                columns=["doc_id", "path", "allowed", "rule_type", "rule_path"],
-            )
+    def row(did):
+        robots = (
+            "User-agent: *\n"
+            "Disallow: /*?\n"
+            "Disallow: /*.pdf$\n"
+            "Allow: /shop/*?page=\n"
+            f"Allow: /doc/{did % 7}?*\n"
+        )
+        for path in (
+            f"/doc/{did % 100}?s=1",
+            f"/files/r{did % 5}.pdf",
+            f"/files/r{did % 5}.pdfx",
+            f"/shop/item{did % 20}?page={did % 3}",
+        ):
+            ok, rtype, rpath = robots_allowed(robots, "spark-graft", path)
+            yield (did, path, ok, rtype, rpath)
 
-    docs = multimodal.cpu_parallelize(
-        Catalog(spark, sf_dir).table("documents").select("doc_id")
-    )
-    return docs.mapInPandas(
-        run,
+    docs = Catalog(spark, sf_dir).table("documents").select("doc_id")
+    return map_rows(
+        docs, row,
         "doc_id long, path string, allowed boolean, rule_type string,"
         " rule_path string",
     )
@@ -7620,8 +7085,6 @@ def warc_revisit_links(spark, sf_dir):
     shuffle join across crawl segments (AQE broadcasts the small
     revisit side when skew allows)."""
     import hashlib
-    from collections.abc import Iterator
-
     from .sources.warc import (
         decode_warc,
         encode_warc,
@@ -7629,77 +7092,64 @@ def warc_revisit_links(spark, sf_dir):
         parse_http_response,
     )
 
-    def run(batches: "Iterator[pd.DataFrame]") -> "Iterator[pd.DataFrame]":
-        for pdf in batches:
-            rows = []
-            for doc_id, text in zip(pdf["doc_id"], pdf["text"]):
-                did = int(doc_id)
-                uri = f"http://crawl.test/doc/{did}"
-                body = str(text).encode("utf-8")
-                http = (
-                    f"HTTP/1.1 200 OK\r\nContent-Length: {len(body)}\r\n\r\n"
-                ).encode() + body
-                recs = [
-                    {
-                        "rec_type": "request",
-                        "record_id": f"<urn:uuid:{did * 4:032x}>",
-                        "date": "2026-01-01T00:00:00Z",
-                        "uri": uri,
-                        "payload": (
-                            f"GET /doc/{did} HTTP/1.1\r\n"
-                            "Host: crawl.test\r\n\r\n"
-                        ).encode(),
+    def row(did, text):
+        uri = f"http://crawl.test/doc/{did}"
+        body = str(text).encode("utf-8")
+        http = (
+            f"HTTP/1.1 200 OK\r\nContent-Length: {len(body)}\r\n\r\n"
+        ).encode() + body
+        recs = [
+            {
+                "rec_type": "request",
+                "record_id": f"<urn:uuid:{did * 4:032x}>",
+                "date": "2026-01-01T00:00:00Z",
+                "uri": uri,
+                "payload": (
+                    f"GET /doc/{did} HTTP/1.1\r\n"
+                    "Host: crawl.test\r\n\r\n"
+                ).encode(),
+            },
+            {
+                "rec_type": "response",
+                "record_id": f"<urn:uuid:{did * 4 + 1:032x}>",
+                "date": "2026-01-01T00:00:00Z",
+                "uri": uri,
+                "payload": http,
+            },
+        ]
+        if did % 3 == 0:
+            recs.append(
+                {
+                    "rec_type": "revisit",
+                    "record_id": f"<urn:uuid:{did * 4 + 2:032x}>",
+                    "date": "2026-02-01T00:00:00Z",
+                    "uri": uri,
+                    "headers": {
+                        "WARC-Refers-To": f"<urn:uuid:{did * 4 + 1:032x}>",
+                        "WARC-Profile": (
+                            "http://netpreserve.org/warc/1.0/"
+                            "revisit/identical-payload-digest"
+                        ),
                     },
-                    {
-                        "rec_type": "response",
-                        "record_id": f"<urn:uuid:{did * 4 + 1:032x}>",
-                        "date": "2026-01-01T00:00:00Z",
-                        "uri": uri,
-                        "payload": http,
-                    },
-                ]
-                if did % 3 == 0:
-                    recs.append(
-                        {
-                            "rec_type": "revisit",
-                            "record_id": f"<urn:uuid:{did * 4 + 2:032x}>",
-                            "date": "2026-02-01T00:00:00Z",
-                            "uri": uri,
-                            "headers": {
-                                "WARC-Refers-To": f"<urn:uuid:{did * 4 + 1:032x}>",
-                                "WARC-Profile": (
-                                    "http://netpreserve.org/warc/1.0/"
-                                    "revisit/identical-payload-digest"
-                                ),
-                            },
-                            "payload": b"",
-                        }
-                    )
-                for rec in decode_warc(encode_warc(recs)):
-                    method = target = refers_to = body_md5 = None
-                    if rec["rec_type"] == "request":
-                        req = parse_http_request(rec["payload"])
-                        method, target = req["method"], req["target"]
-                    elif rec["rec_type"] == "response":
-                        resp = parse_http_response(rec["payload"])
-                        body_md5 = hashlib.md5(resp["body"]).hexdigest()
-                    else:
-                        refers_to = rec["headers"]["WARC-Refers-To"]
-                    rows.append(
-                        (did, rec["rec_type"], rec["record_id"], refers_to,
-                         method, target, body_md5)
-                    )
-            yield pd.DataFrame(
-                rows,
-                columns=["doc_id", "rec_type", "record_id", "refers_to",
-                         "method", "target", "body_md5"],
+                    "payload": b"",
+                }
             )
+        for rec in decode_warc(encode_warc(recs)):
+            method = target = refers_to = body_md5 = None
+            if rec["rec_type"] == "request":
+                req = parse_http_request(rec["payload"])
+                method, target = req["method"], req["target"]
+            elif rec["rec_type"] == "response":
+                resp = parse_http_response(rec["payload"])
+                body_md5 = hashlib.md5(resp["body"]).hexdigest()
+            else:
+                refers_to = rec["headers"]["WARC-Refers-To"]
+            yield (did, rec["rec_type"], rec["record_id"], refers_to,
+                   method, target, body_md5)
 
-    docs = multimodal.cpu_parallelize(
-        Catalog(spark, sf_dir).table("documents").select("doc_id", "text")
-    )
-    records = docs.mapInPandas(
-        run,
+    docs = Catalog(spark, sf_dir).table("documents").select("doc_id", "text")
+    records = map_rows(
+        docs, row,
         "doc_id long, rec_type string, record_id string, refers_to string,"
         " method string, target string, body_md5 string",
     )
@@ -7829,28 +7279,17 @@ def crawl_ingest_pipeline(spark, sf_dir):
     no shuffle anywhere. This is the 100 TB pretraining-ingest plan.
     The FILE seam (binaryFile scan of on-disk .warc.gz) is proved by
     the sibling ``crawl_ingest_files``."""
-    from collections.abc import Iterator
-
     from .sources.warc import decode_warc, encode_warc
 
-    def run(batches: "Iterator[pd.DataFrame]") -> "Iterator[pd.DataFrame]":
-        for pdf in batches:
-            rows = []
-            for doc_id, text in zip(pdf["doc_id"], pdf["text"]):
-                rec = decode_warc(
-                    encode_warc([_ingest_wire_record(int(doc_id), str(text))])
-                )[0]
-                rows.append(_ingest_decode_row(rec["uri"], rec["payload"]))
-            yield pd.DataFrame(
-                rows,
-                columns=["doc_id", "url", "allowed", "n_rounds", "extracted"],
-            )
+    def row(doc_id, text):
+        rec = decode_warc(
+            encode_warc([_ingest_wire_record(doc_id, str(text))])
+        )[0]
+        yield _ingest_decode_row(rec["uri"], rec["payload"])
 
-    docs = multimodal.cpu_parallelize(
-        Catalog(spark, sf_dir).table("documents").select("doc_id", "text")
-    )
-    decoded = docs.mapInPandas(
-        run,
+    docs = Catalog(spark, sf_dir).table("documents").select("doc_id", "text")
+    decoded = map_rows(
+        docs, row,
         "doc_id long, url string, allowed boolean, n_rounds int,"
         " extracted string",
     )
@@ -7922,7 +7361,6 @@ def crawl_ingest_files(spark, sf_dir):
     narrow fingerprint agg, not a write."""
     import hashlib
     import os as _os
-    from collections.abc import Iterator
 
     from .sources.warc import encode_warc, read_warc
 
@@ -7981,20 +7419,12 @@ def crawl_ingest_files(spark, sf_dir):
         )
         written.collect()  # barrier: files exist before the read plan runs
 
-    def run(batches: "Iterator[pd.DataFrame]") -> "Iterator[pd.DataFrame]":
-        for pdf in batches:
-            rows = [
-                _ingest_decode_row(str(uri), bytes(payload))
-                for uri, payload in zip(pdf["uri"], pdf["payload"])
-            ]
-            yield pd.DataFrame(
-                rows,
-                columns=["doc_id", "url", "allowed", "n_rounds", "extracted"],
-            )
+    def row(uri, payload):
+        yield _ingest_decode_row(str(uri), bytes(payload))
 
     records = read_warc(spark, shard_paths).select("uri", "payload")
-    decoded = records.mapInPandas(
-        run,
+    decoded = map_rows(
+        records, row,
         "doc_id long, url string, allowed boolean, n_rounds int,"
         " extracted string",
     )
@@ -8091,56 +7521,42 @@ def multimodal_mp3_short_blocks(spark, sf_dir):
     the decode as the pinned linear superposition over the
     window-switching tap tables. One narrow scan, no shuffle: the
     100 TB shape."""
-    from collections.abc import Iterator
 
-    def run(batches: "Iterator[pd.DataFrame]") -> "Iterator[pd.DataFrame]":
-        for pdf in batches:
-            rows = []
-            for doc_id in pdf["doc_id"]:
-                did = int(doc_id)
-                g0 = {
-                    "big": [
-                        (1 if did % 2 == 0 else -1) * (1 + did % 14),
-                        (-1 if did % 3 == 0 else 1) * (1 + (did * 7) % 15),
-                    ],
-                    "gain_e": 1 + did % 7,
-                    "block_type": 1,
-                }
-                big1 = [0] * 26
-                big1[0] = (-1 if did % 5 == 0 else 1) * (1 + (did * 3) % 15)
-                big1[8] = (-1 if did % 7 == 0 else 1) * (1 + (did * 5) % 13)
-                big1[16] = (-1 if did % 4 == 0 else 1) * (1 + (did * 11) % 15)
-                big1[24] = (-1 if did % 6 == 0 else 1) * (1 + (did * 13) % 15)
-                g1 = {
-                    "big": big1,
-                    "gain_e": 3 + (did * 3) % 5,
-                    "block_type": 2,
-                    "scalefac_short": [
-                        [1] + [0] * 11, [0] * 12, [2] + [0] * 11
-                    ],
-                    "subblock_gain": [1, 0, 0],
-                    "scalefac_scale": 1,
-                    "scalefac_compress": 9,
-                }
-                au = multimodal.decode_audio(
-                    multimodal.encode_mp3([g0, g1], bitrate=64)
-                )
-                rows.append(
-                    (did, len(au.samples), au.sample_rate,
-                     max(abs(s) for s in au.samples),
-                     sum(s * s for s in au.samples))
-                )
-            yield pd.DataFrame(
-                rows,
-                columns=["doc_id", "n_samples", "sample_rate", "peak",
-                         "energy"],
-            )
+    def row(did):
+        g0 = {
+            "big": [
+                (1 if did % 2 == 0 else -1) * (1 + did % 14),
+                (-1 if did % 3 == 0 else 1) * (1 + (did * 7) % 15),
+            ],
+            "gain_e": 1 + did % 7,
+            "block_type": 1,
+        }
+        big1 = [0] * 26
+        big1[0] = (-1 if did % 5 == 0 else 1) * (1 + (did * 3) % 15)
+        big1[8] = (-1 if did % 7 == 0 else 1) * (1 + (did * 5) % 13)
+        big1[16] = (-1 if did % 4 == 0 else 1) * (1 + (did * 11) % 15)
+        big1[24] = (-1 if did % 6 == 0 else 1) * (1 + (did * 13) % 15)
+        g1 = {
+            "big": big1,
+            "gain_e": 3 + (did * 3) % 5,
+            "block_type": 2,
+            "scalefac_short": [
+                [1] + [0] * 11, [0] * 12, [2] + [0] * 11
+            ],
+            "subblock_gain": [1, 0, 0],
+            "scalefac_scale": 1,
+            "scalefac_compress": 9,
+        }
+        au = multimodal.decode_audio(
+            multimodal.encode_mp3([g0, g1], bitrate=64)
+        )
+        yield (did, len(au.samples), au.sample_rate,
+               max(abs(s) for s in au.samples),
+               sum(s * s for s in au.samples))
 
-    docs = multimodal.cpu_parallelize(
-        Catalog(spark, sf_dir).table("documents").select("doc_id")
-    )
-    return docs.mapInPandas(
-        run,
+    docs = Catalog(spark, sf_dir).table("documents").select("doc_id")
+    return map_rows(
+        docs, row,
         "doc_id long, n_samples long, sample_rate int, peak long, energy long",
     )
 
@@ -8233,53 +7649,39 @@ def multimodal_mp3_stereo(spark, sf_dir):
     or interleave slip anywhere flips the per-channel peak/energy the
     oracle states in closed form. Joint stereo (M/S, intensity) gates
     loudly. One narrow scan, no shuffle: the 100 TB shape."""
-    from collections.abc import Iterator
 
-    def run(batches: "Iterator[pd.DataFrame]") -> "Iterator[pd.DataFrame]":
-        for pdf in batches:
-            rows = []
-            for doc_id in pdf["doc_id"]:
-                did = int(doc_id)
-                el, er = 1 + did % 7, 1 + (did * 3) % 7
-                l0 = {"big": [
-                    (1 if did % 2 == 0 else -1) * (1 + did % 14),
-                    (-1 if did % 3 == 0 else 1) * (1 + (did * 7) % 15),
-                ], "gain_e": el}
-                l1 = {"big": [
-                    (-1 if did % 5 == 0 else 1) * (1 + (did * 3) % 15),
-                    (-1 if did % 7 == 0 else 1) * (1 + (did * 5) % 13),
-                ], "gain_e": el}
-                r0 = {"big": [0] * 18 + [
-                    (-1 if did % 4 == 0 else 1) * (1 + (did * 11) % 15),
-                    (-1 if did % 6 == 0 else 1) * (1 + (did * 13) % 15),
-                ], "gain_e": er}
-                r1 = {"big": [0] * 18 + [
-                    (-1 if did % 8 == 0 else 1) * (1 + (did * 17) % 15),
-                    (-1 if did % 9 == 0 else 1) * (1 + (did * 19) % 15),
-                ], "gain_e": er}
-                au = multimodal.decode_mp3(
-                    multimodal.encode_mp3([(l0, r0), (l1, r1)],
-                                          bitrate=128, mode="stereo")
-                )
-                left, right = au.samples[0::2], au.samples[1::2]
-                rows.append(
-                    (did, len(au.samples), au.channels,
-                     max(abs(s) for s in left),
-                     sum(s * s for s in left),
-                     max(abs(s) for s in right),
-                     sum(s * s for s in right))
-                )
-            yield pd.DataFrame(
-                rows,
-                columns=["doc_id", "n_samples", "channels", "peak_l",
-                         "energy_l", "peak_r", "energy_r"],
-            )
+    def row(did):
+        el, er = 1 + did % 7, 1 + (did * 3) % 7
+        l0 = {"big": [
+            (1 if did % 2 == 0 else -1) * (1 + did % 14),
+            (-1 if did % 3 == 0 else 1) * (1 + (did * 7) % 15),
+        ], "gain_e": el}
+        l1 = {"big": [
+            (-1 if did % 5 == 0 else 1) * (1 + (did * 3) % 15),
+            (-1 if did % 7 == 0 else 1) * (1 + (did * 5) % 13),
+        ], "gain_e": el}
+        r0 = {"big": [0] * 18 + [
+            (-1 if did % 4 == 0 else 1) * (1 + (did * 11) % 15),
+            (-1 if did % 6 == 0 else 1) * (1 + (did * 13) % 15),
+        ], "gain_e": er}
+        r1 = {"big": [0] * 18 + [
+            (-1 if did % 8 == 0 else 1) * (1 + (did * 17) % 15),
+            (-1 if did % 9 == 0 else 1) * (1 + (did * 19) % 15),
+        ], "gain_e": er}
+        au = multimodal.decode_mp3(
+            multimodal.encode_mp3([(l0, r0), (l1, r1)],
+                                  bitrate=128, mode="stereo")
+        )
+        left, right = au.samples[0::2], au.samples[1::2]
+        yield (did, len(au.samples), au.channels,
+               max(abs(s) for s in left),
+               sum(s * s for s in left),
+               max(abs(s) for s in right),
+               sum(s * s for s in right))
 
-    docs = multimodal.cpu_parallelize(
-        Catalog(spark, sf_dir).table("documents").select("doc_id")
-    )
-    return docs.mapInPandas(
-        run,
+    docs = Catalog(spark, sf_dir).table("documents").select("doc_id")
+    return map_rows(
+        docs, row,
         "doc_id long, n_samples long, channels int, peak_l long,"
         " energy_l long, peak_r long, energy_r long",
     )
@@ -8319,53 +7721,40 @@ def multimodal_isobmff_meta(spark, sf_dir):
     exactly the crawl-pipeline split: container metadata for curation,
     pixel decode deferred). One narrow scan, no shuffle: the 100 TB
     shape."""
-    from collections.abc import Iterator
 
-    def run(batches: "Iterator[pd.DataFrame]") -> "Iterator[pd.DataFrame]":
-        for pdf in batches:
-            rows = []
-            for doc_id in pdf["doc_id"]:
-                did = int(doc_id)
-                brand = b"avif" if did % 2 == 0 else b"heic"
-                ityp = b"av01" if did % 2 == 0 else b"hvc1"
-                main = {
-                    "item_id": 1, "item_type": ityp, "name": "main",
-                    "width": 16 * (1 + did % 40),
-                    "height": 8 * (1 + did % 25),
-                    "bits": 8 + 2 * (did % 3),
-                    "payload": bytes([did % 251]) * (20 + did % 60),
-                }
-                thumb = {
-                    "item_id": 2, "item_type": ityp, "name": "thumb",
-                    "width": 32, "height": 20, "bits": 8,
-                    "payload": bytes([(did * 3) % 251]) * (5 + did % 7),
-                }
-                out = multimodal.decode_isobmff_image(
-                    multimodal.encode_isobmff_image(brand, [main, thumb], 1)
-                )
-                prim = next(
-                    it for it in out["items"]
-                    if it["item_id"] == out["primary_id"]
-                )
-                rows.append((
-                    did, out["brand"], prim["item_type"],
-                    prim["width"], prim["height"], prim["bits"][0],
-                    len(out["items"]), prim["length"],
-                    sum(prim["payload"]),
-                    sum(it["length"] for it in out["items"]),
-                ))
-            yield pd.DataFrame(
-                rows,
-                columns=["doc_id", "brand", "primary_type", "width",
-                         "height", "bits", "n_items", "main_len",
-                         "main_sum", "mdat_len"],
-            )
+    def row(did):
+        brand = b"avif" if did % 2 == 0 else b"heic"
+        ityp = b"av01" if did % 2 == 0 else b"hvc1"
+        main = {
+            "item_id": 1, "item_type": ityp, "name": "main",
+            "width": 16 * (1 + did % 40),
+            "height": 8 * (1 + did % 25),
+            "bits": 8 + 2 * (did % 3),
+            "payload": bytes([did % 251]) * (20 + did % 60),
+        }
+        thumb = {
+            "item_id": 2, "item_type": ityp, "name": "thumb",
+            "width": 32, "height": 20, "bits": 8,
+            "payload": bytes([(did * 3) % 251]) * (5 + did % 7),
+        }
+        out = multimodal.decode_isobmff_image(
+            multimodal.encode_isobmff_image(brand, [main, thumb], 1)
+        )
+        prim = next(
+            it for it in out["items"]
+            if it["item_id"] == out["primary_id"]
+        )
+        yield (
+            did, out["brand"], prim["item_type"],
+            prim["width"], prim["height"], prim["bits"][0],
+            len(out["items"]), prim["length"],
+            sum(prim["payload"]),
+            sum(it["length"] for it in out["items"]),
+        )
 
-    docs = multimodal.cpu_parallelize(
-        Catalog(spark, sf_dir).table("documents").select("doc_id")
-    )
-    return docs.mapInPandas(
-        run,
+    docs = Catalog(spark, sf_dir).table("documents").select("doc_id")
+    return map_rows(
+        docs, row,
         "doc_id long, brand string, primary_type string, width long,"
         " height long, bits int, n_items int, main_len long,"
         " main_sum long, mdat_len long",
@@ -8414,41 +7803,28 @@ def multimodal_adts_meta(spark, sf_dir):
     is the transport-stats walk a crawl pipeline runs for
     duration/bitrate. One narrow scan, no shuffle: the 100 TB
     shape."""
-    from collections.abc import Iterator
 
-    def run(batches: "Iterator[pd.DataFrame]") -> "Iterator[pd.DataFrame]":
-        for pdf in batches:
-            rows = []
-            for doc_id in pdf["doc_id"]:
-                did = int(doc_id)
-                frames = [
-                    bytes([(did + i) % 256]) * (10 + (did + i) % 20)
-                    for i in range(2 + did % 5)
-                ]
-                buf = multimodal.encode_adts(
-                    frames, freq_index=did % 12, channels=1 + did % 2
-                )
-                out = multimodal.decode_adts(buf)
-                rows.append((
-                    did, len(out["frames"]), out["profile"],
-                    out["sample_rate"], out["channels"],
-                    out["samples_per_channel"],
-                    sum(len(f) for f in out["frames"]),
-                    sum(sum(f) for f in out["frames"]),
-                    len(buf),
-                ))
-            yield pd.DataFrame(
-                rows,
-                columns=["doc_id", "n_frames", "profile", "sample_rate",
-                         "channels", "samples_per_channel",
-                         "payload_bytes", "payload_sum", "stream_len"],
-            )
+    def row(did):
+        frames = [
+            bytes([(did + i) % 256]) * (10 + (did + i) % 20)
+            for i in range(2 + did % 5)
+        ]
+        buf = multimodal.encode_adts(
+            frames, freq_index=did % 12, channels=1 + did % 2
+        )
+        out = multimodal.decode_adts(buf)
+        yield (
+            did, len(out["frames"]), out["profile"],
+            out["sample_rate"], out["channels"],
+            out["samples_per_channel"],
+            sum(len(f) for f in out["frames"]),
+            sum(sum(f) for f in out["frames"]),
+            len(buf),
+        )
 
-    docs = multimodal.cpu_parallelize(
-        Catalog(spark, sf_dir).table("documents").select("doc_id")
-    )
-    return docs.mapInPandas(
-        run,
+    docs = Catalog(spark, sf_dir).table("documents").select("doc_id")
+    return map_rows(
+        docs, row,
         "doc_id long, n_frames int, profile int, sample_rate int,"
         " channels int, samples_per_channel long, payload_bytes long,"
         " payload_sum long, stream_len long",
@@ -8547,51 +7923,37 @@ def multimodal_mp3_reservoir(spark, sf_dir):
     reservoir-offset decode are value-gated. pytest additionally pins
     reservoir PCM == self-contained PCM for identical granules. One
     narrow scan, no shuffle: the 100 TB shape."""
-    from collections.abc import Iterator
+    frame_len = 144 * 32 * 1000 // 44100  # 104 bytes at 32 kbps
 
-    def run(batches: "Iterator[pd.DataFrame]") -> "Iterator[pd.DataFrame]":
-        frame_len = 144 * 32 * 1000 // 44100  # 104 bytes at 32 kbps
-        for pdf in batches:
-            rows = []
-            for doc_id in pdf["doc_id"]:
-                did = int(doc_id)
-                g0 = {"big": [
-                    (1 if did % 2 == 0 else -1) * (1 + did % 15), 0,
-                ], "gain_e": 1 + did % 7}
-                g1 = {"big": [
-                    0, (-1 if did % 3 == 0 else 1) * (1 + (did * 7) % 15),
-                ], "gain_e": 1 + (did * 3) % 7}
-                big2 = [0] * 20
-                big2[0] = (-1 if did % 5 == 0 else 1) * (1 + (did * 3) % 15)
-                big2[18] = (-1 if did % 7 == 0 else 1) * (1 + (did * 5) % 13)
-                g2 = {"big": big2, "gain_e": 2 + did % 5}
-                big3 = [0] * 20
-                big3[1] = (-1 if did % 4 == 0 else 1) * (1 + (did * 11) % 15)
-                big3[19] = (-1 if did % 6 == 0 else 1) * (1 + (did * 13) % 15)
-                g3 = {"big": big3, "gain_e": 1 + (did * 5) % 7}
-                buf = multimodal.encode_mp3(
-                    [g0, g1, g2, g3], bitrate=32, reservoir=True
-                )
-                # frame 1's main_data_begin, parsed from the stream
-                si = multimodal._MsbBitReader(buf, frame_len + 4)
-                mdb = si.bits(9)
-                au = multimodal.decode_audio(buf)
-                rows.append(
-                    (did, len(au.samples), au.sample_rate, mdb,
-                     max(abs(s) for s in au.samples),
-                     sum(s * s for s in au.samples))
-                )
-            yield pd.DataFrame(
-                rows,
-                columns=["doc_id", "n_samples", "sample_rate", "mdb",
-                         "peak", "energy"],
-            )
+    def row(did):
+        g0 = {"big": [
+            (1 if did % 2 == 0 else -1) * (1 + did % 15), 0,
+        ], "gain_e": 1 + did % 7}
+        g1 = {"big": [
+            0, (-1 if did % 3 == 0 else 1) * (1 + (did * 7) % 15),
+        ], "gain_e": 1 + (did * 3) % 7}
+        big2 = [0] * 20
+        big2[0] = (-1 if did % 5 == 0 else 1) * (1 + (did * 3) % 15)
+        big2[18] = (-1 if did % 7 == 0 else 1) * (1 + (did * 5) % 13)
+        g2 = {"big": big2, "gain_e": 2 + did % 5}
+        big3 = [0] * 20
+        big3[1] = (-1 if did % 4 == 0 else 1) * (1 + (did * 11) % 15)
+        big3[19] = (-1 if did % 6 == 0 else 1) * (1 + (did * 13) % 15)
+        g3 = {"big": big3, "gain_e": 1 + (did * 5) % 7}
+        buf = multimodal.encode_mp3(
+            [g0, g1, g2, g3], bitrate=32, reservoir=True
+        )
+        # frame 1's main_data_begin, parsed from the stream
+        si = multimodal._MsbBitReader(buf, frame_len + 4)
+        mdb = si.bits(9)
+        au = multimodal.decode_audio(buf)
+        yield (did, len(au.samples), au.sample_rate, mdb,
+               max(abs(s) for s in au.samples),
+               sum(s * s for s in au.samples))
 
-    docs = multimodal.cpu_parallelize(
-        Catalog(spark, sf_dir).table("documents").select("doc_id")
-    )
-    return docs.mapInPandas(
-        run,
+    docs = Catalog(spark, sf_dir).table("documents").select("doc_id")
+    return map_rows(
+        docs, row,
         "doc_id long, n_samples long, sample_rate int, mdb int,"
         " peak long, energy long",
     )
@@ -8687,50 +8049,36 @@ def multimodal_mp3_ms_stereo(spark, sf_dir):
     oracle replays both channels as closed-form tap superpositions of
     the dematrixed lines. One narrow scan, no shuffle: the 100 TB
     shape."""
-    from collections.abc import Iterator
 
-    def run(batches: "Iterator[pd.DataFrame]") -> "Iterator[pd.DataFrame]":
-        for pdf in batches:
-            rows = []
-            for doc_id in pdf["doc_id"]:
-                did = int(doc_id)
-                m0 = {"big": [
-                    (1 if did % 2 == 0 else -1) * (1 + did % 14),
-                    (-1 if did % 3 == 0 else 1) * (1 + (did * 7) % 15),
-                ], "gain_e": 1 + did % 7}
-                s0 = {"big": [
-                    (-1 if did % 5 == 0 else 1) * (1 + (did * 3) % 15), 0,
-                ], "gain_e": 1 + (did * 3) % 7}
-                m1 = {"big": [0] * 18 + [
-                    (-1 if did % 7 == 0 else 1) * (1 + (did * 5) % 13),
-                    (-1 if did % 4 == 0 else 1) * (1 + (did * 11) % 15),
-                ], "gain_e": 1 + (did * 5) % 7}
-                s1 = {"big": [0] * 18 + [
-                    0, (-1 if did % 6 == 0 else 1) * (1 + (did * 13) % 15),
-                ], "gain_e": 1 + (did * 9) % 7}
-                au = multimodal.decode_mp3(
-                    multimodal.encode_mp3([(m0, s0), (m1, s1)],
-                                          bitrate=128, mode="ms")
-                )
-                left, right = au.samples[0::2], au.samples[1::2]
-                rows.append(
-                    (did, len(au.samples), au.channels,
-                     max(abs(s) for s in left),
-                     sum(s * s for s in left),
-                     max(abs(s) for s in right),
-                     sum(s * s for s in right))
-                )
-            yield pd.DataFrame(
-                rows,
-                columns=["doc_id", "n_samples", "channels", "peak_l",
-                         "energy_l", "peak_r", "energy_r"],
-            )
+    def row(did):
+        m0 = {"big": [
+            (1 if did % 2 == 0 else -1) * (1 + did % 14),
+            (-1 if did % 3 == 0 else 1) * (1 + (did * 7) % 15),
+        ], "gain_e": 1 + did % 7}
+        s0 = {"big": [
+            (-1 if did % 5 == 0 else 1) * (1 + (did * 3) % 15), 0,
+        ], "gain_e": 1 + (did * 3) % 7}
+        m1 = {"big": [0] * 18 + [
+            (-1 if did % 7 == 0 else 1) * (1 + (did * 5) % 13),
+            (-1 if did % 4 == 0 else 1) * (1 + (did * 11) % 15),
+        ], "gain_e": 1 + (did * 5) % 7}
+        s1 = {"big": [0] * 18 + [
+            0, (-1 if did % 6 == 0 else 1) * (1 + (did * 13) % 15),
+        ], "gain_e": 1 + (did * 9) % 7}
+        au = multimodal.decode_mp3(
+            multimodal.encode_mp3([(m0, s0), (m1, s1)],
+                                  bitrate=128, mode="ms")
+        )
+        left, right = au.samples[0::2], au.samples[1::2]
+        yield (did, len(au.samples), au.channels,
+               max(abs(s) for s in left),
+               sum(s * s for s in left),
+               max(abs(s) for s in right),
+               sum(s * s for s in right))
 
-    docs = multimodal.cpu_parallelize(
-        Catalog(spark, sf_dir).table("documents").select("doc_id")
-    )
-    return docs.mapInPandas(
-        run,
+    docs = Catalog(spark, sf_dir).table("documents").select("doc_id")
+    return map_rows(
+        docs, row,
         "doc_id long, n_samples long, channels int, peak_l long,"
         " energy_l long, peak_r long, energy_r long",
     )
@@ -8772,54 +8120,40 @@ def sitemap_urls(spark, sf_dir):
     oracle gates the writer+parser pair. Sitemaps are the crawl
     frontier's seed list; at 100 TB this runs as a per-host map-side
     scan, no shuffle."""
-    from collections.abc import Iterator
-
     from elevate_data_pipeline_spark.functions import crawl
 
-    def run(batches: "Iterator[pd.DataFrame]") -> "Iterator[pd.DataFrame]":
-        for pdf in batches:
-            rows = []
-            for doc_id in pdf["doc_id"]:
-                did = int(doc_id)
-                host = f"ex{did % 50}.com"
-                robots = (
-                    "User-agent: *\nDisallow: /private\n"
-                    f"Sitemap: https://{host}/sitemap0.xml\n"
-                    f"sitemap: https://{host}/sitemap1.xml\n"
-                )
-                maps = crawl.robots_sitemaps(robots)
-                n = 3 + did % 5
-                entries = []
-                for j in range(n):
-                    e = {"loc": f"https://{host}/page/{j}"}
-                    if j % 2 == 0:
-                        e["lastmod"] = f"2025-{1 + (did + j) % 12:02d}-01"
-                    if j % 4 == 0:
-                        e["changefreq"] = "daily"
-                    if j % 3 == 0:
-                        e["priority"] = f"0.{(did + j) % 10}"
-                    entries.append(e)
-                parsed = crawl.parse_sitemap(crawl.encode_sitemap(entries))
-                ents = parsed["entries"]
-                rows.append((
-                    did, len(maps), maps[0], len(ents), ents[0]["loc"],
-                    sum(1 for e in ents if e["lastmod"] is not None),
-                    sum(1 for e in ents if e["changefreq"] is not None),
-                    sum(int(e["priority"].partition(".")[2])
-                        for e in ents if e["priority"] is not None),
-                ))
-            yield pd.DataFrame(
-                rows,
-                columns=["doc_id", "n_sitemaps", "sitemap0", "n_urls",
-                         "first_loc", "n_lastmod", "n_changefreq",
-                         "pri_sum"],
-            )
+    def row(did):
+        host = f"ex{did % 50}.com"
+        robots = (
+            "User-agent: *\nDisallow: /private\n"
+            f"Sitemap: https://{host}/sitemap0.xml\n"
+            f"sitemap: https://{host}/sitemap1.xml\n"
+        )
+        maps = crawl.robots_sitemaps(robots)
+        n = 3 + did % 5
+        entries = []
+        for j in range(n):
+            e = {"loc": f"https://{host}/page/{j}"}
+            if j % 2 == 0:
+                e["lastmod"] = f"2025-{1 + (did + j) % 12:02d}-01"
+            if j % 4 == 0:
+                e["changefreq"] = "daily"
+            if j % 3 == 0:
+                e["priority"] = f"0.{(did + j) % 10}"
+            entries.append(e)
+        parsed = crawl.parse_sitemap(crawl.encode_sitemap(entries))
+        ents = parsed["entries"]
+        yield (
+            did, len(maps), maps[0], len(ents), ents[0]["loc"],
+            sum(1 for e in ents if e["lastmod"] is not None),
+            sum(1 for e in ents if e["changefreq"] is not None),
+            sum(int(e["priority"].partition(".")[2])
+                for e in ents if e["priority"] is not None),
+        )
 
-    docs = multimodal.cpu_parallelize(
-        Catalog(spark, sf_dir).table("documents").select("doc_id")
-    )
-    return docs.mapInPandas(
-        run,
+    docs = Catalog(spark, sf_dir).table("documents").select("doc_id")
+    return map_rows(
+        docs, row,
         "doc_id long, n_sitemaps int, sitemap0 string, n_urls int,"
         " first_loc string, n_lastmod int, n_changefreq int, pri_sum long",
     )
@@ -8886,99 +8220,84 @@ def warc_charset_decode(spark, sf_dir):
     any byte fails the hash. One narrow scan, records decoded
     executor-side, no shuffle: the 100 TB crawl-ingest shape."""
     import zlib
-    from collections.abc import Iterator
-
     from .functions.crawl import decode_http_text
     from .sources.warc import decode_warc, encode_warc, parse_http_response
 
-    def run(batches: "Iterator[pd.DataFrame]") -> "Iterator[pd.DataFrame]":
-        for pdf in batches:
-            rows = []
-            for doc_id in pdf["doc_id"]:
-                did = int(doc_id)
-                variant = did % 8
-                if variant == 0:
-                    raw = (f"<html><body>café №{did}</body></html>"
-                           .encode("utf-8"))
-                    ctype = "text/html; charset=utf-8"
-                elif variant == 1:
-                    raw = (
-                        "<html><head><meta charset=iso-8859-1></head>"
-                        f"<body>café {did}</body></html>"
-                    ).encode("latin-1")
-                    ctype = "text/html"
-                elif variant == 2:
-                    raw = (f"<html><body>€{did % 100} café</body></html>"
-                           .encode("cp1252"))
-                    ctype = 'text/html; charset="windows-1252"'
-                elif variant == 3:
-                    raw = (f"<html><body>snow ☃ {did}</body></html>"
-                           .encode("utf-16"))
-                    ctype = "text/html; charset=latin-1"  # BOM overrides
-                elif variant == 4:
-                    raw = (f"<html><body>こんにちは {did}</body></html>"
-                           .encode("shift_jis"))
-                    ctype = "text/html; charset=shift_jis"
-                elif variant == 5:
-                    raw = (
-                        "<html><head><meta charset=euc-kr></head>"
-                        f"<body>안녕 {did}</body></html>"
-                    ).encode("euc_kr")
-                    ctype = "text/html"
-                elif variant == 6:
-                    raw = (f"<html><body>中文 {did % 100}</body></html>"
-                           .encode("gbk"))
-                    # obs-fold: the charset parameter continues on the
-                    # next line behind SP/HTAB — must unfold to one SP
-                    ctype = "text/html;\r\n charset=gbk"
-                else:
-                    raw = (f"<html><body>привет {did}</body></html>"
-                           .encode("koi8_r"))
-                    ctype = "text/html; charset=koi8-r"
-                hdrs, body = [], raw
-                if variant == 2:
-                    co = zlib.compressobj(9, zlib.DEFLATED,
-                                          16 + zlib.MAX_WBITS)
-                    body = co.compress(raw) + co.flush()
-                    hdrs.append("Content-Encoding: gzip")
-                if variant == 3:
-                    body = _chunk_frame(body, did)
-                    hdrs.append("Transfer-Encoding: chunked")
-                else:
-                    hdrs.append(f"Content-Length: {len(body)}")
-                http = (
-                    f"HTTP/1.1 200 OK\r\nContent-Type: {ctype}\r\n"
-                    + "".join(h + "\r\n" for h in hdrs) + "\r\n"
-                ).encode() + body
-                rec = decode_warc(
-                    encode_warc([
-                        {
-                            "rec_type": "response",
-                            "record_id": f"<urn:uuid:{did:032x}>",
-                            "date": "2026-01-01T00:00:00Z",
-                            "uri": f"http://crawl.test/doc/{did}",
-                            "payload": http,
-                        }
-                    ])
-                )[0]
-                resp = parse_http_response(rec["payload"])
-                text, charset, source = decode_http_text(
-                    resp["body"], resp["headers"].get("content-type")
-                )
-                rows.append(
-                    (did, resp["status"], charset, source, text, len(text))
-                )
-            yield pd.DataFrame(
-                rows,
-                columns=["doc_id", "status", "charset", "source", "text",
-                         "n_chars"],
-            )
+    def row(did):
+        variant = did % 8
+        if variant == 0:
+            raw = (f"<html><body>café №{did}</body></html>"
+                   .encode("utf-8"))
+            ctype = "text/html; charset=utf-8"
+        elif variant == 1:
+            raw = (
+                "<html><head><meta charset=iso-8859-1></head>"
+                f"<body>café {did}</body></html>"
+            ).encode("latin-1")
+            ctype = "text/html"
+        elif variant == 2:
+            raw = (f"<html><body>€{did % 100} café</body></html>"
+                   .encode("cp1252"))
+            ctype = 'text/html; charset="windows-1252"'
+        elif variant == 3:
+            raw = (f"<html><body>snow ☃ {did}</body></html>"
+                   .encode("utf-16"))
+            ctype = "text/html; charset=latin-1"  # BOM overrides
+        elif variant == 4:
+            raw = (f"<html><body>こんにちは {did}</body></html>"
+                   .encode("shift_jis"))
+            ctype = "text/html; charset=shift_jis"
+        elif variant == 5:
+            raw = (
+                "<html><head><meta charset=euc-kr></head>"
+                f"<body>안녕 {did}</body></html>"
+            ).encode("euc_kr")
+            ctype = "text/html"
+        elif variant == 6:
+            raw = (f"<html><body>中文 {did % 100}</body></html>"
+                   .encode("gbk"))
+            # obs-fold: the charset parameter continues on the
+            # next line behind SP/HTAB — must unfold to one SP
+            ctype = "text/html;\r\n charset=gbk"
+        else:
+            raw = (f"<html><body>привет {did}</body></html>"
+                   .encode("koi8_r"))
+            ctype = "text/html; charset=koi8-r"
+        hdrs, body = [], raw
+        if variant == 2:
+            co = zlib.compressobj(9, zlib.DEFLATED,
+                                  16 + zlib.MAX_WBITS)
+            body = co.compress(raw) + co.flush()
+            hdrs.append("Content-Encoding: gzip")
+        if variant == 3:
+            body = _chunk_frame(body, did)
+            hdrs.append("Transfer-Encoding: chunked")
+        else:
+            hdrs.append(f"Content-Length: {len(body)}")
+        http = (
+            f"HTTP/1.1 200 OK\r\nContent-Type: {ctype}\r\n"
+            + "".join(h + "\r\n" for h in hdrs) + "\r\n"
+        ).encode() + body
+        rec = decode_warc(
+            encode_warc([
+                {
+                    "rec_type": "response",
+                    "record_id": f"<urn:uuid:{did:032x}>",
+                    "date": "2026-01-01T00:00:00Z",
+                    "uri": f"http://crawl.test/doc/{did}",
+                    "payload": http,
+                }
+            ])
+        )[0]
+        resp = parse_http_response(rec["payload"])
+        text, charset, source = decode_http_text(
+            resp["body"], resp["headers"].get("content-type")
+        )
+        yield (did, resp["status"], charset, source, text, len(text))
 
-    docs = multimodal.cpu_parallelize(
-        Catalog(spark, sf_dir).table("documents").select("doc_id")
-    )
-    return docs.mapInPandas(
-        run,
+    docs = Catalog(spark, sf_dir).table("documents").select("doc_id")
+    return map_rows(
+        docs, row,
         "doc_id long, status int, charset string, source string,"
         " text string, n_chars long",
     )
@@ -9251,95 +8570,79 @@ def crawl_revalidation_plan(spark, sf_dir):
     staleness score + per-host top-3 window then schedules the due
     URLs. One scan, one Arrow pass, one bounded host-partition window:
     the 100 TB shape."""
-    from collections.abc import Iterator
-
     from pyspark.sql.window import Window
 
     from .sources.warc import decode_warc, encode_warc, parse_http_response
 
-    def run(batches: "Iterator[pd.DataFrame]") -> "Iterator[pd.DataFrame]":
-        for pdf in batches:
-            rows = []
-            for doc_id in pdf["doc_id"]:
-                did = int(doc_id)
-                hdrs = [("Content-Type", "text/html")]
-                if did % 3 != 1:
-                    tag = f'"t{did:x}"'
-                    if did % 5 == 0:
-                        tag = "W/" + tag
-                    hdrs.append(("ETag", tag))
-                if did % 2 == 0:
-                    hdrs.append((
-                        "Last-Modified",
-                        f"Thu, 01 Jan 2026 00:00:0{did % 10} GMT",
-                    ))
-                freq_days = {0: 1, 1: 7}.get(did % 3, 30)
-                if did % 7 != 0:
-                    hdrs.append(
-                        ("Cache-Control", f"max-age={freq_days * 86400}")
-                    )
-                body = b"stored"
-                http = (
-                    "HTTP/1.1 200 OK\r\n"
-                    + "".join(f"{k}: {v}\r\n" for k, v in hdrs)
-                    + f"Content-Length: {len(body)}\r\n\r\n"
-                ).encode() + body
-                rec = decode_warc(encode_warc([{
-                    "rec_type": "response",
-                    "record_id": f"<urn:uuid:{did:032x}>",
-                    "date": "2026-01-01T00:00:00Z",
-                    "uri": f"http://h{did // 10}.test/p{did % 10}",
-                    "payload": http,
-                }]))[0]
-                h = parse_http_response(rec["payload"])["headers"]
-                etag = h.get("etag")
-                lastmod = h.get("last-modified")
-                cc = h.get("cache-control")
-                max_age = (
-                    int(cc.split("max-age=", 1)[1].split(",")[0])
-                    if cc and "max-age=" in cc else None
-                )
-                fetch_age = (did * 5) % 60
-                lastmod_age = (did * 3) % 120
-                fresh_secs = (
-                    max_age if max_age is not None else freq_days * 86400
-                )
-                due = fetch_age * 86400 >= fresh_secs
-                if not due:
-                    action, cond = "skip", None
-                elif etag is not None:
-                    action, cond = "revalidate", "if-none-match"
-                elif lastmod is not None:
-                    action, cond = "revalidate", "if-modified-since"
-                else:
-                    action, cond = "refetch", None
-                expected_304 = bool(
-                    due and (etag is not None or lastmod is not None)
-                    and lastmod is not None and lastmod_age >= fetch_age
-                )
-                score = (
-                    (fetch_age * 100) // freq_days + ((did * 7) % 10) * 5
-                    + (50 if lastmod is not None
-                       and lastmod_age < fetch_age else 0)
-                )
-                rows.append(
-                    (did, f"h{did // 10}",
-                     f"http://h{did // 10}.test/p{did % 10}", etag,
-                     lastmod, max_age, due, action, cond, expected_304,
-                     score)
-                )
-            yield pd.DataFrame(
-                rows,
-                columns=["doc_id", "host", "url", "etag", "last_modified",
-                         "max_age", "due", "action", "cond_header",
-                         "expected_304", "score"],
+    def row(did):
+        hdrs = [("Content-Type", "text/html")]
+        if did % 3 != 1:
+            tag = f'"t{did:x}"'
+            if did % 5 == 0:
+                tag = "W/" + tag
+            hdrs.append(("ETag", tag))
+        if did % 2 == 0:
+            hdrs.append((
+                "Last-Modified",
+                f"Thu, 01 Jan 2026 00:00:0{did % 10} GMT",
+            ))
+        freq_days = {0: 1, 1: 7}.get(did % 3, 30)
+        if did % 7 != 0:
+            hdrs.append(
+                ("Cache-Control", f"max-age={freq_days * 86400}")
             )
+        body = b"stored"
+        http = (
+            "HTTP/1.1 200 OK\r\n"
+            + "".join(f"{k}: {v}\r\n" for k, v in hdrs)
+            + f"Content-Length: {len(body)}\r\n\r\n"
+        ).encode() + body
+        rec = decode_warc(encode_warc([{
+            "rec_type": "response",
+            "record_id": f"<urn:uuid:{did:032x}>",
+            "date": "2026-01-01T00:00:00Z",
+            "uri": f"http://h{did // 10}.test/p{did % 10}",
+            "payload": http,
+        }]))[0]
+        h = parse_http_response(rec["payload"])["headers"]
+        etag = h.get("etag")
+        lastmod = h.get("last-modified")
+        cc = h.get("cache-control")
+        max_age = (
+            int(cc.split("max-age=", 1)[1].split(",")[0])
+            if cc and "max-age=" in cc else None
+        )
+        fetch_age = (did * 5) % 60
+        lastmod_age = (did * 3) % 120
+        fresh_secs = (
+            max_age if max_age is not None else freq_days * 86400
+        )
+        due = fetch_age * 86400 >= fresh_secs
+        if not due:
+            action, cond = "skip", None
+        elif etag is not None:
+            action, cond = "revalidate", "if-none-match"
+        elif lastmod is not None:
+            action, cond = "revalidate", "if-modified-since"
+        else:
+            action, cond = "refetch", None
+        expected_304 = bool(
+            due and (etag is not None or lastmod is not None)
+            and lastmod is not None and lastmod_age >= fetch_age
+        )
+        score = (
+            (fetch_age * 100) // freq_days + ((did * 7) % 10) * 5
+            + (50 if lastmod is not None
+               and lastmod_age < fetch_age else 0)
+        )
+        yield (did, f"h{did // 10}",
+               f"http://h{did // 10}.test/p{did % 10}", etag,
+               lastmod, max_age, due, action, cond, expected_304,
+               score)
 
-    docs = multimodal.cpu_parallelize(
-        Catalog(spark, sf_dir).table("documents").select("doc_id")
-    )
-    out = docs.mapInPandas(
-        run,
+    docs = Catalog(spark, sf_dir).table("documents").select("doc_id")
+    out = map_rows(
+        docs, row,
         "doc_id long, host string, url string, etag string,"
         " last_modified string, max_age long, due boolean,"
         " action string, cond_header string, expected_304 boolean,"
@@ -9491,7 +8794,6 @@ def crawl_sitemap_schedule(spark, sf_dir):
     parser slip on any optional field moves a score and fails the
     hash. At 100 TB: sitemap parse is per-host map work exactly like
     the fetch itself; the rank is the frontier's politeness window."""
-    from collections.abc import Iterator
     from datetime import date
 
     from elevate_data_pipeline_spark.functions import crawl
@@ -9499,56 +8801,43 @@ def crawl_sitemap_schedule(spark, sf_dir):
     epoch = date(2026, 1, 1)
     cadence = {"daily": 1, "weekly": 7, "monthly": 30}
 
-    def run(batches: "Iterator[pd.DataFrame]") -> "Iterator[pd.DataFrame]":
-        for pdf in batches:
-            rows = []
-            for doc_id in pdf["doc_id"]:
-                did = int(doc_id)
-                h, j = did // 10, did % 10
-                # the host's full sitemap (entry k belongs to doc
-                # h*10+k); deterministic, so every doc of the host
-                # rebuilds the identical document
-                entries = []
-                for k in range(10):
-                    dk = h * 10 + k
-                    ent = {"loc": f"https://h{h}.test/page/{k}"}
-                    if k % 2 == 0:
-                        ent["lastmod"] = f"2025-{1 + dk % 12:02d}-15"
-                    if k % 3 == 0:
-                        ent["changefreq"] = (
-                            ("daily", "weekly", "monthly")[dk % 3]
-                        )
-                    if k % 4 == 0:
-                        ent["priority"] = f"0.{dk % 10}"
-                    entries.append(ent)
-                parsed = crawl.parse_sitemap(crawl.encode_sitemap(entries))
-                e = parsed["entries"][j]
-                if e["lastmod"] is not None:
-                    y, m, d = (int(x) for x in e["lastmod"].split("-"))
-                    lastmod_age = (epoch - date(y, m, d)).days
-                else:
-                    lastmod_age = None
-                freq_days = cadence.get(e["changefreq"], 7)
-                pri = (
-                    int(e["priority"].partition(".")[2])
-                    if e["priority"] is not None else 5
+    def row(did):
+        h, j = did // 10, did % 10
+        # the host's full sitemap (entry k belongs to doc
+        # h*10+k); deterministic, so every doc of the host
+        # rebuilds the identical document
+        entries = []
+        for k in range(10):
+            dk = h * 10 + k
+            ent = {"loc": f"https://h{h}.test/page/{k}"}
+            if k % 2 == 0:
+                ent["lastmod"] = f"2025-{1 + dk % 12:02d}-15"
+            if k % 3 == 0:
+                ent["changefreq"] = (
+                    ("daily", "weekly", "monthly")[dk % 3]
                 )
-                rows.append(
-                    (did, f"h{h}", e["loc"], freq_days, lastmod_age, pri)
-                )
-            yield pd.DataFrame(
-                rows,
-                columns=["doc_id", "host", "url", "freq_days",
-                         "lastmod_age", "priority_tenths"],
-            )
+            if k % 4 == 0:
+                ent["priority"] = f"0.{dk % 10}"
+            entries.append(ent)
+        parsed = crawl.parse_sitemap(crawl.encode_sitemap(entries))
+        e = parsed["entries"][j]
+        if e["lastmod"] is not None:
+            y, m, d = (int(x) for x in e["lastmod"].split("-"))
+            lastmod_age = (epoch - date(y, m, d)).days
+        else:
+            lastmod_age = None
+        freq_days = cadence.get(e["changefreq"], 7)
+        pri = (
+            int(e["priority"].partition(".")[2])
+            if e["priority"] is not None else 5
+        )
+        yield (did, f"h{h}", e["loc"], freq_days, lastmod_age, pri)
 
     from pyspark.sql import Window
 
-    docs = multimodal.cpu_parallelize(
-        Catalog(spark, sf_dir).table("documents").select("doc_id")
-    )
-    meta = docs.mapInPandas(
-        run,
+    docs = Catalog(spark, sf_dir).table("documents").select("doc_id")
+    meta = map_rows(
+        docs, row,
         "doc_id long, host string, url string, freq_days int,"
         " lastmod_age int, priority_tenths int",
     )
@@ -9657,8 +8946,6 @@ def text_gopher_rules(spark, sf_dir):
     narrow scan: every signal is a higher-order array function over
     the split text, all inside whole-stage codegen — at 100 TB this
     is a map-only pass that scans each document exactly once."""
-    from .operators.util import spread
-
     docs = spread(Catalog(spark, sf_dir).table("documents"))
     d = (
         docs.select(
@@ -9779,8 +9066,6 @@ def text_c4_filter(spark, sf_dir):
     is a sequence fold, no explode, no shuffle), which is what lets the
     C4 pass run as a pre-filter in front of every shuffling stage at
     100 TB."""
-    from .operators.util import spread
-
     docs = spread(Catalog(spark, sf_dir).table("documents"))
     kept_pred = (
         "(doc_id + i) % 3 != 0 AND (doc_id + i) % 11 != 5"
@@ -9883,8 +9168,6 @@ def text_quality_classifier(spark, sf_dir):
     broadcast-trivial. DSIR covers importance weighting; this covers
     supervised quality scoring — the remaining standard curation gate.
     Oracle replays the identical hash/weight fold in DuckDB."""
-    from .operators.util import spread
-
     ph = (
         "aggregate(transform(sequence(1, length(g)),"
         " j -> bigint(ascii(substring(g, j, 1)))),"
@@ -9969,7 +9252,6 @@ def text_perplexity_filter(spark, sf_dir):
     from pyspark.sql.window import Window
 
     from .operators.rank import exact_ntile
-    from .operators.util import spread
 
     docs = spread(Catalog(spark, sf_dir).table("documents"))
     words = docs.select(
@@ -10168,42 +9450,29 @@ def multimodal_ogg_meta(spark, sf_dir):
     stays behind the module's loud gates — the container walk is what
     a crawl pipeline needs for duration/stream accounting. One narrow
     mapInPandas scan, no shuffle: the 100 TB shape."""
-    from collections.abc import Iterator
 
-    def run(batches: "Iterator[pd.DataFrame]") -> "Iterator[pd.DataFrame]":
-        for pdf in batches:
-            rows = []
-            for doc_id in pdf["doc_id"]:
-                did = int(doc_id)
-                pkts = [
-                    bytes([did % 251]) * (16 + did % 32),
-                    bytes([(did * 3) % 251]) * (200 + did % 100),
-                ]
-                if did % 3 == 0:
-                    pkts.append(bytes([(did * 7) % 251]) * (65280 + did % 255))
-                buf = multimodal.encode_ogg(
-                    pkts, serial=1 + did % 1000, granule_base=did * 10
-                )
-                out = multimodal.decode_ogg(buf)
-                rows.append((
-                    did, out["serial"], out["n_pages"],
-                    len(out["packets"]), out["spans"],
-                    sum(len(p) for p in out["packets"]),
-                    sum(sum(p) for p in out["packets"]),
-                    max(g for g in out["granules"] if g >= 0),
-                ))
-            yield pd.DataFrame(
-                rows,
-                columns=["doc_id", "serial", "n_pages", "n_packets",
-                         "spans", "total_payload", "payload_sum",
-                         "last_granule"],
-            )
+    def row(did):
+        pkts = [
+            bytes([did % 251]) * (16 + did % 32),
+            bytes([(did * 3) % 251]) * (200 + did % 100),
+        ]
+        if did % 3 == 0:
+            pkts.append(bytes([(did * 7) % 251]) * (65280 + did % 255))
+        buf = multimodal.encode_ogg(
+            pkts, serial=1 + did % 1000, granule_base=did * 10
+        )
+        out = multimodal.decode_ogg(buf)
+        yield (
+            did, out["serial"], out["n_pages"],
+            len(out["packets"]), out["spans"],
+            sum(len(p) for p in out["packets"]),
+            sum(sum(p) for p in out["packets"]),
+            max(g for g in out["granules"] if g >= 0),
+        )
 
-    docs = multimodal.cpu_parallelize(
-        Catalog(spark, sf_dir).table("documents").select("doc_id")
-    )
-    return docs.mapInPandas(
-        run,
+    docs = Catalog(spark, sf_dir).table("documents").select("doc_id")
+    return map_rows(
+        docs, row,
         "doc_id long, serial long, n_pages int, n_packets int,"
         " spans boolean, total_payload long, payload_sum long,"
         " last_granule long",
@@ -10253,33 +9522,20 @@ def url_registrable_domain(spark, sf_dir):
     narrow mapInPandas scan, no shuffle — at 100 TB the domain key is
     computed map-side and feeds the existing domain-cap/groupBy
     operators."""
-    from collections.abc import Iterator
-
     from .functions.crawl import public_suffix, registrable_domain
 
-    def run(batches: "Iterator[pd.DataFrame]") -> "Iterator[pd.DataFrame]":
-        for pdf in batches:
-            rows = []
-            for doc_id in pdf["doc_id"]:
-                did = int(doc_id)
-                host = (
-                    f"s{did}.example.com", f"a.b{did}.site.co.uk",
-                    f"w{did}.shop.com.au", f"x{did}.b{did % 5}.ck",
-                    f"sub{did}.www.ck", f"h{did}.startup.unknowntld",
-                    "co.uk",
-                )[did % 7]
-                rows.append(
-                    (did, host, public_suffix(host), registrable_domain(host))
-                )
-            yield pd.DataFrame(
-                rows, columns=["doc_id", "host", "suffix", "domain"]
-            )
+    def row(did):
+        host = (
+            f"s{did}.example.com", f"a.b{did}.site.co.uk",
+            f"w{did}.shop.com.au", f"x{did}.b{did % 5}.ck",
+            f"sub{did}.www.ck", f"h{did}.startup.unknowntld",
+            "co.uk",
+        )[did % 7]
+        yield (did, host, public_suffix(host), registrable_domain(host))
 
-    docs = multimodal.cpu_parallelize(
-        Catalog(spark, sf_dir).table("documents").select("doc_id")
-    )
-    return docs.mapInPandas(
-        run, "doc_id long, host string, suffix string, domain string"
+    docs = Catalog(spark, sf_dir).table("documents").select("doc_id")
+    return map_rows(
+        docs, row, "doc_id long, host string, suffix string, domain string"
     )
 
 
@@ -10578,68 +9834,56 @@ def multimodal_mp3_intensity(spark, sf_dir):
     spec's structure. The oracle superposes the panned line values
     through the same filterbank taps in closed form. mapInPandas
     Arrow batches, no shuffle."""
-    from collections.abc import Iterator
 
-    def run(batches: "Iterator[pd.DataFrame]") -> "Iterator[pd.DataFrame]":
-        for pdf in batches:
-            rows = []
-            for doc_id in pdf["doc_id"]:
-                did = int(doc_id)
-                va = 1 + did % 14
-                sa = 1 if did % 2 == 0 else -1
-                vb = 1 + (did * 7) % 15
-                sb = -1 if did % 3 == 0 else 1
-                vc = 1 + (did * 3) % 15
-                sc = -1 if did % 5 == 0 else 1
-                vd = 1 + (did * 5) % 13
-                sd = -1 if did % 7 == 0 else 1
-                ve = 1 + (did * 11) % 15
-                se = -1 if did % 4 == 0 else 1
-                vf = 1 + (did * 13) % 15
-                sfg = -1 if did % 6 == 0 else 1
-                p0, p1 = did % 8, (did * 3) % 8
-                g0l = {
-                    "big": [sa * va] + [0] * 17 + [sb * vb, 0],
-                    "gain_e": 1 + did % 7,
-                }
-                g0r = {
-                    "big": [se * ve, 0], "gain_e": 1 + (did * 3) % 7,
-                    "scalefac": [0, p0] + [0] * 19,
-                    "scalefac_compress": 13,
-                }
-                g1l = {
-                    "big": [0, sc * vc] + [0] * 17 + [sd * vd],
-                    "gain_e": 1 + (did * 5) % 7,
-                }
-                g1r = {
-                    "big": [0, sfg * vf], "gain_e": 1 + (did * 9) % 7,
-                    "scalefac": [0, p1] + [0] * 19,
-                    "scalefac_compress": 13,
-                }
-                buf = multimodal.encode_mp3(
-                    [(g0l, g0r), (g1l, g1r)], mode="is"
-                )
-                out = multimodal.decode_mp3(buf)
-                lch = out.samples[0::2]
-                rch = out.samples[1::2]
-                rows.append((
-                    did, len(out.samples), out.channels,
-                    max(abs(v) for v in lch),
-                    sum(v * v for v in lch),
-                    max(abs(v) for v in rch),
-                    sum(v * v for v in rch),
-                ))
-            yield pd.DataFrame(
-                rows,
-                columns=["doc_id", "n_samples", "channels", "peak_l",
-                         "energy_l", "peak_r", "energy_r"],
-            )
+    def row(did):
+        va = 1 + did % 14
+        sa = 1 if did % 2 == 0 else -1
+        vb = 1 + (did * 7) % 15
+        sb = -1 if did % 3 == 0 else 1
+        vc = 1 + (did * 3) % 15
+        sc = -1 if did % 5 == 0 else 1
+        vd = 1 + (did * 5) % 13
+        sd = -1 if did % 7 == 0 else 1
+        ve = 1 + (did * 11) % 15
+        se = -1 if did % 4 == 0 else 1
+        vf = 1 + (did * 13) % 15
+        sfg = -1 if did % 6 == 0 else 1
+        p0, p1 = did % 8, (did * 3) % 8
+        g0l = {
+            "big": [sa * va] + [0] * 17 + [sb * vb, 0],
+            "gain_e": 1 + did % 7,
+        }
+        g0r = {
+            "big": [se * ve, 0], "gain_e": 1 + (did * 3) % 7,
+            "scalefac": [0, p0] + [0] * 19,
+            "scalefac_compress": 13,
+        }
+        g1l = {
+            "big": [0, sc * vc] + [0] * 17 + [sd * vd],
+            "gain_e": 1 + (did * 5) % 7,
+        }
+        g1r = {
+            "big": [0, sfg * vf], "gain_e": 1 + (did * 9) % 7,
+            "scalefac": [0, p1] + [0] * 19,
+            "scalefac_compress": 13,
+        }
+        buf = multimodal.encode_mp3(
+            [(g0l, g0r), (g1l, g1r)], mode="is"
+        )
+        out = multimodal.decode_mp3(buf)
+        lch = out.samples[0::2]
+        rch = out.samples[1::2]
+        yield (
+            did, len(out.samples), out.channels,
+            max(abs(v) for v in lch),
+            sum(v * v for v in lch),
+            max(abs(v) for v in rch),
+            sum(v * v for v in rch),
+        )
 
-    docs = multimodal.cpu_parallelize(
-        Catalog(spark, sf_dir).table("documents").select("doc_id")
-    )
-    return docs.mapInPandas(
-        run,
+    docs = Catalog(spark, sf_dir).table("documents").select("doc_id")
+    return map_rows(
+        docs, row,
         "doc_id long, n_samples long, channels int, peak_l long,"
         " energy_l long, peak_r long, energy_r long",
     )
@@ -10692,8 +9936,6 @@ def crawl_frontier_pipeline(spark, sf_dir):
     broadcast/joined by host at 100 TB), and the only shuffle is the
     domain-cap rank over bounded per-domain partitions — the same plan
     a production frontier builder needs."""
-    from collections.abc import Iterator
-
     from pyspark.sql.window import Window
 
     from .functions.crawl import (
@@ -10703,43 +9945,30 @@ def crawl_frontier_pipeline(spark, sf_dir):
         robots_allowed,
     )
 
-    def run(batches: "Iterator[pd.DataFrame]") -> "Iterator[pd.DataFrame]":
-        for pdf in batches:
-            rows = []
-            for doc_id in pdf["doc_id"]:
-                did = int(doc_id)
-                raw = (
-                    f"HTTP://H{did % 37}.Site{did % 11}.CO.UK:80"
-                    f"/p/{did % 100}?b=2&a=1#frag"
-                )
-                c = canonical_url(raw)
-                domain = registrable_domain(c["host"])
-                robots = (
-                    "User-agent: *\n"
-                    f"Disallow: /p/{did % 10}\n"
-                    f"Crawl-delay: {(did % 37) % 5}\n"
-                )
-                allowed, _, _ = robots_allowed(robots, "spark-graft", c["path"])
-                delay = crawl_delay(robots, "spark-graft")
-                budget = (
-                    int(86400.0 // delay)
-                    if delay is not None and delay > 0 else None
-                )
-                score = (did * 13) % 100 + (50 if did % 6 == 0 else 0)
-                rows.append(
-                    (did, c["url"], domain, allowed, delay, budget, score)
-                )
-            yield pd.DataFrame(
-                rows,
-                columns=["doc_id", "url", "domain", "allowed",
-                         "crawl_delay", "daily_budget", "score"],
-            )
+    def row(did):
+        raw = (
+            f"HTTP://H{did % 37}.Site{did % 11}.CO.UK:80"
+            f"/p/{did % 100}?b=2&a=1#frag"
+        )
+        c = canonical_url(raw)
+        domain = registrable_domain(c["host"])
+        robots = (
+            "User-agent: *\n"
+            f"Disallow: /p/{did % 10}\n"
+            f"Crawl-delay: {(did % 37) % 5}\n"
+        )
+        allowed, _, _ = robots_allowed(robots, "spark-graft", c["path"])
+        delay = crawl_delay(robots, "spark-graft")
+        budget = (
+            int(86400.0 // delay)
+            if delay is not None and delay > 0 else None
+        )
+        score = (did * 13) % 100 + (50 if did % 6 == 0 else 0)
+        yield (did, c["url"], domain, allowed, delay, budget, score)
 
-    docs = multimodal.cpu_parallelize(
-        Catalog(spark, sf_dir).table("documents").select("doc_id")
-    )
-    gated = docs.mapInPandas(
-        run,
+    docs = Catalog(spark, sf_dir).table("documents").select("doc_id")
+    gated = map_rows(
+        docs, row,
         "doc_id long, url string, domain string, allowed boolean,"
         " crawl_delay double, daily_budget long, score long",
     ).where("allowed")
@@ -11162,82 +10391,65 @@ def warc_metadata_fields(spark, sf_dir):
     resolution uses, run over REAL decoded records. At 100 TB:
     per-file record explode, one record-id-keyed join (AQE broadcasts
     the metadata side when small)."""
-    from collections.abc import Iterator
-
     from .sources.warc import decode_warc, encode_warc, parse_warc_fields
 
-    def run(batches: "Iterator[pd.DataFrame]") -> "Iterator[pd.DataFrame]":
-        for pdf in batches:
-            rows = []
-            for doc_id in pdf["doc_id"]:
-                did = int(doc_id)
-                uri = f"http://crawl.test/doc/{did}"
-                hops = ("L", "LL", "LE", "LLL")[did % 4]
-                fields = [
-                    f"via: http://seed.test/{did % 7}",
-                    f"hopsFromSeed: {hops}",
-                    f"fetchTimeMs: {50 + (did * 17) % 400}",
-                ]
-                n_out = did % 3
-                for k in range(n_out):
-                    if k == n_out - 1 and did % 3 == 2:
-                        # exercise continuation folding on the last one
-                        fields.append(f"outlink: http://out{k}.test")
-                        fields.append(f"\t/{did}")
+    def row(did):
+        uri = f"http://crawl.test/doc/{did}"
+        hops = ("L", "LL", "LE", "LLL")[did % 4]
+        fields = [
+            f"via: http://seed.test/{did % 7}",
+            f"hopsFromSeed: {hops}",
+            f"fetchTimeMs: {50 + (did * 17) % 400}",
+        ]
+        n_out = did % 3
+        for k in range(n_out):
+            if k == n_out - 1 and did % 3 == 2:
+                # exercise continuation folding on the last one
+                fields.append(f"outlink: http://out{k}.test")
+                fields.append(f"\t/{did}")
+            else:
+                fields.append(f"outlink: http://out{k}.test/{did}")
+        recs = [
+            {
+                "rec_type": "response",
+                "record_id": f"<urn:uuid:{did * 2:032x}>",
+                "date": "2026-01-01T00:00:00Z",
+                "uri": uri,
+                "payload": b"HTTP/1.1 200 OK\r\n"
+                b"Content-Length: 2\r\n\r\nok",
+            },
+            {
+                "rec_type": "metadata",
+                "record_id": f"<urn:uuid:{did * 2 + 1:032x}>",
+                "date": "2026-01-01T00:00:00Z",
+                "uri": uri,
+                "headers": {
+                    "WARC-Concurrent-To": f"<urn:uuid:{did * 2:032x}>",
+                    "Content-Type": "application/warc-fields",
+                },
+                "payload": "\r\n".join(fields).encode() + b"\r\n",
+            },
+        ]
+        for rec in decode_warc(encode_warc(recs)):
+            if rec["rec_type"] == "response":
+                yield (did, "response", rec["record_id"], None,
+                       rec["uri"], None, None, None, None)
+            else:
+                fmap: dict = {}
+                outl = 0
+                for k, v in parse_warc_fields(rec["payload"]):
+                    if k == "outlink":
+                        outl += 1
                     else:
-                        fields.append(f"outlink: http://out{k}.test/{did}")
-                recs = [
-                    {
-                        "rec_type": "response",
-                        "record_id": f"<urn:uuid:{did * 2:032x}>",
-                        "date": "2026-01-01T00:00:00Z",
-                        "uri": uri,
-                        "payload": b"HTTP/1.1 200 OK\r\n"
-                        b"Content-Length: 2\r\n\r\nok",
-                    },
-                    {
-                        "rec_type": "metadata",
-                        "record_id": f"<urn:uuid:{did * 2 + 1:032x}>",
-                        "date": "2026-01-01T00:00:00Z",
-                        "uri": uri,
-                        "headers": {
-                            "WARC-Concurrent-To": f"<urn:uuid:{did * 2:032x}>",
-                            "Content-Type": "application/warc-fields",
-                        },
-                        "payload": "\r\n".join(fields).encode() + b"\r\n",
-                    },
-                ]
-                for rec in decode_warc(encode_warc(recs)):
-                    if rec["rec_type"] == "response":
-                        rows.append(
-                            (did, "response", rec["record_id"], None,
-                             rec["uri"], None, None, None, None)
-                        )
-                    else:
-                        fmap: dict = {}
-                        outl = 0
-                        for k, v in parse_warc_fields(rec["payload"]):
-                            if k == "outlink":
-                                outl += 1
-                            else:
-                                fmap[k] = v
-                        rows.append(
-                            (did, "metadata", rec["record_id"],
-                             rec["headers"]["WARC-Concurrent-To"], None,
-                             fmap["via"], fmap["hopsFromSeed"],
-                             int(fmap["fetchTimeMs"]), outl)
-                        )
-            yield pd.DataFrame(
-                rows,
-                columns=["doc_id", "rec_type", "record_id", "concurrent_to",
-                         "uri", "via", "hops", "fetch_ms", "n_outlinks"],
-            )
+                        fmap[k] = v
+                yield (did, "metadata", rec["record_id"],
+                       rec["headers"]["WARC-Concurrent-To"], None,
+                       fmap["via"], fmap["hopsFromSeed"],
+                       int(fmap["fetchTimeMs"]), outl)
 
-    docs = multimodal.cpu_parallelize(
-        Catalog(spark, sf_dir).table("documents").select("doc_id")
-    )
-    records = docs.mapInPandas(
-        run,
+    docs = Catalog(spark, sf_dir).table("documents").select("doc_id")
+    records = map_rows(
+        docs, row,
         "doc_id long, rec_type string, record_id string,"
         " concurrent_to string, uri string, via string, hops string,"
         " fetch_ms long, n_outlinks int",
@@ -11283,29 +10495,20 @@ def dedup_url_variants(spark, sf_dir):
     too. Map-side canonicalization + ONE canonical-key aggregation:
     the exact shape a 100 TB frontier dedups with (the canonical
     string is the shuffle key; no pairwise comparison anywhere)."""
-    from collections.abc import Iterator
-
     from .functions.crawl import canonical_url
 
-    def run(batches: "Iterator[pd.DataFrame]") -> "Iterator[pd.DataFrame]":
-        for pdf in batches:
-            rows = []
-            for doc_id in pdf["doc_id"]:
-                did = int(doc_id)
-                h, p = did % 50, did % 200
-                variants = (
-                    f"http://h{h}.test/p/{p}?a=1&b=2",
-                    f"HTTP://H{h}.Test:80/p/{p}?b=2&a=1",
-                    f"http://h{h}.test:80/p/x/../{p}?a=1&b=2#frag",
-                )
-                for v in variants:
-                    rows.append((did, canonical_url(v)["url"]))
-            yield pd.DataFrame(rows, columns=["doc_id", "url"])
+    def row(did):
+        h, p = did % 50, did % 200
+        variants = (
+            f"http://h{h}.test/p/{p}?a=1&b=2",
+            f"HTTP://H{h}.Test:80/p/{p}?b=2&a=1",
+            f"http://h{h}.test:80/p/x/../{p}?a=1&b=2#frag",
+        )
+        for v in variants:
+            yield (did, canonical_url(v)["url"])
 
-    docs = multimodal.cpu_parallelize(
-        Catalog(spark, sf_dir).table("documents").select("doc_id")
-    )
-    urls = docs.mapInPandas(run, "doc_id long, url string")
+    docs = Catalog(spark, sf_dir).table("documents").select("doc_id")
+    urls = map_rows(docs, row, "doc_id long, url string")
     return urls.groupBy("url").agg(
         F.count(F.lit(1)).cast("long").alias("n_variants"),
         F.countDistinct("doc_id").cast("long").alias("n_docs"),
@@ -11385,46 +10588,36 @@ def multimodal_mp3_mixed(spark, sf_dir):
     plain long granule; the oracle superposes the same lines through
     the mixed-geometry filterbank taps. mapInPandas Arrow batches, no
     shuffle."""
-    from collections.abc import Iterator
 
-    def run(batches: "Iterator[pd.DataFrame]") -> "Iterator[pd.DataFrame]":
-        for pdf in batches:
-            rows = []
-            for doc_id in pdf["doc_id"]:
-                did = int(doc_id)
-                s0 = 1 if did % 2 == 0 else -1
-                s34 = -1 if did % 3 == 0 else 1
-                s36 = -1 if did % 5 == 0 else 1
-                sb1 = -1 if did % 7 == 0 else 1
-                g0 = {
-                    "big": [s0 * (1 + did % 15)] + [0] * 33
-                    + [s34 * (1 + (did * 3) % 15), 0]
-                    + [s36 * (1 + (did * 7) % 15), 0],
-                    "gain_e": 2 + did % 6,
-                    "block_type": 2, "mixed_block": True,
-                    "scalefac": [1, 0, 2] + [0] * 18,
-                    "scalefac_short": [[0] * 12] * 3,
-                    "subblock_gain": [1, 0, 0],
-                    "scalefac_compress": 13,
-                }
-                g1 = {
-                    "big": [sb1 * (1 + (did * 5) % 15)],
-                    "gain_e": did % 8,
-                }
-                buf = multimodal.encode_mp3([g0, g1], bitrate=64)
-                out = multimodal.decode_mp3(buf)
-                rows.append((
-                    did, len(out.samples),
-                    max(abs(v) for v in out.samples),
-                    sum(v * v for v in out.samples),
-                ))
-            yield pd.DataFrame(
-                rows, columns=["doc_id", "n_samples", "peak", "energy"]
-            )
+    def row(did):
+        s0 = 1 if did % 2 == 0 else -1
+        s34 = -1 if did % 3 == 0 else 1
+        s36 = -1 if did % 5 == 0 else 1
+        sb1 = -1 if did % 7 == 0 else 1
+        g0 = {
+            "big": [s0 * (1 + did % 15)] + [0] * 33
+            + [s34 * (1 + (did * 3) % 15), 0]
+            + [s36 * (1 + (did * 7) % 15), 0],
+            "gain_e": 2 + did % 6,
+            "block_type": 2, "mixed_block": True,
+            "scalefac": [1, 0, 2] + [0] * 18,
+            "scalefac_short": [[0] * 12] * 3,
+            "subblock_gain": [1, 0, 0],
+            "scalefac_compress": 13,
+        }
+        g1 = {
+            "big": [sb1 * (1 + (did * 5) % 15)],
+            "gain_e": did % 8,
+        }
+        buf = multimodal.encode_mp3([g0, g1], bitrate=64)
+        out = multimodal.decode_mp3(buf)
+        yield (
+            did, len(out.samples),
+            max(abs(v) for v in out.samples),
+            sum(v * v for v in out.samples),
+        )
 
-    docs = multimodal.cpu_parallelize(
-        Catalog(spark, sf_dir).table("documents").select("doc_id")
-    )
-    return docs.mapInPandas(
-        run, "doc_id long, n_samples long, peak long, energy long"
+    docs = Catalog(spark, sf_dir).table("documents").select("doc_id")
+    return map_rows(
+        docs, row, "doc_id long, n_samples long, peak long, energy long"
     )

@@ -85,7 +85,7 @@ def dedup_ingest_sink(
         # the batch is re-read by several jobs below — pin one copy
         batch = batch_df.localCheckpoint(eager=True)
         probe_bands = _band_frame(
-            _signature_frame(batch, text_col, id_col, "arrow")
+            _signature_frame(batch, text_col, id_col)
         ).localCheckpoint(eager=True)
 
         drop = None

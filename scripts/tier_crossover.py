@@ -48,7 +48,6 @@ LANG_W = [0.40, 0.15, 0.15, 0.15, 0.15]
 
 DOC_SIZES = [50_000, 100_000, 150_000]
 SNM_SIZES = [5_000, 10_000, 20_000]
-MINHASH_SIZES = [1_000, 2_000, 4_000]
 EMB_SIZES = [5_000, 10_000, 20_000, 50_000, 100_000, 200_000]
 EDGE_SIZES = [500_000, 1_000_000, 2_000_000]
 
@@ -64,8 +63,6 @@ FAMILIES = {
               "_BLOOM_LOCAL_MAX_ROWS", DOC_SIZES, "docs"),
     "snm": ("dedup_sorted_neighborhood", "elevate_data_pipeline_spark.operators.dedup",
             "_SNM_LOCAL_MAX_ROWS", SNM_SIZES, "docs"),
-    "minhash": ("minhash_signature", "elevate_data_pipeline_spark.operators.dedup",
-                "_MINHASH_LOCAL_MAX_ROWS", MINHASH_SIZES, "docs"),
     "pq": ("embedding_pq_codes", "elevate_data_pipeline_spark.operators.similarity",
            "_PQ_LOCAL_MAX_ROWS", EMB_SIZES, "emb"),
     "lloyd": ("embedding_cluster_purity", "elevate_data_pipeline_spark.operators.cluster",
@@ -91,7 +88,7 @@ def gen() -> None:
     import pyarrow.parquet as pq
 
     os.makedirs(BASE, exist_ok=True)
-    nmax = max(max(DOC_SIZES), max(SNM_SIZES), max(MINHASH_SIZES))
+    nmax = max(max(DOC_SIZES), max(SNM_SIZES))
     rng = np.random.default_rng(4242)
     lens = rng.integers(10, 101, size=nmax)
     # 30 uniform words + rare 'dup' (~0.1% of tokens, as in testdata)
@@ -104,7 +101,7 @@ def gen() -> None:
         texts.append(" ".join(words))
     langs = rng.choice(LANGS, size=nmax, p=LANG_W)
     srcs = [f"src{int(i)}" for i in rng.integers(0, 20, size=nmax)]
-    for n in sorted(set(DOC_SIZES + SNM_SIZES + MINHASH_SIZES)):
+    for n in sorted(set(DOC_SIZES + SNM_SIZES)):
         d = docs_dir(n)
         if os.path.isdir(d) and os.listdir(d):
             continue
@@ -289,7 +286,6 @@ def verify(only: list[str] | None = None) -> int:
         # ~30 min @ 150k) — oracle at 50k, exceptAll bit-equality at 150k
         ("pipelines", "pretraining_corpus", docs_dir(50_000)),
         ("snm", "dedup_sorted_neighborhood", docs_dir(max(SNM_SIZES))),
-        ("minhash", "minhash_signature", docs_dir(max(MINHASH_SIZES))),
     ]
     if only:
         oracle_checks = [c for c in oracle_checks if c[0] in only]
@@ -417,7 +413,6 @@ def render() -> None:
         "  20k, ~30 min at 150k); @ 150k docs: exceptAll bit-equality",
         "  local == distributed",
         "- `dedup_sorted_neighborhood` @ 20k docs: oracle-exact, both tiers",
-        "- `minhash_signature` @ 4k docs: oracle-exact, both tiers",
         "- `dedup_suffix_array` @ 150k docs (8.1M positions): exceptAll",
         "  bit-equality local == distributed (outputs too large to",
         "  collect twice through the python oracle path)",

@@ -98,23 +98,6 @@ def test_pagerank_zero_weight_source_matches_distributed(spark, monkeypatch):
     assert got_local == _rows(dist)
 
 
-def test_minhash_signatures_local_equals_distributed(spark, monkeypatch, catalog):
-    """The driver-local signature tier (tagged small Catalog scan ->
-    numpy kernel on the driver) must be bit-identical to the distributed
-    Arrow path over the same scan — and both to the pure-JVM expression
-    path, which is the semantics of record."""
-    from elevate_data_pipeline_spark.operators import dedup
-
-    docs = catalog.table("documents")
-    local = dedup._signature_frame(docs, "text", "doc_id", "arrow")
-    got_local = _rows(local)
-    monkeypatch.setattr(dedup, "_MINHASH_LOCAL_MAX_ROWS", -1)
-    dist = dedup._signature_frame(docs, "text", "doc_id", "arrow")
-    assert got_local == _rows(dist)
-    jvm = dedup._signature_frame(docs, "text", "doc_id", "expr")
-    assert got_local == _rows(jvm)
-
-
 def test_pretraining_corpus_local_equals_distributed(spark, monkeypatch, catalog):
     """The driver-local pipeline replay (block dedup -> gates -> LSH
     components -> survivor rank) must equal the distributed chain

@@ -100,7 +100,7 @@ def test_full_registry_audit_clean(spark):
 @pytest.mark.slow
 def test_full_registry_audit_clean_gates_off(spark):
     """Same sweep with every driver-local tier gate forced to -1 so the
-    DISTRIBUTED chains of the 9 locally-tiered operators (the 100 TB
+    DISTRIBUTED chains of the 8 locally-tiered operators (the 100 TB
     path — invisible to the gates-on sweep at audit scale, round-6
     VERDICT task #1) pass the CartesianProduct / SinglePartition /
     BatchEvalPython scan too."""
@@ -175,6 +175,34 @@ def test_package_builds_driver_frames_only_through_local_frame():
                 if n:
                     calls[os.path.relpath(path, pkg.__path__[0])] = n
     assert calls == {os.path.join("sources", "local.py"): 1}, calls
+
+
+def test_registry_python_row_stages_go_through_map_rows():
+    """Registry queries write a per-row Python stage as
+    ``operators.util.map_rows``. Only two stages keep their own
+    ``mapInPandas``, because their inputs (a per-host aggregate, the
+    output of five joins) must not be spread: asking an adaptive plan
+    for its partition count runs its shuffle. The package has no second
+    spreading helper."""
+    import ast
+    import glob
+
+    import elevate_data_pipeline_spark as pkg
+
+    root = pkg.__path__[0]
+    own = set()
+    for path in glob.glob(os.path.join(root, "queries*.py")):
+        with open(path, encoding="utf-8") as f:
+            src = f.read()
+        for node in ast.parse(src).body:
+            if isinstance(node, ast.FunctionDef) and ".mapInPandas(" in (
+                ast.get_source_segment(src, node)
+            ):
+                own.add(node.name)
+    assert own == {"crawl_politeness_budget", "crawl_frontier_redirects"}, sorted(own)
+    for path in glob.glob(os.path.join(root, "**", "*.py"), recursive=True):
+        with open(path, encoding="utf-8") as f:
+            assert "cpu_parallelize" not in f.read(), path
 
 
 def test_pid_feed_regex_accepts_sort_aggregate():

@@ -284,7 +284,7 @@ def test_cc_clusters_no_component_window(spark):
 def test_multimodal_decode_no_shuffle(spark):
     plan = _plan(QUERIES["multimodal_decode"](spark, SF_DIR))
     # decode is embarrassingly parallel: scan -> mapInPandas. The only
-    # allowed Exchange is the cpu_parallelize round-robin fan-out that
+    # allowed Exchange is map_rows' round-robin fan-out (spread), which
     # spreads a too-few-splits scan across the cores (no-op at scale,
     # where the scan already yields >= core-count splits); never a hash
     # shuffle — there is no key to shuffle on.
@@ -489,7 +489,7 @@ def test_jsonl_roundtrip_is_map_only_jvm(spark):
 def test_frontier_pipeline_single_bounded_shuffle(spark):
     """The frontier flagship's only logic shuffle is the per-domain
     cap rank (hashpartitioning on domain); the gate chain itself is
-    ONE Arrow map pass (cpu_parallelize's round-robin is the
+    ONE Arrow map pass (map_rows' spread round-robin is the
     test-scale small-file parallelizer, not query logic)."""
     plan = _simple_plan(QUERIES["crawl_frontier_pipeline"](spark, SF_DIR))
     import re as _re

@@ -45,15 +45,13 @@ def test_gate_sim_help_after_positional_exits_zero():
 
 def test_plan_audit_help_exits_zero():
     path = os.path.join(ROOT, "scripts", "plan_audit.py")
-    if not os.path.exists(path):
-        return
+    assert os.path.exists(path), path
     proc = _run(path, "--help")
     assert proc.returncode == 0, proc.stderr
 
 
 def test_tier_crossover_help_exits_zero():
     path = os.path.join(ROOT, "scripts", "tier_crossover.py")
-    if not os.path.exists(path):
-        return
+    assert os.path.exists(path), path
     proc = _run(path, "--help")
     assert proc.returncode == 0, proc.stderr
