@@ -160,10 +160,9 @@ def shuffle_probe(spark) -> float:
     + one broadcast join over 1.5M rows x 32 partitions), median of 3
     after its own warm lap. The value calibrates what THIS box's
     shuffle machinery costs right now: bench_last.json records it next
-    to the medians, and tests/test_bench_guard.py scales its trip
-    limits by (current probe / committed probe), so a box-generation
-    flip (either direction) moves the guard instead of faking a
-    regression or leaving the guard loose."""
+    to the medians, and perfbench's traced runs record it as
+    ``host.probe_s``, so timings taken on different boxes can be told
+    apart from a regression."""
     from pyspark.sql import functions as F
 
     def once() -> float:
@@ -296,24 +295,30 @@ def main() -> None:
             raise RuntimeError(f"priming query {name!r} failed on {sf_dir}") from exc
 
     # Box-calibration probe (see shuffle_probe): recorded beside the
-    # medians so the guard scales with the box instead of tripping on
-    # hardware-generation drift.
+    # medians so hardware-generation drift can be told from a regression.
     probe_sec = shuffle_probe(spark)
 
     # Median of 3 timed runs per query: single-shot numbers at this scale
     # are noisy enough to flag phantom regressions (GC pauses, page cache,
     # AQE re-plans) — the r2 bench showed 5x swings on queries whose plans
     # had not changed. The median is robust to one bad run either way.
+    # Each run also stamps the end of DataFrame construction (driver-side
+    # py4j calls, analysis, and any action a builder runs) so build_s
+    # splits the driver's share out of the wall time.
     runs = int(os.environ.get("SPARK_GRAFT_BENCH_RUNS", "3"))
     times: dict[str, float] = {}
+    build: dict[str, float] = {}
     for name in names:
-        samples = []
+        samples, builds = [], []
         for _ in range(runs):
             t0 = time.perf_counter()
-            QUERIES[name](spark, sf_dir).collect()
+            df = QUERIES[name](spark, sf_dir)
+            t1 = time.perf_counter()
+            df.collect()
             samples.append(time.perf_counter() - t0)
-        samples.sort()
-        times[name] = round(samples[len(samples) // 2], 3)
+            builds.append(t1 - t0)
+        times[name] = round(sorted(samples)[len(samples) // 2], 3)
+        build[name] = round(sorted(builds)[len(builds) // 2], 3)
 
     total = round(sum(times.values()), 3)
     full = {
@@ -321,6 +326,7 @@ def main() -> None:
         "value": total,
         "unit": "sec",
         "queries": times,
+        "build_s": build,
         "sf": sf,
         "probe_sec": probe_sec,
     }

@@ -35,17 +35,31 @@ child. Two shapes are provably bounded regardless of input size:
 
 A single-partition exchange whose child matches neither shape is an
 UNBOUNDED finding and cannot be waived — the waiver dict only covers
-exchanges whose bound the audit has verified structurally. Exit code 1
-on any finding; ``tests/test_plan_audit.py`` runs this sweep in-process
-so CI pins the whole registry's plan hygiene.
+exchanges whose bound the audit has verified structurally.
 
-Usage: python scripts/plan_audit.py [sf_dir] > docs/PLAN_AUDIT.md
+The same sweep also counts, per query, what makes its plan scale:
+shuffle and broadcast exchanges, each join strategy, Python nodes, scans
+with pushed filters (all read from ``explain("formatted")``, whose
+``(n) NodeName`` detail headers name each node once), and the Spark
+actions the builder runs while it builds the frame (``count_build``).
+A lost broadcast, a lost pushdown, a new shuffle or a builder that
+starts running jobs each moves one of these counts. The counts of both
+sweeps are committed in ``docs/plan_counts.json``, one line per query,
+with the scale they were taken at; ``tests/test_plan_audit.py`` runs
+both sweeps in-process and fails on any finding and on any count that
+differs from the committed one.
+
+Usage: python scripts/plan_audit.py [sf_dir]   (default: the sf0.001
+test data). Rewrites ``docs/plan_counts.json``; exit code 1 on any
+finding.
 """
 
 from __future__ import annotations
 
 import contextlib
 import io
+import itertools
+import json
 import os
 import re
 import sys
@@ -180,12 +194,16 @@ def classify_single_partition(plan_lines: list[str], idx: int) -> str:
     return "UNBOUNDED"
 
 
-def audit_query(name: str, df) -> tuple[list[str], list[tuple[str, str]]]:
-    """Return (waived descriptions, findings) for one query's plan."""
+def plan_text(df, mode: str) -> str:
     buf = io.StringIO()
     with contextlib.redirect_stdout(buf):
-        df.explain("simple")
-    plan = buf.getvalue()
+        df.explain(mode)
+    return buf.getvalue()
+
+
+def audit_query(name: str, df) -> tuple[list[str], list[tuple[str, str]]]:
+    """Return (waived descriptions, findings) for one query's plan."""
+    plan = plan_text(df, "simple")
     lines = plan.splitlines()
 
     waived: list[str] = []
@@ -214,8 +232,85 @@ def audit_query(name: str, df) -> tuple[list[str], list[tuple[str, str]]]:
     return waived, findings
 
 
+# formatted-explain detail headers: "(12) BroadcastHashJoin", one per node
+_NODE_RE = re.compile(r"^\(\d+\) (\w+)", re.M)
+# a scan's detail block line, when at least one filter reached the source
+_RX_PUSHED = re.compile(r"^PushedFilters: \[[^\]]", re.M)
+
+
+def plan_counts(plan: str) -> dict[str, int]:
+    """Node counts of one ``explain("formatted")`` plan."""
+    nodes = _NODE_RE.findall(plan)
+    c = lambda *names: sum(1 for n in nodes if n in names)  # noqa: E731
+    return {
+        "exchanges": c("Exchange"),
+        "bcast_exchanges": c("BroadcastExchange"),
+        "py_nodes": c(
+            "ArrowEvalPython", "BatchEvalPython", "MapInPandas",
+            "MapInArrow", "FlatMapGroupsInPandas",
+        ),
+        "sort_merge_joins": c("SortMergeJoin"),
+        "bcast_joins": c("BroadcastHashJoin"),
+        "shuffled_hash_joins": c("ShuffledHashJoin"),
+        "pushed_scans": len(_RX_PUSHED.findall(plan)),
+    }
+
+
+_GROUPS = itertools.count()
+
+
+def _scala_iter(seq):
+    it = seq.iterator()
+    while it.hasNext():
+        yield it.next()
+
+
+def count_build(spark, build):
+    """Call ``build()`` under a job group of its own; return the frame it
+    built and its counts: ``plan_counts`` of its formatted plan, and
+    ``build_actions``, the Spark actions ``build()`` ran.
+
+    An action is a SQL execution that ran at least one job, or a job run
+    outside any SQL execution (a plain RDD action, or the stages
+    ``DataFrame.rdd`` runs). Jobs are not counted one by one: adaptive
+    execution submits one job per query stage, and how many stages one
+    execution materializes depends on the order its running stages
+    finish (``dedup_suffix_array``'s gates-off build ran 23 or 25 jobs
+    in four executions, run to run)."""
+    sc = spark.sparkContext
+    sql = spark._jsparkSession.sharedState().statusStore()
+    newest = sql.executionsList(max(0, sql.executionsCount() - 1), 1)
+    last = max((e.executionId() for e in _scala_iter(newest)), default=-1)
+    group = f"plan-audit-{next(_GROUPS)}"
+    sc.setJobGroup(group, group)
+    try:
+        df = build()
+    finally:
+        sc.setLocalProperty("spark.jobGroup.id", None)
+    # both status stores are fed by the asynchronous listener bus; drain
+    # it so a job that just ended is not missed
+    sc._jsc.sc().listenerBus().waitUntilEmpty()
+    jobs = set(sc.statusTracker().getJobIdsForGroup(group))
+    bare, actions = set(jobs), 0
+    end = sql.executionsCount()
+    while bare and end > 0:  # newest executions first, down to ``last``
+        start = max(0, end - 32)
+        chunk = [e for e in _scala_iter(sql.executionsList(start, end - start))
+                 if e.executionId() > last]
+        for e in chunk:
+            ran = set(_scala_iter(e.jobs().keys())) & jobs
+            actions += bool(ran)
+            bare -= ran
+        if len(chunk) < end - start:
+            break
+        end = start
+    counts = plan_counts(plan_text(df, "formatted"))
+    counts["build_actions"] = actions + len(bare)
+    return df, counts
+
+
 def run_audit(spark, sf_dir: str, gates_off: bool = False):
-    """Sweep the whole registry; returns (report_lines, findings).
+    """Sweep the whole registry; returns ({query: counts}, findings).
 
     With ``gates_off`` every driver-local tier gate is forced to -1 so
     the tiered operators plan their DISTRIBUTED chains (the 100 TB
@@ -233,82 +328,75 @@ def run_audit(spark, sf_dir: str, gates_off: bool = False):
     pipelines.PIN_STAGES = False
     rank.PIN_PARTITIONS = False
 
+    counts: dict[str, dict[str, int]] = {}
     findings: list[tuple[str, str]] = []
-    n_waived = 0
-    clean = 0
-    if gates_off:
-        lines = [
-            "## Gates-off sweep — distributed chains of the locally-tiered operators",
-            "",
-            "Same scan, with every driver-local tier gate forced to -1",
-            f"({len(_TIER_GATES)} gates, docs/LOCAL_TIERS.md). At audit scale the",
-            "tiers would otherwise compile the tiered queries to a trivial",
-            "local relation, leaving their distributed chains — the 100 TB",
-            "path — invisible to the anti-pattern scan.",
-            "",
-            "| Query | Result |",
-            "|---|---|",
-        ]
-    else:
-        lines = [
-            "# Plan audit — scale anti-pattern sweep over the whole registry",
-            "",
-            "Generated by `scripts/plan_audit.py`: every registry query's",
-            "physical plan (driver-side `explain('simple')`, nothing executed)",
-            "scanned for `CartesianProduct`, `Exchange SinglePartition`, and",
-            "row-at-a-time `BatchEvalPython`. A single-partition exchange is",
-            "waived only when BOTH (a) the audit structurally verifies its",
-            "feeder is bounded — a `keys=[]` partial aggregate (≤1 row/task)",
-            "or a `keys=[_pid]` offsets frame (≤1 row/partition id) — and",
-            "(b) the query carries a documented waiver in `WAIVERS`. Anything",
-            "else fails the audit (exit 1 — `tests/test_plan_audit.py` runs",
-            "BOTH sweeps in-process, so CI pins the registry's plan hygiene).",
-            "",
-            "## Gates-on sweep — plans as shipped",
-            "",
-            "| Query | Result |",
-            "|---|---|",
-        ]
-
     gate_cm = tier_gates_off() if gates_off else contextlib.nullcontext()
     try:
         with gate_cm:
             for name in sorted(QUERIES):
                 try:
-                    df = QUERIES[name](spark, sf_dir)
-                    waived, found = audit_query(name, df)
+                    df, counts[name] = count_build(
+                        spark, lambda: QUERIES[name](spark, sf_dir)
+                    )
+                    _, found = audit_query(name, df)
                 except Exception as exc:  # planning itself failed
                     findings.append((name, f"EXPLAIN ERROR: {exc}"))
-                    lines.append(f"| `{name}` | EXPLAIN ERROR |")
                     continue
                 findings.extend(found)
-                n_waived += len(waived)
-                cell = [f"**FINDING: {what}**" for _, what in found] + waived
-                if not cell:
-                    clean += 1
-                    lines.append(f"| `{name}` | clean |")
-                else:
-                    lines.append(f"| `{name}` | {'; '.join(cell)} |")
     finally:
         pipelines.PIN_STAGES = old_pin_stages
         rank.PIN_PARTITIONS = old_pin_parts
+    return counts, findings
 
-    from elevate_data_pipeline_spark.queries import QUERIES as _Q
 
-    label = "gates-off" if gates_off else "gates-on"
-    lines += [
-        "",
-        f"**{label}: {clean} clean / {n_waived} waived / {len(findings)} findings** "
-        f"of {len(_Q)} queries.",
+COUNTS_PATH = os.path.join(ROOT, "docs", "plan_counts.json")
+
+
+def dump_counts(scale: str, sweeps: dict[str, dict[str, dict[str, int]]]) -> str:
+    """The committed counts file: its scale, then one line per query."""
+    names = sorted(sweeps["gates_on"])
+    rows = [
+        f"  {json.dumps(n)}: "
+        + json.dumps({sweep: sweeps[sweep][n] for sweep in ("gates_on", "gates_off")})
+        for n in names
     ]
-    return lines, findings
+    return (
+        f'{{"scale": {json.dumps(scale)},\n "queries": {{\n'
+        + ",\n".join(rows)
+        + "\n}}\n"
+    )
+
+
+def load_counts() -> tuple[str, dict]:
+    """(scale, {query: {sweep: counts}}) as committed."""
+    with open(COUNTS_PATH, encoding="utf-8") as f:
+        doc = json.load(f)
+    return doc["scale"], doc["queries"]
+
+
+def count_diffs(committed: dict, live: dict[str, dict[str, int]], sweep: str) -> list[str]:
+    """One line per query and count of ``sweep`` that moved."""
+    out = []
+    for name in sorted(set(committed) | set(live)):
+        if name not in live:
+            out.append(f"{name}: committed but not counted by this sweep")
+            continue
+        if name not in committed:
+            out.append(f"{name}: not in the committed counts")
+            continue
+        old = committed[name][sweep]
+        for key in sorted(set(old) | set(live[name])):
+            if old.get(key) != live[name].get(key):
+                out.append(
+                    f"{name} {sweep} {key}: committed {old.get(key)}, "
+                    f"live {live[name].get(key)}"
+                )
+    return out
 
 
 def main() -> int:
     if any(a in ("-h", "--help") for a in sys.argv[1:]):
         print(__doc__.strip())
-        print("\nUsage: python scripts/plan_audit.py [sf_dir]"
-              "  (default: /root/testdata/sf0.001)")
         return 0
     sf_dir = sys.argv[1] if len(sys.argv) > 1 else "/root/testdata/sf0.001"
 
@@ -316,13 +404,15 @@ def main() -> int:
 
     spark = get_spark("plan-audit")
     spark.sparkContext.setLogLevel("ERROR")
-    lines, findings = run_audit(spark, sf_dir)
-    lines_off, findings_off = run_audit(spark, sf_dir, gates_off=True)
-    print("\n".join(lines))
-    print()
-    print("\n".join(lines_off))
-    for name, what in findings + findings_off:
+    counts, findings = run_audit(spark, sf_dir)
+    counts_off, findings_off = run_audit(spark, sf_dir, gates_off=True)
+    scale = os.path.basename(os.path.normpath(sf_dir))
+    with open(COUNTS_PATH, "w", encoding="utf-8") as f:
+        f.write(dump_counts(scale, {"gates_on": counts, "gates_off": counts_off}))
+    for name, what in findings:
         print(f"FINDING {name}: {what}", file=sys.stderr)
+    for name, what in findings_off:
+        print(f"FINDING (gates off) {name}: {what}", file=sys.stderr)
     return 1 if findings or findings_off else 0
 
 
