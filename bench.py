@@ -1,7 +1,10 @@
 """Benchmark runner — one JSON line with per-query wall times.
 
-Runs the headline queries from the registry at ``$SPARK_GRAFT_SF_DIR``
-(default /root/testdata/sf0.1) on ``local[$SPARK_GRAFT_CPUS]``.
+Runs every registry query, the headline set first, at
+``$SPARK_GRAFT_SF_DIR`` (default: the sf0.1 testdata) on
+``local[$SPARK_GRAFT_CPUS]``. ``bench_last.json`` gets the full record:
+per-query medians, construction time, CPU steal and the per-query
+layers read from the session's Spark event log.
 """
 
 from __future__ import annotations
@@ -9,7 +12,9 @@ from __future__ import annotations
 import json
 import os
 import re
+import shutil
 import sys
+import tempfile
 import time
 
 import pandas as pd
@@ -185,12 +190,103 @@ def shuffle_probe(spark) -> float:
     return round(sorted(once() for _ in range(3))[1], 4)
 
 
+def query_layers(log_dir: str, names: list[str], runs: int) -> dict[str, dict]:
+    """Per query: the event log's counts and task metrics for the jobs of
+    its job group, each as a per-run mean over its ``runs`` timed runs. A
+    query whose runs launched no Spark job gets zeros. Jobs outside every
+    group (the warm-up, the priming and the probe) count for no query."""
+    from perfbench.layers import MB, read_event_log
+
+    fields = (
+        ("jobs", "jobs", 1), ("stages", "stages", 1), ("tasks", "tasks", 1),
+        ("task_run_s", "run_ms", 1e3), ("task_cpu_s", "cpu_ns", 1e9),
+        ("shuffle_write_mb", "shuffle_write", MB),
+        ("shuffle_read_mb", "shuffle_read", MB),
+        ("spill_mb", "spill", MB), ("py_run_s", "py_run", 1e3),
+    )
+    groups = read_event_log(log_dir)["groups"]
+    return {
+        name: {field: round(groups[name][key] / scale / runs, 4)
+               if name in groups else 0 for field, key, scale in fields}
+        for name in names
+    }
+
+
 def main() -> None:
+    from perfbench.layers import EVENT_LOG_CONF, MB
+
     sf_dir = os.environ.get("SPARK_GRAFT_SF_DIR", "/root/testdata/sf0.1")
     m = re.search(r"sf([0-9.]+)", sf_dir)
     sf = float(m.group(1)) if m else -1.0
 
-    spark = get_spark("edp-bench")
+    # The session writes a plain-JSON event log into a directory of its
+    # own under Spark's local dir; it is read once the session has
+    # stopped, and removed whether or not the run got that far.
+    local_dir = os.environ.get("SPARK_LOCAL_DIRS", "").split(",")[0] or None
+    if local_dir:
+        os.makedirs(local_dir, exist_ok=True)
+    log_dir = tempfile.mkdtemp(prefix="edp-bench-eventlog-", dir=local_dir)
+    try:
+        spark = get_spark("edp-bench", **EVENT_LOG_CONF,
+                          **{"spark.eventLog.dir": log_dir})
+        runs = int(os.environ.get("SPARK_GRAFT_BENCH_RUNS", "3"))
+        times, build, steal, probe_sec = time_registry(spark, sf_dir, runs)
+        spark.stop()
+        log_mb = sum(os.path.getsize(os.path.join(log_dir, f))
+                     for f in os.listdir(log_dir)) / MB
+        layers = query_layers(log_dir, list(times), runs)
+    finally:
+        shutil.rmtree(log_dir, ignore_errors=True)
+
+    total = round(sum(times.values()), 3)
+    full = {
+        "metric": "headline_queries_total_wall",
+        "value": total,
+        "unit": "sec",
+        "queries": times,
+        "build_s": build,
+        "steal_pct": steal,
+        "layers": layers,
+        "event_log_mb": round(log_mb, 1),
+        "sf": sf,
+        "probe_sec": probe_sec,
+    }
+    # The full record (several per-query maps over the whole registry) is
+    # far longer than a 2 000-char captured stdout tail, so it goes to
+    # bench_last.json only. stdout gets ONE compact final line (< 1.5 KB
+    # guaranteed: slowest-20 queries, trimmed further if ever needed) that
+    # still satisfies the {"metric", "value", "unit", "queries", "sf"}
+    # contract.
+    with open(os.path.join(os.path.dirname(os.path.abspath(__file__)), "bench_last.json"), "w") as f:
+        f.write(json.dumps(full) + "\n")
+
+    slowest = dict(sorted(times.items(), key=lambda kv: -kv[1]))
+    keep = 20
+    while keep > 1:
+        compact = {
+            "metric": "headline_queries_total_wall",
+            "value": total,
+            "unit": "sec",
+            "queries": dict(list(slowest.items())[:keep]),
+            "sf": sf,
+            "n_queries": len(times),
+            "probe_sec": probe_sec,
+            "full": "bench_last.json",
+        }
+        line = json.dumps(compact)
+        if len(line) <= 1500:
+            break
+        keep -= 2
+    sys.stdout.flush()
+    print(line)
+
+
+def time_registry(spark, sf_dir: str, runs: int):
+    """Warm the session, prime the inputs, run the probe, then time
+    ``runs`` runs of every registry query. Returns per-query medians,
+    construction medians and steal, and the probe's seconds."""
+    from perfbench.layers import cpu_ticks, steal_pct
+
     # Keep the captured stdout/stderr tail a clean signal. BENCH_r08's
     # tail carried one end-of-run "ERROR DAGScheduler: Failed to update
     # accumulator ... (Unknown class) / attempted to access non-existent
@@ -228,8 +324,8 @@ def main() -> None:
             "org.apache.spark.sql.execution.window",
             jvm.org.apache.logging.log4j.Level.ERROR,
         )
-    except Exception:
-        pass  # logging backend absent/renamed: bench must still run
+    except Exception as exc:  # logging backend absent/renamed: bench still runs
+        print(f"bench: log4j filter not installed: {exc!r}", file=sys.stderr)
     # FULL registry coverage: the headline set first (stable ordering for
     # round-over-round comparison), then every remaining registry query —
     # no silent caps; a query's sf0.1 Spark-side cost is recorded here or
@@ -305,10 +401,15 @@ def main() -> None:
     # Each run also stamps the end of DataFrame construction (driver-side
     # py4j calls, analysis, and any action a builder runs) so build_s
     # splits the driver's share out of the wall time.
-    runs = int(os.environ.get("SPARK_GRAFT_BENCH_RUNS", "3"))
+    # Each query's timed runs form one Spark job group, so the event log
+    # attributes their jobs, stages and tasks to it; the steal is read
+    # from /proc/stat around the same runs.
     times: dict[str, float] = {}
     build: dict[str, float] = {}
+    steal: dict[str, float] = {}
     for name in names:
+        spark.sparkContext.setJobGroup(name, name)
+        ticks = cpu_ticks()
         samples, builds = [], []
         for _ in range(runs):
             t0 = time.perf_counter()
@@ -319,44 +420,8 @@ def main() -> None:
             builds.append(t1 - t0)
         times[name] = round(sorted(samples)[len(samples) // 2], 3)
         build[name] = round(sorted(builds)[len(builds) // 2], 3)
-
-    total = round(sum(times.values()), 3)
-    full = {
-        "metric": "headline_queries_total_wall",
-        "value": total,
-        "unit": "sec",
-        "queries": times,
-        "build_s": build,
-        "sf": sf,
-        "probe_sec": probe_sec,
-    }
-    # The full per-query map (~3.6 KB at 121 queries) exceeds the 2 000-char
-    # stdout tail the driver captures, so it goes to bench_last.json only.
-    # stdout gets ONE compact final line (< 1.5 KB guaranteed: slowest-20
-    # queries, trimmed further if ever needed) that still satisfies the
-    # {"metric", "value", "unit", "queries", "sf"} contract.
-    with open(os.path.join(os.path.dirname(os.path.abspath(__file__)), "bench_last.json"), "w") as f:
-        f.write(json.dumps(full) + "\n")
-
-    slowest = dict(sorted(times.items(), key=lambda kv: -kv[1]))
-    keep = 20
-    while keep > 1:
-        compact = {
-            "metric": "headline_queries_total_wall",
-            "value": total,
-            "unit": "sec",
-            "queries": dict(list(slowest.items())[:keep]),
-            "sf": sf,
-            "n_queries": len(times),
-            "probe_sec": probe_sec,
-            "full": "bench_last.json",
-        }
-        line = json.dumps(compact)
-        if len(line) <= 1500:
-            break
-        keep -= 2
-    sys.stdout.flush()
-    print(line)
+        steal[name] = round(steal_pct(ticks, cpu_ticks()), 2)
+    return times, build, steal, probe_sec
 
 
 if __name__ == "__main__":

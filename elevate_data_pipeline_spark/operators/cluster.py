@@ -216,7 +216,7 @@ def label_components_with_size(
 # Corpora at or below this row count train centroids on the driver (one
 # pyarrow/collect read); larger corpora take the fully-declarative
 # distributed chain. Set at the measured warm crossover
-# (docs/TIER_CROSSOVER.md: local 2.9 s vs distributed 3.3 s at 5k
+# (docs/LOCAL_TIERS.md table: local 2.9 s vs distributed 3.3 s at 5k
 # vectors, 1.2x slower at 10k, 3x at 50k) — the per-iteration
 # numpy assignment is single-threaded while the distributed chain
 # spreads across cores.

@@ -81,7 +81,7 @@ def ngram_contamination(
 # sets/dicts. The gate sits AT the measured crossover because the tie
 # there is proven noise in BOTH directions:
 # on the synthetic crossover corpus distributed edges local by 4% at
-# 5k docs (4.21 vs 4.40 s, docs/TIER_CROSSOVER.md), on the REAL
+# 5k docs (4.21 vs 4.40 s, docs/LOCAL_TIERS.md table), on the REAL
 # testdata at the same 5k local edges distributed by 5% (2.96 vs
 # 3.11 s, 5-run solo medians), and in full-sweep context the local
 # tier is clearly cheaper (3.3 vs 4.7-5.3 s — fewer stages, less GC

@@ -971,7 +971,7 @@ def _gram_kernel(t: str, k: int, pows: list) -> np.ndarray:
 
 # Gate for the driver-local span tier (pattern of _SNM_LOCAL_MAX_ROWS):
 # the whole-corpus gram sweep is numpy-vectorized end to end. Set BELOW
-# the measured crossover with margin (docs/TIER_CROSSOVER.md, 3-run
+# the measured crossover with margin (docs/LOCAL_TIERS.md table, 3-run
 # medians: local WINS at 10k docs — 2.14 s vs 2.30 s — and loses from
 # 20k up, 4.35 s vs 2.91 s) — the lexsort grows superlinearly while the
 # distributed gram-key shuffle spreads across cores.

@@ -33,7 +33,7 @@ SCALE = 1_000_000_000_000  # fixed-point unit: 1e12 == rank 1.0
 
 # Graphs at or below this many edges iterate on the driver; larger ones
 # take the declarative join+groupBy loop. Set at the measured warm
-# crossover (docs/TIER_CROSSOVER.md: local 4.8 s vs distributed 4.6 s
+# crossover (docs/LOCAL_TIERS.md table: local 4.8 s vs distributed 4.6 s
 # at 500k edges, 3x slower at 1M) — the per-iteration Python dict pass
 # is single-threaded while the join+groupBy loop spreads.
 _PAGERANK_LOCAL_MAX_EDGES = 500_000

@@ -27,10 +27,8 @@ def cold_solo(sf_dir: str, only: list[str], exact: bool = False) -> int:
     """One FRESH python+JVM process per query — the worst case a driver
     gate can present (the query pays session startup, Hadoop/parquet
     first-touch, and every codegen compile alone). Prints per-query
-    in-process time (the gate_sim line) plus total subprocess wall.
-    Writes docs/COLD_SOLO.md ONLY for full sweeps — a filtered run
-    would silently clobber the committed full-sweep record, so it
-    writes /tmp/COLD_SOLO_partial.md instead."""
+    in-process time (the gate_sim line) plus total subprocess wall, and
+    a summary line; nothing is written to disk."""
     import re
     import subprocess
 
@@ -43,8 +41,7 @@ def cold_solo(sf_dir: str, only: list[str], exact: bool = False) -> int:
             n for n in sorted(entry.queries())
             if not only or any(f in n for f in only)
         ]
-    full_sweep = len(names) == len(entry.queries())
-    rows = []
+    qtimes = []
     n_bad = 0
     for name in names:
         t0 = time.time()
@@ -61,35 +58,13 @@ def cold_solo(sf_dir: str, only: list[str], exact: bool = False) -> int:
         )
         ok = proc.returncode == 0 and status.startswith("ok")
         n_bad += 0 if ok else 1
-        rows.append((name, qtime, wall, status if ok else f"BAD {status[:80]}"))
+        qtimes.append(qtime)
         print(f"{name:40s} {qtime:6.2f}s query  {wall:6.2f}s wall  "
-              f"{'ok' if ok else rows[-1][3]}", flush=True)
+              f"{'ok' if ok else f'BAD {status[:80]}'}", flush=True)
 
-    out = (
-        os.path.join(ROOT, "docs", "COLD_SOLO.md")
-        if full_sweep
-        else "/tmp/COLD_SOLO_partial.md"
-    )
-    with open(out, "w") as f:
-        f.write(
-            f"# Cold-solo gate simulation — {sf_dir}\n\n"
-            "One fresh python+JVM process per query (`python scripts/"
-            "gate_sim.py <sf_dir> --cold-solo`). `query` is the in-process "
-            "gate_sim time (Spark build+execute + DuckDB oracle + compare); "
-            "`wall` adds interpreter import + SparkSession startup "
-            "(~6 s fixed).\n\n| query | query s | wall s | status |\n"
-            "|---|---|---|---|\n"
-        )
-        for name, qtime, wall, status in sorted(rows, key=lambda r: -r[1]):
-            f.write(f"| {name} | {qtime:.2f} | {wall:.2f} | {status} |\n")
-        qs = sorted(r[1] for r in rows)
-        f.write(
-            f"\n{len(rows)} queries; query-time max {qs[-1]:.2f}s, "
-            f"p50 {qs[len(qs) // 2]:.2f}s; {n_bad} failures.\n"
-        )
-    print(f"\nwrote {out}"
-          + ("" if full_sweep else " (partial run — docs/COLD_SOLO.md untouched)")
-          + f"; max query {max(r[1] for r in rows):.2f}s; {n_bad} failures")
+    qs = sorted(qtimes)
+    print(f"\n{len(qs)} queries; query-time max {qs[-1]:.2f}s, "
+          f"p50 {qs[len(qs) // 2]:.2f}s; {n_bad} failures")
     return 1 if n_bad else 0
 
 
@@ -116,9 +91,8 @@ def _build_parser() -> argparse.ArgumentParser:
     )
     p.add_argument(
         "--cold-solo", action="store_true",
-        help="one fresh python+JVM subprocess per query; a FULL sweep "
-        "writes docs/COLD_SOLO.md, a filtered one writes "
-        "/tmp/COLD_SOLO_partial.md",
+        help="one fresh python+JVM subprocess per query; prints the "
+        "per-query times and a summary",
     )
     return p
 

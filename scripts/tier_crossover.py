@@ -1,41 +1,31 @@
-"""Tier-crossover bench: measure every driver-local tier against its
-distributed chain at sizes bracketing the gate (round-6 VERDICT task #2).
+"""Local-vs-distributed correctness of the driver-local tiers on corpora
+larger than the committed testdata (see docs/LOCAL_TIERS.md).
 
 The committed testdata tops out at 5,000 documents (sf0.1), so the
-100k-gated tiers never engage their distributed chains in any committed
-bench. This harness generates LARGER synthetic corpora with the same
-generator distribution as `/root/testdata` documents (31-word vocab —
-30 uniform + rare 'dup', doc length uniform 10..100 words, 20 sources,
-lang en-weighted), plus gaussian-mixture embeddings and random edge
-lists, then times each tiered operator BOTH ways (gate forced huge =
-local tier; gate forced -1 = distributed chain) at 3+ sizes per gate.
-
-Timing uses the noop sink (full computation, no driver collect), warm
-session, median of N runs. Correctness on the big corpora: DuckDB
-oracle compare for the dedup-family queries with collectable outputs,
-Spark-side exceptAll bit-equality (local vs distributed) for the
-tiers whose outputs are too large to collect twice.
+20k-150k-document behaviour of the tiered operators is never exercised by
+the suite. ``gen`` writes synthetic corpora with the generator
+distribution of the testdata documents (31-word vocab: 30 uniform words
+plus a rare 'dup', doc length uniform 10..100 words, 20 sources,
+en-weighted lang). ``verify`` runs each tiered query both ways (gate
+forced huge = local tier, gate forced -1 = distributed chain): a DuckDB
+oracle compare where the output is collectable, and Spark ``exceptAll``
+bit-equality of local against distributed where it is not.
 
 Usage:
-  python scripts/tier_crossover.py gen            # write corpora to /tmp
-  python scripts/tier_crossover.py bench [family] # append results JSONL
-  python scripts/tier_crossover.py verify         # oracle + bit-equality
-  python scripts/tier_crossover.py render         # write docs/TIER_CROSSOVER.md
+  python scripts/tier_crossover.py gen               # write corpora to /tmp
+  python scripts/tier_crossover.py verify [family]   # oracle + bit-equality
 """
 
 from __future__ import annotations
 
-import json
 import os
 import sys
-import time
 
 ROOT = os.path.dirname(os.path.dirname(os.path.abspath(__file__)))
 sys.path.insert(0, ROOT)
 sys.path.insert(0, os.path.join(ROOT, "tests"))
 
 BASE = "/tmp/tier_crossover"
-STATE = os.path.join(BASE, "results.jsonl")
 
 VOCAB = [
     "spark", "window", "merge", "table", "column", "vector", "stream",
@@ -46,38 +36,20 @@ VOCAB = [
 LANGS = ["en", "de", "es", "fr", "zh"]
 LANG_W = [0.40, 0.15, 0.15, 0.15, 0.15]
 
-DOC_SIZES = [50_000, 100_000, 150_000]
-SNM_SIZES = [5_000, 10_000, 20_000]
-EMB_SIZES = [5_000, 10_000, 20_000, 50_000, 100_000, 200_000]
-EDGE_SIZES = [500_000, 1_000_000, 2_000_000]
+DOC_SIZES = [20_000, 50_000, 150_000]  # the corpora verify reads
 
-# family -> (registry query, gate module path, gate attr, sizes, corpus kind)
-FAMILIES = {
-    "pipelines": ("pretraining_corpus", "elevate_data_pipeline_spark.pipelines",
-                  "_PIPELINE_LOCAL_MAX_ROWS", DOC_SIZES, "docs"),
-    "spans": ("dedup_substring_spans", "elevate_data_pipeline_spark.operators.dedup",
-              "_SPANS_LOCAL_MAX_ROWS", DOC_SIZES, "docs"),
-    "suffix": ("dedup_suffix_array", "elevate_data_pipeline_spark.operators.suffix",
-               "_SA_LOCAL_MAX_ROWS", DOC_SIZES, "docs"),
-    "bloom": ("decontam_bloom", "elevate_data_pipeline_spark.operators.decontam",
-              "_BLOOM_LOCAL_MAX_ROWS", DOC_SIZES, "docs"),
-    "snm": ("dedup_sorted_neighborhood", "elevate_data_pipeline_spark.operators.dedup",
-            "_SNM_LOCAL_MAX_ROWS", SNM_SIZES, "docs"),
-    "pq": ("embedding_pq_codes", "elevate_data_pipeline_spark.operators.similarity",
-           "_PQ_LOCAL_MAX_ROWS", EMB_SIZES, "emb"),
-    "lloyd": ("embedding_cluster_purity", "elevate_data_pipeline_spark.operators.cluster",
-              "_LLOYD_LOCAL_MAX_ROWS", EMB_SIZES, "emb"),
-    "pagerank": (None, "elevate_data_pipeline_spark.operators.graph",
-                 "_PAGERANK_LOCAL_MAX_EDGES", EDGE_SIZES, "edges"),
+# family -> (gate module path, gate attr)
+GATES = {
+    "pipelines": ("elevate_data_pipeline_spark.pipelines", "_PIPELINE_LOCAL_MAX_ROWS"),
+    "spans": ("elevate_data_pipeline_spark.operators.dedup", "_SPANS_LOCAL_MAX_ROWS"),
+    "suffix": ("elevate_data_pipeline_spark.operators.suffix", "_SA_LOCAL_MAX_ROWS"),
+    "bloom": ("elevate_data_pipeline_spark.operators.decontam", "_BLOOM_LOCAL_MAX_ROWS"),
+    "snm": ("elevate_data_pipeline_spark.operators.dedup", "_SNM_LOCAL_MAX_ROWS"),
 }
 
 
 def docs_dir(n: int) -> str:
     return os.path.join(BASE, f"docs_{n}")
-
-
-def emb_dir(n: int) -> str:
-    return os.path.join(BASE, f"emb_{n}")
 
 
 def gen() -> None:
@@ -88,7 +60,7 @@ def gen() -> None:
     import pyarrow.parquet as pq
 
     os.makedirs(BASE, exist_ok=True)
-    nmax = max(max(DOC_SIZES), max(SNM_SIZES))
+    nmax = max(DOC_SIZES)
     rng = np.random.default_rng(4242)
     lens = rng.integers(10, 101, size=nmax)
     # 30 uniform words + rare 'dup' (~0.1% of tokens, as in testdata)
@@ -101,7 +73,7 @@ def gen() -> None:
         texts.append(" ".join(words))
     langs = rng.choice(LANGS, size=nmax, p=LANG_W)
     srcs = [f"src{int(i)}" for i in rng.integers(0, 20, size=nmax)]
-    for n in sorted(set(DOC_SIZES + SNM_SIZES)):
+    for n in DOC_SIZES:
         d = docs_dir(n)
         if os.path.isdir(d) and os.listdir(d):
             continue
@@ -116,27 +88,6 @@ def gen() -> None:
         pq.write_table(tbl, os.path.join(d, "documents.parquet"))
         print("wrote", d, n)
 
-    # gaussian-mixture embeddings (8 centers, dim 64, float32 — the
-    # testdata embeddings shape)
-    dim, k = 64, 8
-    centers = rng.normal(0, 1, size=(k, dim))
-    nmax = max(EMB_SIZES)
-    lbl = rng.integers(0, k, size=nmax)
-    vecs = (centers[lbl] + rng.normal(0, 0.3, size=(nmax, dim))).astype(np.float32)
-    for n in EMB_SIZES:
-        d = emb_dir(n)
-        if os.path.isdir(d) and os.listdir(d):
-            continue
-        os.makedirs(d, exist_ok=True)
-        tbl = pa.table({
-            "vec_id": pa.array(range(n), pa.int64()),
-            "embedding": pa.array([v.tolist() for v in vecs[:n]],
-                                  pa.list_(pa.float32())),
-            "label": pa.array(lbl[:n].tolist(), pa.int32()),
-        })
-        pq.write_table(tbl, os.path.join(d, "embeddings.parquet"))
-        print("wrote", d, n)
-
 
 def _gate(mod_path: str, attr: str, value: int):
     import importlib
@@ -147,127 +98,10 @@ def _gate(mod_path: str, attr: str, value: int):
     return mod, attr, old
 
 
-def _noop_time(build) -> float:
-    """Times query CONSTRUCTION + noop write: the local tiers do their
-    Python work eagerly while building the frame, so the builder must
-    run inside the timer."""
-    t0 = time.perf_counter()
-    build().write.format("noop").mode("overwrite").save()
-    return time.perf_counter() - t0
-
-
-def _median_time(fn, runs: int | None = None) -> list[float]:
-    runs = runs or int(os.environ.get("TIER_CROSSOVER_RUNS", "3"))
-    xs = [fn() for _ in range(runs)]
-    return sorted(round(x, 2) for x in xs)
-
-
-def bench(families: list[str]) -> None:
-    from elevate_data_pipeline_spark.session import get_spark
-
-    import __spark_entry__ as entry
-
-    spark = get_spark("tier-crossover")
-    spark.sparkContext.setLogLevel("ERROR")
-    qs = entry.queries()
-    os.makedirs(BASE, exist_ok=True)
-    out = open(STATE, "a")
-
-    for fam in families:
-        sizes_override, tier_only = None, None
-        if ":" in fam:  # e.g. bloom:10000,20000[:distributed]
-            parts = fam.split(":")
-            fam = parts[0]
-            if parts[1]:
-                sizes_override = [int(x) for x in parts[1].split(",")]
-            if len(parts) > 2:
-                tier_only = parts[2]
-        qname, mod_path, attr, sizes, kind = FAMILIES[fam]
-        sizes = sizes_override or sizes
-        for n in sizes:
-            if kind == "edges":
-                rec = _bench_pagerank(spark, n, mod_path, attr)
-                out.write(json.dumps(rec) + "\n")
-                out.flush()
-                print(rec, flush=True)
-                continue
-            sf_dir = docs_dir(n) if kind == "docs" else emb_dir(n)
-            for tier, gate_val in (("local", 1 << 40), ("distributed", -1)):
-                if tier_only and tier != tier_only:
-                    continue
-                mod, a, old = _gate(mod_path, attr, gate_val)
-                try:
-                    qs[qname](spark, sf_dir).write.format("noop").mode(
-                        "overwrite"
-                    ).save()  # warm
-                    ts = _median_time(
-                        lambda: _noop_time(lambda: qs[qname](spark, sf_dir))
-                    )
-                except Exception as exc:  # record rather than die mid-sweep
-                    ts = [-1.0]
-                    print(f"{fam} {n} {tier} ERROR: {exc}", flush=True)
-                finally:
-                    setattr(mod, a, old)
-                rec = {"family": fam, "query": qname, "n": n, "tier": tier,
-                       "median": ts[len(ts) // 2], "runs": ts}
-                out.write(json.dumps(rec) + "\n")
-                out.flush()
-                print(rec, flush=True)
-    out.close()
-
-
-def _edges(spark, n: int):
-    """Random graph: n edges over n/10 vertices, weight 1..5."""
-    from pyspark.sql import functions as F
-
-    nv = max(2, n // 10)
-    return (
-        spark.range(n)
-        .select(
-            (F.xxhash64("id") % nv).alias("src"),
-            (F.xxhash64("id", F.lit(1)) % nv).alias("dst"),
-            (F.abs(F.xxhash64("id", F.lit(2))) % 5 + 1).cast("long").alias("w"),
-        )
-        .select(F.abs("src").alias("src"), F.abs("dst").alias("dst"), "w")
-    )
-
-
-def _bench_pagerank(spark, n: int, mod_path: str, attr: str) -> dict:
-    """graph.pagerank on a synthetic edge list (the registry's type
-    graph can never exceed ~100 edges, so the 1M-edge gate is benched
-    at the operator level)."""
-    from elevate_data_pipeline_spark.operators import graph
-
-    edges = _edges(spark, n).localCheckpoint()  # materialized input
-    rec = {"family": "pagerank", "query": "graph.pagerank_fixed_point", "n": n}
-    # the gate drives a limit(); 1<<40 overflows int32 there
-    for tier, gate_val in (("local", 100_000_000), ("distributed", -1)):
-        mod, a, old = _gate(mod_path, attr, gate_val)
-        try:
-            graph.pagerank_fixed_point(edges, n_iter=5).write.format(
-                "noop"
-            ).mode("overwrite").save()
-            ts = _median_time(
-                lambda: _noop_time(
-                    lambda: graph.pagerank_fixed_point(edges, n_iter=5)
-                )
-            )
-        except Exception as exc:
-            ts = [-1.0]
-            print(f"pagerank {n} {tier} ERROR: {exc}", flush=True)
-        finally:
-            setattr(mod, a, old)
-        rec[tier] = ts[len(ts) // 2]
-        rec[f"{tier}_runs"] = ts
-    return rec
-
-
 def verify(only: list[str] | None = None) -> int:
     """Correctness on the LARGEST corpus per family: DuckDB oracle for
     collectable outputs, Spark exceptAll bit-equality local-vs-dist
     for the rest."""
-    from pyspark.sql import functions as F  # noqa: F401
-
     from elevate_data_pipeline_spark.session import get_spark
     from oracle_util import compare, duckdb_con
 
@@ -281,11 +115,11 @@ def verify(only: list[str] | None = None) -> int:
 
     # oracle-compare: modest outputs (one row per doc / per pair window)
     oracle_checks = [
-        ("bloom", "decontam_bloom", docs_dir(max(DOC_SIZES))),
+        ("bloom", "decontam_bloom", docs_dir(150_000)),
         # the block-dedup oracle is superlinear in DuckDB (32 s @ 20k,
         # ~30 min @ 150k) — oracle at 50k, exceptAll bit-equality at 150k
         ("pipelines", "pretraining_corpus", docs_dir(50_000)),
-        ("snm", "dedup_sorted_neighborhood", docs_dir(max(SNM_SIZES))),
+        ("snm", "dedup_sorted_neighborhood", docs_dir(20_000)),
     ]
     if only:
         oracle_checks = [c for c in oracle_checks if c[0] in only]
@@ -299,7 +133,7 @@ def verify(only: list[str] | None = None) -> int:
                 os.symlink(f"/root/testdata/sf0.01/{t}.parquet", dst)
 
     for fam, qname, sf_dir in oracle_checks:
-        _, mod_path, attr, _, _ = FAMILIES[fam]
+        mod_path, attr = GATES[fam]
         for tier, gate_val in (("local", 1 << 40), ("distributed", -1)):
             mod, a, old = _gate(mod_path, attr, gate_val)
             try:
@@ -314,14 +148,14 @@ def verify(only: list[str] | None = None) -> int:
 
     # bit-equality local vs distributed for the big-output tiers
     eq_checks = [
-        ("suffix", "dedup_suffix_array", docs_dir(max(DOC_SIZES))),
-        ("spans", "dedup_substring_spans", docs_dir(max(DOC_SIZES))),
-        ("pipelines", "pretraining_corpus", docs_dir(max(DOC_SIZES))),
+        ("suffix", "dedup_suffix_array", docs_dir(150_000)),
+        ("spans", "dedup_substring_spans", docs_dir(150_000)),
+        ("pipelines", "pretraining_corpus", docs_dir(150_000)),
     ]
     if only:
         eq_checks = [c for c in eq_checks if c[0] in only]
     for fam, qname, sf_dir in eq_checks:
-        _, mod_path, attr, _, _ = FAMILIES[fam]
+        mod_path, attr = GATES[fam]
         mod, a, old = _gate(mod_path, attr, 1 << 40)
         try:
             loc = qs[qname](spark, sf_dir)
@@ -343,106 +177,17 @@ def verify(only: list[str] | None = None) -> int:
     return 1 if failures else 0
 
 
-def render() -> None:
-    recs = [json.loads(ln) for ln in open(STATE)]
-    # last record wins per (family, n, tier)
-    tbl: dict = {}
-    for r in recs:
-        if r["family"] == "pagerank":
-            tbl[("pagerank", r["n"], "local")] = r["local"]
-            tbl[("pagerank", r["n"], "distributed")] = r["distributed"]
-        else:
-            tbl[(r["family"], r["n"], r["tier"])] = r["median"]
-    lines = [
-        "# Tier crossover — local tier vs distributed chain, measured",
-        "",
-        "Generated by `scripts/tier_crossover.py` (round-6 VERDICT task",
-        "#2): synthetic corpora with the testdata generator distribution",
-        "at sizes bracketing each gate in `docs/LOCAL_TIERS.md`, each",
-        "tiered operator timed BOTH ways (gate forced huge vs forced -1),",
-        "noop sink, warm session, median of 3 (single runs for the",
-        "slowest above-gate points). `local` at sizes above a gate",
-        "demonstrates the replay cost the gate avoids paying — in",
-        "production only the distributed column exists there. The gate",
-        "column is the LIVE module value: four gates were lowered to",
-        "measured crossovers in round 7 (bloom 100k->5k, spans",
-        "100k->50k, lloyd 100k->8k, pagerank 1M->500k), then round 8",
-        "measured BELOW the spans/bloom gates (10k/20k/30k and",
-        "2k/3k/4k, 3-run medians): spans moved 50k->10k (local wins",
-        "at 10k, loses from 20k); bloom KEEPS 5k — the tie at its",
-        "gate is proven noise both directions (synthetic corpus",
-        "distributed +4%, REAL testdata local +5% in 5-run solo",
-        "medians; full-sweep context local clearly cheaper, 3.3 vs",
-        "4.7-5.3 s).",
-        "",
-        "| family | gate | n | local s | distributed s | winner |",
-        "|---|---|---|---|---|---|",
-    ]
-    import importlib
-
-    for fam, (_, mod_path, attr, sizes, _) in FAMILIES.items():
-        gate = getattr(importlib.import_module(mod_path), attr)
-        fam_sizes = sorted({n for (f, n, _t) in tbl if f == fam})
-        for n in fam_sizes:
-            lo = tbl.get((fam, n, "local"))
-            di = tbl.get((fam, n, "distributed"))
-            if lo is None and di is None:
-                continue
-            if (lo is not None and lo < 0) or (di is not None and di < 0):
-                continue
-            win = "-"
-            if lo is not None and di is not None and lo > 0 and di > 0:
-                win = "local" if lo < di else "distributed"
-            lines.append(
-                f"| {fam} ({attr}) | {gate:,} | {n:,} | "
-                f"{lo if lo is not None else '-'} | "
-                f"{di if di is not None else '-'} | {win} |"
-            )
-    lines += [
-        "",
-        "## Correctness on the big corpora (`tier_crossover.py verify`)",
-        "",
-        "Both tiers of each family checked at the LARGEST corpus in its",
-        "sweep — DuckDB oracle compare (driver canonicalization) where",
-        "the output is collectable, Spark `exceptAll` bit-equality",
-        "local-vs-distributed where it is not:",
-        "",
-        "- `decontam_bloom` @ 150k docs: oracle-exact, both tiers",
-        "- `pretraining_corpus` @ 50k docs: oracle-exact, both tiers",
-        "  (the block-dedup oracle is superlinear in DuckDB — 32 s at",
-        "  20k, ~30 min at 150k); @ 150k docs: exceptAll bit-equality",
-        "  local == distributed",
-        "- `dedup_sorted_neighborhood` @ 20k docs: oracle-exact, both tiers",
-        "- `dedup_suffix_array` @ 150k docs (8.1M positions): exceptAll",
-        "  bit-equality local == distributed (outputs too large to",
-        "  collect twice through the python oracle path)",
-        "- `dedup_substring_spans` @ 150k docs: exceptAll bit-equality",
-        "  local == distributed",
-    ]
-    out = os.path.join(ROOT, "docs", "TIER_CROSSOVER.md")
-    with open(out, "w") as f:
-        f.write("\n".join(lines) + "\n")
-    print("wrote", out)
-
-
 def main() -> int:
-    cmd = sys.argv[1] if len(sys.argv) > 1 else "bench"
+    cmd = sys.argv[1] if len(sys.argv) > 1 else None
     if cmd in ("-h", "--help"):
         print(__doc__.strip())
         return 0
     if cmd == "gen":
         gen()
         return 0
-    if cmd == "bench":
-        fams = sys.argv[2:] or list(FAMILIES)
-        bench(fams)
-        return 0
     if cmd == "verify":
         return verify(sys.argv[2:] or None)
-    if cmd == "render":
-        render()
-        return 0
-    print(f"unknown command {cmd}", file=sys.stderr)
+    print(__doc__.strip(), file=sys.stderr)
     return 2
 
 
