@@ -32,6 +32,7 @@ Arrow batches fit executor memory.
 from __future__ import annotations
 
 from collections.abc import Iterator
+from functools import lru_cache
 
 import pandas as pd
 
@@ -653,82 +654,158 @@ _AC_CHR = (
 )
 
 
-def _huff_codes(bits, vals):
-    """Canonical Huffman (T.81 C.2): symbol -> (code, length)."""
-    out, code, k = {}, 0, 0
-    for length in range(1, 17):
-        for _ in range(bits[length - 1]):
-            out[vals[k]] = (code, length)
-            code += 1
-            k += 1
-        code <<= 1
+def _canonical_codes(pairs) -> dict:
+    """Canonical Huffman codes (T.81 C.2, RFC 1951 3.2.2): ``pairs`` are
+    (symbol, length) in code order — by length, ties in the order the
+    format fixes — and the result maps symbol -> (code, length)."""
+    out, code, prev = {}, 0, 0
+    for sym, ln in pairs:
+        code <<= ln - prev
+        out[sym] = (code, ln)
+        code += 1
+        prev = ln
     return out
 
 
-def _huff_decode_table(bits, vals):
-    """(length, code) -> symbol, for the bit-at-a-time decoder."""
-    return {(ln, code): sym for sym, (code, ln) in _huff_codes(bits, vals).items()}
+def _huff_decode_table(pairs) -> dict:
+    """(length, code) -> symbol over :func:`_canonical_codes`, for the
+    bit-at-a-time decoders (JPEG, VP8L)."""
+    return {(ln, code): sym for sym, (code, ln) in _canonical_codes(pairs).items()}
 
 
-class _BitWriter:
-    def __init__(self):
+def _jpeg_code_pairs(bits, vals) -> list:
+    """A DHT table (BITS[1..16], HUFFVAL) as (symbol, length) pairs in
+    code order."""
+    lengths = [ln for ln in range(1, 17) for _ in range(bits[ln - 1])]
+    return [(vals[k], ln) for k, ln in enumerate(lengths)]
+
+
+@lru_cache(maxsize=64)
+def _jpeg_decode_table(bits: bytes, vals: bytes) -> dict:
+    """The decode table of one DHT table. Cached, like
+    :func:`_jpeg_enc_tables`: streams repeat the same few tables (most
+    use Annex K's), and building one costs as much as decoding a small
+    image. Callers only read the shared dict."""
+    return _huff_decode_table(_jpeg_code_pairs(bits, vals))
+
+
+@lru_cache(maxsize=None)
+def _jpeg_enc_tables(n_comp: int) -> list:
+    """Per component, the (DC, AC) symbol -> (code, length) maps of the
+    Annex K tables: luminance for component 0, chrominance after."""
+    return [
+        tuple(
+            _canonical_codes(_jpeg_code_pairs(*t))
+            for t in ((_DC_LUM, _AC_LUM) if c == 0 else (_DC_CHR, _AC_CHR))
+        )
+        for c in range(n_comp)
+    ]
+
+
+class _MsbBitWriter:
+    """MSB-first bit packer (FLAC, MPEG audio, AAC, JPEG). A ``jpeg``
+    writer emits an entropy-coded segment: a 00 is stuffed after every
+    FF byte, and :meth:`align` pads with 1 bits (T.81 Annex B)."""
+
+    def __init__(self, jpeg: bool = False):
         self.out = bytearray()
+        self.jpeg = jpeg
         self._acc = 0
         self._n = 0
 
-    def put(self, value: int, n_bits: int) -> None:
-        for i in range(n_bits - 1, -1, -1):
-            self._acc = (self._acc << 1) | ((value >> i) & 1)
-            self._n += 1
-            if self._n == 8:
-                self.out.append(self._acc)
-                if self._acc == 0xFF:
-                    self.out.append(0x00)  # byte stuffing
-                self._acc = self._n = 0
+    def bits(self, value: int, n: int) -> None:
+        self._acc = (self._acc << n) | (value & ((1 << n) - 1))
+        self._n += n
+        while self._n >= 8:
+            self._n -= 8
+            b = (self._acc >> self._n) & 0xFF
+            self.out.append(b)
+            if b == 0xFF and self.jpeg:
+                self.out.append(0x00)
+        self._acc &= (1 << self._n) - 1
 
-    def flush(self) -> None:
+    def unary(self, q: int) -> None:
+        """FLAC unary: q zero bits then a one bit."""
+        while q >= 32:
+            self.bits(0, 32)
+            q -= 32
+        self.bits(1, q + 1)
+
+    def align(self) -> None:
         if self._n:
-            self.put((1 << (8 - self._n)) - 1, 8 - self._n)  # pad with 1s
+            pad = 8 - self._n
+            self.bits((1 << pad) - 1 if self.jpeg else 0, pad)
+
+    def flush(self) -> bytes:
+        self.align()
+        return bytes(self.out)
 
 
-class _BitReader:
-    def __init__(self, buf: bytes, pos: int):
+class _MsbBitReader:
+    """MSB-first bit reader (FLAC, MPEG audio, AAC, JPEG). A ``jpeg``
+    reader walks an entropy-coded segment: when it loads an FF byte, it
+    skips the stuffed 00 after it, and raises on a marker."""
+
+    def __init__(self, buf: bytes, pos: int = 0, jpeg: bool = False):
         self.buf = buf
-        self.pos = pos
+        self.pos = pos  # byte position of the NEXT refill
+        self.jpeg = jpeg
         self._acc = 0
         self._n = 0
 
-    def bit(self) -> int:
-        if self._n == 0:
+    def bits(self, n: int) -> int:
+        while self._n < n:
             if self.pos >= len(self.buf):
-                raise ValueError("truncated JPEG entropy stream")
+                raise ValueError("truncated bit stream")
             b = self.buf[self.pos]
             self.pos += 1
-            if b == 0xFF:
-                nxt = self.buf[self.pos] if self.pos < len(self.buf) else None
-                if nxt == 0x00:
-                    self.pos += 1  # stuffed data byte
-                else:
-                    raise ValueError("hit marker inside entropy stream")
+            if b == 0xFF and self.jpeg:
+                self._unstuff()
+            self._acc = (self._acc << 8) | b
+            self._n += 8
+        self._n -= n
+        v = (self._acc >> self._n) & ((1 << n) - 1)
+        self._acc &= (1 << self._n) - 1
+        return v
+
+    def bit(self) -> int:
+        """``bits(1)`` without the loop and masks, for the bit-serial
+        JPEG decoder; bits above ``_n`` in the accumulator are stale and
+        every read masks them off."""
+        if self._n == 0:
+            if self.pos >= len(self.buf):
+                raise ValueError("truncated bit stream")
+            b = self.buf[self.pos]
+            self.pos += 1
+            if b == 0xFF and self.jpeg:
+                self._unstuff()
             self._acc = b
             self._n = 8
         self._n -= 1
         return (self._acc >> self._n) & 1
 
-    def receive(self, t: int) -> int:
-        """Raw ``t``-bit big-endian read (EOB-run lengths, refinements)."""
-        v = 0
-        for _ in range(t):
-            v = (v << 1) | self.bit()
-        return v
+    def _unstuff(self) -> None:
+        """After a loaded FF byte: skip the stuffed 00, or raise on a
+        marker."""
+        if self.pos < len(self.buf) and self.buf[self.pos] == 0x00:
+            self.pos += 1
+        else:
+            raise ValueError("hit marker inside entropy stream")
 
-    def receive_extend(self, t: int) -> int:
+    def signed(self, n: int) -> int:
+        v = self.bits(n)
+        return v - (1 << n) if v >= (1 << (n - 1)) else v
+
+    def extend(self, t: int) -> int:
+        """JPEG RECEIVE + EXTEND (T.81 F.2.2.1): ``t`` magnitude bits,
+        where a leading 0 means a negative value."""
         if t == 0:
             return 0
-        v = self.receive(t)
+        v = self.bits(t)
         return v if v >= (1 << (t - 1)) else v - (1 << t) + 1
 
     def huff(self, table) -> int:
+        """One symbol of a :func:`_huff_decode_table` JPEG code."""
         code = 0
         for ln in range(1, 17):
             code = (code << 1) | self.bit()
@@ -736,6 +813,41 @@ class _BitReader:
             if sym is not None:
                 return sym
         raise ValueError("invalid Huffman code in JPEG stream")
+
+    def unary(self) -> int:
+        q = 0
+        while self.bits(1) == 0:
+            q += 1
+        return q
+
+    def align(self) -> None:
+        self._n = 0
+        self._acc = 0
+
+
+_CRC_TABLES: dict = {}
+
+
+def _crc(data: bytes, width: int, poly: int, init: int = 0) -> int:
+    """MSB-first CRC, no reflection and no final XOR, one table lookup
+    per byte: FLAC's CRC-8 (width 8, poly 0x07) and CRC-16 (16, 0x8005),
+    MPEG audio's CRC-16 (16, 0x8005, init 0xFFFF) and Ogg's CRC-32
+    (32, 0x04C11DB7). PNG's CRC-32 is the reflected one: ``zlib.crc32``."""
+    table = _CRC_TABLES.get((width, poly))
+    if table is None:
+        top, mask = 1 << (width - 1), (1 << width) - 1
+        table = []
+        for i in range(256):
+            r = i << (width - 8)
+            for _ in range(8):
+                r = ((r << 1) ^ poly) & mask if r & top else (r << 1) & mask
+            table.append(r)
+        _CRC_TABLES[(width, poly)] = table
+    shift, mask = width - 8, (1 << width) - 1
+    crc = init
+    for b in data:
+        crc = ((crc << 8) & mask) ^ table[(crc >> shift) ^ b]
+    return crc
 
 
 def _idct_block(coef: list) -> list:
@@ -811,14 +923,8 @@ def encode_jpeg_blocks(
     sos += b"\x00\x3f\x00"
     out += b"\xff\xda" + struct.pack(">H", 2 + len(sos)) + sos
 
-    enc = [
-        (
-            _huff_codes(*(_DC_LUM if c == 0 else _DC_CHR)),
-            _huff_codes(*(_AC_LUM if c == 0 else _AC_CHR)),
-        )
-        for c in range(n_comp)
-    ]
-    w = _BitWriter()
+    enc = _jpeg_enc_tables(n_comp)
+    w = _MsbBitWriter(jpeg=True)
     mcux = -(-width // (8 * hmax))
     mcuy = -(-height // (8 * vmax))
     pred = [0] * n_comp
@@ -829,9 +935,9 @@ def encode_jpeg_blocks(
         pred[c] = zz[0]
         t = diff.bit_length() if diff > 0 else (-diff).bit_length()
         code, ln = enc[c][0][t]
-        w.put(code, ln)
+        w.bits(code, ln)
         if t:
-            w.put(diff if diff >= 0 else diff + (1 << t) - 1, t)
+            w.bits(diff if diff >= 0 else diff + (1 << t) - 1, t)
         run = 0
         last_nz = max((i for i in range(1, 64) if zz[i]), default=0)
         for i in range(1, last_nz + 1):
@@ -839,17 +945,17 @@ def encode_jpeg_blocks(
                 run += 1
                 if run == 16:
                     code, ln = enc[c][1][0xF0]  # ZRL
-                    w.put(code, ln)
+                    w.bits(code, ln)
                     run = 0
                 continue
             s = zz[i].bit_length() if zz[i] > 0 else (-zz[i]).bit_length()
             code, ln = enc[c][1][(run << 4) | s]
-            w.put(code, ln)
-            w.put(zz[i] if zz[i] >= 0 else zz[i] + (1 << s) - 1, s)
+            w.bits(code, ln)
+            w.bits(zz[i] if zz[i] >= 0 else zz[i] + (1 << s) - 1, s)
             run = 0
         if last_nz < 63:
             code, ln = enc[c][1][0x00]  # EOB
-            w.put(code, ln)
+            w.bits(code, ln)
 
     for my in range(mcuy):
         for mx in range(mcux):
@@ -859,8 +965,7 @@ def encode_jpeg_blocks(
                     for bx in range(h):
                         b = (my * v + by) * (mcux * h) + (mx * h + bx)
                         emit_block(c, comp_blocks[c][b])
-    w.flush()
-    out += w.out
+    out += w.flush()
     out += b"\xff\xd9"  # EOI
     return bytes(out)
 
@@ -928,13 +1033,7 @@ def encode_jpeg_progressive(
     for tc, (bits, vals) in tables:
         body = bytes([tc]) + bytes(bits) + bytes(vals)
         out += b"\xff\xc4" + struct.pack(">H", 2 + len(body)) + body
-    enc = [
-        (
-            _huff_codes(*(_DC_LUM if c == 0 else _DC_CHR)),
-            _huff_codes(*(_AC_LUM if c == 0 else _AC_CHR)),
-        )
-        for c in range(n_comp)
-    ]
+    enc = _jpeg_enc_tables(n_comp)
 
     def sos(scan_comps: list, Ss: int, Se: int, Ah: int, Al: int, data: bytes) -> None:
         nonlocal out
@@ -968,14 +1067,14 @@ def encode_jpeg_progressive(
             for bx in range(nbw):
                 yield by * (mcux * h) + bx
 
-    def put_mag(w: _BitWriter, table, run: int, val: int) -> None:
+    def put_mag(w: _MsbBitWriter, table, run: int, val: int) -> None:
         s = abs(val).bit_length()
         code, ln = table[(run << 4) | s]
-        w.put(code, ln)
-        w.put(val if val >= 0 else val + (1 << s) - 1, s)
+        w.bits(code, ln)
+        w.bits(val if val >= 0 else val + (1 << s) - 1, s)
 
     # --- scan 1: interleaved DC first, Al=dc_al -------------------------
-    w = _BitWriter()
+    w = _MsbBitWriter(jpeg=True)
     pred = [0] * n_comp
     if n_comp == 1:
         order = [(0, b) for b in mcu_blocks(0)]
@@ -994,23 +1093,21 @@ def encode_jpeg_progressive(
         pred[c] = dc
         t = abs(diff).bit_length()
         code, ln = enc[c][0][t]
-        w.put(code, ln)
+        w.bits(code, ln)
         if t:
-            w.put(diff if diff >= 0 else diff + (1 << t) - 1, t)
-    w.flush()
-    sos(list(range(n_comp)), 0, 0, 0, dc_al, bytes(w.out))
+            w.bits(diff if diff >= 0 else diff + (1 << t) - 1, t)
+    sos(list(range(n_comp)), 0, 0, 0, dc_al, w.flush())
 
     # --- DC refinement scans down to Al=0 ------------------------------
     for al in range(dc_al - 1, -1, -1):
-        w = _BitWriter()
+        w = _MsbBitWriter(jpeg=True)
         for c, b in order:
-            w.put((zz_of(c, b)[0] >> al) & 1, 1)
-        w.flush()
-        sos(list(range(n_comp)), 0, 0, al + 1, al, bytes(w.out))
+            w.bits((zz_of(c, b)[0] >> al) & 1, 1)
+        sos(list(range(n_comp)), 0, 0, al + 1, al, w.flush())
 
     # --- per-component AC first at Al=ac_al ----------------------------
     for c in range(n_comp):
-        w = _BitWriter()
+        w = _MsbBitWriter(jpeg=True)
         for b in comp_band_blocks(c):
             zz = zz_of(c, b)
             vals = [
@@ -1024,22 +1121,21 @@ def encode_jpeg_progressive(
                     run += 1
                     if run == 16:
                         code, ln = enc[c][1][0xF0]
-                        w.put(code, ln)
+                        w.bits(code, ln)
                         run = 0
                     continue
                 put_mag(w, enc[c][1], run, vals[k])
                 run = 0
             if last < 63:
                 code, ln = enc[c][1][0x00]  # per-block EOB
-                w.put(code, ln)
-        w.flush()
-        sos([c], 1, 63, 0, ac_al, bytes(w.out))
+                w.bits(code, ln)
+        sos([c], 1, 63, 0, ac_al, w.flush())
 
     # --- per-component AC refinement scans down to Al=0 ----------------
     for al in range(ac_al - 1, -1, -1):
         ah = al + 1
         for c in range(n_comp):
-            w = _BitWriter()
+            w = _MsbBitWriter(jpeg=True)
             for b in comp_band_blocks(c):
                 zz = zz_of(c, b)
                 k = 1
@@ -1060,9 +1156,9 @@ def encode_jpeg_progressive(
                             run += 1
                             if run == 16:
                                 code, ln = enc[c][1][0xF0]  # ZRL
-                                w.put(code, ln)
+                                w.bits(code, ln)
                                 for bit in corr:
-                                    w.put(bit, 1)
+                                    w.bits(bit, 1)
                                 run = 0
                                 corr = []
                                 pos = j + 1
@@ -1073,18 +1169,17 @@ def encode_jpeg_progressive(
                         # lands on Se ends the block with no EOB symbol)
                         if pos <= 63:
                             code, ln = enc[c][1][0x00]  # EOB (incl. this block)
-                            w.put(code, ln)
+                            w.bits(code, ln)
                             for bit in corr:
-                                w.put(bit, 1)
+                                w.bits(bit, 1)
                         break
                     code, ln = enc[c][1][(run << 4) | 1]
-                    w.put(code, ln)
-                    w.put(1 if zz[kk] > 0 else 0, 1)
+                    w.bits(code, ln)
+                    w.bits(1 if zz[kk] > 0 else 0, 1)
                     for bit in corr:
-                        w.put(bit, 1)
+                        w.bits(bit, 1)
                     k = kk + 1
-            w.flush()
-            sos([c], 1, 63, ah, al, bytes(w.out))
+            sos([c], 1, 63, ah, al, w.flush())
 
     out += b"\xff\xd9"  # EOI
     return bytes(out)
@@ -1156,7 +1251,7 @@ def _decode_jpeg(payload: bytes) -> ImageData:
     def decode_scan(scan, Ss, Se, Ah, Al, start: int) -> int:
         """Entropy-decode one scan starting at byte ``start``; returns
         the byte offset of the next marker."""
-        r = _BitReader(payload, start)
+        r = _MsbBitReader(payload, start, jpeg=True)
         interleaved = len(scan) > 1
         pred = [0] * len(scan)
         state = {"eobrun": 0}
@@ -1171,7 +1266,7 @@ def _decode_jpeg(payload: bytes) -> ImageData:
         def block_baseline(si, sc, blk) -> None:
             dc_tab, ac_tab = check_tables(sc, True, True)
             t = r.huff(dc_tab)
-            pred[si] += r.receive_extend(t)
+            pred[si] += r.extend(t)
             blk[0] = pred[si]
             i = 1
             while i < 64:
@@ -1185,14 +1280,14 @@ def _decode_jpeg(payload: bytes) -> ImageData:
                 i += run
                 if i > 63:
                     raise ValueError("AC run past block end")
-                blk[i] = r.receive_extend(size)
+                blk[i] = r.extend(size)
                 i += 1
 
         def block_dc(si, sc, blk) -> None:
             if Ah == 0:
                 dc_tab, _ = check_tables(sc, True, False)
                 t = r.huff(dc_tab)
-                pred[si] += r.receive_extend(t)
+                pred[si] += r.extend(t)
                 blk[0] = pred[si] << Al
             else:
                 blk[0] |= r.bit() << Al
@@ -1210,14 +1305,14 @@ def _decode_jpeg(payload: bytes) -> ImageData:
                     if run < 15:
                         state["eobrun"] = (1 << run) - 1
                         if run:
-                            state["eobrun"] += r.receive(run)
+                            state["eobrun"] += r.bits(run)
                         break
                     k += 16  # ZRL
                     continue
                 k += run
                 if k > Se:
                     raise ValueError("AC run past band end")
-                blk[k] = r.receive_extend(size) << Al
+                blk[k] = r.extend(size) << Al
                 k += 1
 
         def block_ac_refine(sc, blk) -> None:
@@ -1243,7 +1338,7 @@ def _decode_jpeg(payload: bytes) -> ImageData:
                             # correction bits are read below
                             state["eobrun"] = 1 << run
                             if run:
-                                state["eobrun"] += r.receive(run)
+                                state["eobrun"] += r.bits(run)
                             break
                         # run == 15: skip 16 zero-history coefficients
                     else:
@@ -1310,7 +1405,7 @@ def _decode_jpeg(payload: bytes) -> ImageData:
             n_units = geom[ci][2] * geom[ci][3]
         for unit in range(n_units):
             if restart_interval and unit and unit % restart_interval == 0:
-                r._n = 0  # byte-align
+                r.align()
                 if (
                     r.pos + 2 <= len(r.buf)
                     and r.buf[r.pos] == 0xFF
@@ -1354,10 +1449,10 @@ def _decode_jpeg(payload: bytes) -> ImageData:
             p = 0
             while p < len(body):
                 tc, th = body[p] >> 4, body[p] & 0xF
-                bits = list(body[p + 1 : p + 17])
+                bits = bytes(body[p + 1 : p + 17])
                 n = sum(bits)
-                vals = list(body[p + 17 : p + 17 + n])
-                htabs[(tc, th)] = _huff_decode_table(bits, vals)
+                vals = bytes(body[p + 17 : p + 17 + n])
+                htabs[(tc, th)] = _jpeg_decode_table(bits, vals)
                 p += 17 + n
         elif marker in (0xC0, 0xC1, 0xC2):  # SOF0/1 (seq) / SOF2 (progressive)
             progressive = marker == 0xC2
@@ -2390,38 +2485,36 @@ def _vp8l_limited_huffman(freqs: list, max_len: int) -> list:
     return lengths
 
 
-def _vp8l_canonical_codes(lengths: list) -> dict:
-    """symbol -> (code, length), canonical (sorted by length then
-    symbol, DEFLATE-style). A single used symbol maps to (0, 0)."""
-    used = sorted((l, s) for s, l in enumerate(lengths) if l > 0)
-    if not used:
+def _vp8l_code_pairs(lengths: list) -> list:
+    """VP8L code order (DEFLATE-style): used symbols as (symbol,
+    length) pairs, sorted by length then symbol."""
+    pairs = sorted(
+        ((s, l) for s, l in enumerate(lengths) if l > 0), key=lambda p: (p[1], p[0])
+    )
+    if not pairs:
         raise ValueError("empty Huffman code")
-    if len(used) == 1:
-        return {used[0][1]: (0, 0)}
-    out, code, prev = {}, 0, used[0][0]
-    for l, s in used:
-        code <<= l - prev
-        out[s] = (code, l)
-        code += 1
-        prev = l
-    return out
+    return pairs
+
+
+def _vp8l_codes(lengths: list) -> dict:
+    """symbol -> (code, length); a single used symbol maps to (0, 0)."""
+    pairs = _vp8l_code_pairs(lengths)
+    if len(pairs) == 1:
+        return {pairs[0][0]: (0, 0)}
+    return _canonical_codes(pairs)
 
 
 def _vp8l_decode_tree(lengths: list) -> dict:
     """(length, code) -> symbol for bit-at-a-time decode, plus the
     single-symbol special case under key ``"single"``. Rejects
     over-/under-subscribed (non-Kraft-complete) codes."""
-    used = [(l, s) for s, l in enumerate(lengths) if l > 0]
-    if not used:
-        raise ValueError("empty Huffman code")
-    if len(used) == 1:
-        return {"single": used[0][1]}
-    max_l = max(l for l, _ in used)
-    if sum(1 << (max_l - l) for l, _ in used) != 1 << max_l:
+    pairs = _vp8l_code_pairs(lengths)
+    if len(pairs) == 1:
+        return {"single": pairs[0][0]}
+    max_l = pairs[-1][1]
+    if sum(1 << (max_l - l) for _, l in pairs) != 1 << max_l:
         raise ValueError("invalid (incomplete) Huffman code")
-    return {
-        (l, code): s for s, (code, l) in _vp8l_canonical_codes(lengths).items()
-    }
+    return _huff_decode_table(pairs)
 
 
 def _vp8l_read_symbol(br: "_LsbBitReader", tree: dict) -> int:
@@ -2592,11 +2685,11 @@ def _vp8l_write_code(bw: "_LsbBitWriter", lengths: list) -> dict:
     for i in range(num_codes):
         bw.bits(cl_lengths[_VP8L_ORDER[i]], 3)
     bw.bits(0, 1)  # no explicit max-symbol
-    cl_codes = _vp8l_canonical_codes(cl_lengths)
+    cl_codes = _vp8l_codes(cl_lengths)
     for l in lengths:
         c, ln = cl_codes[l]
         bw.code(c, ln)
-    return _vp8l_canonical_codes(lengths)
+    return _vp8l_codes(lengths)
 
 
 def _vp8l_encode_spatial(
@@ -3727,96 +3820,6 @@ def _decode_webp(payload: bytes) -> ImageData:
 # --------------------------------------------------------------------------
 
 
-class _MsbBitWriter:
-    """MSB-first bit packer (FLAC convention)."""
-
-    def __init__(self):
-        self.out = bytearray()
-        self._acc = 0
-        self._n = 0
-
-    def bits(self, value: int, n: int) -> None:
-        self._acc = (self._acc << n) | (value & ((1 << n) - 1))
-        self._n += n
-        while self._n >= 8:
-            self._n -= 8
-            self.out.append((self._acc >> self._n) & 0xFF)
-        self._acc &= (1 << self._n) - 1
-
-    def unary(self, q: int) -> None:
-        """FLAC unary: q zero bits then a one bit."""
-        while q >= 32:
-            self.bits(0, 32)
-            q -= 32
-        self.bits(1, q + 1)
-
-    def align(self) -> None:
-        if self._n:
-            self.bits(0, 8 - self._n)
-
-    def flush(self) -> bytes:
-        self.align()
-        return bytes(self.out)
-
-
-class _MsbBitReader:
-    """MSB-first bit reader (FLAC convention)."""
-
-    def __init__(self, buf: bytes, pos: int = 0):
-        self.buf = buf
-        self.pos = pos  # byte position of the NEXT refill
-        self._acc = 0
-        self._n = 0
-
-    def bits(self, n: int) -> int:
-        while self._n < n:
-            if self.pos >= len(self.buf):
-                raise ValueError("truncated FLAC stream")
-            self._acc = (self._acc << 8) | self.buf[self.pos]
-            self.pos += 1
-            self._n += 8
-        self._n -= n
-        v = (self._acc >> self._n) & ((1 << n) - 1)
-        self._acc &= (1 << self._n) - 1
-        return v
-
-    def signed(self, n: int) -> int:
-        v = self.bits(n)
-        return v - (1 << n) if v >= (1 << (n - 1)) else v
-
-    def unary(self) -> int:
-        q = 0
-        while self.bits(1) == 0:
-            q += 1
-        return q
-
-    def align(self) -> None:
-        self._n = 0
-        self._acc = 0
-
-
-def _crc8(data: bytes) -> int:
-    """CRC-8, polynomial x^8 + x^2 + x + 1 (0x07), init 0 (FLAC frame
-    header CRC)."""
-    crc = 0
-    for b in data:
-        crc ^= b
-        for _ in range(8):
-            crc = ((crc << 1) ^ 0x07) & 0xFF if crc & 0x80 else (crc << 1) & 0xFF
-    return crc
-
-
-def _crc16(data: bytes) -> int:
-    """CRC-16, polynomial x^16 + x^15 + x^2 + 1 (0x8005), init 0 (FLAC
-    whole-frame CRC)."""
-    crc = 0
-    for b in data:
-        crc ^= b << 8
-        for _ in range(8):
-            crc = ((crc << 1) ^ 0x8005) & 0xFFFF if crc & 0x8000 else (crc << 1) & 0xFFFF
-    return crc
-
-
 def _flac_utf8_number(n: int) -> bytes:
     """FLAC's extended-UTF-8 coding of frame/sample numbers (RFC 9639
     §9.1.5 — UTF-8-style up to 7 bytes, values to 2^36-1)."""
@@ -4061,7 +4064,7 @@ def encode_flac(
         head = hdr.flush() + _flac_utf8_number(frame_no) + struct.pack(
             ">H", blk_n - 1
         )
-        head += bytes([_crc8(head)])
+        head += bytes([_crc(head, 8, 0x07)])
         bw = _MsbBitWriter()
         blocks = [
             samples[(off + 0) * channels + ch
@@ -4082,7 +4085,7 @@ def encode_flac(
         for blk, w in zip(blocks, widths):
             _encode_subframe(bw, blk, w, force)
         body = head + bw.flush()
-        frames.append(body + struct.pack(">H", _crc16(body)))
+        frames.append(body + struct.pack(">H", _crc(body, 16, 0x8005)))
         frame_no += 1
     si = _MsbBitWriter()
     si.bits(block_size if n_total else 16, 16)  # min block size
@@ -4188,7 +4191,7 @@ def decode_flac(payload: bytes, verify_md5: bool = True) -> AudioData:
         if bps is None:
             raise ValueError("reserved FLAC sample size code")
         # CRC-8 covers the header bytes; reader is byte-aligned here
-        if _crc8(payload[frame_start : br.pos]) != br.bits(8):
+        if _crc(payload[frame_start : br.pos], 8, 0x07) != br.bits(8):
             raise ValueError("FLAC frame header CRC-8 mismatch")
         frame_ch: list = []
         for ch in range(n_ch):
@@ -4261,7 +4264,7 @@ def decode_flac(payload: bytes, verify_md5: bool = True) -> AudioData:
         body_end = br.pos
         if body_end + 2 > len(payload):
             raise ValueError("truncated FLAC frame (missing CRC-16)")
-        if _crc16(payload[frame_start:body_end]) != struct.unpack(
+        if _crc(payload[frame_start:body_end], 16, 0x8005) != struct.unpack(
             ">H", payload[body_end : body_end + 2]
         )[0]:
             raise ValueError("FLAC frame CRC-16 mismatch")
@@ -4988,20 +4991,6 @@ def _mp3_down_shift(g: dict, line: int) -> int:
     return _mp3_sf_scale_shift(g, g["scalefac"][b] + pre)
 
 
-def _mp3_crc16(data: bytes) -> int:
-    """The MPEG audio CRC-16 (11172-3 2.4.3.1 / figure A.9): poly
-    0x8005, init 0xFFFF, MSB-first, no reflection, no final XOR —
-    computed over header bytes 2-3 and the complete side information
-    when protection_bit = 0."""
-    crc = 0xFFFF
-    for b in data:
-        crc ^= b << 8
-        for _ in range(8):
-            crc = ((crc << 1) ^ 0x8005) & 0xFFFF if crc & 0x8000 \
-                else (crc << 1) & 0xFFFF
-    return crc
-
-
 def encode_mp3(
     granules: list, sample_rate: int = 44100, bitrate: int = 32,
     mode: str = "mono", reservoir: bool = False, protect: bool = False,
@@ -5249,7 +5238,7 @@ def encode_mp3(
             bw.bits(1, 1)  # count1table_select = spec table B (structural)
         si = bw.flush()
         if protect:
-            crc = _mp3_crc16(header[2:4] + si)
+            crc = _crc(header[2:4] + si, 16, 0x8005, 0xFFFF)
             return header + crc.to_bytes(2, "big") + si
         return header + si
 
@@ -5429,9 +5418,10 @@ def decode_mp3(payload: bytes) -> AudioData:
             raise ValueError("truncated MP3 frame")
         if not protection:
             stored = int.from_bytes(payload[pos + 4 : pos + 6], "big")
-            calc = _mp3_crc16(
+            calc = _crc(
                 payload[pos + 2 : pos + 4]
-                + payload[pos + 6 : pos + 6 + si_len]
+                + payload[pos + 6 : pos + 6 + si_len],
+                16, 0x8005, 0xFFFF,
             )
             if stored != calc:
                 raise ValueError(
@@ -7844,27 +7834,6 @@ _OGG_MAGIC = b"OggS"
 _OGG_MAX_SEGS = 255
 
 
-def _ogg_crc_table() -> list:
-    table = []
-    for i in range(256):
-        r = i << 24
-        for _ in range(8):
-            r = ((r << 1) ^ 0x04C11DB7) if r & 0x80000000 else (r << 1)
-            r &= 0xFFFFFFFF
-        table.append(r)
-    return table
-
-
-_OGG_CRC = _ogg_crc_table()
-
-
-def _ogg_crc(data: bytes) -> int:
-    crc = 0
-    for b in data:
-        crc = ((crc << 8) & 0xFFFFFFFF) ^ _OGG_CRC[((crc >> 24) & 0xFF) ^ b]
-    return crc
-
-
 def _ogg_page(
     header_type: int, granule: int, serial: int, seq: int, segs: list, body: bytes
 ) -> bytes:
@@ -7880,7 +7849,7 @@ def _ogg_page(
         + bytes([len(segs)])
         + bytes(segs)
     )
-    crc = _ogg_crc(head + body)
+    crc = _crc(head + body, 32, 0x04C11DB7)
     return head[:22] + struct.pack("<I", crc) + head[26:] + body
 
 
@@ -8003,7 +7972,7 @@ def decode_ogg_streams(payload: bytes) -> dict:
             raise ValueError("Ogg page body runs past end of stream")
         page = bytearray(payload[pos:page_end])
         page[22:26] = b"\x00\x00\x00\x00"
-        if _ogg_crc(bytes(page)) != crc:
+        if _crc(bytes(page), 32, 0x04C11DB7) != crc:
             raise ValueError(f"Ogg CRC mismatch on page {seq}")
         st = streams.get(ser)
         if htype & 0x02:

@@ -382,31 +382,18 @@ def _pq_index_local(
     # cents[s] = list of (cl, centroid list); one Lloyd chain per subspace
     cents = {s: lloyd_local(slices[s], k, n_iter) for s in range(m)}
 
-    def d2(a, b):
-        acc = 0.0
-        for x, y in zip(a, b):
-            acc = acc + (x - y) * (x - y)
-        return acc
-
-    def argmin(v, cl_cents):
-        return min((d2(v, c), cl) for cl, c in cl_cents)[1]
-
     from .util import _np_matrix, lloyd_assign_np
 
     cent_rows = [(s, cl, c) for s in range(m) for cl, c in cents[s]]
     code_rows = []
     for s in range(m):
-        Xs = _np_matrix(slices[s])
-        if Xs is not None:
-            # vectorized dim-by-dim fold + first-min argmin — bit-equal
-            # to the scalar min((d2, cl)) rule (see util.lloyd_assign_np)
-            order = [cl for cl, _ in cents[s]]
-            rows = lloyd_assign_np(Xs, [c for _, c in cents[s]])
-            code_rows.extend(
-                (i, s, order[r]) for (i, _v), r in zip(slices[s], rows)
-            )
-        else:  # pragma: no cover - numpy is baked into the env
-            code_rows.extend((i, s, argmin(v, cents[s])) for i, v in slices[s])
+        if not slices[s]:  # an empty corpus has no codes
+            continue
+        # vectorized dim-by-dim fold + first-min argmin: ties go to the
+        # smaller cluster id (see util.lloyd_assign_np)
+        order = [cl for cl, _ in cents[s]]
+        rows = lloyd_assign_np(_np_matrix(slices[s]), [c for _, c in cents[s]])
+        code_rows.extend((i, s, order[r]) for (i, _v), r in zip(slices[s], rows))
     sess = df.sparkSession
     cents_df = local_frame(sess, cent_rows, "_s int, _cl int, _c array<double>")
     id_type = dict(df.dtypes)[id_col]

@@ -70,36 +70,18 @@ def collect_small_corpus(
     driver-local training fast paths (PQ codebooks, k-means centroids).
 
     Two tiers: a frame tagged by the Catalog with its source parquet
-    path (an untransformed local scan) is counted from the parquet
-    FOOTER and read with pyarrow — zero Spark jobs, which matters
-    because on a cold JVM even a count() costs seconds of Hadoop/codegen
-    warmup. Untagged frames fall back to df.count() + collect. Either
-    way the float32 -> Python float widening is exact, so downstream
-    math is unaffected by which tier ran."""
-    import os
-
-    path = getattr(df, "_edp_parquet_path", None)
-    if path is not None:
-        try:
-            import pyarrow.parquet as pq
-
-            if os.path.isdir(path):
-                import glob
-
-                parts = sorted(glob.glob(os.path.join(path, "*.parquet")))
-                n = sum(pq.ParquetFile(p).metadata.num_rows for p in parts)
-            else:
-                n = pq.ParquetFile(path).metadata.num_rows
-            if n > max_rows:
-                return None
-            tbl = pq.read_table(path, columns=[id_col, vec_col])
-            ids = tbl.column(id_col).to_pylist()
-            vs = tbl.column(vec_col).to_pylist()
-            return sorted(
-                (i, [float(x) for x in v]) for i, v in zip(ids, vs)
-            )
-        except Exception:  # pragma: no cover - fall through to Spark path
-            pass
+    path (an untransformed local scan) is read by
+    :func:`collect_small_columns`, counted from the parquet FOOTER and
+    read with pyarrow — zero Spark jobs, which matters because on a cold
+    JVM even a count() costs seconds of Hadoop/codegen warmup. Untagged
+    frames fall back to df.count() + collect. Either way the float32 ->
+    Python float widening is exact, so downstream math is unaffected by
+    which tier ran."""
+    if getattr(df, "_edp_parquet_path", None) is not None:
+        cols = collect_small_columns(df, [id_col, vec_col], max_rows)
+        if cols is None:
+            return None
+        return sorted((i, [float(x) for x in v]) for i, v in zip(*cols))
     if df.count() > max_rows:
         return None
     rows = df.select(
@@ -164,26 +146,17 @@ def lloyd_local(vecs, k: int, n_iter: int):
             q12, rounding=decimal.ROUND_HALF_UP, context=ctx
         )
 
-    def d2(a, b):
-        acc = 0.0
-        for x, y in zip(a, b):
-            acc = acc + (x - y) * (x - y)
-        return acc
-
+    if not vecs:
+        return []
     cents = [(cl, vecs[cl][1]) for cl in range(min(k, len(vecs)))]
     X = _np_matrix(vecs)
     for _ in range(n_iter):
-        if X is not None:
-            # vectorized over rows, dim-by-dim left-to-right — each
-            # element's op sequence is the same IEEE-double fold as the
-            # scalar loop, so results (incl. ties) are bit-identical
-            rows = lloyd_assign_np(X, [c for _, c in cents])
-            order = [c_id for c_id, _ in cents]
-            assigned = (order[r] for r in rows)
-        else:
-            assigned = (
-                min((d2(v, c), c_id) for c_id, c in cents)[1] for _i, v in vecs
-            )
+        # vectorized over rows, dim-by-dim left-to-right — each element's
+        # op sequence is the distributed chain's IEEE-double fold, so
+        # results (incl. ties) are bit-identical
+        rows = lloyd_assign_np(X, [c for _, c in cents])
+        order = [c_id for c_id, _ in cents]
+        assigned = (order[r] for r in rows)
         # exact component sums: quantized values are multiples of 1e-12,
         # accumulated as scaled INTEGERS (same decimal value as the
         # former Decimal.add chain, order-independent, faster)
@@ -212,21 +185,16 @@ def lloyd_local(vecs, k: int, n_iter: int):
 
 
 def _np_matrix(vecs):
-    """(n x dim) float64 matrix of the corpus, or None when numpy is
-    unavailable / the corpus is empty (callers fall back to scalar)."""
-    try:
-        import numpy as np
-    except ImportError:  # pragma: no cover - numpy is baked into the env
-        return None
-    if not vecs:
-        return None
+    """(n x dim) float64 matrix of a non-empty corpus."""
+    import numpy as np
+
     return np.asarray([v for _i, v in vecs], dtype=np.float64)
 
 
 def lloyd_assign_np(X, cent_list):
     """Vectorized Lloyd assignment: argmin over squared-L2 computed as a
-    dim-by-dim left-to-right fold (bit-identical to the scalar/Spark
-    fold); ``argmin`` returns the FIRST minimum, which with centroid
+    dim-by-dim left-to-right fold (bit-identical to the Spark fold);
+    ``argmin`` returns the FIRST minimum, which with centroid
     columns in ascending cluster order is the ties-to-smaller-id rule."""
     import numpy as np
 

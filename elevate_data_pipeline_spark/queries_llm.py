@@ -4818,6 +4818,102 @@ def multimodal_g711_decode(spark, sf_dir):
     )
 
 
+def _sql_arr(values) -> str:
+    """A tap or lookup table as a SQL list literal."""
+    return "[" + ",".join(str(v) for v in values) + "]"
+
+
+def _sql_tap_sum(taps: dict, keys, values=None) -> str:
+    """The AAC/MP3 decode as a tap superposition: at sample ``s``, the
+    sum of each line value times its tap table ``taps[key]``. The SQL
+    line values default to ``x{frame}_{line}`` per key."""
+    values = values or [f"x{f}_{k}" for f, k in keys]
+    return " + ".join(
+        f"{x} * ({_sql_arr(taps[key])})[s + 1]" for x, key in zip(values, keys)
+    )
+
+
+def _sql_pcm(acc: str, shift: int, col: str = "p") -> str:
+    """Sample column ``col``: the tap sum ``acc`` after the decoders'
+    one round-half-up shift, clipped to int16. Division by
+    ``2**shift`` is exact in doubles while |acc| < 2^53, so floor
+    replays the arithmetic shift bit for bit."""
+    return (
+        "greatest(-32768, least(32767, CAST(floor(\n"
+        f"               ({acc} + {1 << (shift - 1)}) / {1 << shift}.0)"
+        f" AS BIGINT))) AS {col}"
+    )
+
+
+_SQL_RATE = "CAST(44100 AS INT) AS sample_rate"
+_SQL_CHANNELS = "CAST(2 AS INT) AS channels"
+_SQL_PEAK_ENERGY = (
+    "CAST(max(abs(p)) AS BIGINT) AS peak",
+    "CAST(sum(p * p) AS BIGINT) AS energy",
+)
+_SQL_PEAK_ENERGY_SUM = (
+    "CAST(max(greatest(abs(pl), abs(pr))) AS BIGINT) AS peak",
+    "CAST(sum(pl * pl + pr * pr) AS BIGINT) AS energy",
+)
+_SQL_PEAK_ENERGY_LR = (
+    "CAST(max(abs(pl)) AS BIGINT) AS peak_l",
+    "CAST(sum(pl * pl) AS BIGINT) AS energy_l",
+    "CAST(max(abs(pr)) AS BIGINT) AS peak_r",
+    "CAST(sum(pr * pr) AS BIGINT) AS energy_r",
+)
+
+
+def _sql_pcm_summary(
+    cols: list, n_frame: int, stats=(_SQL_RATE, *_SQL_PEAK_ENERGY),
+    src: str = "xr", keep: str = "",
+) -> str:
+    """The tail of every AAC/MP3 decode oracle, from the ``pcm`` CTE on:
+    the sample columns ``cols`` (one per channel, see :func:`_sql_pcm`)
+    at each of the ``n_frame`` sample positions of ``src``, carrying the
+    ``keep`` columns, then per doc ``n_samples`` and the ``stats``
+    aggregates."""
+    cols_sql = ",\n             ".join(cols)
+    stats_sql = ",\n           ".join(
+        (f"CAST({n_frame * len(cols)} AS BIGINT) AS n_samples", *stats)
+    )
+    return f"""), pcm AS (
+      SELECT doc_id,{keep}
+             {cols_sql}
+      FROM {src}, (SELECT unnest(range(0, {n_frame})) AS s)
+    )
+    SELECT doc_id AS doc_id,
+           {stats_sql}
+    FROM pcm GROUP BY doc_id
+    """
+
+
+def _decoded_pcm_summary(
+    spark, sf_dir, encode, meta: str = "sample_rate", per_channel: bool = False
+):
+    """The engine side of the AAC/MP3 decode queries: per doc,
+    ``decode_audio(encode(doc_id))`` summarised as n_samples, the
+    AudioData field ``meta`` (sample_rate or channels), and peak and
+    energy over all samples, or per channel of the interleaved L/R
+    output with ``per_channel``."""
+    stats = (
+        "peak_l long, energy_l long, peak_r long, energy_r long"
+        if per_channel else "peak long, energy long"
+    )
+
+    def row(did):
+        au = multimodal.decode_audio(encode(did))
+        out = [did, len(au.samples), getattr(au, meta)]
+        chans = (au.samples[0::2], au.samples[1::2]) if per_channel else (au.samples,)
+        for ch in chans:
+            out += (max(abs(v) for v in ch), sum(v * v for v in ch))
+        yield tuple(out)
+
+    docs = Catalog(spark, sf_dir).table("documents").select("doc_id")
+    return map_rows(
+        docs, row, f"doc_id long, n_samples long, {meta} int, {stats}"
+    )
+
+
 _MP3_LINES = (0, 1, 18, 19, 20, 23)
 
 
@@ -4835,17 +4931,8 @@ def _sql_mp3() -> str:
     doubles (|acc| < 2^53), so floor replays the arithmetic shift
     bit-for-bit."""
     taps = multimodal.mp3_line_taps(n_granules=2, lines=_MP3_LINES)
-    t = {
-        (g, l): "[" + ",".join(str(v) for v in taps[(g, l)]) + "]"
-        for g in (0, 1)
-        for l in _MP3_LINES
-    }
-    p43 = "[" + ",".join(str(v) for v in multimodal.MP3_POW43) + "]"
-    half = 1 << (multimodal.MP3_SHIFT - 1)
-    pow2 = 1 << multimodal.MP3_SHIFT
-    acc = " + ".join(
-        f"x{g}_{l} * ({t[(g, l)]})[s + 1]" for g in (0, 1) for l in _MP3_LINES
-    )
+    p43 = _sql_arr(multimodal.MP3_POW43)
+    acc = _sql_tap_sum(taps, [(g, l) for g in (0, 1) for l in _MP3_LINES])
     return f"""
     WITH cfg AS (
       SELECT doc_id,
@@ -4887,19 +4974,7 @@ def _sql_mp3() -> str:
              c10 * 4 * (CAST(1 AS BIGINT) << (e1 - 1)) AS x1_20,
              c13 * 4 * (CAST(1 AS BIGINT) << (e1 - 1)) AS x1_23
       FROM cfg
-    ), pcm AS (
-      SELECT doc_id,
-             greatest(-32768, least(32767, CAST(floor(
-               ({acc} + {half}) / {pow2}.0) AS BIGINT))) AS p
-      FROM xr, (SELECT unnest(range(0, 1152)) AS s)
-    )
-    SELECT doc_id AS doc_id,
-           CAST(1152 AS BIGINT) AS n_samples,
-           CAST(44100 AS INT) AS sample_rate,
-           CAST(max(abs(p)) AS BIGINT) AS peak,
-           CAST(sum(p * p) AS BIGINT) AS energy
-    FROM pcm GROUP BY doc_id
-    """
+    {_sql_pcm_summary([_sql_pcm(acc, multimodal.MP3_SHIFT)], 1152)}"""
 
 
 @query("multimodal_mp3_decode", _sql_mp3())
@@ -4919,7 +4994,7 @@ def multimodal_mp3_decode(spark, sf_dir):
     pair. One narrow scan, no shuffle: the 100 TB shape."""
     sf1 = [0, 1] + [0] * 19  # band 1 (lines 16..31) shifted by 1
 
-    def row(did):
+    def encode(did):
         big0 = [0] * 20
         big0[0] = (1 if did % 2 == 0 else -1) * (1 + did % 14)
         big0[1] = (-1 if did % 3 == 0 else 1) * (1 + (did * 7) % 15)
@@ -4942,24 +5017,15 @@ def multimodal_mp3_decode(spark, sf_dir):
             "scalefac": sf1, "scalefac_scale": 1,
             "scalefac_compress": 5,
         }
-        au = multimodal.decode_audio(
-            # odd docs frame with protection_bit=0: the real
-            # CRC-16 (poly 0x8005 over header bytes 2-3 + side
-            # info) is written and VERIFIED on decode; samples
-            # are framing-invariant, so the oracle is untouched
-            multimodal.encode_mp3(
-                [g0, g1], bitrate=64, protect=did % 2 == 1
-            )
+        return multimodal.encode_mp3(
+            # odd docs frame with protection_bit=0: the real CRC-16
+            # (poly 0x8005 over header bytes 2-3 + side info) is
+            # written and VERIFIED on decode; samples are
+            # framing-invariant, so the oracle is untouched
+            [g0, g1], bitrate=64, protect=did % 2 == 1
         )
-        yield (did, len(au.samples), au.sample_rate,
-               max(abs(s) for s in au.samples),
-               sum(s * s for s in au.samples))
 
-    docs = Catalog(spark, sf_dir).table("documents").select("doc_id")
-    return map_rows(
-        docs, row,
-        "doc_id long, n_samples long, sample_rate int, peak long, energy long",
-    )
+    return _decoded_pcm_summary(spark, sf_dir, encode)
 
 
 _AAC_LINES = (0, 100, 500, 999)
@@ -4976,19 +5042,8 @@ def _sql_aac() -> str:
     per-band scalefactor down-shift on band 1, and both gain grids.
     Division by 2^15 is exact in doubles (|acc| < 2^53)."""
     taps = multimodal.aac_line_taps(n_frames=2, lines=_AAC_LINES)
-    t = {
-        (f, k): "[" + ",".join(str(v) for v in taps[(f, k)]) + "]"
-        for f in (0, 1)
-        for k in _AAC_LINES
-    }
-    p43 = "[" + ",".join(str(v) for v in multimodal.AAC_POW43) + "]"
-    half = 1 << (multimodal.AAC_SHIFT - 1)
-    pow2 = 1 << multimodal.AAC_SHIFT
-    acc = " + ".join(
-        f"x{f}_{k} * ({t[(f, k)]})[s + 1]"
-        for f in (0, 1)
-        for k in _AAC_LINES
-    )
+    p43 = _sql_arr(multimodal.AAC_POW43)
+    acc = _sql_tap_sum(taps, [(f, k) for f in (0, 1) for k in _AAC_LINES])
     return f"""
     WITH cfg AS (
       SELECT doc_id,
@@ -5021,19 +5076,7 @@ def _sql_aac() -> str:
              s115 * ({p43})[v115 + 1] * (CAST(1 AS BIGINT) << e1)
                AS x1_999
       FROM cfg
-    ), pcm AS (
-      SELECT doc_id,
-             greatest(-32768, least(32767, CAST(floor(
-               ({acc} + {half}) / {pow2}.0) AS BIGINT))) AS p
-      FROM xr, (SELECT unnest(range(0, 2048)) AS s)
-    )
-    SELECT doc_id AS doc_id,
-           CAST(2048 AS BIGINT) AS n_samples,
-           CAST(44100 AS INT) AS sample_rate,
-           CAST(max(abs(p)) AS BIGINT) AS peak,
-           CAST(sum(p * p) AS BIGINT) AS energy
-    FROM pcm GROUP BY doc_id
-    """
+    {_sql_pcm_summary([_sql_pcm(acc, multimodal.AAC_SHIFT)], 2048)}"""
 
 
 @query("multimodal_aac_decode", _sql_aac())
@@ -5053,7 +5096,7 @@ def multimodal_aac_decode(spark, sf_dir):
     the tap tables — a bit-exact gate on the encoder+decoder pair.
     One narrow scan, no shuffle: the 100 TB shape."""
 
-    def row(did):
+    def encode(did):
         e0, e1 = 1 + did % 7, 1 + (did * 3) % 7
         f0 = {"spec": [0] * 1024, "gain_e": e0,
               "sf_down": [0, 1] + [0] * 14}
@@ -5075,17 +5118,9 @@ def multimodal_aac_decode(spark, sf_dir):
         f1["spec"][999] = (
             (-1 if did % 6 == 0 else 1) * (1 + (did * 13) % 15)
         )
-        au = multimodal.decode_audio(multimodal.encode_aac([f0, f1]))
-        yield (did, len(au.samples), au.sample_rate,
-               max(abs(s) for s in au.samples),
-               sum(s * s for s in au.samples))
+        return multimodal.encode_aac([f0, f1])
 
-    docs = Catalog(spark, sf_dir).table("documents").select("doc_id")
-    return map_rows(
-        docs, row,
-        "doc_id long, n_samples long, sample_rate int, peak long,"
-        " energy long",
-    )
+    return _decoded_pcm_summary(spark, sf_dir, encode)
 
 
 _AAC_TNS_LINES = (100, 840, 900, 1000)
@@ -5115,16 +5150,9 @@ def _sql_aac_tns() -> str:
         n_frames=2, lines=_AAC_TNS_LINES,
         tns=(list(_AAC_TNS_F0), list(_AAC_TNS_F1)),
     )
-    terms = [("0", k) for k in _AAC_TNS_LINES] + [("1", 100), ("1", 1000)]
-    t = {
-        (int(f), k): "[" + ",".join(str(v) for v in taps[(int(f), k)]) + "]"
-        for f, k in terms
-    }
-    p43 = "[" + ",".join(str(v) for v in multimodal.AAC_POW43) + "]"
-    half = 1 << (multimodal.AAC_SHIFT - 1)
-    pow2 = 1 << multimodal.AAC_SHIFT
-    acc = " + ".join(
-        f"x{f}_{k} * ({t[(int(f), k)]})[s + 1]" for f, k in terms
+    p43 = _sql_arr(multimodal.AAC_POW43)
+    acc = _sql_tap_sum(
+        taps, [(0, k) for k in _AAC_TNS_LINES] + [(1, 100), (1, 1000)]
     )
     return f"""
     WITH cfg AS (
@@ -5153,19 +5181,7 @@ def _sql_aac_tns() -> str:
              s1a * ({p43})[v1a + 1] * (CAST(1 AS BIGINT) << e1) AS x1_100,
              s1d * ({p43})[v1d + 1] * (CAST(1 AS BIGINT) << e1) AS x1_1000
       FROM cfg
-    ), pcm AS (
-      SELECT doc_id,
-             greatest(-32768, least(32767, CAST(floor(
-               ({acc} + {half}) / {pow2}.0) AS BIGINT))) AS p
-      FROM xr, (SELECT unnest(range(0, 2048)) AS s)
-    )
-    SELECT doc_id AS doc_id,
-           CAST(2048 AS BIGINT) AS n_samples,
-           CAST(44100 AS INT) AS sample_rate,
-           CAST(max(abs(p)) AS BIGINT) AS peak,
-           CAST(sum(p * p) AS BIGINT) AS energy
-    FROM pcm GROUP BY doc_id
-    """
+    {_sql_pcm_summary([_sql_pcm(acc, multimodal.AAC_SHIFT)], 2048)}"""
 
 
 @query("multimodal_aac_tns", _sql_aac_tns())
@@ -5186,7 +5202,7 @@ def multimodal_aac_tns(spark, sf_dir):
     lattice conversion, region arithmetic, and direction handling at
     once. One narrow scan, no shuffle: the 100 TB shape."""
 
-    def row(did):
+    def encode(did):
         f0 = {"spec": [0] * 1024, "gain_e": 1 + did % 7,
               "tns": list(_AAC_TNS_F0)}
         f0["spec"][100] = (1 if did % 2 == 0 else -1) * (1 + did % 15)
@@ -5207,17 +5223,9 @@ def multimodal_aac_tns(spark, sf_dir):
         f1["spec"][1000] = (
             (-1 if did % 6 == 0 else 1) * (1 + (did * 13) % 15)
         )
-        au = multimodal.decode_audio(multimodal.encode_aac([f0, f1]))
-        yield (did, len(au.samples), au.sample_rate,
-               max(abs(s) for s in au.samples),
-               sum(s * s for s in au.samples))
+        return multimodal.encode_aac([f0, f1])
 
-    docs = Catalog(spark, sf_dir).table("documents").select("doc_id")
-    return map_rows(
-        docs, row,
-        "doc_id long, n_samples long, sample_rate int, peak long,"
-        " energy long",
-    )
+    return _decoded_pcm_summary(spark, sf_dir, encode)
 
 
 _AAC_PNS_BANDS = {0: [3, 15], 1: [5]}
@@ -5233,16 +5241,12 @@ def _sql_aac_pns() -> str:
     clip; |acc| < 2^53 with band taps < 1e6 and shifts <= 7."""
     taps = multimodal.aac_line_taps(n_frames=2, lines=(100, 500))
     ptaps = multimodal.aac_pns_taps(2, _AAC_PNS_BANDS)
-    arr = lambda tup: "[" + ",".join(str(v) for v in tup) + "]"  # noqa: E731
-    p43 = arr(multimodal.AAC_POW43)
-    half = 1 << (multimodal.AAC_SHIFT - 1)
-    pow2 = 1 << multimodal.AAC_SHIFT
+    p43 = _sql_arr(multimodal.AAC_POW43)
+    noise = [(0, 3), (0, 15), (1, 5)]
     acc = (
-        f"x0_100 * ({arr(taps[(0, 100)])})[s + 1]"
-        f" + x1_500 * ({arr(taps[(1, 500)])})[s + 1]"
-        f" + (CAST(1 AS BIGINT) << k03) * ({arr(ptaps[(0, 3)])})[s + 1]"
-        f" + (CAST(1 AS BIGINT) << k015) * ({arr(ptaps[(0, 15)])})[s + 1]"
-        f" + (CAST(1 AS BIGINT) << k15) * ({arr(ptaps[(1, 5)])})[s + 1]"
+        _sql_tap_sum(taps, [(0, 100), (1, 500)]) + " + " + _sql_tap_sum(
+            ptaps, noise, [f"(CAST(1 AS BIGINT) << k{f}{b})" for f, b in noise]
+        )
     )
     return f"""
     WITH cfg AS (
@@ -5262,19 +5266,7 @@ def _sql_aac_pns() -> str:
              s0 * ({p43})[v0 + 1] * (CAST(1 AS BIGINT) << e0) AS x0_100,
              s1 * ({p43})[v1 + 1] * (CAST(1 AS BIGINT) << e1) AS x1_500
       FROM cfg
-    ), pcm AS (
-      SELECT doc_id,
-             greatest(-32768, least(32767, CAST(floor(
-               ({acc} + {half}) / {pow2}.0) AS BIGINT))) AS p
-      FROM xr, (SELECT unnest(range(0, 2048)) AS s)
-    )
-    SELECT doc_id AS doc_id,
-           CAST(2048 AS BIGINT) AS n_samples,
-           CAST(44100 AS INT) AS sample_rate,
-           CAST(max(abs(p)) AS BIGINT) AS peak,
-           CAST(sum(p * p) AS BIGINT) AS energy
-    FROM pcm GROUP BY doc_id
-    """
+    {_sql_pcm_summary([_sql_pcm(acc, multimodal.AAC_SHIFT)], 2048)}"""
 
 
 @query("multimodal_aac_pns", _sql_aac_pns())
@@ -5292,7 +5284,7 @@ def multimodal_aac_pns(spark, sf_dir):
     scaled by 2^k plus the usual line superposition. One narrow scan,
     no shuffle: the 100 TB shape."""
 
-    def row(did):
+    def encode(did):
         f0 = {"spec": [0] * 1024, "gain_e": 1 + did % 7,
               "pns": {3: did % 8, 15: (did * 3) % 8}}
         f0["spec"][100] = (1 if did % 2 == 0 else -1) * (1 + did % 15)
@@ -5301,17 +5293,9 @@ def multimodal_aac_pns(spark, sf_dir):
         f1["spec"][500] = (
             (-1 if did % 3 == 0 else 1) * (1 + (did * 7) % 15)
         )
-        au = multimodal.decode_audio(multimodal.encode_aac([f0, f1]))
-        yield (did, len(au.samples), au.sample_rate,
-               max(abs(s) for s in au.samples),
-               sum(s * s for s in au.samples))
+        return multimodal.encode_aac([f0, f1])
 
-    docs = Catalog(spark, sf_dir).table("documents").select("doc_id")
-    return map_rows(
-        docs, row,
-        "doc_id long, n_samples long, sample_rate int, peak long,"
-        " energy long",
-    )
+    return _decoded_pcm_summary(spark, sf_dir, encode)
 
 
 def _sql_aac_pulse() -> str:
@@ -5325,15 +5309,8 @@ def _sql_aac_pulse() -> str:
     bit-identical samples, exercising the 13818-7 header path inside
     the oracle gate."""
     taps = multimodal.aac_line_taps(n_frames=2, lines=(90, 110, 1000))
-    arr = lambda tup: "[" + ",".join(str(v) for v in tup) + "]"  # noqa: E731
-    p43 = arr(multimodal.AAC_POW43)
-    half = 1 << (multimodal.AAC_SHIFT - 1)
-    pow2 = 1 << multimodal.AAC_SHIFT
-    acc = (
-        f"x0_90 * ({arr(taps[(0, 90)])})[s + 1]"
-        f" + x0_110 * ({arr(taps[(0, 110)])})[s + 1]"
-        f" + x1_1000 * ({arr(taps[(1, 1000)])})[s + 1]"
-    )
+    p43 = _sql_arr(multimodal.AAC_POW43)
+    acc = _sql_tap_sum(taps, [(0, 90), (0, 110), (1, 1000)])
     return f"""
     WITH cfg AS (
       SELECT doc_id,
@@ -5356,19 +5333,7 @@ def _sql_aac_pulse() -> str:
                AS x0_110,
              s2 * ({p43})[v2 + 1] * (CAST(1 AS BIGINT) << e1) AS x1_1000
       FROM cfg
-    ), pcm AS (
-      SELECT doc_id,
-             greatest(-32768, least(32767, CAST(floor(
-               ({acc} + {half}) / {pow2}.0) AS BIGINT))) AS p
-      FROM xr, (SELECT unnest(range(0, 2048)) AS s)
-    )
-    SELECT doc_id AS doc_id,
-           CAST(2048 AS BIGINT) AS n_samples,
-           CAST(44100 AS INT) AS sample_rate,
-           CAST(max(abs(p)) AS BIGINT) AS peak,
-           CAST(sum(p * p) AS BIGINT) AS energy
-    FROM pcm GROUP BY doc_id
-    """
+    {_sql_pcm_summary([_sql_pcm(acc, multimodal.AAC_SHIFT)], 2048)}"""
 
 
 @query("multimodal_aac_pulse", _sql_aac_pulse())
@@ -5386,7 +5351,7 @@ def multimodal_aac_pulse(spark, sf_dir):
     oracle (which knows nothing of framing) gates all three paths.
     One narrow scan, no shuffle: the 100 TB shape."""
 
-    def row(did):
+    def encode(did):
         f0 = {"spec": [0] * 1024, "gain_e": 1 + did % 7,
               "pulse": {"start_sfb": 1,
                         "pulses": [(26, did % 16),
@@ -5415,17 +5380,9 @@ def multimodal_aac_pulse(spark, sf_dir):
                 [list(w["frames"])], w["freq_index"],
                 w["channels"], 1,
             )
-        au = multimodal.decode_audio(payload)
-        yield (did, len(au.samples), au.sample_rate,
-               max(abs(s) for s in au.samples),
-               sum(s * s for s in au.samples))
+        return payload
 
-    docs = Catalog(spark, sf_dir).table("documents").select("doc_id")
-    return map_rows(
-        docs, row,
-        "doc_id long, n_samples long, sample_rate int, peak long,"
-        " energy long",
-    )
+    return _decoded_pcm_summary(spark, sf_dir, encode)
 
 
 _AAC_TNSS_LINES = (276, 370, 868, 562, 0, 999)
@@ -5455,17 +5412,9 @@ def _sql_aac_tns_short() -> str:
         n_frames=2, lines=_AAC_TNSS_LINES, windows=(2, 0),
         tns=(list(_AAC_TNSS_F0), None),
     )
-    terms = [("0", 276), ("0", 370), ("0", 868), ("0", 562),
-             ("1", 0), ("1", 999)]
-    t = {
-        (int(f), k): "[" + ",".join(str(v) for v in taps[(int(f), k)]) + "]"
-        for f, k in terms
-    }
-    p43 = "[" + ",".join(str(v) for v in multimodal.AAC_POW43) + "]"
-    half = 1 << (multimodal.AAC_SHIFT - 1)
-    pow2 = 1 << multimodal.AAC_SHIFT
-    acc = " + ".join(
-        f"x{f}_{k} * ({t[(int(f), k)]})[s + 1]" for f, k in terms
+    p43 = _sql_arr(multimodal.AAC_POW43)
+    acc = _sql_tap_sum(
+        taps, [(0, 276), (0, 370), (0, 868), (0, 562), (1, 0), (1, 999)]
     )
     return f"""
     WITH cfg AS (
@@ -5494,19 +5443,7 @@ def _sql_aac_tns_short() -> str:
              se * ({p43})[ve + 1] * (CAST(1 AS BIGINT) << e1) AS x1_0,
              sf * ({p43})[vf + 1] * (CAST(1 AS BIGINT) << e1) AS x1_999
       FROM cfg
-    ), pcm AS (
-      SELECT doc_id,
-             greatest(-32768, least(32767, CAST(floor(
-               ({acc} + {half}) / {pow2}.0) AS BIGINT))) AS p
-      FROM xr, (SELECT unnest(range(0, 2048)) AS s)
-    )
-    SELECT doc_id AS doc_id,
-           CAST(2048 AS BIGINT) AS n_samples,
-           CAST(44100 AS INT) AS sample_rate,
-           CAST(max(abs(p)) AS BIGINT) AS peak,
-           CAST(sum(p * p) AS BIGINT) AS energy
-    FROM pcm GROUP BY doc_id
-    """
+    {_sql_pcm_summary([_sql_pcm(acc, multimodal.AAC_SHIFT)], 2048)}"""
 
 
 @query("multimodal_aac_tns_short", _sql_aac_tns_short())
@@ -5523,7 +5460,7 @@ def multimodal_aac_tns_short(spark, sf_dir):
     through taps computed THROUGH the short filters. One narrow scan,
     no shuffle: the 100 TB shape."""
 
-    def row(did):
+    def encode(did):
         f0 = {"spec": [0] * 1024, "gain_e": 1 + did % 7,
               "window": 2, "tns": list(_AAC_TNSS_F0)}
         f0["spec"][276] = (1 if did % 2 == 0 else -1) * (1 + did % 15)
@@ -5543,17 +5480,9 @@ def multimodal_aac_tns_short(spark, sf_dir):
         f1["spec"][999] = (
             (-1 if did % 6 == 0 else 1) * (1 + (did * 13) % 15)
         )
-        au = multimodal.decode_audio(multimodal.encode_aac([f0, f1]))
-        yield (did, len(au.samples), au.sample_rate,
-               max(abs(s) for s in au.samples),
-               sum(s * s for s in au.samples))
+        return multimodal.encode_aac([f0, f1])
 
-    docs = Catalog(spark, sf_dir).table("documents").select("doc_id")
-    return map_rows(
-        docs, row,
-        "doc_id long, n_samples long, sample_rate int, peak long,"
-        " energy long",
-    )
+    return _decoded_pcm_summary(spark, sf_dir, encode)
 
 
 _AAC_SHORT_LINES = (0, 100, 400, 640, 931)
@@ -5570,20 +5499,9 @@ def _sql_aac_short() -> str:
     taps = multimodal.aac_line_taps(
         n_frames=2, lines=_AAC_SHORT_LINES, windows=(1, 2)
     )
-    t = {
-        (f, k): "[" + ",".join(str(v) for v in taps[(f, k)]) + "]"
-        for f, k in (
-            (0, 0), (0, 100), (1, 0), (1, 400), (1, 640), (1, 931),
-        )
-    }
-    p43 = "[" + ",".join(str(v) for v in multimodal.AAC_POW43) + "]"
-    half = 1 << (multimodal.AAC_SHIFT - 1)
-    pow2 = 1 << multimodal.AAC_SHIFT
-    acc = " + ".join(
-        f"x{f}_{k} * ({t[(f, k)]})[s + 1]"
-        for f, k in (
-            (0, 0), (0, 100), (1, 0), (1, 400), (1, 640), (1, 931),
-        )
+    p43 = _sql_arr(multimodal.AAC_POW43)
+    acc = _sql_tap_sum(
+        taps, [(0, 0), (0, 100), (1, 0), (1, 400), (1, 640), (1, 931)]
     )
     return f"""
     WITH cfg AS (
@@ -5614,19 +5532,7 @@ def _sql_aac_short() -> str:
              s12 * ({p43})[v12 + 1] * (CAST(1 AS BIGINT) << e1) AS x1_640,
              s13 * ({p43})[v13 + 1] * (CAST(1 AS BIGINT) << e1) AS x1_931
       FROM cfg
-    ), pcm AS (
-      SELECT doc_id,
-             greatest(-32768, least(32767, CAST(floor(
-               ({acc} + {half}) / {pow2}.0) AS BIGINT))) AS p
-      FROM xr, (SELECT unnest(range(0, 2048)) AS s)
-    )
-    SELECT doc_id AS doc_id,
-           CAST(2048 AS BIGINT) AS n_samples,
-           CAST(44100 AS INT) AS sample_rate,
-           CAST(max(abs(p)) AS BIGINT) AS peak,
-           CAST(sum(p * p) AS BIGINT) AS energy
-    FROM pcm GROUP BY doc_id
-    """
+    {_sql_pcm_summary([_sql_pcm(acc, multimodal.AAC_SHIFT)], 2048)}"""
 
 
 @query("multimodal_aac_short", _sql_aac_short())
@@ -5645,7 +5551,7 @@ def multimodal_aac_short(spark, sf_dir):
     window-switching tap tables. One narrow scan, no shuffle: the
     100 TB shape."""
 
-    def row(did):
+    def encode(did):
         e0, e1 = 1 + did % 7, 1 + (did * 3) % 7
         f0 = {"spec": [0] * 1024, "gain_e": e0, "window": 1,
               "sf_down": [0, 1] + [0] * 14}
@@ -5668,17 +5574,9 @@ def multimodal_aac_short(spark, sf_dir):
         sfds[1][1] = 1
         f1 = {"spec": spec, "gain_e": e1, "window": 2,
               "groups": [2, 3, 1, 2], "sf_down_short": sfds}
-        au = multimodal.decode_audio(multimodal.encode_aac([f0, f1]))
-        yield (did, len(au.samples), au.sample_rate,
-               max(abs(s) for s in au.samples),
-               sum(s * s for s in au.samples))
+        return multimodal.encode_aac([f0, f1])
 
-    docs = Catalog(spark, sf_dir).table("documents").select("doc_id")
-    return map_rows(
-        docs, row,
-        "doc_id long, n_samples long, sample_rate int, peak long,"
-        " energy long",
-    )
+    return _decoded_pcm_summary(spark, sf_dir, encode)
 
 
 def _sql_aac_stereo() -> str:
@@ -5687,11 +5585,17 @@ def _sql_aac_stereo() -> str:
     (m - s) through the same tap tables (aac_line_taps), one final
     round-half-up shift per channel."""
     taps = multimodal.aac_line_taps(n_frames=2, lines=(0, 100))
-    t0 = "[" + ",".join(str(v) for v in taps[(0, 0)]) + "]"
-    t100 = "[" + ",".join(str(v) for v in taps[(0, 100)]) + "]"
-    p43 = "[" + ",".join(str(v) for v in multimodal.AAC_POW43) + "]"
+    t0, t100 = _sql_arr(taps[(0, 0)]), _sql_arr(taps[(0, 100)])
+    p43 = _sql_arr(multimodal.AAC_POW43)
     half = 1 << (multimodal.AAC_SHIFT - 1)
     pow2 = 1 << multimodal.AAC_SHIFT
+    pcm = [
+        f"""greatest(-32768, least(32767, CAST(floor(
+               ((xm0 {op} xs0) * ({t0})[s + 1]
+                + (xm1 {op} xs1) * ({t100})[s + 1] + {half}) / {pow2}.0)
+               AS BIGINT))) AS {col}"""
+        for op, col in (("+", "pl"), ("-", "pr"))
+    ]
     return f"""
     WITH cfg AS (
       SELECT doc_id,
@@ -5715,25 +5619,7 @@ def _sql_aac_stereo() -> str:
              ss1 * ({p43})[vs1 + 1] * (CAST(1 AS BIGINT) << (es - 1))
                AS xs1
       FROM cfg
-    ), pcm AS (
-      SELECT doc_id,
-             greatest(-32768, least(32767, CAST(floor(
-               ((xm0 + xs0) * ({t0})[s + 1]
-                + (xm1 + xs1) * ({t100})[s + 1] + {half}) / {pow2}.0)
-               AS BIGINT))) AS pl,
-             greatest(-32768, least(32767, CAST(floor(
-               ((xm0 - xs0) * ({t0})[s + 1]
-                + (xm1 - xs1) * ({t100})[s + 1] + {half}) / {pow2}.0)
-               AS BIGINT))) AS pr
-      FROM xr, (SELECT unnest(range(0, 2048)) AS s)
-    )
-    SELECT doc_id AS doc_id,
-           CAST(4096 AS BIGINT) AS n_samples,
-           CAST(2 AS INT) AS channels,
-           CAST(max(greatest(abs(pl), abs(pr))) AS BIGINT) AS peak,
-           CAST(sum(pl * pl + pr * pr) AS BIGINT) AS energy
-    FROM pcm GROUP BY doc_id
-    """
+    {_sql_pcm_summary(pcm, 2048, (_SQL_CHANNELS, *_SQL_PEAK_ENERGY_SUM))}"""
 
 
 @query("multimodal_aac_stereo", _sql_aac_stereo())
@@ -5751,7 +5637,7 @@ def multimodal_aac_stereo(spark, sf_dir):
     individual_channel_streams). One narrow scan, no shuffle: the
     100 TB shape."""
 
-    def row(did):
+    def encode(did):
         em, es = 1 + did % 7, 1 + (did * 3) % 7
         gm = {"spec": [0] * 1024, "gain_e": em,
               "sf_down": [0, 1] + [0] * 14}
@@ -5768,19 +5654,9 @@ def multimodal_aac_stereo(spark, sf_dir):
             (-1 if did % 4 == 0 else 1) * (1 + (did * 5) % 15)
         )
         zero = (([], 0), ([], 0))
-        au = multimodal.decode_audio(
-            multimodal.encode_aac([(gm, gs_), zero], mode="ms")
-        )
-        yield (did, len(au.samples), au.channels,
-               max(abs(s) for s in au.samples),
-               sum(s * s for s in au.samples))
+        return multimodal.encode_aac([(gm, gs_), zero], mode="ms")
 
-    docs = Catalog(spark, sf_dir).table("documents").select("doc_id")
-    return map_rows(
-        docs, row,
-        "doc_id long, n_samples long, channels int, peak long,"
-        " energy long",
-    )
+    return _decoded_pcm_summary(spark, sf_dir, encode, meta="channels")
 
 
 def _sql_aac_intensity() -> str:
@@ -5789,11 +5665,16 @@ def _sql_aac_intensity() -> str:
     lines (integer-shift 4k grid), everything else the same tap
     superposition as the other AAC oracles."""
     taps = multimodal.aac_line_taps(n_frames=2, lines=(0, 100))
-    t0 = "[" + ",".join(str(v) for v in taps[(0, 0)]) + "]"
-    t100 = "[" + ",".join(str(v) for v in taps[(0, 100)]) + "]"
-    p43 = "[" + ",".join(str(v) for v in multimodal.AAC_POW43) + "]"
+    t0, t100 = _sql_arr(taps[(0, 0)]), _sql_arr(taps[(0, 100)])
+    p43 = _sql_arr(multimodal.AAC_POW43)
     half = 1 << (multimodal.AAC_SHIFT - 1)
     pow2 = 1 << multimodal.AAC_SHIFT
+    pcm = [
+        f"""greatest(-32768, least(32767, CAST(floor(
+               ({x}0 * ({t0})[s + 1] + {x}1 * ({t100})[s + 1] + {half})
+               / {pow2}.0) AS BIGINT))) AS {col}"""
+        for x, col in (("xl", "pl"), ("xr", "pr"))
+    ]
     return f"""
     WITH cfg AS (
       SELECT doc_id,
@@ -5820,23 +5701,9 @@ def _sql_aac_intensity() -> str:
              ph1 * (CASE WHEN xl1 >= 0 THEN 1 ELSE -1 END)
                * (abs(xl1) // (CAST(1 AS BIGINT) << k1)) AS xr1
       FROM xr
-    ), pcm AS (
-      SELECT doc_id,
-             greatest(-32768, least(32767, CAST(floor(
-               (xl0 * ({t0})[s + 1] + xl1 * ({t100})[s + 1] + {half})
-               / {pow2}.0) AS BIGINT))) AS pl,
-             greatest(-32768, least(32767, CAST(floor(
-               (xr0 * ({t0})[s + 1] + xr1 * ({t100})[s + 1] + {half})
-               / {pow2}.0) AS BIGINT))) AS pr
-      FROM st, (SELECT unnest(range(0, 2048)) AS s)
-    )
-    SELECT doc_id AS doc_id,
-           CAST(4096 AS BIGINT) AS n_samples,
-           CAST(2 AS INT) AS channels,
-           CAST(max(greatest(abs(pl), abs(pr))) AS BIGINT) AS peak,
-           CAST(sum(pl * pl + pr * pr) AS BIGINT) AS energy
-    FROM pcm GROUP BY doc_id
-    """
+    {_sql_pcm_summary(
+        pcm, 2048, (_SQL_CHANNELS, *_SQL_PEAK_ENERGY_SUM), src="st"
+    )}"""
 
 
 @query("multimodal_aac_intensity", _sql_aac_intensity())
@@ -5853,7 +5720,7 @@ def multimodal_aac_intensity(spark, sf_dir):
     swap-in contract). The oracle replays both channels closed-form.
     One narrow scan, no shuffle: the 100 TB shape."""
 
-    def row(did):
+    def encode(did):
         gl = {"spec": [0] * 1024, "gain_e": 1 + did % 7,
               "sf_down": [0, 1] + [0] * 14}
         gl["spec"][0] = (1 if did % 2 == 0 else -1) * (1 + did % 15)
@@ -5865,19 +5732,9 @@ def multimodal_aac_intensity(spark, sf_dir):
             "phase": [1, 1 if did % 2 == 0 else -1],
         }
         zero = (([], 0), {})
-        au = multimodal.decode_audio(
-            multimodal.encode_aac([(gl, ris), zero], mode="is")
-        )
-        yield (did, len(au.samples), au.channels,
-               max(abs(s) for s in au.samples),
-               sum(s * s for s in au.samples))
+        return multimodal.encode_aac([(gl, ris), zero], mode="is")
 
-    docs = Catalog(spark, sf_dir).table("documents").select("doc_id")
-    return map_rows(
-        docs, row,
-        "doc_id long, n_samples long, channels int, peak long,"
-        " energy long",
-    )
+    return _decoded_pcm_summary(spark, sf_dir, encode, meta="channels")
 
 
 @query(
@@ -7447,16 +7304,10 @@ def _sql_mp3_short() -> str:
     taps = multimodal.mp3_line_taps(
         n_granules=2, lines=_MP3_SHORT_Q_LINES, block_types=(1, 2)
     )
-    t = {
-        (g, l): "[" + ",".join(str(v) for v in taps[(g, l)]) + "]"
-        for g in (0, 1)
-        for l in _MP3_SHORT_Q_LINES
-    }
-    p43 = "[" + ",".join(str(v) for v in multimodal.MP3_POW43) + "]"
-    half = 1 << (multimodal.MP3_SHIFT - 1)
-    pow2 = 1 << multimodal.MP3_SHIFT
-    terms = [("0", 0), ("0", 1), ("1", 0), ("1", 8), ("1", 16), ("1", 24)]
-    acc = " + ".join(f"x{g}_{l} * ({t[(int(g), l)]})[s + 1]" for g, l in terms)
+    p43 = _sql_arr(multimodal.MP3_POW43)
+    acc = _sql_tap_sum(
+        taps, [(0, 0), (0, 1), (1, 0), (1, 8), (1, 16), (1, 24)]
+    )
     return f"""
     WITH cfg AS (
       SELECT doc_id,
@@ -7489,19 +7340,7 @@ def _sql_mp3_short() -> str:
              s116 * ({p43})[v116 + 1] * (CAST(1 AS BIGINT) << (e1 - 2)) AS x1_16,
              s124 * ({p43})[v124 + 1] * (CAST(1 AS BIGINT) << (e1 - 2)) AS x1_24
       FROM cfg
-    ), pcm AS (
-      SELECT doc_id,
-             greatest(-32768, least(32767, CAST(floor(
-               ({acc} + {half}) / {pow2}.0) AS BIGINT))) AS p
-      FROM xr, (SELECT unnest(range(0, 1152)) AS s)
-    )
-    SELECT doc_id AS doc_id,
-           CAST(1152 AS BIGINT) AS n_samples,
-           CAST(44100 AS INT) AS sample_rate,
-           CAST(max(abs(p)) AS BIGINT) AS peak,
-           CAST(sum(p * p) AS BIGINT) AS energy
-    FROM pcm GROUP BY doc_id
-    """
+    {_sql_pcm_summary([_sql_pcm(acc, multimodal.MP3_SHIFT)], 1152)}"""
 
 
 @query("multimodal_mp3_short_blocks", _sql_mp3_short())
@@ -7522,7 +7361,7 @@ def multimodal_mp3_short_blocks(spark, sf_dir):
     window-switching tap tables. One narrow scan, no shuffle: the
     100 TB shape."""
 
-    def row(did):
+    def encode(did):
         g0 = {
             "big": [
                 (1 if did % 2 == 0 else -1) * (1 + did % 14),
@@ -7547,18 +7386,9 @@ def multimodal_mp3_short_blocks(spark, sf_dir):
             "scalefac_scale": 1,
             "scalefac_compress": 9,
         }
-        au = multimodal.decode_audio(
-            multimodal.encode_mp3([g0, g1], bitrate=64)
-        )
-        yield (did, len(au.samples), au.sample_rate,
-               max(abs(s) for s in au.samples),
-               sum(s * s for s in au.samples))
+        return multimodal.encode_mp3([g0, g1], bitrate=64)
 
-    docs = Catalog(spark, sf_dir).table("documents").select("doc_id")
-    return map_rows(
-        docs, row,
-        "doc_id long, n_samples long, sample_rate int, peak long, energy long",
-    )
+    return _decoded_pcm_summary(spark, sf_dir, encode)
 
 
 def _sql_mp3_stereo() -> str:
@@ -7570,20 +7400,11 @@ def _sql_mp3_stereo() -> str:
     interleaved output's per-channel peak/energy aggregate them
     separately in closed form."""
     taps = multimodal.mp3_line_taps(n_granules=2, lines=(0, 1, 18, 19))
-    t = {
-        (g, l): "[" + ",".join(str(v) for v in taps[(g, l)]) + "]"
-        for g in (0, 1)
-        for l in (0, 1, 18, 19)
-    }
-    p43 = "[" + ",".join(str(v) for v in multimodal.MP3_POW43) + "]"
-    half = 1 << (multimodal.MP3_SHIFT - 1)
-    pow2 = 1 << multimodal.MP3_SHIFT
-    acc_l = " + ".join(
-        f"l{g}_{l} * ({t[(g, l)]})[s + 1]" for g in (0, 1) for l in (0, 1)
-    )
-    acc_r = " + ".join(
-        f"r{g}_{l} * ({t[(g, l)]})[s + 1]" for g in (0, 1) for l in (18, 19)
-    )
+    p43 = _sql_arr(multimodal.MP3_POW43)
+    left = [(g, l) for g in (0, 1) for l in (0, 1)]
+    right = [(g, l) for g in (0, 1) for l in (18, 19)]
+    acc_l = _sql_tap_sum(taps, left, [f"l{g}_{l}" for g, l in left])
+    acc_r = _sql_tap_sum(taps, right, [f"r{g}_{l}" for g, l in right])
     return f"""
     WITH cfg AS (
       SELECT doc_id,
@@ -7617,23 +7438,11 @@ def _sql_mp3_stereo() -> str:
              sr118 * ({p43})[vr118 + 1] * (CAST(1 AS BIGINT) << er) AS r1_18,
              sr119 * ({p43})[vr119 + 1] * (CAST(1 AS BIGINT) << er) AS r1_19
       FROM cfg
-    ), pcm AS (
-      SELECT doc_id,
-             greatest(-32768, least(32767, CAST(floor(
-               ({acc_l} + {half}) / {pow2}.0) AS BIGINT))) AS pl,
-             greatest(-32768, least(32767, CAST(floor(
-               ({acc_r} + {half}) / {pow2}.0) AS BIGINT))) AS pr
-      FROM xr, (SELECT unnest(range(0, 1152)) AS s)
-    )
-    SELECT doc_id AS doc_id,
-           CAST(2304 AS BIGINT) AS n_samples,
-           CAST(2 AS INT) AS channels,
-           CAST(max(abs(pl)) AS BIGINT) AS peak_l,
-           CAST(sum(pl * pl) AS BIGINT) AS energy_l,
-           CAST(max(abs(pr)) AS BIGINT) AS peak_r,
-           CAST(sum(pr * pr) AS BIGINT) AS energy_r
-    FROM pcm GROUP BY doc_id
-    """
+    {_sql_pcm_summary(
+        [_sql_pcm(acc_l, multimodal.MP3_SHIFT, "pl"),
+         _sql_pcm(acc_r, multimodal.MP3_SHIFT, "pr")],
+        1152, (_SQL_CHANNELS, *_SQL_PEAK_ENERGY_LR),
+    )}"""
 
 
 @query("multimodal_mp3_stereo", _sql_mp3_stereo())
@@ -7650,7 +7459,7 @@ def multimodal_mp3_stereo(spark, sf_dir):
     oracle states in closed form. Joint stereo (M/S, intensity) gates
     loudly. One narrow scan, no shuffle: the 100 TB shape."""
 
-    def row(did):
+    def encode(did):
         el, er = 1 + did % 7, 1 + (did * 3) % 7
         l0 = {"big": [
             (1 if did % 2 == 0 else -1) * (1 + did % 14),
@@ -7668,22 +7477,12 @@ def multimodal_mp3_stereo(spark, sf_dir):
             (-1 if did % 8 == 0 else 1) * (1 + (did * 17) % 15),
             (-1 if did % 9 == 0 else 1) * (1 + (did * 19) % 15),
         ], "gain_e": er}
-        au = multimodal.decode_mp3(
-            multimodal.encode_mp3([(l0, r0), (l1, r1)],
-                                  bitrate=128, mode="stereo")
+        return multimodal.encode_mp3(
+            [(l0, r0), (l1, r1)], bitrate=128, mode="stereo"
         )
-        left, right = au.samples[0::2], au.samples[1::2]
-        yield (did, len(au.samples), au.channels,
-               max(abs(s) for s in left),
-               sum(s * s for s in left),
-               max(abs(s) for s in right),
-               sum(s * s for s in right))
 
-    docs = Catalog(spark, sf_dir).table("documents").select("doc_id")
-    return map_rows(
-        docs, row,
-        "doc_id long, n_samples long, channels int, peak_l long,"
-        " energy_l long, peak_r long, energy_r long",
+    return _decoded_pcm_summary(
+        spark, sf_dir, encode, meta="channels", per_channel=True
     )
 
 
@@ -7841,16 +7640,9 @@ def _sql_mp3_reservoir() -> str:
     lengths (glen(v) = 2*floor(log2(v+1))+1) of frame 0's two values —
     a closed-form gate on the packing arithmetic."""
     taps = multimodal.mp3_line_taps(n_granules=4, lines=(0, 1, 18, 19))
-    t = {
-        k: "[" + ",".join(str(v) for v in taps[k]) + "]"
-        for k in ((0, 0), (1, 1), (2, 0), (2, 18), (3, 1), (3, 19))
-    }
-    p43 = "[" + ",".join(str(v) for v in multimodal.MP3_POW43) + "]"
-    half = 1 << (multimodal.MP3_SHIFT - 1)
-    pow2 = 1 << multimodal.MP3_SHIFT
-    acc = " + ".join(
-        f"x{g}_{l} * ({t[(g, l)]})[s + 1]"
-        for g, l in ((0, 0), (1, 1), (2, 0), (2, 18), (3, 1), (3, 19))
+    p43 = _sql_arr(multimodal.MP3_POW43)
+    acc = _sql_tap_sum(
+        taps, [(0, 0), (1, 1), (2, 0), (2, 18), (3, 1), (3, 19)]
     )
     glen = (
         "CASE WHEN {v} <= 2 THEN 3 WHEN {v} <= 6 THEN 5 "
@@ -7892,20 +7684,11 @@ def _sql_mp3_reservoir() -> str:
              CAST(83 - CAST(ceil((({g0}) + ({g1}) + 4) / 8.0) AS INT)
                   AS INT) AS mdb
       FROM cfg
-    ), pcm AS (
-      SELECT doc_id, mdb,
-             greatest(-32768, least(32767, CAST(floor(
-               ({acc} + {half}) / {pow2}.0) AS BIGINT))) AS p
-      FROM xr, (SELECT unnest(range(0, 2304)) AS s)
-    )
-    SELECT doc_id AS doc_id,
-           CAST(2304 AS BIGINT) AS n_samples,
-           CAST(44100 AS INT) AS sample_rate,
-           CAST(any_value(mdb) AS INT) AS mdb,
-           CAST(max(abs(p)) AS BIGINT) AS peak,
-           CAST(sum(p * p) AS BIGINT) AS energy
-    FROM pcm GROUP BY doc_id
-    """
+    {_sql_pcm_summary(
+        [_sql_pcm(acc, multimodal.MP3_SHIFT)], 2304,
+        (_SQL_RATE, "CAST(any_value(mdb) AS INT) AS mdb", *_SQL_PEAK_ENERGY),
+        keep=" mdb,",
+    )}"""
 
 
 @query("multimodal_mp3_reservoir", _sql_mp3_reservoir())
@@ -7966,25 +7749,10 @@ def _sql_mp3_ms() -> str:
     the dematrixed lines — left uses m + s, right m - s, stated in
     closed form per line."""
     taps = multimodal.mp3_line_taps(n_granules=2, lines=(0, 1, 18, 19))
-    t = {
-        k: "[" + ",".join(str(v) for v in taps[k]) + "]"
-        for k in ((0, 0), (0, 1), (1, 18), (1, 19))
-    }
-    p43 = "[" + ",".join(str(v) for v in multimodal.MP3_POW43) + "]"
-    half = 1 << (multimodal.MP3_SHIFT - 1)
-    pow2 = 1 << multimodal.MP3_SHIFT
-    acc_l = (
-        f"(xa + xc) * ({t[(0, 0)]})[s + 1]"
-        f" + xb * ({t[(0, 1)]})[s + 1]"
-        f" + xd * ({t[(1, 18)]})[s + 1]"
-        f" + (xe + xf) * ({t[(1, 19)]})[s + 1]"
-    )
-    acc_r = (
-        f"(xa - xc) * ({t[(0, 0)]})[s + 1]"
-        f" + xb * ({t[(0, 1)]})[s + 1]"
-        f" + xd * ({t[(1, 18)]})[s + 1]"
-        f" + (xe - xf) * ({t[(1, 19)]})[s + 1]"
-    )
+    p43 = _sql_arr(multimodal.MP3_POW43)
+    keys = [(0, 0), (0, 1), (1, 18), (1, 19)]
+    acc_l = _sql_tap_sum(taps, keys, ["(xa + xc)", "xb", "xd", "(xe + xf)"])
+    acc_r = _sql_tap_sum(taps, keys, ["(xa - xc)", "xb", "xd", "(xe - xf)"])
     return f"""
     WITH cfg AS (
       SELECT doc_id,
@@ -8014,23 +7782,11 @@ def _sql_mp3_ms() -> str:
              se * ({p43})[ve + 1] * (CAST(1 AS BIGINT) << em1) AS xe,
              sf * ({p43})[vf + 1] * (CAST(1 AS BIGINT) << es1) AS xf
       FROM cfg
-    ), pcm AS (
-      SELECT doc_id,
-             greatest(-32768, least(32767, CAST(floor(
-               ({acc_l} + {half}) / {pow2}.0) AS BIGINT))) AS pl,
-             greatest(-32768, least(32767, CAST(floor(
-               ({acc_r} + {half}) / {pow2}.0) AS BIGINT))) AS pr
-      FROM xr, (SELECT unnest(range(0, 1152)) AS s)
-    )
-    SELECT doc_id AS doc_id,
-           CAST(2304 AS BIGINT) AS n_samples,
-           CAST(2 AS INT) AS channels,
-           CAST(max(abs(pl)) AS BIGINT) AS peak_l,
-           CAST(sum(pl * pl) AS BIGINT) AS energy_l,
-           CAST(max(abs(pr)) AS BIGINT) AS peak_r,
-           CAST(sum(pr * pr) AS BIGINT) AS energy_r
-    FROM pcm GROUP BY doc_id
-    """
+    {_sql_pcm_summary(
+        [_sql_pcm(acc_l, multimodal.MP3_SHIFT, "pl"),
+         _sql_pcm(acc_r, multimodal.MP3_SHIFT, "pr")],
+        1152, (_SQL_CHANNELS, *_SQL_PEAK_ENERGY_LR),
+    )}"""
 
 
 @query("multimodal_mp3_ms_stereo", _sql_mp3_ms())
@@ -8050,7 +7806,7 @@ def multimodal_mp3_ms_stereo(spark, sf_dir):
     the dematrixed lines. One narrow scan, no shuffle: the 100 TB
     shape."""
 
-    def row(did):
+    def encode(did):
         m0 = {"big": [
             (1 if did % 2 == 0 else -1) * (1 + did % 14),
             (-1 if did % 3 == 0 else 1) * (1 + (did * 7) % 15),
@@ -8065,22 +7821,12 @@ def multimodal_mp3_ms_stereo(spark, sf_dir):
         s1 = {"big": [0] * 18 + [
             0, (-1 if did % 6 == 0 else 1) * (1 + (did * 13) % 15),
         ], "gain_e": 1 + (did * 9) % 7}
-        au = multimodal.decode_mp3(
-            multimodal.encode_mp3([(m0, s0), (m1, s1)],
-                                  bitrate=128, mode="ms")
+        return multimodal.encode_mp3(
+            [(m0, s0), (m1, s1)], bitrate=128, mode="ms"
         )
-        left, right = au.samples[0::2], au.samples[1::2]
-        yield (did, len(au.samples), au.channels,
-               max(abs(s) for s in left),
-               sum(s * s for s in left),
-               max(abs(s) for s in right),
-               sum(s * s for s in right))
 
-    docs = Catalog(spark, sf_dir).table("documents").select("doc_id")
-    return map_rows(
-        docs, row,
-        "doc_id long, n_samples long, channels int, peak_l long,"
-        " energy_l long, peak_r long, energy_r long",
+    return _decoded_pcm_summary(
+        spark, sf_dir, encode, meta="channels", per_channel=True
     )
 
 
@@ -9734,39 +9480,28 @@ def _sql_mp3_intensity() -> str:
     filterbank, so each output channel is a tap superposition of the
     panned line values, stated in closed form."""
     taps = multimodal.mp3_line_taps(n_granules=2, lines=(0, 1, 18, 19))
-    t = {
-        k: "[" + ",".join(str(v) for v in taps[k]) + "]"
-        for k in ((0, 0), (0, 18), (1, 1), (1, 19))
-    }
-    p43 = "[" + ",".join(str(v) for v in multimodal.MP3_POW43) + "]"
-    half = 1 << (multimodal.MP3_SHIFT - 1)
-    pow2 = 1 << multimodal.MP3_SHIFT
+    p43 = _sql_arr(multimodal.MP3_POW43)
 
     def is_l(x: str, p: str) -> str:
         return (
-            f"CASE WHEN {p} = 7 THEN {x} ELSE "
+            f"(CASE WHEN {p} = 7 THEN {x} ELSE "
             f"(CASE WHEN {x} < 0 THEN -1 ELSE 1 END)"
-            f" * ((abs({x}) * {p}) // 6) END"
+            f" * ((abs({x}) * {p}) // 6) END)"
         )
 
     def is_r(x: str, p: str) -> str:
         return (
-            f"CASE WHEN {p} = 7 THEN CAST(0 AS BIGINT) ELSE "
+            f"(CASE WHEN {p} = 7 THEN CAST(0 AS BIGINT) ELSE "
             f"(CASE WHEN {x} < 0 THEN -1 ELSE 1 END)"
-            f" * ((abs({x}) * (6 - {p})) // 6) END"
+            f" * ((abs({x}) * (6 - {p})) // 6) END)"
         )
 
-    acc_l = (
-        f"xa * ({t[(0, 0)]})[s + 1]"
-        f" + ({is_l('x18', 'p0')}) * ({t[(0, 18)]})[s + 1]"
-        f" + xc * ({t[(1, 1)]})[s + 1]"
-        f" + ({is_l('x19', 'p1')}) * ({t[(1, 19)]})[s + 1]"
+    keys = [(0, 0), (0, 18), (1, 1), (1, 19)]
+    acc_l = _sql_tap_sum(
+        taps, keys, ["xa", is_l("x18", "p0"), "xc", is_l("x19", "p1")]
     )
-    acc_r = (
-        f"xb0 * ({t[(0, 0)]})[s + 1]"
-        f" + ({is_r('x18', 'p0')}) * ({t[(0, 18)]})[s + 1]"
-        f" + xb1 * ({t[(1, 1)]})[s + 1]"
-        f" + ({is_r('x19', 'p1')}) * ({t[(1, 19)]})[s + 1]"
+    acc_r = _sql_tap_sum(
+        taps, keys, ["xb0", is_r("x18", "p0"), "xb1", is_r("x19", "p1")]
     )
     return f"""
     WITH cfg AS (
@@ -9799,23 +9534,11 @@ def _sql_mp3_intensity() -> str:
              se * ({p43})[ve + 1] * (CAST(1 AS BIGINT) << er0) AS xb0,
              sfg * ({p43})[vf + 1] * (CAST(1 AS BIGINT) << er1) AS xb1
       FROM cfg
-    ), pcm AS (
-      SELECT doc_id,
-             greatest(-32768, least(32767, CAST(floor(
-               ({acc_l} + {half}) / {pow2}.0) AS BIGINT))) AS pl,
-             greatest(-32768, least(32767, CAST(floor(
-               ({acc_r} + {half}) / {pow2}.0) AS BIGINT))) AS pr
-      FROM xr, (SELECT unnest(range(0, 1152)) AS s)
-    )
-    SELECT doc_id AS doc_id,
-           CAST(2304 AS BIGINT) AS n_samples,
-           CAST(2 AS INT) AS channels,
-           CAST(max(abs(pl)) AS BIGINT) AS peak_l,
-           CAST(sum(pl * pl) AS BIGINT) AS energy_l,
-           CAST(max(abs(pr)) AS BIGINT) AS peak_r,
-           CAST(sum(pr * pr) AS BIGINT) AS energy_r
-    FROM pcm GROUP BY doc_id
-    """
+    {_sql_pcm_summary(
+        [_sql_pcm(acc_l, multimodal.MP3_SHIFT, "pl"),
+         _sql_pcm(acc_r, multimodal.MP3_SHIFT, "pr")],
+        1152, (_SQL_CHANNELS, *_SQL_PEAK_ENERGY_LR),
+    )}"""
 
 
 @query("multimodal_mp3_intensity", _sql_mp3_intensity())
@@ -9835,7 +9558,7 @@ def multimodal_mp3_intensity(spark, sf_dir):
     through the same filterbank taps in closed form. mapInPandas
     Arrow batches, no shuffle."""
 
-    def row(did):
+    def encode(did):
         va = 1 + did % 14
         sa = 1 if did % 2 == 0 else -1
         vb = 1 + (did * 7) % 15
@@ -9867,25 +9590,10 @@ def multimodal_mp3_intensity(spark, sf_dir):
             "scalefac": [0, p1] + [0] * 19,
             "scalefac_compress": 13,
         }
-        buf = multimodal.encode_mp3(
-            [(g0l, g0r), (g1l, g1r)], mode="is"
-        )
-        out = multimodal.decode_mp3(buf)
-        lch = out.samples[0::2]
-        rch = out.samples[1::2]
-        yield (
-            did, len(out.samples), out.channels,
-            max(abs(v) for v in lch),
-            sum(v * v for v in lch),
-            max(abs(v) for v in rch),
-            sum(v * v for v in rch),
-        )
+        return multimodal.encode_mp3([(g0l, g0r), (g1l, g1r)], mode="is")
 
-    docs = Catalog(spark, sf_dir).table("documents").select("doc_id")
-    return map_rows(
-        docs, row,
-        "doc_id long, n_samples long, channels int, peak_l long,"
-        " energy_l long, peak_r long, energy_r long",
+    return _decoded_pcm_summary(
+        spark, sf_dir, encode, meta="channels", per_channel=True
     )
 
 
@@ -10525,18 +10233,9 @@ def _sql_mp3_mixed() -> str:
     taps = multimodal.mp3_line_taps(
         n_granules=2, lines=(0, 34, 36), block_types=("mixed", 0)
     )
-    t = {
-        k: "[" + ",".join(str(v) for v in taps[k]) + "]"
-        for k in ((0, 0), (0, 34), (0, 36), (1, 0))
-    }
-    p43 = "[" + ",".join(str(v) for v in multimodal.MP3_POW43) + "]"
-    half = 1 << (multimodal.MP3_SHIFT - 1)
-    pow2 = 1 << multimodal.MP3_SHIFT
-    acc = (
-        f"x0 * ({t[(0, 0)]})[s + 1]"
-        f" + x34 * ({t[(0, 34)]})[s + 1]"
-        f" + x36 * ({t[(0, 36)]})[s + 1]"
-        f" + xb1 * ({t[(1, 0)]})[s + 1]"
+    p43 = _sql_arr(multimodal.MP3_POW43)
+    acc = _sql_tap_sum(
+        taps, [(0, 0), (0, 34), (0, 36), (1, 0)], ["x0", "x34", "x36", "xb1"]
     )
     return f"""
     WITH cfg AS (
@@ -10559,18 +10258,9 @@ def _sql_mp3_mixed() -> str:
              s36 * ({p43})[v36 + 1] * (CAST(1 AS BIGINT) << (e0 - 2)) AS x36,
              sb1 * ({p43})[vb1 + 1] * (CAST(1 AS BIGINT) << e1) AS xb1
       FROM cfg
-    ), pcm AS (
-      SELECT doc_id,
-             greatest(-32768, least(32767, CAST(floor(
-               ({acc} + {half}) / {pow2}.0) AS BIGINT))) AS p
-      FROM xr, (SELECT unnest(range(0, 1152)) AS s)
-    )
-    SELECT doc_id AS doc_id,
-           CAST(1152 AS BIGINT) AS n_samples,
-           CAST(max(abs(p)) AS BIGINT) AS peak,
-           CAST(sum(p * p) AS BIGINT) AS energy
-    FROM pcm GROUP BY doc_id
-    """
+    {_sql_pcm_summary(
+        [_sql_pcm(acc, multimodal.MP3_SHIFT)], 1152, _SQL_PEAK_ENERGY
+    )}"""
 
 
 @query("multimodal_mp3_mixed", _sql_mp3_mixed())

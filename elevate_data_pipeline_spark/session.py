@@ -16,6 +16,30 @@ import os
 
 from pyspark.sql import SparkSession
 
+
+def driver_memory(meminfo: str | None = None) -> str:
+    """``spark.driver.memory`` for this box: half of ``MemTotal`` from
+    ``/proc/meminfo`` (or the ``meminfo`` text given), at most 16g; 16g
+    when MemTotal cannot be read.
+
+    In local mode the driver JVM runs every task, and its heap shares the
+    box with one Python worker per core, Arrow's off-heap buffers and the
+    page cache the parquet scans read through. A heap that may grow to
+    MemTotal (the old fixed 16g on a 15 GB box) lets the kernel kill the
+    JVM, with no Java error, before the collector would raise
+    ``OutOfMemoryError``; half leaves the other half for the rest."""
+    if meminfo is None:
+        try:
+            with open("/proc/meminfo", encoding="ascii") as f:
+                meminfo = f.read()
+        except OSError:
+            return "16g"
+    for line in meminfo.splitlines():
+        if line.startswith("MemTotal:"):
+            return f"{min(16 << 10, int(line.split()[1]) // 2048)}m"
+    return "16g"
+
+
 # At 100 TB these move to cluster-level conf; the *ratios* are what matter:
 # shuffle partitions sized so a partition fits comfortably in executor memory
 # (~128-256 MB of shuffle data each), AQE coalescing the excess at runtime.
@@ -36,7 +60,7 @@ _DEFAULTS = {
     # the \r-refreshed console progress bar interleaves with anything the
     # driver prints (bench.py emits one machine-parsed JSON line) — off
     "spark.ui.showConsoleProgress": "false",
-    "spark.driver.memory": os.environ.get("SPARK_GRAFT_DRIVER_MEM", "16g"),
+    "spark.driver.memory": os.environ.get("SPARK_GRAFT_DRIVER_MEM") or driver_memory(),
     # Python workers fork from a daemon that skips PySpark's per-task
     # re-read of unchanged zip archives (worker_daemon.py): ~0.2 s of CPU
     # off every Python task

@@ -64,6 +64,8 @@ import os
 import re
 import sys
 
+from pyspark.sql.classic.dataframe import DataFrame
+
 ROOT = os.path.dirname(os.path.dirname(os.path.abspath(__file__)))
 sys.path.insert(0, ROOT)
 
@@ -268,7 +270,10 @@ def _scala_iter(seq):
 def count_build(spark, build):
     """Call ``build()`` under a job group of its own; return the frame it
     built and its counts: ``plan_counts`` of its formatted plan, and
-    ``build_actions``, the Spark actions ``build()`` ran.
+    ``build_actions``, the Spark actions ``build()`` ran. ``py_nodes``
+    also counts the Python nodes of every frame ``build()`` passed to
+    ``localCheckpoint``: the built frame's plan shows only a scan of the
+    checkpoint, yet those Python stages run each time the query does.
 
     An action is a SQL execution that ran at least one job, or a job run
     outside any SQL execution (a plain RDD action, or the stages
@@ -282,10 +287,19 @@ def count_build(spark, build):
     newest = sql.executionsList(max(0, sql.executionsCount() - 1), 1)
     last = max((e.executionId() for e in _scala_iter(newest)), default=-1)
     group = f"plan-audit-{next(_GROUPS)}"
+    pinned = []
+    local_checkpoint = DataFrame.localCheckpoint
+
+    def spy(frame, *args, **kwargs):
+        pinned.append(frame)
+        return local_checkpoint(frame, *args, **kwargs)
+
     sc.setJobGroup(group, group)
+    DataFrame.localCheckpoint = spy
     try:
         df = build()
     finally:
+        DataFrame.localCheckpoint = local_checkpoint
         sc.setLocalProperty("spark.jobGroup.id", None)
     # both status stores are fed by the asynchronous listener bus; drain
     # it so a job that just ended is not missed
@@ -305,6 +319,13 @@ def count_build(spark, build):
             break
         end = start
     counts = plan_counts(plan_text(df, "formatted"))
+    # a checkpointed frame has usually run by now, and the plan of a run
+    # adaptive query lists its final and its initial plan: count a
+    # fresh plan of the same query
+    counts["py_nodes"] += sum(
+        plan_counts(plan_text(f.select("*"), "formatted"))["py_nodes"]
+        for f in pinned
+    )
     counts["build_actions"] = actions + len(bare)
     return df, counts
 

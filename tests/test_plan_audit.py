@@ -152,6 +152,23 @@ def test_counter_python_node(spark):
     assert c["py_nodes"] == 1
 
 
+def test_counter_python_node_behind_checkpoint(spark):
+    """A Python stage the builder checkpoints still counts: the built
+    frame's plan shows only the checkpoint scan."""
+
+    @pandas_udf("long")
+    def plus_one(s: pd.Series) -> pd.Series:
+        return s + 1
+
+    def build(eager):
+        pinned = spark.range(10).select(plus_one("id").alias("v"))
+        return pinned.localCheckpoint(eager=eager).filter("v > 3")
+
+    # an eager checkpoint has run: its plan must still count once
+    assert _counts(spark, lambda: build(True))["py_nodes"] == 1
+    assert _counts(spark, lambda: build(False))["py_nodes"] == 1
+
+
 def test_counter_pushed_scan(spark, tmp_path):
     path = str(tmp_path / "t.parquet")
     spark.range(10).write.parquet(path)

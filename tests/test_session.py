@@ -158,3 +158,12 @@ def test_jvm_only_run_starts_no_python_process(subprocess_run):
 
 def test_python_stage_runs_outside_the_repo(subprocess_run):
     assert subprocess_run["squares"] == sum(x * x for x in range(10))
+
+
+def test_driver_memory_is_half_of_memtotal_capped_at_16g():
+    from elevate_data_pipeline_spark.session import driver_memory
+
+    box = "MemTotal:       15728640 kB\nMemFree:        14000000 kB\n"
+    assert driver_memory(box) == "7680m"
+    assert driver_memory("MemTotal: 268435456 kB\n") == "16384m"
+    assert driver_memory("MemFree: 1024 kB\n") == "16g"
