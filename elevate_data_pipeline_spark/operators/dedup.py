@@ -83,6 +83,95 @@ def char_ngrams(col: str, n: int = 3) -> Column:
     )
 
 
+def _gram_sets(texts, n: int) -> list:
+    """Distinct character ``n``-grams of each text by :func:`char_ngrams`'s
+    rule: ``t[k:k+n]`` for every start ``k`` in
+    ``range(max(len(t) - n + 1, 1))``, so a text shorter than ``n`` (the
+    empty text too) is one partial gram. Python strings index by code
+    point, as Spark's ``substring`` and ``length`` do."""
+    return [
+        frozenset(t[k : k + n] for k in range(max(len(t) - n + 1, 1))) for t in texts
+    ]
+
+
+def _jaccard(inter, size_a, size_b):
+    """Exact Jaccard from an intersection count and the two set sizes:
+    one float64 division, as the distributed verify's
+    ``double / double``. Scalars or numpy arrays."""
+    return np.divide(inter, size_a + size_b - inter, dtype=np.float64)
+
+
+# Gate for the driver-local n-gram Jaccard tier: one incidence product
+# per block against the distributed chain's ten Spark jobs. Measured
+# (docs/LOCAL_TIERS.md, 20 blocks, warm 4 cores): local wins 1.4 vs
+# 33 s at 10k docs and 4.8 vs 163 s at 20k. The gate sits at the largest
+# measured size; the crossover is above it.
+_NGRAM_LOCAL_MAX_ROWS = 20_000
+# Rows on each side of one incidence product: the tier holds at most two
+# chunk x gram float32 matrices at a time, whatever the block size.
+_NGRAM_CHUNK_ROWS = 512
+
+
+def _ngram_jaccard_local(spark, local, n: int, threshold: float) -> DataFrame:
+    """Driver-local replay of :func:`ngram_jaccard_pairs` for gate-sized
+    tagged scans. Per block, the 0/1 doc x gram incidence matrix in
+    float32 times its transpose gives every pair's intersection count,
+    exact below 2^24; Jaccard, the ``id_a < id_b`` order and the
+    ``>= threshold`` cut then match the distributed verify bit for bit.
+    A row with a null id, text or block joins no pair there, so it is
+    dropped here. Forced-off equality test in
+    tests/test_local_vs_distributed.py."""
+    blocks: dict = {}
+    for did, t, blk in zip(*local):
+        if did is not None and t is not None and blk is not None:
+            blocks.setdefault(blk, []).append((did, t))
+    R = _NGRAM_CHUNK_ROWS
+    out_a, out_b, out_j = [np.empty(0, np.int64)], [np.empty(0, np.int64)], [np.empty(0)]
+    for docs in blocks.values():
+        docs.sort(key=lambda d: d[0])
+        m = len(docs)
+        ids = np.array([d for d, _ in docs], dtype=np.int64)
+        vocab: dict = {}
+        grams = [
+            np.fromiter((vocab.setdefault(g, len(vocab)) for g in s), np.int64, len(s))
+            for s in _gram_sets([t for _, t in docs], n)
+        ]
+        sizes = np.array([len(g) for g in grams], dtype=np.int64)
+        rows = np.repeat(np.arange(m, dtype=np.int64), sizes)
+        cols = np.concatenate(grams)
+        starts = np.concatenate(([0], np.cumsum(sizes)))
+        loc = np.full(len(vocab), -1, dtype=np.int64)  # gram -> column of chunk i
+        for i in range(0, m, R):
+            ci = np.unique(cols[starts[i] : starts[min(i + R, m)]])
+            loc[ci] = np.arange(len(ci))
+            for j in range(i, m, R):
+                # chunk j over chunk i's grams: the others meet no row of A
+                rj = slice(starts[j], starts[min(j + R, m)])
+                cj = loc[cols[rj]]
+                hit = cj >= 0
+                B = np.zeros((min(R, m - j), len(ci)), dtype=np.float32)
+                B[rows[rj][hit] - j, cj[hit]] = 1.0
+                A = B if j == i else A
+                inter = (A @ B.T).astype(np.int64)
+                jac = _jaccard(inter, sizes[i : i + R, None], sizes[None, j : j + R])
+                a, b = np.nonzero(
+                    (ids[i : i + R, None] < ids[None, j : j + R]) & (jac >= threshold)
+                )
+                out_a.append(ids[i + a])
+                out_b.append(ids[j + b])
+                out_j.append(jac[a, b])
+            loc[ci] = -1
+    return local_frame(
+        spark,
+        {
+            "id_a": np.concatenate(out_a),
+            "id_b": np.concatenate(out_b),
+            "jaccard": np.concatenate(out_j),
+        },
+        "id_a long, id_b long, jaccard double",
+    )
+
+
 def ngram_jaccard_pairs(
     df: DataFrame,
     text_col: str = "text",
@@ -91,17 +180,36 @@ def ngram_jaccard_pairs(
     n: int = 3,
     threshold: float = 0.5,
 ) -> DataFrame:
-    """Near-dup pairs by character-n-gram Jaccard within blocks, via an
-    inverted index: explode distinct grams, equi-join on (block, gram),
-    count co-occurrences per pair, then Jaccard from the set sizes.
+    """Near-dup pairs by exact character-``n``-gram Jaccard within blocks:
+    every pair of one block with ``id_a < id_b`` and
+    ``jaccard >= threshold``. Returns (id_a, id_b, jaccard).
 
-    Only pairs that SHARE at least one gram ever materialize — unlike a
-    blocked cross join + array_intersect, whose cost is quadratic in
-    block size regardless of similarity (60x slower at sf0.1). The one
-    wide exchange is the (block, gram) shuffle; a stop-gram cut (drop
-    grams appearing in > X% of a block) bounds hot grams at 100 TB.
-    Returns (id_a, id_b, jaccard).
+    A gate-sized, untransformed Catalog scan (at most
+    ``_NGRAM_LOCAL_MAX_ROWS`` rows, read from the parquet footer with no
+    Spark job) is served by :func:`_ngram_jaccard_local`, one incidence
+    product per block on the driver. Anything else takes the distributed
+    PPJoin chain (Xiao et al. 2008):
+
+    1. explode each doc's distinct grams and rank them per block
+       rarest-first (document frequency, then the gram), so every later
+       stage works on int gram ids;
+    2. prefix filter: J >= t forces a shared gram among each doc's first
+       ``|g| - ceil(t*|g|) + 1`` ids, so candidates come from an
+       equi-join of the prefix postings on (block, gram id), with the
+       length filter inline;
+    3. positional filter on the pair's first common prefix gram;
+    4. exact verify: ``array_intersect`` of the two full id sets.
+
+    Only pairs that share a prefix gram ever materialize, unlike a
+    blocked cross join, whose cost is quadratic in block size whatever
+    the similarity.
     """
+    from .util import collect_small_columns
+
+    local = collect_small_columns(df, [id_col, text_col, block_col], _NGRAM_LOCAL_MAX_ROWS)
+    if local is not None:
+        return _ngram_jaccard_local(df.sparkSession, local, n, threshold)
+
     from pyspark.sql.window import Window
 
     df = spread(df)  # single-file reads otherwise pin the gram explode to one core
@@ -382,22 +490,19 @@ def sorted_neighborhood_pairs(
         import re as _re
 
         ids, texts = local
-        recs = []
-        for did, t in zip(ids, texts):
-            k = _re.sub(r"[^a-z0-9 ]", "", t.lower())[:key_len]
-            if len(t) >= n:
-                grams = frozenset(t[i : i + n] for i in range(len(t) - n + 1))
-            else:
-                grams = frozenset((t,))  # one truncated partial gram
-            recs.append((k, did, grams))
-        recs.sort(key=lambda r: (r[0], r[1]))
+        recs = sorted(
+            (
+                (_re.sub(r"[^a-z0-9 ]", "", t.lower())[:key_len], did, grams)
+                for did, t, grams in zip(ids, texts, _gram_sets(texts, n))
+            ),
+            key=lambda r: (r[0], r[1]),
+        )
         out = []
         for i in range(len(recs)):
             ga = recs[i][2]
             for j in range(i + 1, min(i + window, len(recs))):
                 gb = recs[j][2]
-                inter = len(ga & gb)
-                jac = float(inter) / float(len(ga) + len(gb) - inter)
+                jac = _jaccard(len(ga & gb), len(ga), len(gb))
                 if jac >= threshold:
                     out.append((recs[i][1], recs[j][1], jac))
         return local_frame(

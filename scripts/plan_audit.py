@@ -134,7 +134,7 @@ WAIVERS: dict[str, str] = {
     "text_perplexity_filter": f"{_PID} + {_SCALAR}; count offsets + total-count scalar for the head/middle/tail tercile cuts (exact_ntile)",
 }
 
-# The 8 driver-local fast tiers (docs/LOCAL_TIERS.md). At audit scale
+# The 9 driver-local fast tiers (docs/LOCAL_TIERS.md). At audit scale
 # their gates make the tiered queries compile to a trivial
 # local relation, so the gates-ON sweep never sees their distributed
 # chains — the 100 TB path. The gates-OFF sweep forces every gate to -1
@@ -142,6 +142,7 @@ WAIVERS: dict[str, str] = {
 _TIER_GATES: list[tuple[str, str]] = [
     ("elevate_data_pipeline_spark.operators.cluster", "_LLOYD_LOCAL_MAX_ROWS"),
     ("elevate_data_pipeline_spark.operators.decontam", "_BLOOM_LOCAL_MAX_ROWS"),
+    ("elevate_data_pipeline_spark.operators.dedup", "_NGRAM_LOCAL_MAX_ROWS"),
     ("elevate_data_pipeline_spark.operators.dedup", "_SPANS_LOCAL_MAX_ROWS"),
     ("elevate_data_pipeline_spark.operators.dedup", "_SNM_LOCAL_MAX_ROWS"),
     ("elevate_data_pipeline_spark.operators.graph", "_PAGERANK_LOCAL_MAX_EDGES"),

@@ -158,6 +158,59 @@ def test_snm_local_equals_distributed(spark, monkeypatch, catalog):
     )
 
 
+@pytest.mark.parametrize("threshold", [0.5, 0.6])
+def test_ngram_jaccard_local_equals_distributed(spark, monkeypatch, catalog, threshold):
+    """The per-block incidence product must equal the PPJoin chain
+    pair-for-pair, with one chunk per block and with several."""
+    from elevate_data_pipeline_spark.operators import dedup
+
+    docs = catalog.table("documents")
+    got_local = _rows(dedup.ngram_jaccard_pairs(docs, threshold=threshold))
+    assert len(got_local) > 0
+    monkeypatch.setattr(dedup, "_NGRAM_CHUNK_ROWS", 7)
+    assert got_local == _rows(dedup.ngram_jaccard_pairs(docs, threshold=threshold))
+    monkeypatch.setattr(dedup, "_NGRAM_LOCAL_MAX_ROWS", -1)
+    assert got_local == _rows(dedup.ngram_jaccard_pairs(docs, threshold=threshold))
+
+
+def test_ngram_jaccard_local_edge_rows(spark, monkeypatch, tmp_path):
+    """Short, empty and null texts, a null block, one text in two blocks
+    and a pair at exactly the threshold, both ways."""
+    import pyarrow as pa
+    import pyarrow.parquet as pq
+
+    from elevate_data_pipeline_spark.operators import dedup
+    from elevate_data_pipeline_spark.sources.catalog import Catalog
+
+    rows = [
+        (1, "ab", "s1"),  # shorter than n: one partial gram
+        (2, "ab", "s1"),
+        (3, "", "s1"),  # empty: the partial gram ""
+        (4, "", "s1"),
+        (5, None, "s1"),  # a null text joins no pair
+        (6, None, "s1"),
+        (7, "abcdef", None),  # a null source is no block
+        (8, "abcdef", None),
+        (9, "abcdef", "s1"),  # the same text in two sources
+        (10, "abcdef", "s2"),
+        (11, "abcdex", "s2"),  # 3 of 5 grams shared with doc 10
+    ]
+    ids, texts, sources = zip(*rows)
+    pq.write_table(
+        pa.table({
+            "doc_id": pa.array(ids, pa.int64()),
+            "text": pa.array(texts, pa.string()),
+            "source": pa.array(sources, pa.string()),
+        }),
+        tmp_path / "documents.parquet",
+    )
+    docs = Catalog(spark, str(tmp_path)).table("documents")
+    want = [(1, 2, 1.0), (3, 4, 1.0), (10, 11, 0.6)]
+    assert _rows(dedup.ngram_jaccard_pairs(docs, threshold=0.6)) == want
+    monkeypatch.setattr(dedup, "_NGRAM_LOCAL_MAX_ROWS", -1)
+    assert _rows(dedup.ngram_jaccard_pairs(docs, threshold=0.6)) == want
+
+
 def test_suffix_array_local_equals_distributed(spark, monkeypatch, catalog):
     """The numpy doubling replay must equal the distributed prefix-
     doubling chain rank-for-rank."""
