@@ -76,33 +76,132 @@ def ngram_contamination(
 
 
 # Gate for the driver-local Bloom-decontamination tier (pattern of
-# dedup._SPANS_LOCAL_MAX_ROWS): gram extraction, polyhash, bloom bit
-# math and the exact-set compare are all integer replays over Python
-# sets/dicts. The gate sits AT the measured crossover because the tie
-# there is proven noise in BOTH directions:
-# on the synthetic crossover corpus distributed edges local by 4% at
-# 5k docs (4.21 vs 4.40 s, docs/LOCAL_TIERS.md table), on the REAL
-# testdata at the same 5k local edges distributed by 5% (2.96 vs
-# 3.11 s, 5-run solo medians), and in full-sweep context the local
-# tier is clearly cheaper (3.3 vs 4.7-5.3 s — fewer stages, less GC
-# exposure). Above the gate the distributed chain wins decisively
-# (2.2x at 20k, 2.8x at 50k).
+# dedup._SPANS_LOCAL_MAX_ROWS). The tier is numpy array passes
+# (_bloom_local): one polyhash and one set of Bloom positions per
+# distinct gram, a boolean bitmap probe and per-doc bincounts. The gate
+# was set AT the crossover measured for an older per-gram Python
+# kernel, where the tie was noise in BOTH directions: on the synthetic
+# crossover corpus distributed edged local by 4% at 5k docs (4.21 vs
+# 4.40 s, docs/LOCAL_TIERS.md table), on the REAL testdata at the same
+# 5k local edged distributed by 5% (2.96 vs 3.11 s, 5-run solo
+# medians), and above it the distributed chain won 2.2x at 20k and 2.8x
+# at 50k. The gate stays there: the array kernel is cheaper than the
+# kernel that crossover was measured on, and moving the gate needs a
+# crossover measurement of its own.
 _BLOOM_LOCAL_MAX_ROWS = 5_000
 
 
-def _hll_hash_py(v: int) -> int:
-    """Integer replay of sketch._hll_hash_col (same constants, same
-    op order; exact by unbounded Python ints)."""
-    ring, half, k1, k2 = 4_294_967_296, 65_536, 2_654_435_761, 2_246_822_519
-    v %= ring
+def _poly_powers(k: int):
+    """``POLY_BASE ** e % POLY_MOD`` for ``e`` in ``0..k``, by doubling
+    (each product of two residues is below 2^60)."""
+    import numpy as np
 
-    def splitmul(x: int, k: int) -> int:
-        return (x // half * k % half * half + x % half * k) % ring
+    from ..functions.text import POLY_BASE, POLY_MOD
 
-    r1 = splitmul(v, k1)
-    x1 = r1 ^ (r1 // half)
-    r2 = splitmul(x1, k2)
-    return r2 ^ (r2 // 8192)
+    pw = np.ones(1, dtype=np.int64)
+    while len(pw) <= k:
+        pw = np.concatenate([pw, pw * (pw[-1] * POLY_BASE % POLY_MOD) % POLY_MOD])
+    return pw
+
+
+def _bloom_local(ids, texts, sources, bench_source, n, m_bits, depth) -> dict:
+    """Driver-local replay of :func:`bloom_decontaminate`'s distributed
+    chain as numpy array passes; returns its output columns by name.
+
+    - Words: ``split(text, ' ')`` by Arrow (empty words kept, a null
+      text has none); every distinct word gets an id, its length in
+      code points and its polyhash, from one UTF-32 code-point array.
+    - Grams: the ``n`` word ids at each start position of a text with
+      at least ``n`` words, packed into one int64 key and ranked by 1-D
+      ``np.unique``, give each distinct gram one id. Its polyhash is
+      its words' hashes joined by spaces:
+      ``h(a + b) = h(a) * BASE^len(b) + h(b)``.
+    - Filter: the ``depth`` salted ``hll_hash`` positions of every
+      benchmark gram set an ``m_bits`` bitmap; a gram hits when all of
+      its positions are set. The exact set is a boolean array over ids.
+    - Counts: distinct (doc, gram) pairs of the eval docs, then
+      ``bincount`` per ``doc_id`` value (a null id is one group, as in
+      ``groupBy``). Null sources are neither benchmark nor eval docs.
+    """
+    import numpy as np
+    import pyarrow as pa
+    import pyarrow.compute as pc
+
+    from ..functions.text import POLY_BASE, POLY_MOD
+    from .sketch import CMS_SALTS, _hll_hash_np
+
+    words = pc.split_pattern(pa.array(texts, pa.string()), " ")
+    n_words = pc.fill_null(pc.list_value_length(words), 0).to_numpy().astype(np.int64)
+    enc = pc.list_flatten(words).dictionary_encode()
+    wid = enc.indices.to_numpy().astype(np.int64)
+    vocab = enc.dictionary
+    wlen = pc.utf8_length(vocab).to_numpy().astype(np.int64)
+    cps = np.frombuffer(
+        "".join(vocab.to_pylist()).encode("utf-32-le"), dtype=np.uint32
+    ).astype(np.int64)
+    pw = _poly_powers(int(wlen.max(initial=0)))
+    wend = np.cumsum(wlen)
+    # each code point times BASE^(chars after it in its word)
+    terms = cps * pw[np.repeat(wend - 1, wlen) - np.arange(len(cps))] % POLY_MOD
+    csum = np.concatenate([[0], np.cumsum(terms)])
+    wh = (csum[wend] - csum[wend - wlen]) % POLY_MOD
+
+    per_doc = np.maximum(n_words - (n - 1), 0)
+    doc = np.repeat(np.arange(len(per_doc)), per_doc)
+    gstart = np.cumsum(per_doc) - per_doc
+    pos = np.repeat(np.cumsum(n_words) - n_words - gstart, per_doc) + np.arange(
+        len(doc)
+    )
+    # mixed-radix key over the gram's word ids, re-ranked to dense ids
+    # whenever the next word would overflow int64
+    gid, bound = np.zeros(len(pos), dtype=np.int64), 1
+    for k in range(n):
+        if bound * len(vocab) >= 2**62:
+            uniq, gid = np.unique(gid, return_inverse=True)
+            bound = len(uniq)
+        gid, bound = gid * len(vocab) + wid[pos + k], bound * len(vocab)
+    uniq, gid = np.unique(gid, return_inverse=True)
+    n_ids = len(uniq)
+    rep = np.empty(n_ids, dtype=np.int64)
+    rep[gid] = pos
+    h = wh[wid[rep]]
+    for k in range(1, n):
+        w = wid[rep + k]
+        h = ((h * POLY_BASE + ord(" ")) % POLY_MOD * pw[wlen[w]] + wh[w]) % POLY_MOD
+
+    src = pa.array(sources, pa.string())
+    is_bench = pc.fill_null(pc.equal(src, bench_source), False).to_numpy(
+        zero_copy_only=False
+    )
+    is_eval = pc.fill_null(pc.not_equal(src, bench_source), False).to_numpy(
+        zero_copy_only=False
+    )
+    exact = np.zeros(n_ids, dtype=bool)
+    exact[gid[is_bench[doc]]] = True
+    bit = np.array(
+        [_hll_hash_np(h ^ salt) % m_bits for salt in CMS_SALTS[:depth]],
+        dtype=np.int64,
+    ).reshape(depth, n_ids)
+    bitmap = np.zeros(m_bits, dtype=bool)
+    bitmap[bit[:, exact]] = True
+    bloom = bitmap[bit].all(axis=0)
+
+    pairs = np.unique(doc[is_eval[doc]] * n_ids + gid[is_eval[doc]])
+    pdoc, pgram = np.divmod(pairs, n_ids)
+    id_arr = pa.array(ids, pa.int64())
+    id_vals, id_rank = np.unique(id_arr.fill_null(0).to_numpy(), return_inverse=True)
+    id_key = id_rank * 2 + id_arr.is_null().to_numpy(zero_copy_only=False)
+    keys, grp = np.unique(id_key[pdoc], return_inverse=True)
+    n_grams = np.bincount(grp, minlength=len(keys))
+    n_bloom = np.bincount(grp[bloom[pgram]], minlength=len(keys))
+    n_exact = np.bincount(grp[exact[pgram]], minlength=len(keys))
+    return {
+        "doc_id": np.ma.masked_array(id_vals[keys // 2], mask=keys % 2 == 1),
+        "n_grams": n_grams,
+        "n_bloom": n_bloom,
+        "n_exact": n_exact,
+        "bloom_fp": n_bloom - n_exact,
+    }
 
 
 def bloom_decontaminate(
@@ -121,71 +220,25 @@ def bloom_decontaminate(
     false positives, an exactly-gated output because the whole pipeline
     is integer arithmetic).
 
-    Driver-local tier for gate-sized tagged scans (bit-identical —
-    forced-off equality test in tests/test_local_vs_distributed.py);
-    distributed chain otherwise: gram explode -> distinct -> bit
-    explode/distinct build (at most m_bits rows), broadcast bit-set
-    semi-probe, one per-doc aggregate.
+    Driver-local tier for gate-sized tagged scans: numpy array passes
+    that hash each distinct gram once, probe a boolean bitmap and count
+    per doc with ``bincount`` (:func:`_bloom_local`; bit-identical —
+    forced-off equality and edge-row tests in
+    tests/test_local_vs_distributed.py). Distributed chain otherwise:
+    gram explode -> distinct -> bit explode/distinct build (at most
+    m_bits rows), broadcast bit-set semi-probe, one per-doc aggregate.
     """
-    from ..functions.text import POLY_BASE, POLY_MOD, polyhash
+    from ..functions.text import polyhash
     from . import sketch
-    from .sketch import CMS_SALTS
     from .util import collect_small_columns, spread
 
     local = collect_small_columns(
         docs, ["doc_id", "text", "source"], _BLOOM_LOCAL_MAX_ROWS
     )
     if local is not None:
-        ids, texts, sources = local
-
-        def grams(t: str) -> list:
-            ws = t.split(" ")
-            seen, out = set(), []
-            for i in range(len(ws) - n + 1):
-                g = " ".join(ws[i : i + n])
-                if g not in seen:
-                    seen.add(g)
-                    out.append(g)
-            return out
-
-        def ph(g: str) -> int:
-            a = 0
-            for ch in g:
-                a = (a * POLY_BASE + ord(ch)) % POLY_MOD
-            return a
-
-        bench_grams: set = set()
-        for t, s in zip(texts, sources):
-            if s == bench_source:
-                bench_grams.update(grams(t))
-        bits: set = set()
-        pos_cache: dict[str, tuple] = {}
-
-        def positions(g: str) -> tuple:
-            p = pos_cache.get(g)
-            if p is None:
-                h = ph(g)
-                p = tuple(
-                    {_hll_hash_py(h ^ salt) % m_bits for salt in CMS_SALTS[:depth]}
-                )
-                pos_cache[g] = p
-            return p
-
-        for g in bench_grams:
-            bits.update(positions(g))
-        rows = []
-        for did, t, s in zip(ids, texts, sources):
-            if s == bench_source:
-                continue
-            gs = grams(t)
-            if not gs:
-                continue
-            n_bloom = sum(1 for g in gs if all(b in bits for b in positions(g)))
-            n_exact = sum(1 for g in gs if g in bench_grams)
-            rows.append((did, len(gs), n_bloom, n_exact, n_bloom - n_exact))
         return local_frame(
             docs.sparkSession,
-            rows,
+            _bloom_local(*local, bench_source, n, m_bits, depth),
             "doc_id long, n_grams bigint, n_bloom bigint, n_exact bigint,"
             " bloom_fp bigint",
         )

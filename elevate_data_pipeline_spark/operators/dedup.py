@@ -87,10 +87,14 @@ def _gram_sets(texts, n: int) -> list:
     """Distinct character ``n``-grams of each text by :func:`char_ngrams`'s
     rule: ``t[k:k+n]`` for every start ``k`` in
     ``range(max(len(t) - n + 1, 1))``, so a text shorter than ``n`` (the
-    empty text too) is one partial gram. Python strings index by code
-    point, as Spark's ``substring`` and ``length`` do."""
+    empty text too) is one partial gram, and a null text is one null
+    gram (``greatest`` skips the null length). Python strings index by
+    code point, as Spark's ``substring`` and ``length`` do."""
     return [
-        frozenset(t[k : k + n] for k in range(max(len(t) - n + 1, 1))) for t in texts
+        frozenset([None])
+        if t is None
+        else frozenset(t[k : k + n] for k in range(max(len(t) - n + 1, 1)))
+        for t in texts
     ]
 
 
@@ -490,12 +494,17 @@ def sorted_neighborhood_pairs(
         import re as _re
 
         ids, texts = local
+        # a null text has a null key; both sort keys put nulls first
         recs = sorted(
             (
-                (_re.sub(r"[^a-z0-9 ]", "", t.lower())[:key_len], did, grams)
+                (
+                    None if t is None else _re.sub(r"[^a-z0-9 ]", "", t.lower())[:key_len],
+                    did,
+                    grams,
+                )
                 for did, t, grams in zip(ids, texts, _gram_sets(texts, n))
             ),
-            key=lambda r: (r[0], r[1]),
+            key=lambda r: (r[0] is not None, r[0], r[1] is not None, r[1]),
         )
         out = []
         for i in range(len(recs)):

@@ -119,6 +119,22 @@ def _hll_hash_col(key: Column) -> Column:
     return r2.bitwiseXOR(F.floor(r2 / 8192).cast("long"))
 
 
+def _hll_hash_np(key):
+    """numpy twin of :func:`_hll_hash_col` over an int64 array (same
+    constants, same operation order; every intermediate is below 2^49,
+    so int64 is exact)."""
+    import numpy as np
+
+    def splitmul(v, k: int):
+        return (v // _HLL_HALF * k % _HLL_HALF * _HLL_HALF + v % _HLL_HALF * k) % _HLL_RING
+
+    id32 = np.mod(np.asarray(key, dtype=np.int64), _HLL_RING)
+    r1 = splitmul(id32, _HLL_K1)
+    x1 = r1 ^ (r1 // _HLL_HALF)
+    r2 = splitmul(x1, _HLL_K2)
+    return r2 ^ (r2 // 8192)
+
+
 def _hll_rho_col(w: Column, wbits: int) -> Column:
     """Leading-zero rank of the ``wbits``-bit suffix, integer-only:
     rho = 1 for the top bit set ... wbits for w == 1, wbits+1 for w == 0."""

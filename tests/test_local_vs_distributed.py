@@ -30,8 +30,33 @@ def _vectors(spark, n=40, dim=8):
 
 
 def _rows(df, cols=None):
+    """Collected rows, sorted with nulls first in every column."""
     cols = cols or df.columns
-    return sorted(tuple(r[c] for c in cols) for r in df.select(cols).collect())
+    return sorted(
+        (tuple(r[c] for c in cols) for r in df.select(cols).collect()),
+        key=lambda row: [(v is not None, v) for v in row],
+    )
+
+
+def _tagged_documents(spark, tmp_path, rows):
+    """A ``documents`` Catalog scan over ``(doc_id, text, source)`` rows,
+    written to parquet under ``tmp_path``: the path-tagged frame the
+    driver-local tiers read without a Spark job."""
+    import pyarrow as pa
+    import pyarrow.parquet as pq
+
+    from elevate_data_pipeline_spark.sources.catalog import Catalog
+
+    ids, texts, sources = zip(*rows)
+    pq.write_table(
+        pa.table({
+            "doc_id": pa.array(ids, pa.int64()),
+            "text": pa.array(texts, pa.string()),
+            "source": pa.array(sources, pa.string()),
+        }),
+        tmp_path / "documents.parquet",
+    )
+    return Catalog(spark, str(tmp_path)).table("documents")
 
 
 def test_quantize_matches_spark_decimal_cast(spark):
@@ -176,13 +201,9 @@ def test_ngram_jaccard_local_equals_distributed(spark, monkeypatch, catalog, thr
 def test_ngram_jaccard_local_edge_rows(spark, monkeypatch, tmp_path):
     """Short, empty and null texts, a null block, one text in two blocks
     and a pair at exactly the threshold, both ways."""
-    import pyarrow as pa
-    import pyarrow.parquet as pq
-
     from elevate_data_pipeline_spark.operators import dedup
-    from elevate_data_pipeline_spark.sources.catalog import Catalog
 
-    rows = [
+    docs = _tagged_documents(spark, tmp_path, [
         (1, "ab", "s1"),  # shorter than n: one partial gram
         (2, "ab", "s1"),
         (3, "", "s1"),  # empty: the partial gram ""
@@ -194,21 +215,68 @@ def test_ngram_jaccard_local_edge_rows(spark, monkeypatch, tmp_path):
         (9, "abcdef", "s1"),  # the same text in two sources
         (10, "abcdef", "s2"),
         (11, "abcdex", "s2"),  # 3 of 5 grams shared with doc 10
-    ]
-    ids, texts, sources = zip(*rows)
-    pq.write_table(
-        pa.table({
-            "doc_id": pa.array(ids, pa.int64()),
-            "text": pa.array(texts, pa.string()),
-            "source": pa.array(sources, pa.string()),
-        }),
-        tmp_path / "documents.parquet",
-    )
-    docs = Catalog(spark, str(tmp_path)).table("documents")
+    ])
     want = [(1, 2, 1.0), (3, 4, 1.0), (10, 11, 0.6)]
     assert _rows(dedup.ngram_jaccard_pairs(docs, threshold=0.6)) == want
     monkeypatch.setattr(dedup, "_NGRAM_LOCAL_MAX_ROWS", -1)
     assert _rows(dedup.ngram_jaccard_pairs(docs, threshold=0.6)) == want
+
+
+def test_bloom_decontaminate_local_edge_rows(spark, monkeypatch, tmp_path):
+    """Null texts, sources and ids, short texts, repeated grams, empty
+    and non-ASCII words, and benchmark-only docs, both ways: the tier
+    must drop and fold rows exactly as the distributed chain does."""
+    from elevate_data_pipeline_spark.operators import decontam
+
+    docs = _tagged_documents(spark, tmp_path, [
+        (1, "the quick brown fox jumps over the lazy dog", "src0"),
+        (2, "caf\u00e9 au lait is a fine drink \U0001f600", "src0"),
+        (3, "only the benchmark holds this text", "src0"),  # src0 only
+        (4, None, "src0"),  # a null benchmark text adds no gram
+        (10, None, "src1"),  # a null text has no row
+        (11, "the quick brown fox jumps over", None),  # a null source: no row
+        (None, "the quick brown fox jumps over the", "src1"),  # two null
+        (None, "jumps over the lazy dog and", "src2"),  # ids: one row
+        (12, "too short to count", "src1"),  # under 5 words: no row
+        (13, "a b c d e a b c d e", "src1"),  # a repeated gram counts once
+        (14, "the quick  brown fox jumps over the", "src1"),  # empty word
+        (15, "caf\u00e9 au lait is a fine drink \U0001f600 too", "src1"),
+        (16, "quick brown fox jumps over the lazy ", "src2"),  # trailing ""
+        (17, "is a fine drink today", "src1"),  # one id in two
+        (17, "the lazy dog naps all day", "src2"),  # sources: one row
+        (18, "", "src1"),
+    ])
+    cases = [{}, {"depth": 2}, {"m_bits": 61}]
+    got = [_rows(decontam.bloom_decontaminate(docs, **kw)) for kw in cases]
+    assert [r[0] for r in got[0]] == [None, 13, 14, 15, 16, 17]
+    assert (got[0][0][1], got[0][0][3]) == (5, 4)  # null ids: 3 + 2 grams, 3 + 1 exact
+    assert got[0][1][1] == 5  # doc 13: 6 positions, 5 distinct grams
+    assert sum(r[4] for r in got[2]) > 0  # a tiny filter false-positives
+    monkeypatch.setattr(decontam, "_BLOOM_LOCAL_MAX_ROWS", -1)
+    assert got == [_rows(decontam.bloom_decontaminate(docs, **kw)) for kw in cases]
+
+
+def test_snm_local_edge_rows(spark, monkeypatch, tmp_path):
+    """Null texts (a null key sorting first, one null gram), a null id,
+    short and empty texts, both ways."""
+    from elevate_data_pipeline_spark.operators import dedup
+
+    docs = _tagged_documents(spark, tmp_path, [
+        (1, None, "s1"),
+        (2, None, "s1"),
+        (None, "abcdef", "s1"),
+        (3, "abcdef", "s1"),
+        (4, "ab", "s1"),
+        (5, "ab", "s1"),
+        (6, "", "s1"),
+        (7, "", "s1"),
+        (8, "Hello, World!", "s1"),
+        (9, "hello world", "s1"),
+    ])
+    got = _rows(dedup.sorted_neighborhood_pairs(docs, window=3, threshold=0.5))
+    assert (1, 2, 1.0) in got and (None, 3, 1.0) in got
+    monkeypatch.setattr(dedup, "_SNM_LOCAL_MAX_ROWS", -1)
+    assert got == _rows(dedup.sorted_neighborhood_pairs(docs, window=3, threshold=0.5))
 
 
 def test_suffix_array_local_equals_distributed(spark, monkeypatch, catalog):

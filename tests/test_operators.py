@@ -1270,6 +1270,40 @@ def test_portable_hll_hash_matches_sql_twin(spark):
         assert 0 <= want < 2**32
 
 
+def test_portable_hll_hash_numpy_twin(spark):
+    """The numpy hash the driver-local Bloom tier uses equals the Spark
+    Column hash over boundary keys and random keys xor each salt. The
+    keys are an Arrow local relation, so the check runs no Spark job."""
+    import random
+
+    import numpy as np
+
+    from elevate_data_pipeline_spark.functions.text import POLY_MOD
+    from elevate_data_pipeline_spark.operators.sketch import (
+        CMS_SALTS,
+        _hll_hash_col,
+        _hll_hash_np,
+    )
+    from elevate_data_pipeline_spark.sources.local import local_frame
+
+    rng = random.Random(7)
+    keys = [0, 2**32 - 1, POLY_MOD - 1, *CMS_SALTS]
+    keys += [rng.randrange(POLY_MOD) ^ salt for salt in CMS_SALTS for _ in range(64)]
+    sc = spark.sparkContext
+    sc.setJobGroup("hll-numpy-twin", "hll-numpy-twin")
+    try:
+        got = [
+            r.h
+            for r in local_frame(spark, {"k": keys}, "k long")
+            .select(_hll_hash_col(F.col("k")).alias("h"))
+            .collect()
+        ]
+    finally:
+        sc.setLocalProperty("spark.jobGroup.id", None)
+    assert list(sc.statusTracker().getJobIdsForGroup("hll-numpy-twin")) == []
+    assert _hll_hash_np(np.array(keys, dtype=np.int64)).tolist() == got
+
+
 def test_portable_hll_accuracy_and_duplicate_insensitivity(spark):
     """hll_est (raw estimator + baked linear-counting correction) lands
     within ~3 standard errors of the truth at m=512 for both a large-n
